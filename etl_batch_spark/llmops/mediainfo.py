@@ -34,6 +34,8 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from etl_batch_spark.llmops.multimodal import _NULL_PAYLOAD, _error_text, _payload_map
+
 PROBE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -332,7 +334,7 @@ def probe_media(payload: bytes) -> dict:
     try:
         d = bytes(payload)
     except Exception as exc:  # noqa: BLE001
-        out["error"] = f"{type(exc).__name__}: {exc}"
+        out["error"] = _error_text(exc)
         return out
     container = parser = None
     if d[:4] == b"RIFF" and len(d) >= 12:
@@ -375,7 +377,7 @@ def probe_media(payload: bytes) -> dict:
     try:
         out.update(parser(d))
     except Exception as exc:  # noqa: BLE001 — triage never kills the scan
-        out["error"] = f"{type(exc).__name__}: {exc}"
+        out["error"] = _error_text(exc)
     return out
 
 
@@ -386,15 +388,15 @@ def probe_media_df(
     payload_col: str = "payload",
     keep_cols: "tuple[str, ...]" = (),
 ) -> DataFrame:
-    """Arrow-batched narrow-map probe over a payload column — the scan
-    stage in front of decode_image/decode_audio/sample_video_frames.
+    """Probe every payload of a column (see :func:`probe_media`) — the
+    scan stage in front of decode_image/decode_audio/sample_video_frames.
+    A NULL payload gives a ``container='unknown'`` row with a
+    ``NullPayload`` error, like any other unprobeable payload.
 
     ``keep_cols`` names input columns carried through unchanged (e.g.
     ``("source", "payload")``) so a probe→route→decode pipeline can
     filter on the probe verdict and hand the SAME rows to the decoder —
     no re-scan, no id re-join (which fans out under duplicate ids)."""
-    from collections.abc import Iterator
-
     probe_fields = {f.name for f in PROBE_SCHEMA.fields} - {"doc_id"}
     clash = sorted(probe_fields & set(keep_cols) | ({id_col} & probe_fields))
     if clash:
@@ -410,36 +412,12 @@ def probe_media_df(
             f"keep_cols must be unique and must not repeat id_col "
             f"({id_col!r}): got {tuple(keep_cols)!r}"
         )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        cols = [f.name for f in PROBE_SCHEMA.fields if f.name != "doc_id"]
-        for pdf in batches:
-            rows = []
-            for p in pdf[payload_col]:
-                if p is None:
-                    r = dict(_EMPTY)
-                    r["error"] = "NullPayload: payload is NULL"
-                    rows.append(r)
-                else:
-                    rows.append(probe_media(p))
-            out = {id_col: pdf[id_col].values}
-            for k in keep_cols:
-                out[k] = pdf[k].values
-            for c in cols:
-                out[c] = [r[c] for r in rows]
-            yield pd.DataFrame(out)
-
-    from etl_batch_spark.llmops.multimodal import _with_id_field
-
-    schema = _with_id_field(PROBE_SCHEMA, df, id_col)
-    schema = T.StructType(
-        [schema.fields[0]]
-        + [T.StructField(k, df.schema[k].dataType) for k in keep_cols]
-        + schema.fields[1:]
+    cols = PROBE_SCHEMA.fieldNames()[1:]
+    # probe_media never raises (its own error lands in the ``error``
+    # field), so the map runs in raise mode with a fixed NULL row
+    null_row = tuple(dict(_EMPTY, error=_NULL_PAYLOAD)[c] for c in cols)
+    return _payload_map(
+        df, lambda p: [tuple(probe_media(p)[c] for c in cols)], PROBE_SCHEMA,
+        op="probe_media_df", id_col=id_col, payload_col=payload_col,
+        null_row=null_row, keep_cols=keep_cols,
     )
-    in_cols = [id_col, *keep_cols]
-    if payload_col not in in_cols:
-        in_cols.append(payload_col)
-    return df.select(*in_cols).mapInPandas(run, schema)

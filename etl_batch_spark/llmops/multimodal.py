@@ -7,6 +7,29 @@ Arrow-batched ``mapInPandas`` transforms — the right shape for 100 TB:
 payloads never pass through the driver, batches stream per partition,
 and the Python stage is a narrow map (no shuffle).
 
+Payload-map contract — every payload operator here and
+:func:`..mediainfo.probe_media_df` is one :func:`_payload_map`: a
+single ``mapInPandas`` over ``(id, payload)`` that turns each payload
+into zero or more output rows.
+
+- The output keys on the caller's ``id_col``, with its name and type
+  (ids are often URLs or content hashes at crawl scale).
+- ``errors="raise"`` (the default where an operator offers
+  ``errors``; the only mode of ``resize_image`` and
+  ``window_energy``): a NULL payload raises ``ValueError`` naming the
+  operator and the column, and a bad payload aborts the job.
+- ``errors="quarantine"`` (always on for the ``*_census`` operators):
+  the output gains a trailing ``error`` column, NULL on good rows.  A
+  NULL payload becomes ONE row of NULL fields with
+  ``"NullPayload: payload is NULL"``; a payload whose decode raises the
+  caught type becomes ONE row of NULL fields with
+  ``"{Type}: {msg}"``.  The ``decode_*`` operators and
+  ``sample_video_frames`` catch ``Exception``; each census catches only
+  its codec's error type, so a foreign exception is a codec bug that
+  fails loudly (``tools/fuzz_codecs.py`` soaks every codec for them).
+  Filter ``error IS NULL`` for the clean side and ``IS NOT NULL`` for
+  the quarantine sink.
+
 Codec status — every format here decodes FOR REAL via pure-stdlib
 codecs: PNG (:mod:`..png`: zlib inflate + scanline unfilter), JPEG
 baseline AND progressive (:mod:`..jpeg`: SOF0/SOF1/SOF2 Huffman DCT),
@@ -27,7 +50,7 @@ are text, not images).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
@@ -107,6 +130,84 @@ def _with_id_field(schema: T.StructType, df: DataFrame, id_col: str) -> T.Struct
     return T.StructType([id_field] + list(schema)[1:])
 
 
+_NULL_PAYLOAD = "NullPayload: payload is NULL"
+
+
+def _error_text(exc: BaseException) -> str:
+    return f"{type(exc).__name__}: {exc}"
+
+
+def _payload_map(
+    df: DataFrame,
+    fn: "Callable[[bytes], list[tuple]]",
+    schema: T.StructType,
+    *,
+    op: str,
+    id_col: str,
+    payload_col: str,
+    errors: str = "raise",
+    catch: "type[BaseException] | tuple[type[BaseException], ...]" = Exception,
+    casts: "dict[str, str] | None" = None,
+    null_row: "tuple | None" = None,
+    keep_cols: "tuple[str, ...]" = (),
+) -> DataFrame:
+    """The payload map behind every payload operator (contract in the
+    module docstring).  ``fn`` turns one payload into its rows
+    of ``schema``'s fields after the id; ``op`` names the operator in
+    the NULL error.  ``casts`` pin dtypes in raise mode only (quarantine
+    rows hold NULLs that no numpy int dtype can).  ``null_row`` replaces
+    the NULL rule with a fixed row.  ``keep_cols`` are input columns
+    carried through unchanged, right after the id."""
+    if errors not in ("raise", "quarantine"):
+        raise ValueError(f"errors must be 'raise' or 'quarantine', got {errors!r}")
+    quarantine = errors == "quarantine"
+    fields = list(_with_id_field(schema, df, id_col))
+    fields[1:1] = [T.StructField(k, df.schema[k].dataType) for k in keep_cols]
+    if quarantine:
+        fields.append(T.StructField("error", T.StringType()))
+    cols = [f.name for f in fields[1 + len(keep_cols):]]
+    failed = (None,) * (len(cols) - 1)
+    if null_row is None and quarantine:
+        null_row = failed + (_NULL_PAYLOAD,)
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
+        import pandas as pd
+
+        for pdf in batches:
+            src: list[int] = []
+            rows: list[tuple] = []
+            for pos, p in enumerate(pdf[payload_col]):
+                if p is None:
+                    if null_row is None:
+                        raise ValueError(
+                            f"NULL {payload_col!r} — {op} needs a payload; "
+                            "filter or quarantine missing rows"
+                        )
+                    out = [null_row]
+                elif not quarantine:
+                    out = fn(bytes(p))
+                else:
+                    try:
+                        out = [r + (None,) for r in fn(bytes(p))]
+                    except catch as exc:
+                        out = [failed + (_error_text(exc),)]
+                src.extend([pos] * len(out))
+                rows.extend(out)
+            # carried columns are gathered, so they keep their input
+            # dtype; computed columns are lists, so pandas infers theirs
+            take = np.asarray(src, dtype=np.intp)
+            data = {c: pdf[c].values[take] for c in (id_col, *keep_cols)}
+            for j, c in enumerate(cols):
+                data[c] = [r[j] for r in rows]
+            pdf_out = pd.DataFrame(data)
+            yield pdf_out.astype(casts) if casts and not quarantine else pdf_out
+
+    in_cols = [id_col, *keep_cols]
+    if payload_col not in in_cols:
+        in_cols.append(payload_col)
+    return df.select(*in_cols).mapInPandas(run, T.StructType(fields))
+
+
 def _fake_decode(payload: bytes) -> tuple[int, int, list[float]]:
     """Deterministic stand-in for an image codec: md5-derived dimensions
     and an 8-dim 'feature vector'.  Replaces PIL/ffmpeg in this container."""
@@ -160,11 +261,6 @@ def _real_decode(payload: bytes) -> tuple[int, int, list[float]]:
     return width, height, [round(float(v), 6) for v in feat]
 
 
-DECODED_QUARANTINE_SCHEMA = T.StructType(
-    list(DECODED_SCHEMA) + [T.StructField("error", T.StringType())]
-)
-
-
 def decode_image(
     df: DataFrame,
     *,
@@ -183,64 +279,21 @@ def decode_image(
     plumbing (Arrow batches, schema, partition streaming) is exercised
     on any payload.
 
-    ``errors="raise"`` (default) aborts the job on the first bad
-    payload — right for curated inputs where corruption means a
-    pipeline bug.  ``errors="quarantine"`` is the 100 TB crawl shape:
-    each failing row survives with NULL dims/feature and the message in
-    an added ``error`` column (filter ``error IS NULL`` for the clean
-    side, ``IS NOT NULL`` for the quarantine sink) — one corrupt or
-    out-of-scope payload among billions cannot kill the decode job.
+    ``errors="raise"`` (default) is right for curated inputs, where
+    corruption means a pipeline bug; ``errors="quarantine"`` is the
+    100 TB crawl shape, where one corrupt or out-of-scope payload among
+    billions must not kill the decode job.
     """
-    if errors not in ("raise", "quarantine"):
-        raise ValueError(f"errors must be 'raise' or 'quarantine', got {errors!r}")
+    decode = _fake_decode if fake else _real_decode
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def decode_row(p: bytes) -> list[tuple]:
+        width, height, feature = decode(p)
+        return [(width, height, width * height, feature)]
 
-        decode = _fake_decode if fake else _real_decode
-        for pdf in batches:
-            rows = []
-            errs: list = []
-            for p in pdf[payload_col]:
-                if p is None:
-                    # missing payload: a clear error, never an opaque
-                    # md5/TypeError crash from inside the codec
-                    if errors == "raise":
-                        raise ValueError(
-                            f"NULL {payload_col!r} — decode_image needs a "
-                            "payload; filter or quarantine missing rows"
-                        )
-                    rows.append((None, None, None))
-                    errs.append("NullPayload: payload is NULL")
-                    continue
-                if errors == "raise":
-                    rows.append(decode(p))
-                else:
-                    try:
-                        rows.append(decode(p))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — quarantined, not hidden
-                        rows.append((None, None, None))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-            out = {
-                id_col: pdf[id_col].values,
-                "width": [r[0] for r in rows],
-                "height": [r[1] for r in rows],
-                "n_pixels": [
-                    r[0] * r[1] if r[0] is not None else None for r in rows
-                ],
-                "feature": [r[2] for r in rows],
-            }
-            if errors == "quarantine":
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = _with_id_field(
-        DECODED_QUARANTINE_SCHEMA if errors == "quarantine" else DECODED_SCHEMA,
-        df,
-        id_col,
+    return _payload_map(
+        df, decode_row, DECODED_SCHEMA, op="decode_image", id_col=id_col,
+        payload_col=payload_col, errors=errors,
     )
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 DECODED_AUDIO_SCHEMA = T.StructType(
@@ -252,10 +305,6 @@ DECODED_AUDIO_SCHEMA = T.StructType(
         T.StructField("duration_s", T.DoubleType()),
         T.StructField("feature", T.ArrayType(T.FloatType())),
     ]
-)
-
-DECODED_AUDIO_QUARANTINE_SCHEMA = T.StructType(
-    list(DECODED_AUDIO_SCHEMA) + [T.StructField("error", T.StringType())]
 )
 
 
@@ -308,62 +357,15 @@ def decode_audio(
     errors: str = "raise",
 ) -> DataFrame:
     """Decode audio payloads to (id, sample_rate, channels, n_frames,
-    duration_s, feature) — the audio twin of :func:`decode_image`, with
-    the same Arrow-batched narrow-map shape (payloads stream per
-    partition, nothing shuffles, the driver never sees a payload) and
-    the same ``errors="raise"|"quarantine"`` policy.  ``fake=False``
-    decodes RIFF/WAVE integer-PCM / IEEE-float payloads for real and
-    raises NotImplementedError for compressed codecs; ``fake=True``
-    runs the deterministic stub."""
-    if errors not in ("raise", "quarantine"):
-        raise ValueError(f"errors must be 'raise' or 'quarantine', got {errors!r}")
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        decode = _fake_decode_audio if fake else _real_decode_audio
-        for pdf in batches:
-            rows = []
-            errs: list = []
-            for p in pdf[payload_col]:
-                if p is None:
-                    if errors == "raise":
-                        raise ValueError(
-                            f"NULL {payload_col!r} — decode_audio needs a "
-                            "payload; filter or quarantine missing rows"
-                        )
-                    rows.append((None, None, None, None, None))
-                    errs.append("NullPayload: payload is NULL")
-                    continue
-                if errors == "raise":
-                    rows.append(decode(p))
-                else:
-                    try:
-                        rows.append(decode(p))
-                        errs.append(None)
-                    except Exception as exc:  # noqa: BLE001 — quarantined, not hidden
-                        rows.append((None, None, None, None, None))
-                        errs.append(f"{type(exc).__name__}: {exc}")
-            out = {
-                id_col: pdf[id_col].values,
-                "sample_rate": [r[0] for r in rows],
-                "channels": [r[1] for r in rows],
-                "n_frames": [r[2] for r in rows],
-                "duration_s": [r[3] for r in rows],
-                "feature": [r[4] for r in rows],
-            }
-            if errors == "quarantine":
-                out["error"] = errs
-            yield pd.DataFrame(out)
-
-    schema = _with_id_field(
-        DECODED_AUDIO_QUARANTINE_SCHEMA
-        if errors == "quarantine"
-        else DECODED_AUDIO_SCHEMA,
-        df,
-        id_col,
+    duration_s, feature) — the audio twin of :func:`decode_image`.
+    ``fake=False`` decodes RIFF/WAVE integer-PCM / IEEE-float payloads
+    for real and raises NotImplementedError for compressed codecs;
+    ``fake=True`` runs the deterministic stub."""
+    decode = _fake_decode_audio if fake else _real_decode_audio
+    return _payload_map(
+        df, lambda p: [decode(p)], DECODED_AUDIO_SCHEMA, op="decode_audio",
+        id_col=id_col, payload_col=payload_col, errors=errors,
     )
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def resize_plan(
@@ -449,39 +451,27 @@ def resize_image(
     resample to the EXACT dims :func:`resize_plan` computes for the
     same inputs (scale = round(least(1, max_side/longest), 6), targets
     ceil'd from the rounded scale and clamped), and re-encode as PNG —
-    binary in, binary out, the CLIP-preprocessing shape.  Same
-    Arrow-batched narrow map as the other decode stages; images already
+    binary in, binary out, the CLIP-preprocessing shape.  Images already
     within ``max_side`` pass through resized-by-identity (re-encoded,
     so downstream sees one uniform container)."""
     from etl_batch_spark.llmops.png import encode_png
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def resize_one(p: bytes) -> list[tuple]:
+        w, h, ch, px = _decode_any_image(p)
+        # the resize_plan contract, replicated bit-for-bit:
+        # round the scale to 6dp FIRST, then ceil, then clamp
+        scale = _round6_half_up(min(1.0, max_side / float(max(w, h))))
+        tw = min(max_side, int(-(-w * scale // 1)))
+        th = min(max_side, int(-(-h * scale // 1)))
+        arr = np.frombuffer(px, np.uint8).reshape(h, w, ch)
+        resized = _bilinear_resize(arr, tw, th)
+        return [(tw, th, bytearray(encode_png(tw, th, ch, resized.tobytes())))]
 
-        for pdf in batches:
-            out = {"doc_id": [], "target_width": [], "target_height": [],
-                   "payload": []}
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                w, h, ch, px = _decode_any_image(bytes(p))
-                # the resize_plan contract, replicated bit-for-bit:
-                # round the scale to 6dp FIRST, then ceil, then clamp
-                scale = _round6_half_up(min(1.0, max_side / float(max(w, h))))
-                tw = min(max_side, int(-(-w * scale // 1)))
-                th = min(max_side, int(-(-h * scale // 1)))
-                arr = np.frombuffer(px, np.uint8).reshape(h, w, ch)
-                resized = _bilinear_resize(arr, tw, th)
-                out["doc_id"].append(i)
-                out["target_width"].append(tw)
-                out["target_height"].append(th)
-                out["payload"].append(
-                    bytearray(encode_png(tw, th, ch, resized.tobytes()))
-                )
-            yield pd.DataFrame(out).astype(
-                {"doc_id": "int64", "target_width": "int32",
-                 "target_height": "int32"}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, RESIZED_SCHEMA)
+    return _payload_map(
+        df, resize_one, RESIZED_SCHEMA, op="resize_image", id_col=id_col,
+        payload_col=payload_col,
+        casts={"target_width": "int32", "target_height": "int32"},
+    )
 
 
 def frame_sample_plan(
@@ -509,11 +499,6 @@ SAMPLED_FRAMES_SCHEMA = T.StructType(
 )
 
 
-SAMPLED_FRAMES_QUARANTINE_SCHEMA = T.StructType(
-    list(SAMPLED_FRAMES_SCHEMA) + [T.StructField("error", T.StringType())]
-)
-
-
 def sample_video_frames(
     df: DataFrame,
     *,
@@ -527,19 +512,16 @@ def sample_video_frames(
     using :func:`frame_sample_plan`'s timestamp grid, and JPEG-decode
     ONLY the sampled frames (a 1 fps sample of a 30 fps clip pays for
     1/30th of the decodes — the container hands back raw payloads, the
-    sampler chooses what to decode).  Same Arrow-batched narrow-map
-    shape and the same ``errors="raise"|"quarantine"`` policy as
-    decode_image/decode_audio: quarantined payloads (out-of-scope
-    codec, corrupt container, broken frame, NULL payload) survive as
-    ONE row with NULL frame fields and the message in ``error``.
+    sampler chooses what to decode).  A quarantined payload
+    (out-of-scope codec, corrupt container, broken frame, NULL payload)
+    survives as ONE row with NULL frame fields and the message in
+    ``error``.
 
     Column contract vs :func:`frame_sample_plan`: the plan's
     ``frame_idx`` is the SAMPLE ordinal (0,1,2,...); the codec side
     emits ``src_frame_idx``, the SOURCE frame index actually decoded
     (e.g. 0,4,8 for a 1 fps sample of 4 fps video).  ``frame_ts`` is
     identical on both sides and is the join key between them."""
-    if errors not in ("raise", "quarantine"):
-        raise ValueError(f"errors must be 'raise' or 'quarantine', got {errors!r}")
     if not fps > 0:
         raise ValueError(f"fps must be > 0, got {fps!r}")
     from etl_batch_spark.llmops.avi import decode_avi_mjpeg
@@ -564,56 +546,11 @@ def sample_video_frames(
             rows.append((idx, round(ts, 3), fw, fh, feat))
         return rows
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        cols = (id_col, "src_frame_idx", "frame_ts", "width", "height", "feature")
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            errs: list = []
-
-            def emit(i, row, err=None):
-                for c, v in zip(cols, (i, *row)):
-                    out[c].append(v)
-                errs.append(err)
-
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:
-                    if errors == "raise":
-                        raise ValueError(
-                            f"NULL {payload_col!r} — sample_video_frames needs "
-                            "a payload; filter or quarantine missing rows"
-                        )
-                    emit(i, (None,) * 5, "NullPayload: payload is NULL")
-                    continue
-                if errors == "raise":
-                    for row in sample_one(bytes(p)):
-                        emit(i, row)
-                else:
-                    try:
-                        rows = sample_one(bytes(p))
-                    except Exception as exc:  # noqa: BLE001 — quarantined, not hidden
-                        emit(i, (None,) * 5, f"{type(exc).__name__}: {exc}")
-                    else:
-                        for row in rows:
-                            emit(i, row)
-            pdf_out = pd.DataFrame(out)
-            if errors == "quarantine":
-                pdf_out["error"] = errs
-            else:
-                pdf_out = pdf_out.astype(
-                    {"src_frame_idx": "int32", "frame_ts": "float64"}
-                )
-            yield pdf_out
-
-    schema = _with_id_field(
-        SAMPLED_FRAMES_QUARANTINE_SCHEMA
-        if errors == "quarantine"
-        else SAMPLED_FRAMES_SCHEMA,
-        df,
-        id_col,
+    return _payload_map(
+        df, sample_one, SAMPLED_FRAMES_SCHEMA, op="sample_video_frames",
+        id_col=id_col, payload_col=payload_col, errors=errors,
+        casts={"src_frame_idx": "int32", "frame_ts": "float64"},
     )
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 WINDOW_ENERGY_SCHEMA = T.StructType(
@@ -634,83 +571,25 @@ def window_energy(
     hop: int = 128,
 ) -> DataFrame:
     """Windowed energy over raw payload bytes (the audio-analysis frame
-    shape: overlapping windows at a hop, one feature per window).  Runs
-    as Arrow-batched ``mapInPandas`` — payloads stream per partition,
-    the per-window loop is numpy inside the batch, nothing shuffles.
-    Energy here is mean byte value / 255 (a deterministic stand-in for
-    RMS over PCM samples; a real codec swaps the formula, not the
-    distribution shape).
+    shape: overlapping windows at a hop, one feature per window); the
+    per-window loop is numpy inside the batch, and an empty payload has
+    no windows.  Energy here is mean byte value / 255 (a deterministic
+    stand-in for RMS over PCM samples; a real codec swaps the formula,
+    not the distribution shape).
     """
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, widxs, energies = [], [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                b = np.frombuffer(bytes(p), dtype=np.uint8)
-                if len(b) == 0:
-                    continue
-                n_windows = (len(b) - 1) // hop + 1
-                for w in range(n_windows):
-                    seg = b[w * hop : w * hop + win]
-                    ids.append(i)
-                    widxs.append(w)
-                    # +1e-9 half-boundary nudge, same as the text scores
-                    energies.append(
-                        round(float(seg.mean()) / 255.0 + 1e-9, 6)
-                    )
-            yield pd.DataFrame(
-                {id_col: ids, "widx": widxs, "energy": energies}
-            ).astype({"widx": "int32", "energy": "float64"})
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, _with_id_field(WINDOW_ENERGY_SCHEMA, df, id_col)
-    )
-
-
-def payload_digest_arrow(
-    df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Per-payload md5 via ``mapInArrow`` — the zero-copy Arrow batch
-    path for byte-level work (codec probes, container demuxing,
-    chunk-level hashing) where even pandas conversion overhead matters:
-    the Python side sees Arrow buffers, never pandas objects or per-row
-    Python values.
-
-    Returns (id, md5_hex, n_bytes).  Equivalence with the JVM-side
-    ``F.md5`` is pinned by test — the operator exists as the plumbing
-    template; swap the digest loop for real codec calls.
-    """
-    import hashlib
-
-    import pyarrow as pa
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("md5_hex", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
+    def windows(p: bytes) -> list[tuple]:
+        b = np.frombuffer(p, dtype=np.uint8)
+        # +1e-9 half-boundary nudge, same as the text scores
+        return [
+            (w, round(float(b[w * hop : w * hop + win].mean()) / 255.0 + 1e-9, 6))
+            for w in range((len(b) - 1) // hop + 1)
         ]
+
+    return _payload_map(
+        df, windows, WINDOW_ENERGY_SCHEMA, op="window_energy", id_col=id_col,
+        payload_col=payload_col, casts={"widx": "int32", "energy": "float64"},
     )
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0)
-            payloads = batch.column(1)
-            digests = []
-            sizes = []
-            for buf in payloads:
-                b = buf.as_py() or b""
-                digests.append(hashlib.md5(b).hexdigest())
-                sizes.append(len(b))
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(digests, pa.string()), pa.array(sizes, pa.int64())],
-                names=[id_col, "md5_hex", "n_bytes"],
-            )
-
-    return df.select(id_col, payload_col).mapInArrow(run, out_schema)
 
 
 def patch_grid_plan(
@@ -749,7 +628,6 @@ MP3_CENSUS_SCHEMA = T.StructType(
         T.StructField("trailing_bytes", T.LongType()),
         T.StructField("artist", T.StringType()),
         T.StructField("title", T.StringType()),
-        T.StructField("error", T.StringType()),
     ]
 )
 
@@ -764,9 +642,8 @@ def mp3_frame_census(
     an Arrow-batched narrow map: every frame header of every payload is
     walked — EXACT duration, CBR/VBR verdict, bitrate min/max/mode, VBR
     tag — with O(1) state per payload and nothing shuffled.  Always
-    quarantine-shaped (census over a crawl must never die on one bad
-    payload): malformed payloads emit NULL stats + the codec error
-    string.  The walk runs trailing-tolerant: trailing junk, an APEv2
+    quarantine-shaped: a census over a crawl must never die on one bad
+    payload.  The walk runs trailing-tolerant: trailing junk, an APEv2
     tag, or a truncated last frame keeps the validated prefix stats
     and reports the unconsumed tail in ``trailing_bytes`` instead of
     quarantining the whole payload.  ID3v2.3/2.4 text frames supply
@@ -778,41 +655,26 @@ def mp3_frame_census(
         parse_id3v2_frames,
     )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def census(p: bytes) -> list[tuple]:
+        i = parse_frames(p, tolerate_trailing=True)
+        # tag parse is best-effort: a malformed ID3v2 frame must not
+        # discard validated frame-walk stats (parse_frames only skips
+        # the tag wholesale and never validates its frames)
+        try:
+            tags = parse_id3v2_frames(p)
+        except Mp3Error:
+            tags = {}
+        return [(
+            i.sample_rate, i.channels, i.n_frames, i.duration_s,
+            i.is_vbr, i.bitrate_kbps_min, i.bitrate_kbps_max,
+            i.bitrate_kbps_mode, i.vbr_tag, i.trailing_bytes,
+            tags.get("TPE1"), tags.get("TIT2"),
+        )]
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for p in pdf[payload_col]:
-                if p is None:
-                    rows.append((None,) * 12 + ("NullPayload: payload is NULL",))
-                    continue
-                try:
-                    i = parse_frames(bytes(p), tolerate_trailing=True)
-                    # tag parse is best-effort: a malformed ID3v2 frame
-                    # must not discard validated frame-walk stats
-                    # (parse_frames only skips the tag wholesale and
-                    # never validates its frames)
-                    try:
-                        tags = parse_id3v2_frames(bytes(p))
-                    except Mp3Error:
-                        tags = {}
-                    rows.append((
-                        i.sample_rate, i.channels, i.n_frames, i.duration_s,
-                        i.is_vbr, i.bitrate_kbps_min, i.bitrate_kbps_max,
-                        i.bitrate_kbps_mode, i.vbr_tag, i.trailing_bytes,
-                        tags.get("TPE1"), tags.get("TIT2"), None,
-                    ))
-                except Mp3Error as exc:
-                    rows.append((None,) * 12 + (f"Mp3Error: {exc}",))
-            cols = [f.name for f in MP3_CENSUS_SCHEMA.fields if f.name != "doc_id"]
-            out = {id_col: pdf[id_col].values}
-            for j, c in enumerate(cols):
-                out[c] = [r[j] for r in rows]
-            yield pd.DataFrame(out)
-
-    schema = _with_id_field(MP3_CENSUS_SCHEMA, df, id_col)
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return _payload_map(
+        df, census, MP3_CENSUS_SCHEMA, op="mp3_frame_census", id_col=id_col,
+        payload_col=payload_col, errors="quarantine", catch=Mp3Error,
+    )
 
 
 OGG_CENSUS_SCHEMA = T.StructType(
@@ -825,7 +687,6 @@ OGG_CENSUS_SCHEMA = T.StructType(
         T.StructField("duration_s", T.DoubleType()),
         T.StructField("artist", T.StringType()),
         T.StructField("title", T.StringType()),
-        T.StructField("error", T.StringType()),
     ]
 )
 
@@ -840,36 +701,20 @@ def ogg_metadata_census(
     CRC-verified page walk + Vorbis/Opus identification and comment
     headers per payload — codec routing, exact duration from the final
     granule position, and the ARTIST/TITLE metadata crawls actually
-    carry.  Same narrow-map, never-dies shape as
-    :func:`mp3_frame_census`."""
+    carry."""
     from etl_batch_spark.llmops.oggv import OggError, parse_ogg
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def census(p: bytes) -> list[tuple]:
+        i = parse_ogg(p)
+        return [(
+            i.codec, i.sample_rate, i.channels, i.n_pages, i.duration_s,
+            i.comments.get("ARTIST"), i.comments.get("TITLE"),
+        )]
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for p in pdf[payload_col]:
-                if p is None:
-                    rows.append((None,) * 7 + ("NullPayload: payload is NULL",))
-                    continue
-                try:
-                    i = parse_ogg(bytes(p))
-                    rows.append((
-                        i.codec, i.sample_rate, i.channels, i.n_pages,
-                        i.duration_s, i.comments.get("ARTIST"),
-                        i.comments.get("TITLE"), None,
-                    ))
-                except OggError as exc:
-                    rows.append((None,) * 7 + (f"OggError: {exc}",))
-            cols = [f.name for f in OGG_CENSUS_SCHEMA.fields if f.name != "doc_id"]
-            out = {id_col: pdf[id_col].values}
-            for j, c in enumerate(cols):
-                out[c] = [r[j] for r in rows]
-            yield pd.DataFrame(out)
-
-    schema = _with_id_field(OGG_CENSUS_SCHEMA, df, id_col)
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return _payload_map(
+        df, census, OGG_CENSUS_SCHEMA, op="ogg_metadata_census", id_col=id_col,
+        payload_col=payload_col, errors="quarantine", catch=OggError,
+    )
 
 
 FLAC_CENSUS_SCHEMA = T.StructType(
@@ -883,7 +728,6 @@ FLAC_CENSUS_SCHEMA = T.StructType(
         T.StructField("n_frames", T.LongType()),
         T.StructField("artist", T.StringType()),
         T.StructField("title", T.StringType()),
-        T.StructField("error", T.StringType()),
     ]
 )
 
@@ -899,37 +743,22 @@ def flac_metadata_census(
     CRC-8-validated frame-header walk per payload — sample rate / bit
     depth / channel routing, EXACT duration (total_samples/rate, both
     integers), walked frame count cross-checked against the declared
-    sample total, and ARTIST/TITLE tags.  Same narrow-map, never-dies
-    shape as :func:`mp3_frame_census`."""
+    sample total, and ARTIST/TITLE tags."""
     from etl_batch_spark.llmops.flac import FlacError, parse_flac
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def census(p: bytes) -> list[tuple]:
+        i = parse_flac(p)
+        return [(
+            i.sample_rate, i.channels, i.bits_per_sample, i.total_samples,
+            i.duration_s, i.n_frames,
+            i.comments.get("ARTIST"), i.comments.get("TITLE"),
+        )]
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for p in pdf[payload_col]:
-                if p is None:
-                    rows.append((None,) * 8 + ("NullPayload: payload is NULL",))
-                    continue
-                try:
-                    i = parse_flac(bytes(p))
-                    rows.append((
-                        i.sample_rate, i.channels, i.bits_per_sample,
-                        i.total_samples, i.duration_s, i.n_frames,
-                        i.comments.get("ARTIST"), i.comments.get("TITLE"),
-                        None,
-                    ))
-                except FlacError as exc:
-                    rows.append((None,) * 8 + (f"FlacError: {exc}",))
-            cols = [f.name for f in FLAC_CENSUS_SCHEMA.fields if f.name != "doc_id"]
-            out = {id_col: pdf[id_col].values}
-            for j, c in enumerate(cols):
-                out[c] = [r[j] for r in rows]
-            yield pd.DataFrame(out)
-
-    schema = _with_id_field(FLAC_CENSUS_SCHEMA, df, id_col)
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return _payload_map(
+        df, census, FLAC_CENSUS_SCHEMA, op="flac_metadata_census",
+        id_col=id_col, payload_col=payload_col, errors="quarantine",
+        catch=FlacError,
+    )
 
 
 MP4_CENSUS_SCHEMA = T.StructType(
@@ -947,7 +776,6 @@ MP4_CENSUS_SCHEMA = T.StructType(
         T.StructField("audio_channels", T.IntegerType()),
         T.StructField("audio_rate", T.IntegerType()),
         T.StructField("audio_duration_s", T.DoubleType()),
-        T.StructField("error", T.StringType()),
     ]
 )
 
@@ -963,46 +791,30 @@ def mp4_track_census(
     per-track durations (mdhd units / timescale, cross-checked against
     stts), video dimensions and frame counts, audio channels/rate.
     First video and first audio track reported (crawls overwhelmingly
-    carry one of each).  Same narrow-map, never-dies shape as
-    :func:`mp3_frame_census`."""
+    carry one of each)."""
     from etl_batch_spark.llmops.mp4 import Mp4Error, parse_mp4
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def census(p: bytes) -> list[tuple]:
+        i = parse_mp4(p)
+        vid = next((t for t in i.tracks if t.handler == "vide"), None)
+        aud = next((t for t in i.tracks if t.handler == "soun"), None)
+        return [(
+            i.major_brand, i.n_tracks, i.movie_duration_s,
+            vid.codec if vid else None,
+            vid.width if vid else None,
+            vid.height if vid else None,
+            vid.duration_s if vid else None,
+            vid.n_samples if vid else None,
+            aud.codec if aud else None,
+            aud.channels if aud else None,
+            aud.sample_rate if aud else None,
+            aud.duration_s if aud else None,
+        )]
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for p in pdf[payload_col]:
-                if p is None:
-                    rows.append((None,) * 12 + ("NullPayload: payload is NULL",))
-                    continue
-                try:
-                    i = parse_mp4(bytes(p))
-                    vid = next((t for t in i.tracks if t.handler == "vide"), None)
-                    aud = next((t for t in i.tracks if t.handler == "soun"), None)
-                    rows.append((
-                        i.major_brand, i.n_tracks, i.movie_duration_s,
-                        vid.codec if vid else None,
-                        vid.width if vid else None,
-                        vid.height if vid else None,
-                        vid.duration_s if vid else None,
-                        vid.n_samples if vid else None,
-                        aud.codec if aud else None,
-                        aud.channels if aud else None,
-                        aud.sample_rate if aud else None,
-                        aud.duration_s if aud else None,
-                        None,
-                    ))
-                except Mp4Error as exc:
-                    rows.append((None,) * 12 + (f"Mp4Error: {exc}",))
-            cols = [f.name for f in MP4_CENSUS_SCHEMA.fields if f.name != "doc_id"]
-            out = {id_col: pdf[id_col].values}
-            for j, c in enumerate(cols):
-                out[c] = [r[j] for r in rows]
-            yield pd.DataFrame(out)
-
-    schema = _with_id_field(MP4_CENSUS_SCHEMA, df, id_col)
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return _payload_map(
+        df, census, MP4_CENSUS_SCHEMA, op="mp4_track_census", id_col=id_col,
+        payload_col=payload_col, errors="quarantine", catch=Mp4Error,
+    )
 
 
 WEBP_CENSUS_SCHEMA = T.StructType(
@@ -1017,7 +829,6 @@ WEBP_CENSUS_SCHEMA = T.StructType(
         T.StructField("duration_ms", T.LongType()),
         T.StructField("has_exif", T.BooleanType()),
         T.StructField("has_icc", T.BooleanType()),
-        T.StructField("error", T.StringType()),
     ]
 )
 
@@ -1032,33 +843,18 @@ def webp_structure_census(
     walk + VP8/VP8L/VP8X frame headers per payload — variant, canvas
     dimensions, alpha, animation frame count and total duration, and
     EXIF/ICC metadata presence.  Header-only (O(chunks) per payload,
-    sample decode quarantined) — same narrow-map, never-dies shape as
-    :func:`mp3_frame_census`; at 100 TB the bound is scan bandwidth."""
+    sample decode quarantined); at 100 TB the bound is scan bandwidth."""
     from etl_batch_spark.llmops.webp import WebpError, parse_webp
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def census(p: bytes) -> list[tuple]:
+        i = parse_webp(p)
+        return [(
+            i.variant, i.width, i.height, i.has_alpha, i.is_animated,
+            i.n_frames, i.duration_ms, i.has_exif, i.has_icc,
+        )]
 
-        for pdf in batches:
-            rows: list[tuple] = []
-            for p in pdf[payload_col]:
-                if p is None:
-                    rows.append((None,) * 9 + ("NullPayload: payload is NULL",))
-                    continue
-                try:
-                    i = parse_webp(bytes(p))
-                    rows.append((
-                        i.variant, i.width, i.height, i.has_alpha,
-                        i.is_animated, i.n_frames, i.duration_ms,
-                        i.has_exif, i.has_icc, None,
-                    ))
-                except WebpError as exc:
-                    rows.append((None,) * 9 + (f"WebpError: {exc}",))
-            cols = [f.name for f in WEBP_CENSUS_SCHEMA.fields if f.name != "doc_id"]
-            out = {id_col: pdf[id_col].values}
-            for j, c in enumerate(cols):
-                out[c] = [r[j] for r in rows]
-            yield pd.DataFrame(out)
-
-    schema = _with_id_field(WEBP_CENSUS_SCHEMA, df, id_col)
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return _payload_map(
+        df, census, WEBP_CENSUS_SCHEMA, op="webp_structure_census",
+        id_col=id_col, payload_col=payload_col, errors="quarantine",
+        catch=WebpError,
+    )

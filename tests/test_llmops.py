@@ -360,8 +360,22 @@ class TestMultimodal:
         )
         we = multimodal.window_energy(df, id_col="url").collect()
         assert we and we[0]["url"] == "u://x" and we[0]["widx"] == 0
-        dig = multimodal.payload_digest_arrow(df, id_col="url").collect()
-        assert dig[0]["url"] == "u://x" and dig[0]["n_bytes"] == 18
+        from etl_batch_spark.llmops.png import encode_png
+
+        img = spark.createDataFrame(
+            [("u://img", bytearray(encode_png(3, 2, 3, bytes(18))))],
+            "url string, payload binary",
+        )
+        (rs,) = multimodal.resize_image(img, id_col="url").collect()
+        assert rs["url"] == "u://img"
+        assert (rs["target_width"], rs["target_height"]) == (3, 2)
+        # a NULL payload fails with a clear error naming the operator
+        nul = spark.createDataFrame(
+            [("u://x", bytearray(b"abc")), ("u://null", None)],
+            "url string, payload binary",
+        )
+        with pytest.raises(Exception, match="NULL 'payload' — window_energy"):
+            multimodal.window_energy(nul, id_col="url").collect()
 
     def test_sample_video_frames_rejects_bad_fps(self, spark):
         df = spark.createDataFrame(
@@ -946,25 +960,6 @@ class TestWeightedTopk:
         assert winners == again
 
 
-class TestPayloadDigestArrow:
-    def test_matches_jvm_md5(self, spark, sf_dir):
-        """The Arrow-batch digest must agree byte-for-byte with the
-        JVM-side md5 over the same payloads."""
-        from etl_batch_spark.catalog import load_table
-        from etl_batch_spark.llmops.multimodal import attach_payload, payload_digest_arrow
-
-        docs = attach_payload(load_table(spark, sf_dir, "documents").limit(100))
-        got = payload_digest_arrow(docs)
-        want = docs.select(
-            "doc_id",
-            F.md5("payload").alias("md5_hex"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-        )
-        a = sorted(tuple(r) for r in got.collect())
-        b = sorted(tuple(r) for r in want.collect())
-        assert a == b and len(a) == 100
-
-
 class TestMmrTopk:
     def test_string_ids_supported(self, spark):
         """Output id columns are typed from id_col, not hardcoded long."""
@@ -1204,6 +1199,29 @@ class TestMp4TrackCensus:
         (row,) = mp4_track_census(df).collect()
         assert row["video_codec"] is None and row["width"] is None
         assert row["audio_duration_s"] == 10 * 160 / 8000
+
+
+class TestWebpStructureCensus:
+    def test_census_and_quarantine(self, spark):
+        from etl_batch_spark.llmops.multimodal import webp_structure_census
+        from etl_batch_spark.llmops.webp import encode_webp
+
+        good = encode_webp(width=40, height=30, alpha=True, exif=True,
+                           icc=True, frame_durations_ms=[40, 60, 90])
+        df = spark.createDataFrame(
+            [(1, bytearray(good)), (2, bytearray(good[: len(good) // 2])),
+             (3, None)],
+            "doc_id long, payload binary",
+        )
+        out = {r["doc_id"]: r for r in webp_structure_census(df).collect()}
+        ok = out[1]
+        assert (ok["variant"], ok["width"], ok["height"]) == ("extended", 40, 30)
+        assert (ok["has_alpha"], ok["is_animated"]) == (True, True)
+        assert (ok["n_frames"], ok["duration_ms"]) == (3, 190)
+        assert (ok["has_exif"], ok["has_icc"]) == (True, True)
+        assert ok["error"] is None
+        assert out[2]["variant"] is None and "WebpError" in out[2]["error"]
+        assert out[3]["error"].startswith("NullPayload")
 
 
 class TestUrlCuration:

@@ -339,6 +339,13 @@ class TestResizeImageReal:
         w, h, ch, out = decode_png(bytes(r["payload"]))
         assert (w, h, ch) == (64, 48, 3)
         assert np.array_equal(np.frombuffer(out, np.uint8).reshape(48, 64, 3), px)
+        # a NULL payload fails with a clear error naming the operator
+        nul = spark.createDataFrame(
+            [(1, bytearray(encode_png(64, 48, 3, px.tobytes()))), (2, None)],
+            "doc_id long, payload binary",
+        )
+        with pytest.raises(Exception, match="NULL 'payload' — resize_image"):
+            multimodal.resize_image(nul).collect()
 
     def test_constant_image_stays_constant_after_downscale(self, spark):
         from etl_batch_spark.llmops import multimodal
