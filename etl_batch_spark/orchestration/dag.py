@@ -29,7 +29,6 @@ module is whatever Spark plan the module runs.
 from __future__ import annotations
 
 import heapq
-import threading
 from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
@@ -42,9 +41,9 @@ class DagCycle(BatchError):
     pass
 
 
-def topological_order(deps: "dict[str, list[str]]") -> "list[str]":
-    """Kahn order over ``{module: [upstream, ...]}``; deterministic
-    (lexicographic among ready modules); raises :class:`DagCycle`."""
+def _edges(deps: "dict[str, list[str]]") -> "tuple[dict[str, int], dict[str, list[str]]]":
+    """``({node: number of upstream edges}, {node: [downstream, ...]})``
+    over every node named in ``deps``."""
     nodes = set(deps)
     for ups in deps.values():
         nodes.update(ups)
@@ -54,6 +53,14 @@ def topological_order(deps: "dict[str, list[str]]") -> "list[str]":
         for u in ups:
             indeg[n] += 1
             down[u].append(n)
+    return indeg, down
+
+
+def topological_order(deps: "dict[str, list[str]]") -> "list[str]":
+    """Kahn order over ``{module: [upstream, ...]}``; deterministic
+    (lexicographic among ready modules); raises :class:`DagCycle`."""
+    indeg, down = _edges(deps)
+    nodes = set(indeg)
     ready = [n for n in nodes if indeg[n] == 0]
     heapq.heapify(ready)  # min-heap ⇒ truly lexicographic among ALL ready
     out: list[str] = []
@@ -100,15 +107,18 @@ class DagRunner:
         already finished).  The default ``"N"`` mirrors the reference's
         non-exclusive startup, which performs no dependency check.
         """
-        order = topological_order({m: deps.get(m, []) for m in modules})
+        graph = {m: deps.get(m, []) for m in modules}
+        order = topological_order(graph)
         missing = [m for m in order if m not in modules]
         if missing:
             raise BatchError(f"deps reference modules without callables: {missing}")
+        # scheduling state: unfinished upstream edges per module, and who
+        # waits on whom, so a completion decides only its own dependents
+        waiting, down = _edges(graph)
+        position = {m: i for i, m in enumerate(order)}
+        status: dict[str, str] = {}  # written by this thread only
 
-        status: dict[str, str] = {}
-        lock = threading.Lock()
-
-        def run_one(m: str) -> None:
+        def run_one(m: str) -> str:
             try:
                 ctx = self.runner.startup(
                     m.upper(), run_level, exclusive_run_yn=exclusive_run_yn
@@ -121,43 +131,41 @@ class DagRunner:
                 # poll TIMEOUT (engine extension — the monitor row reads
                 # DEPENDENCY TIMEOUT) fails the module the same way
                 # instead of crashing the whole DAG.
-                with lock:
-                    status[m] = "FAILURE"
-                return
+                return "FAILURE"
             try:
                 processed, errors = modules[m](ctx)
             except Exception:
                 ctx.finish("FAILURE", 0, 0)
-                with lock:
-                    status[m] = "FAILURE"
-                return
+                return "FAILURE"
             ctx.finish("SUCCESS", processed, errors)
-            with lock:
-                status[m] = "SUCCESS"
+            return "SUCCESS"
 
-        pending = list(order)
+        def skip_dependents(m: str) -> None:
+            stack = [m]
+            while stack:
+                for d in down[stack.pop()]:
+                    if d not in status:
+                        status[d] = "SKIPPED"
+                        stack.append(d)
+
+        ready = [m for m in order if waiting[m] == 0]
         futures: "dict[Future, str]" = {}
         with ThreadPoolExecutor(max_workers=self.max_workers) as pool:
-            while pending or futures:
-                progressed = False
-                for m in list(pending):
-                    ups = deps.get(m, [])
-                    with lock:
-                        states = [status.get(u) for u in ups]
-                    if any(s in ("FAILURE", "SKIPPED") for s in states):
-                        with lock:
-                            status[m] = "SKIPPED"
-                        pending.remove(m)
-                        progressed = True
-                    elif all(s == "SUCCESS" for s in states):
-                        futures[pool.submit(run_one, m)] = m
-                        pending.remove(m)
-                        progressed = True
-                if futures:
-                    done, _ = wait(futures, return_when=FIRST_COMPLETED)
-                    for f in done:
-                        futures.pop(f)
-                        f.result()  # propagate unexpected scheduler errors
-                elif not progressed and pending:
-                    raise BatchError(f"deadlock scheduling {pending}")  # defensive
+            while ready or futures:
+                # submit in topological-order position: deterministic
+                for m in sorted(ready, key=position.__getitem__):
+                    futures[pool.submit(run_one, m)] = m
+                ready = []
+                done, _ = wait(futures, return_when=FIRST_COMPLETED)
+                for f in done:
+                    m = futures.pop(f)
+                    # result() also propagates unexpected scheduler errors
+                    status[m] = f.result()
+                    if status[m] != "SUCCESS":
+                        skip_dependents(m)
+                        continue
+                    for d in down[m]:
+                        waiting[d] -= 1
+                        if waiting[d] == 0:
+                            ready.append(d)
         return dict(status)

@@ -16,6 +16,12 @@ internal table):
   fail closed to 1.
 - I8/I9 proc_update_batch_monitor (body.sql:422-467) — state
   transitions, expressed as appended events keyed by run_uid.
+
+Every lookup reads the store's latest-state index (the latest event per
+run_uid, maintained under the store lock on ``append`` and rebuilt on
+``delete_where``; see ``store.py``): a transition or finalize is one
+keyed read, and the per-module operators read only the runs of the
+module they ask about — never the whole event log.
 """
 
 from __future__ import annotations
@@ -36,17 +42,9 @@ class RunMonitor:
         self.store = store
 
     # -- event log ----------------------------------------------------------
-    def _latest_by_uid(self) -> dict[str, dict[str, Any]]:
-        latest: dict[str, dict[str, Any]] = {}
-        for row in self.store.rows("batch_monitor"):
-            uid = row.get("run_uid")
-            cur = latest.get(uid)
-            if cur is None or row["event_seq"] > cur["event_seq"]:
-                latest[uid] = row
-        return latest
-
     def latest_states(self) -> list[dict[str, Any]]:
-        return list(self._latest_by_uid().values())
+        """The latest event of every run, in order of each run's first event."""
+        return self.store.latest_events()
 
     # -- I4: insert ---------------------------------------------------------
     def insert_run(
@@ -83,7 +81,7 @@ class RunMonitor:
     # -- I8: WAITING -> RUNNING (or DEPENDENCY FAILURE on the WAITING row) --
     def transition(self, run_uid: str, *, run_status: str, run_id: int | None = None,
                    run_date: datetime | None = None) -> None:
-        cur = self._latest_by_uid().get(run_uid)
+        cur = self.store.latest_event(run_uid)
         if cur is None:
             raise KeyError(f"unknown run_uid {run_uid}")
         self.store.append(
@@ -111,7 +109,7 @@ class RunMonitor:
         (body.sql:462-466's ``run_status IN ('RUNNING','WAITING')`` guard).
         Returns False when no live row matched (the reference's UPDATE
         silently matches zero rows)."""
-        cur = self._latest_by_uid().get(run_uid)
+        cur = self.store.latest_event(run_uid)
         if cur is None or cur["run_status"] not in ("RUNNING", "WAITING"):
             return False
         self.store.append(
@@ -131,8 +129,8 @@ class RunMonitor:
     def next_run_id(self, module_id: int, now: datetime) -> int:
         day = _day(now)
         max_id = 0
-        for row in self.latest_states():
-            if row["module_id"] == module_id and _day(row["run_date"]) == day:
+        for row in self.store.module_latest_events(module_id):
+            if _day(row["run_date"]) == day:
                 max_id = max(max_id, row["run_id"] or 0)
         return max_id + 1
 
@@ -145,9 +143,8 @@ class RunMonitor:
             params = parameters if parameters is not None else " "
             running = [
                 r
-                for r in self.latest_states()
-                if r["module_id"] == module_id
-                and r["run_status"] == "RUNNING"
+                for r in self.store.module_latest_events(module_id)
+                if r["run_status"] == "RUNNING"
                 and (r["parameters"] if r["parameters"] is not None else " ") == params
             ]
             if not running:
@@ -161,8 +158,8 @@ class RunMonitor:
     def latest_running(self, module_id: int) -> dict[str, Any] | None:
         candidates = [
             r
-            for r in self.latest_states()
-            if r["module_id"] == module_id and r["run_status"] == "RUNNING"
+            for r in self.store.module_latest_events(module_id)
+            if r["run_status"] == "RUNNING"
         ]
         if not candidates:
             return None
@@ -173,10 +170,8 @@ class RunMonitor:
         RUNNING row of this module with the given run_id."""
         candidates = [
             r
-            for r in self.latest_states()
-            if r["module_id"] == module_id
-            and r["run_status"] == "RUNNING"
-            and r["run_id"] == run_id
+            for r in self.store.module_latest_events(module_id)
+            if r["run_status"] == "RUNNING" and r["run_id"] == run_id
         ]
         if not candidates:
             return None
@@ -210,9 +205,8 @@ class RunMonitor:
 
         rows = [
             r
-            for r in self.latest_states()
-            if r["module_id"] == parent_module_id
-            and _day(r.get("control_date")) == _day(control_date)
+            for r in self.store.module_latest_events(parent_module_id)
+            if _day(r.get("control_date")) == _day(control_date)
             and (not same_module or prefix(r.get("parameters")) == prefix(child_parameters))
         ]
         if not rows:

@@ -5,6 +5,7 @@ timers, envvar, loader, notifier, daily000."""
 
 from __future__ import annotations
 
+import random
 from datetime import datetime, timedelta
 
 import pytest
@@ -621,3 +622,180 @@ class TestDagRunner:
             exclusive_run_yn="Y",
         )
         assert out2 == {"p": "SUCCESS", "c": "SUCCESS"}
+
+
+# -- latest-state index vs a from-scratch fold of the event log ---------------
+def _day(ts):
+    return ts.replace(hour=0, minute=0, second=0, microsecond=0) if ts else None
+
+
+def _fold(store: ControlStore) -> list:
+    """Test oracle: the latest event per run_uid by event_seq, folded over
+    the whole batch_monitor log, in order of each run_uid's first event."""
+    latest: dict = {}
+    for row in ControlStore.rows(store, "batch_monitor"):
+        uid = row.get("run_uid")
+        cur = latest.get(uid)
+        if cur is None or row["event_seq"] > cur["event_seq"]:
+            latest[uid] = row
+    return list(latest.values())
+
+
+def _running(states, module_id, run_id=None):
+    rows = [r for r in states if r["module_id"] == module_id and r["run_status"] == "RUNNING"
+            and (run_id is None or r["run_id"] == run_id)]
+    return max(rows, key=lambda r: (r["run_date"], r["event_seq"])) if rows else None
+
+
+def _parent_code(states, parent_id, dep_type, control_date):
+    rows = [r for r in states if r["module_id"] == parent_id
+            and _day(r["control_date"]) == _day(control_date)]
+    if not rows:
+        return None
+    status = max(rows, key=lambda r: r["run_id"] or 0)["run_status"]
+    if status == "SUCCESS":
+        return 0
+    if status in ("RUNNING", "WAITING"):
+        return 1
+    return {"MANDATORY": 2, "OPTIONAL": 0, "WAIT": 1}.get(dep_type, 3)
+
+
+def assert_index_matches_fold(runner: BatchRunner, module_ids=(0, 1, 2, 3, 4)) -> None:
+    states = _fold(runner.store)
+    mon = runner.monitor
+    assert mon.latest_states() == states  # contents and order
+    now = runner.clock.now()
+    control_date = runner.env.control_date(runner.clock)
+    for mid in module_ids:
+        day_ids = [r["run_id"] or 0 for r in states
+                   if r["module_id"] == mid and _day(r["run_date"]) == _day(now)]
+        assert mon.next_run_id(mid, now) == max(day_ids, default=0) + 1
+        for params in (" Run_level=<1>", "X Run_level=<1>", None):
+            dup = any(r["module_id"] == mid and r["run_status"] == "RUNNING"
+                      and (r["parameters"] or " ") == (params or " ") for r in states)
+            assert mon.duplicate_run_check(mid, params) == int(dup)
+        assert mon.latest_running(mid) == _running(states, mid)
+        for run_id in range(4):
+            assert mon.find_running(mid, run_id) == _running(states, mid, run_id)
+        for dep_type in ("MANDATORY", "OPTIONAL", "WAIT", "BOGUS"):
+            assert mon.parent_status_code(
+                parent_module_id=mid, dependency_type=dep_type, control_date=control_date,
+                child_module_name="CHILD", parent_module_name="PARENT",
+                child_parameters=None,
+            ) == _parent_code(states, mid, dep_type, control_date)
+
+
+class NoLogScanStore(ControlStore):
+    """A store whose full batch_monitor read fails, to prove no admission,
+    dependency or finish path reads the whole log."""
+
+    scanned = False
+
+    def rows(self, table):
+        if table == "batch_monitor":
+            self.scanned = True
+            raise AssertionError("full batch_monitor scan")
+        return super().rows(table)
+
+
+def _dag_days(runner: BatchRunner, *, days: int, max_workers: int, seed: int, check) -> None:
+    """Run a seeded 12-module DAG, with every edge also in batch_dependency,
+    once per control date through exclusive admission; ``check`` runs
+    after each date."""
+    from etl_batch_spark.orchestration.dag import DagRunner
+
+    rng = random.Random(seed)
+    names = [f"m{i:02d}" for i in range(12)]
+    deps = {n: rng.sample(names[:i], min(i, rng.randint(0, 2))) for i, n in enumerate(names)}
+    failing = set(rng.sample(names, 2))
+    for i, n in enumerate(names, start=1):
+        register(runner.store, i, n.upper())
+    for i, n in enumerate(names, start=1):
+        for u in deps[n]:
+            runner.store.append("batch_dependency", {
+                "child_id": i, "parent_module_id": names.index(u) + 1,
+                "dependency_type": rng.choice(["MANDATORY", "OPTIONAL"])})
+    expected: dict = {}
+    for n in names:  # names are in a topological order already
+        if any(expected[u] != "SUCCESS" for u in deps[n]):
+            expected[n] = "SKIPPED"
+        else:
+            expected[n] = "FAILURE" if n in failing else "SUCCESS"
+
+    def body(name):
+        def fn(ctx):
+            if name in failing:
+                raise RuntimeError("injected")
+            return (len(name), 0)
+        return fn
+
+    dag = DagRunner(runner, max_workers=max_workers)
+    for day in range(days):
+        runner.env.update("BATCH_CONTROL_DATE",
+                          (datetime(2026, 3, 2) + timedelta(days=day)).strftime("%d-%b-%Y").upper())
+        runner.clock.advance(86400)
+        got = dag.run({n: body(n) for n in names}, deps, exclusive_run_yn="Y")
+        check()
+        assert got == expected
+
+
+class TestMonitorIndex:
+    @pytest.mark.parametrize("seed", [1, 2, 3, 4])
+    def test_random_lifecycle_matches_fold(self, seed):
+        rng = random.Random(seed)
+        r = make_runner(max_polls=2)
+        register(r.store, 1, "A")
+        register(r.store, 2, "B")
+        register(r.store, 3, "C")
+        for child, parent, kind in ((2, 1, "OPTIONAL"), (3, 1, "MANDATORY")):
+            r.store.append("batch_dependency", {
+                "child_id": child, "parent_module_id": parent, "dependency_type": kind})
+        live: list = []
+        for _ in range(80):
+            step = rng.choice(["start"] * 4 + ["finish"] * 3
+                              + ["resume", "advance", "delete", "rekey"])
+            if step == "start":
+                try:
+                    live.append(r.startup(rng.choice(["A", "B", "C", "NOPE"]), 1,
+                                          exclusive_run_yn=rng.choice("YN"),
+                                          parameters=rng.choice([None, "X"])))
+                except (NoRecordBatchMaster, DuplicateRun, DependencyFail, TimeoutError):
+                    pass
+            elif step == "finish" and live:
+                ctx = rng.choice(live)
+                ctx.finish(rng.choice(["SUCCESS", "FAILURE"]), rng.randint(0, 9), 0)
+                if rng.random() < 0.5:  # otherwise a later double finish
+                    live.remove(ctx)
+            elif step == "resume" and live:
+                ctx = rng.choice(live)
+                try:
+                    live.append(r.resume(ctx.module["module_name"], 1, ctx.run_id))
+                except NoRecordBatchMaster:
+                    pass
+            elif step == "advance":
+                r.clock.advance(rng.choice([600, 5 * 3600, 20 * 3600]))
+            elif step == "delete":
+                k = rng.randint(2, 5)
+                r.store.delete_where("batch_monitor", lambda row, k=k: row["event_seq"] % k == 0)
+            elif step == "rekey" and r.monitor.latest_states():
+                row = rng.choice(r.monitor.latest_states())
+                r.store.append("batch_monitor", {
+                    **{c: v for c, v in row.items() if c != "event_seq"},
+                    "module_id": rng.choice([1, 2, 3, 4])})
+            assert_index_matches_fold(r)
+
+    def test_dag_with_four_workers_matches_fold(self):
+        r = make_runner()
+        _dag_days(r, days=3, max_workers=4, seed=5,
+                  check=lambda: assert_index_matches_fold(r, module_ids=range(14)))
+
+    def test_admission_and_finish_never_scan_the_log(self):
+        store = NoLogScanStore()
+        r = BatchRunner(store, FakeClock(datetime(2026, 3, 2, 8, 0, 0)),
+                        poll_interval=1.0, max_polls=5, user="OPS$BATCHUSR")
+
+        def check():
+            assert not store.scanned
+
+        _dag_days(r, days=3, max_workers=2, seed=6, check=check)
+        assert {row["run_status"] for row in _fold(store)} <= {"SUCCESS", "FAILURE"}
