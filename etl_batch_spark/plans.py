@@ -5,13 +5,28 @@ assert that filters reach the parquet scan, that bounded dimensions
 broadcast, and that scans are column-pruned (SURVEY.md §4's "everything
 at this layer is stock Catalyst" — these helpers prove each query uses
 it).
+
+The structural checks read the physical plan tree over py4j, never the
+explain text.  ``walk`` starts at ``queryExecution().executedPlan()``
+and from every node follows:
+
+- ``children()``;
+- ``innerChildren()``: the plans of subqueries (scalar, ``IN``,
+  ``EXISTS``) and the inner plans of nodes such as ``UnionLoop``;
+- ``executedPlan()`` of an ``AdaptiveSparkPlan`` (its current plan) and
+  ``plan()`` of an AQE query stage, so a DataFrame that has already run
+  is walked through its final stages.
+
+So a subquery's operators count like the main plan's: a scan inside a
+scalar subquery is a scan of the query.  ``ReusedExchange`` and
+``ReusedSubquery`` are leaves, so a reused plan counts once.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
+
+Plan = DataFrame | list[tuple[str, object]]
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -20,69 +35,68 @@ def formatted_plan(df: DataFrame) -> str:
     return qe.explainString(mode)
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters entries across the plan's scans."""
-    out: list[str] = []
-    for m in re.finditer(r"PushedFilters: \[(.*?)\]", formatted_plan(df)):
-        if m.group(1).strip():
-            out.extend(s.strip() for s in m.group(1).split(","))
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def walk(df: DataFrame) -> list[tuple[str, object]]:
+    """``(node name, JVM node)`` for every node of ``df``'s physical plan,
+    parents before children, following the edges in the module doc."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        out.append((name, node))
+        edges = _seq(node.children()) + _seq(node.innerChildren())
+        if name == "AdaptiveSparkPlan":
+            edges.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            edges.append(node.plan())
+        todo.extend(reversed(edges))
     return out
 
 
-def read_schemas(df: DataFrame) -> list[list[str]]:
-    """Column lists actually read by each parquet scan (pruning check)."""
-    schemas = []
-    for m in re.finditer(r"ReadSchema: struct<(.*?)>", formatted_plan(df)):
-        cols = [c.split(":")[0].strip() for c in m.group(1).split(",") if c.strip()]
-        schemas.append(cols)
-    return schemas
+def _nodes(plan: Plan) -> list[tuple[str, object]]:
+    """``plan`` is a DataFrame, or the ``walk`` of one reused by a caller
+    that runs several checks on the same plan."""
+    return plan if isinstance(plan, list) else walk(plan)
 
 
-def count_ops(df: DataFrame, op: str) -> int:
-    """Occurrences of a physical operator (e.g. 'BroadcastHashJoin',
-    'Exchange', 'SortMergeJoin') in the formatted plan's tree section."""
-    plan = formatted_plan(df)
-    tree = plan.split("\n\n")[0]  # numbered-detail section repeats op names
-    return len(re.findall(rf"\b{re.escape(op)}\b", tree))
+def _file_scans(plan: Plan) -> list:
+    return [n for _, n in _nodes(plan) if n.getClass().getSimpleName() == "FileSourceScanExec"]
 
 
-def unpartitioned_windows(df: DataFrame) -> int:
-    """Count Window physical ops with NO partition spec (the
-    `WindowExec: No Partition Defined` single-task shape).
+def pushed_filters(plan: Plan) -> list[str]:
+    """All pushed-down data-source filters across the plan's file scans."""
+    return [f.toString() for scan in _file_scans(plan) for f in _seq(scan.pushedDownFilters())]
 
-    A partitioned+ordered ``Window`` detail line carries three top-level
-    bracket groups ([exprs], [partition], [order]); two groups mean either
-    unpartitioned ([exprs], [order]) or partition-only ([exprs],
-    [partition]) — told apart by the sort direction (ASC/DESC) an order
-    spec always prints and a partition list never does.
-    ``WindowGroupLimit`` argument lines are ([partition], [order], fn, k,
-    mode) — for those only an EMPTY first group means unpartitioned."""
-    plan = formatted_plan(df)
-    n = 0
-    for m in re.finditer(
-        r"\(\d+\) (Window(?:GroupLimit)?)\n((?:.+\n)*?)\n", plan + "\n"
-    ):
-        op = m.group(1)
-        for line in m.group(2).splitlines():
-            if not line.startswith("Arguments:"):
-                continue
-            groups: list[str] = []
-            depth, start = 0, -1
-            for i, ch in enumerate(line):
-                if ch == "[":
-                    if depth == 0:
-                        start = i
-                    depth += 1
-                elif ch == "]":
-                    depth -= 1
-                    if depth == 0:
-                        groups.append(line[start : i + 1])
-            ordered = lambda g: " ASC" in g or " DESC" in g  # noqa: E731
-            if op == "Window" and len(groups) == 2 and ordered(groups[1]):
-                n += 1
-            elif op == "WindowGroupLimit" and groups and groups[0] == "[]":
-                n += 1
-    return n
+
+def read_schemas(plan: Plan) -> list[list[str]]:
+    """Column lists actually read by each file scan (pruning check)."""
+    return [list(scan.requiredSchema().fieldNames()) for scan in _file_scans(plan)]
+
+
+def count_ops(plan: Plan, op: str) -> int:
+    """Nodes of physical operator ``op`` (e.g. 'BroadcastHashJoin',
+    'Exchange', 'Scan parquet').  A node matches when its name is ``op``
+    or ``op`` followed by a qualifier (``Scan parquet <table>``)."""
+    return sum(name == op or name.startswith(op + " ") for name, _ in _nodes(plan))
+
+
+def scan_counts(plan: Plan) -> dict[str, int]:
+    """Parquet-scan and checkpoint-scan (``Scan ExistingRDD``) node counts,
+    the two numbers tests/scan_budgets.json pins per query."""
+    nodes = _nodes(plan)
+    return {"parquet": count_ops(nodes, "Scan parquet"), "rdd": count_ops(nodes, "Scan ExistingRDD")}
+
+
+def unpartitioned_windows(plan: Plan) -> int:
+    """Window and WindowGroupLimit nodes with NO partition spec: the
+    `WindowExec: No Partition Defined` single-task shape."""
+    return sum(
+        name in ("Window", "WindowGroupLimit") and node.partitionSpec().isEmpty()
+        for name, node in _nodes(plan)
+    )
 
 
 def assert_filter_pushed(df: DataFrame, column: str) -> None:
@@ -92,7 +106,8 @@ def assert_filter_pushed(df: DataFrame, column: str) -> None:
 
 
 def assert_broadcast(df: DataFrame, at_least: int = 1) -> None:
-    n = count_ops(df, "BroadcastHashJoin") + count_ops(df, "BroadcastNestedLoopJoin")
+    nodes = walk(df)
+    n = count_ops(nodes, "BroadcastHashJoin") + count_ops(nodes, "BroadcastNestedLoopJoin")
     if n < at_least:
         raise AssertionError(f"expected ≥{at_least} broadcast joins, plan has {n}")
 

@@ -5,11 +5,12 @@ join selectivities than the shipped fixtures."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 
 @pytest.fixture(scope="module")

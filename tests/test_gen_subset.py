@@ -6,11 +6,12 @@ schema-preserving, and genuinely seed-varied."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 SRC = "/root/testdata/sf0.001"
 

@@ -4,6 +4,8 @@ assumed."""
 
 from __future__ import annotations
 
+import pytest
+
 from etl_batch_spark import plans
 from etl_batch_spark.queries import QUERIES
 
@@ -13,6 +15,43 @@ def test_q01_filter_pushed_and_columns_pruned(spark, sf_dir):
     plans.assert_filter_pushed(df, "l_shipdate")
     # lineitem has 11 columns; q01 needs 7
     plans.assert_columns_pruned(df, table_width=11)
+
+
+def test_plan_checks_see_what_explain_text_hides(spark, tmp_path):
+    """Shapes the explain text garbles: a window with neither partition
+    nor order, an IN list among the pushed filters, a nested column
+    before the last field of a scan's schema, a scan inside a scalar
+    subquery, and a plan that already ran (its operators sit under AQE
+    query stages)."""
+    from pyspark.sql import Window, functions as F
+
+    w = spark.range(10).select(F.sum("id").over(Window.partitionBy()).alias("s"))
+    assert plans.unpartitioned_windows(w) == 1
+
+    events = str(tmp_path / "events")
+    spark.createDataFrame(
+        [("click", 2.0), ("view", 0.5)], "event_type string, value double"
+    ).write.parquet(events)
+    ev = spark.read.parquet(events).filter(
+        F.col("event_type").isin("click", "purchase") & (F.col("value") > 1)
+    )
+    filters = plans.pushed_filters(ev)
+    assert "In(event_type, [click,purchase])" in filters, filters
+    assert "GreaterThan(value,1.0)" in filters, filters
+    sub = spark.sql(f"SELECT (SELECT max(value) FROM parquet.`{events}`) AS m")
+    assert plans.scan_counts(sub) == {"parquet": 1, "rdd": 0}
+
+    embeddings = str(tmp_path / "embeddings")
+    spark.createDataFrame(
+        [(1, [0.5, 1.5], 3)], "vec_id long, embedding array<float>, label int"
+    ).write.parquet(embeddings)
+    scan = spark.read.parquet(embeddings)
+    assert plans.read_schemas(scan) == [["vec_id", "embedding", "label"]]
+
+    g = spark.range(100).groupBy((F.col("id") % 5).alias("k")).count()
+    assert plans.count_ops(g, "Exchange") == 1
+    g.collect()
+    assert plans.count_ops(g, "Exchange") == 1
 
 
 def test_q09_broadcasts_dimensions(spark, sf_dir):
@@ -64,15 +103,26 @@ def test_q47_plans_semi_and_anti(spark, sf_dir):
     assert "LeftAnti" in plan
 
 
-def test_no_query_plans_a_cartesian_product(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir):
+    """Every registry query built and walked once; the registry-wide
+    checks below read their numbers from here."""
+    out = {}
+    for name, q in QUERIES.items():
+        nodes = plans.walk(q.build(spark, sf_dir))
+        out[name] = {
+            "cartesian": plans.count_ops(nodes, "CartesianProduct"),
+            "unpartitioned_windows": plans.unpartitioned_windows(nodes),
+            "scans": plans.scan_counts(nodes),
+        }
+    return out
+
+
+def test_no_query_plans_a_cartesian_product(registry_plans):
     """Global invariant: candidate pairs, salts and seeds always fan out
     via broadcast or equi-join keys — a CartesianProduct of two big
     sides would be quadratic at any scale."""
-    offenders = []
-    for name, q in QUERIES.items():
-        df = q.build(spark, sf_dir)
-        if plans.count_ops(df, "CartesianProduct") > 0:
-            offenders.append(name)
+    offenders = [name for name, p in registry_plans.items() if p["cartesian"] > 0]
     assert offenders == []
 
 
@@ -268,7 +318,7 @@ def test_dd11_hot_span_scrub_is_linear(spark, sf_dir):
     assert plans.count_ops(df, "Exchange") <= 6
 
 
-def test_no_query_windows_over_unpartitioned_data(spark, sf_dir):
+def test_no_query_windows_over_unpartitioned_data(registry_plans):
     """Global invariant: no query plans a `WindowExec: No Partition
     Defined` over data that grows with scale (single task at 100 TB).
     The allowlist is exactly the bounded-aggregate exemptions: q85's two
@@ -285,8 +335,8 @@ def test_no_query_windows_over_unpartitioned_data(spark, sf_dir):
         "ev15_peak_concurrency": 1,
     }
     offenders = {}
-    for name, q in QUERIES.items():
-        n = plans.unpartitioned_windows(q.build(spark, sf_dir))
+    for name, p in registry_plans.items():
+        n = p["unpartitioned_windows"]
         if n > allowed.get(name, 0):
             offenders[name] = n
     assert offenders == {}
@@ -458,7 +508,7 @@ def test_hll_partials_hashes_each_key_once(spark, sf_dir):
     assert plans.formatted_plan(day).count("md5") == 1
 
 
-def test_scan_count_budgets(spark, sf_dir):
+def test_scan_count_budgets(registry_plans):
     """Registry-wide pin of the scan-replay audit: Spark replays a
     shared lazy subplan once PER CONSUMER, so a pipeline feeding one
     deduped corpus to three reports silently re-reads (and re-dedups)
@@ -480,16 +530,12 @@ def test_scan_count_budgets(spark, sf_dir):
         open(os.path.join(os.path.dirname(__file__), "scan_budgets.json"))
     )
     missing, over = [], {}
-    for name, q in QUERIES.items():
+    for name, p in registry_plans.items():
         b = budgets.get(name)
         if b is None:
             missing.append(name)
             continue
-        df = q.build(spark, sf_dir)
-        got = {
-            "parquet": plans.count_ops(df, "Scan parquet"),
-            "rdd": plans.count_ops(df, "Scan ExistingRDD"),
-        }
+        got = p["scans"]
         if got["parquet"] > b["parquet"] or got["rdd"] > b["rdd"]:
             over[name] = {"budget": b, "plan": got}
     assert missing == [], f"queries without a scan budget (run scan_audit --write): {missing}"

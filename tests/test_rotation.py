@@ -3,8 +3,13 @@ entries per round, so the ordering mechanism itself needs a contract."""
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 from etl_batch_spark.queries import QUERIES
 from etl_batch_spark.queries.rotation import DRIVER_GREEN, DRIVER_WINDOW
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def test_window_is_exactly_the_first_fifty():
@@ -47,9 +52,7 @@ def test_every_window_query_has_an_oracle_or_documented_rows_only():
 
 class TestRotateTool:
     def test_compute_rotation_folds_greens_and_prepends(self):
-        import sys
-
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, str(REPO / "tools"))
         from rotate import compute_rotation, greens_from_correctness
 
         registry = [f"q{i:02d}" for i in range(120)]
@@ -74,12 +77,10 @@ class TestRotateTool:
         assert not (set(window) & set(green))
 
     def test_rewrite_lists_roundtrips_rotation_source(self):
-        import sys
-
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, str(REPO / "tools"))
         from rotate import rewrite_lists
 
-        src = open("/root/repo/etl_batch_spark/queries/rotation.py").read()
+        src = (REPO / "etl_batch_spark" / "queries" / "rotation.py").read_text()
         out = rewrite_lists(src, ["a_query"], ["b_query", "c_query"])
         ns: dict = {}
         exec(compile(out, "rotation.py", "exec"), ns)  # still valid python

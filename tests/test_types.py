@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from pyspark.sql import types as T
 
 from etl_batch_spark.queries import QUERIES
 from etl_batch_spark.catalog import DATA_TABLES, table_path
@@ -43,8 +44,24 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("name", sorted(n for n, q in QUERIES.items() if q.oracle))
 def test_dtypes_match_oracle(spark, sf_dir, duck, name):
+    """Besides matching DuckDB's types, every oracle-bearing query emits
+    scalar, non-decimal columns only.  The external checker's pandas
+    canonicalizer cannot hash array/map/struct cells (CORRECTNESS_r01's
+    et17 failure mode), and hashes Spark-side vs DuckDB-side Decimal
+    cells differently even when the values are equal (CORRECTNESS_r03's
+    q39 failure mode: rows+schema green, hash red, exact local parity
+    green).  Flatten nested types with concat_ws / printf and render
+    decimals as strings (or cast to double) at the query edge; decimal
+    accumulation stays internal."""
     q = QUERIES[name]
-    sdt = dict(q.build(spark, sf_dir).dtypes)
+    df = q.build(spark, sf_dir)
+    nested = [
+        f.name
+        for f in df.schema.fields
+        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType, T.DecimalType))
+    ]
+    assert nested == [], f"nested or decimal output columns: {nested}"
+    sdt = dict(df.dtypes)
     rel = duck.sql(q.oracle)
     ddt = dict(zip(rel.columns, (str(t) for t in rel.types)))
     assert set(sdt) == set(ddt), f"column sets differ: {sorted(sdt)} vs {sorted(ddt)}"
@@ -54,31 +71,3 @@ def test_dtypes_match_oracle(spark, sf_dir, duck, name):
         if sdt[col] != want:
             diffs[col] = (sdt[col], dt)
     assert not diffs, f"dtype skew: {diffs}"
-
-
-def test_no_oracle_bearing_query_emits_nested_columns(spark, sf_dir):
-    """The external driver's pandas canonicalizer cannot hash array/
-    map/struct cells (CORRECTNESS_r01's et17 failure mode), and hashes
-    Spark-side vs DuckDB-side Decimal cells differently even when the
-    values are equal (CORRECTNESS_r03's q39 failure mode: rows+schema
-    green, hash red, exact local parity green).  Pin the constraint
-    engine-wide: every oracle-bearing query emits scalar, non-decimal
-    columns only — flatten nested types with concat_ws / printf and
-    render decimals as strings (or cast to double) at the query edge;
-    decimal accumulation stays internal."""
-    from pyspark.sql import types as T
-
-    offenders = {}
-    for name, q in QUERIES.items():
-        if q.oracle is None:
-            continue
-        bad = [
-            f.name
-            for f in q.build(spark, sf_dir).schema.fields
-            if isinstance(
-                f.dataType, (T.ArrayType, T.MapType, T.StructType, T.DecimalType)
-            )
-        ]
-        if bad:
-            offenders[name] = bad
-    assert offenders == {}

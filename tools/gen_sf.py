@@ -15,7 +15,7 @@ realistic shape for dedup workloads (web corpora are full of exact
 duplicates) and stresses the dup-group paths.
 
 Usage:
-    python tools/gen_sf.py [--factor 10] [--out /root/repo/.benchdata/sf1]
+    python tools/gen_sf.py [--factor 10] [--out DIR]   # DIR defaults to <repo>/.benchdata/sf1
 
 Pure DuckDB (no Spark): reads /root/testdata/sf0.1/*.parquet, writes
 one parquet per table.  Deterministic — same inputs, same outputs.
@@ -29,6 +29,7 @@ import os
 import duckdb
 
 SRC = "/root/testdata/sf0.1"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # key column -> every (table, column) that references it; shift amounts
 # are derived from the key's own max so copies can never collide
@@ -53,7 +54,7 @@ def main(argv: "list[str] | None" = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factor", type=int, default=10)
     ap.add_argument("--src", default=SRC)
-    ap.add_argument("--out", default="/root/repo/.benchdata/sf1")
+    ap.add_argument("--out", default=os.path.join(REPO, ".benchdata", "sf1"))
     args = ap.parse_args(argv)
     os.makedirs(args.out, exist_ok=True)
 

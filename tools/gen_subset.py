@@ -9,7 +9,7 @@ deterministic row-subset of any fixture dir; running the full
 query on data it was never tuned against:
 
     python tools/gen_subset.py --seed 1
-    python tools/parity.py /root/repo/.benchdata/subset/s1
+    python tools/parity.py .benchdata/subset/s1
 
 Beyond row-subsetting (and ``--nulls``), three more distribution-shift
 classes, each targeting a divergence family the canonical fixtures
@@ -62,6 +62,8 @@ import argparse
 import os
 
 import duckdb
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # table -> non-key VALUE columns eligible for --nulls injection.  Keys /
 # ids stay non-null: their non-null contract is legitimate (the driver
@@ -261,7 +263,7 @@ def main(argv: "list[str] | None" = None) -> int:
              "distances — skew no uniform perturbation creates",
     )
     args = ap.parse_args(argv)
-    out = args.out or f"/root/repo/.benchdata/subset/s{args.seed}"
+    out = args.out or os.path.join(REPO, ".benchdata", "subset", f"s{args.seed}")
     if not 0 <= args.keep <= 100:
         raise SystemExit(f"--keep must be in [0, 100], got {args.keep}")
     for name in ("nulls", "ties", "unicode", "dup", "neg", "negids",

@@ -36,7 +36,7 @@ import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT_BASE = os.path.join(REPO, ".benchdata", "subset")
 
 # name -> gen_subset.py args (seed/out derived from the name where the

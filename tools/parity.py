@@ -13,10 +13,12 @@ import math
 import sys
 import time
 from datetime import date, datetime
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from etl_batch_spark.catalog import DATA_TABLES, table_path
 from etl_batch_spark.queries import QUERIES

@@ -23,11 +23,13 @@ import argparse
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 WINDOW_SIZE = 50
-ROTATION_PATH = "/root/repo/etl_batch_spark/queries/rotation.py"
+ROTATION_PATH = REPO / "etl_batch_spark" / "queries" / "rotation.py"
 
 
 def greens_from_correctness(correctness: dict) -> list[str]:

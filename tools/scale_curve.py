@@ -12,16 +12,18 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from etl_batch_spark.queries import QUERIES  # noqa: E402
 from etl_batch_spark.session import get_spark  # noqa: E402
 
 POINTS = [
     ("sf0.1", "/root/testdata/sf0.1"),
-    ("sf1", "/root/repo/.benchdata/sf1"),
-    ("sf10", "/root/repo/.benchdata/sf10"),
+    ("sf1", str(REPO / ".benchdata" / "sf1")),
+    ("sf10", str(REPO / ".benchdata" / "sf10")),
 ]
 
 

@@ -1,4 +1,4 @@
-"""Scan-replay audit: count parquet-scan nodes in every query's plan.
+"""Scan-replay audit: count parquet- and checkpoint-scan nodes in every query's plan.
 
 Spark replays a shared lazy subplan once PER CONSUMER — a pipeline that
 feeds its deduped corpus to three reports re-reads (and re-dedups) the
@@ -10,7 +10,8 @@ maintains the per-query budget file that pins the wins as a regression
 test (tests/test_plans.py::test_scan_count_budgets).
 
 A query's number is the count of ``Scan parquet`` nodes in its
-formatted physical plan — scan NODES in the DAG, so a replayed subplan
+physical plan, subquery plans included (``plans.scan_counts``, the same
+count the test pins) — scan NODES in the DAG, so a replayed subplan
 shows up even though it reads the same file.  Queries that materialize
 a shared stage via ``localCheckpoint`` surface the checkpointed blocks
 as ``Scan ExistingRDD``; those scans happened exactly once at build
@@ -28,26 +29,20 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
-BUDGET_PATH = "/root/repo/tests/scan_budgets.json"
+BUDGET_PATH = REPO / "tests" / "scan_budgets.json"
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def scan_counts(df) -> dict[str, int]:
-    from etl_batch_spark import plans
-
-    return {
-        "parquet": plans.count_ops(df, "Scan parquet"),
-        "rdd": plans.count_ops(df, "Scan ExistingRDD"),
-    }
 
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     write = "--write" in sys.argv
 
+    from etl_batch_spark.plans import scan_counts
     from etl_batch_spark.queries import QUERIES
     from etl_batch_spark.session import get_spark
 
@@ -66,8 +61,8 @@ def main() -> int:
         out[name] = counts
         budget = old.get(name)
         flag = ""
-        if budget is not None and counts["parquet"] > budget["parquet"]:
-            flag = f"  REGRESSION (budget {budget['parquet']})"
+        if budget is not None and any(counts[k] > budget[k] for k in counts):
+            flag = f"  REGRESSION (budget {budget['parquet']} parquet, {budget['rdd']} rdd)"
             regressions.append(name)
         print(f"{name}: {counts['parquet']} parquet, {counts['rdd']} rdd{flag}")
 
