@@ -11,10 +11,12 @@ the reference's column references (SURVEY.md §1.2).
 
 from __future__ import annotations
 
+import glob
 import os
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -143,8 +145,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in DATA_TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(DATA_TABLES)}")
     if name == "events" and _events_ts_is_nanos(sf_dir):
-        from pyspark.sql import functions as F
-
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw_schema = T.StructType(
             [
@@ -195,6 +195,39 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     if n_files < target:
         return df.repartition(target)
     return df
+
+
+def stage_halves(df: DataFrame, tmp: str) -> tuple[str, str]:
+    """Write ``df`` as two single-file parquet halves under ``tmp`` and
+    return the two file paths, half 0 first.
+
+    Row ``r`` goes to half ``coalesce(pmod(r.event_id, 2), 0)``.  ``pmod``
+    keeps negative ids (``-1 % 2`` is -1, which matches neither half) and
+    ``coalesce`` sends NULL ids to half 0, so every row lands in exactly
+    one file; an oracle that splits the same rows states the same rule.
+    """
+    half = F.coalesce(F.pmod(F.col("event_id"), F.lit(2)), F.lit(0))
+
+    def stage(k: int) -> str:
+        out = os.path.join(tmp, f"stage{k}")
+        df.filter(half == k).coalesce(1).write.mode("overwrite").parquet(out)
+        (part,) = glob.glob(os.path.join(out, "part-*.parquet"))
+        return part
+
+    return stage(0), stage(1)
+
+
+def read_landed(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Read back a directory a streaming sink landed, as ``schema``.
+
+    A source that drained no batch never creates ``path``; that reads as
+    an empty frame.  The explicit schema keeps zero-row and all-NULL
+    batches from inferring other types, and selecting its columns drops
+    the sink's ``batch_id`` partition column.
+    """
+    if not os.path.exists(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path).select(*schema.fieldNames())
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -8,10 +8,14 @@ schedule — expressed as oracle-checked DataFrame plans.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from etl_batch_spark.catalog import load_table
+from etl_batch_spark.catalog import load_table, stage_halves
 from etl_batch_spark.operators.scd import scd2_merge
 from etl_batch_spark.queries.registry import query
 
@@ -1817,9 +1821,7 @@ def et29_ivm_apply_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # commits (overwrite, append, correcting overwrite) against a scratch
 # TxTable, then read(version=1) — the PRE-correction snapshot, resolved
 # purely from the log (never a filesystem listing).  The oracle
-# reconstructs what v1 contained in SQL.  The result is materialized
-# (localCheckpoint) before the scratch dir is removed, so the returned
-# plan never re-reads deleted files.  At 100 TB the log is KBs of
+# reconstructs what v1 contained in SQL.  At 100 TB the log is KBs of
 # metadata per commit; time travel costs one log replay + a pruned
 # file read.
 # ---------------------------------------------------------------------------
@@ -1836,9 +1838,6 @@ def et29_ivm_apply_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et30_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from etl_batch_spark.sources.txlog import TxTable
 
     c = load_table(spark, sf_dir, "customer").select(
@@ -1847,15 +1846,12 @@ def et30_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("c_acctbal", 2).alias("acctbal"),
         F.col("c_mktsegment").alias("segment"),
     )
-    tmp = tempfile.mkdtemp(prefix="et30_txtable_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et30_txtable_", ignore_cleanup_errors=True) as tmp:
         t = TxTable(spark, tmp)
         t.overwrite(c.filter(F.col("c_custkey") % 3 == 0))   # v0: initial load
         t.append(c.filter(F.col("c_custkey") % 3 == 1))      # v1: increment
         t.overwrite(c.filter(F.col("c_custkey") % 2 == 0))   # v2: correction
         return t.read(version=1).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1902,15 +1898,10 @@ def et30_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et31_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.operators.merge import merge_upsert
 
-    tmp = tempfile.mkdtemp(prefix="et31_merge_")
-    target_path = os.path.join(tmp, "target")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et31_merge_", ignore_cleanup_errors=True) as tmp:
+        target_path = os.path.join(tmp, "target")
         c = load_table(spark, sf_dir, "customer").select(
             "c_custkey",
             F.col("c_acctbal").alias("acctbal"),
@@ -1937,8 +1928,6 @@ def et31_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_custkey", F.round("acctbal", 2).alias("acctbal"), "segment"
         )
         return merged.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1948,8 +1937,7 @@ def et31_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # feed is the honest multiset diff of the two snapshots — inserts are
 # rows only the head has, deletes rows only v0 had; an update would
 # appear as delete+insert.  The oracle replays the diff as residue set
-# algebra on the same deterministic commit contents.  Materialized
-# before the scratch table is removed.
+# algebra on the same deterministic commit contents.
 # ---------------------------------------------------------------------------
 @query(
     "et32_change_feed",
@@ -1968,9 +1956,6 @@ def et31_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et32_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from etl_batch_spark.sources.txlog import TxTable
 
     c = load_table(spark, sf_dir, "customer").select(
@@ -1979,15 +1964,12 @@ def et32_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("c_acctbal", 2).alias("acctbal"),
         F.col("c_mktsegment").alias("segment"),
     )
-    tmp = tempfile.mkdtemp(prefix="et32_txtable_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et32_txtable_", ignore_cleanup_errors=True) as tmp:
         t = TxTable(spark, tmp)
         t.overwrite(c.filter(F.col("c_custkey") % 3 == 0))   # v0
         t.append(c.filter(F.col("c_custkey") % 3 == 1))      # v1
         t.overwrite(c.filter(F.col("c_custkey") % 2 == 0))   # v2
         return t.changes(0, 2).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2011,9 +1993,6 @@ def et32_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et33_compaction_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from etl_batch_spark.sources.txlog import TxTable
 
     c = load_table(spark, sf_dir, "customer").select(
@@ -2022,8 +2001,7 @@ def et33_compaction_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("c_acctbal", 2).alias("acctbal"),
         F.col("c_mktsegment").alias("segment"),
     )
-    tmp = tempfile.mkdtemp(prefix="et33_txtable_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et33_txtable_", ignore_cleanup_errors=True) as tmp:
         t = TxTable(spark, tmp)
         # the three-way split must be EXHAUSTIVE over every key the
         # oracle's plain `FROM customer` sees: `% 3 == r` alone drops
@@ -2037,8 +2015,6 @@ def et33_compaction_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.compact(target_files=2)
         t.vacuum(retain_versions=1)
         return t.read().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2062,9 +2038,6 @@ def et33_compaction_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et34_zorder_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from etl_batch_spark.sources.txlog import TxTable
 
     c = load_table(spark, sf_dir, "customer").select(
@@ -2073,15 +2046,12 @@ def et34_zorder_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("c_acctbal", 2).alias("acctbal"),
         F.col("c_mktsegment").alias("segment"),
     )
-    tmp = tempfile.mkdtemp(prefix="et34_txtable_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et34_txtable_", ignore_cleanup_errors=True) as tmp:
         t = TxTable(spark, tmp)
         t.overwrite(c)
         t.compact(target_files=3, zorder_cols=["c_custkey", "acctbal"])
         t.vacuum(retain_versions=1)
         return t.read().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2095,10 +2065,8 @@ def et34_zorder_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # estimated — and the oracle REBUILDS the same monthly registers from
 # scratch in SQL (et23's exactly-portable estimator), so
 # "incrementally maintained == full rebuild" is what the value hash
-# proves.  The split uses coalesce(pmod) so negative/NULL event_ids
-# land in exactly one half (the et33 lesson).  At scale each trigger
-# touches only its batch's buckets; store size is buckets × 256
-# registers regardless of row count.
+# proves.  At scale each trigger touches only its batch's buckets;
+# store size is buckets × 256 registers regardless of row count.
 # ---------------------------------------------------------------------------
 @query(
     "et35_incremental_hll_maintenance",
@@ -2148,29 +2116,16 @@ def et34_zorder_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et35_incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.operators.sketch import hll_estimate, hll_merge, hll_partials
     from etl_batch_spark.streaming.events import maintain_partials_incrementally
 
-    tmp = tempfile.mkdtemp(prefix="et35_hll_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et35_hll_", ignore_cleanup_errors=True) as tmp:
         src = os.path.join(tmp, "src")
         store = os.path.join(tmp, "store")
         ck = os.path.join(tmp, "ck")
         os.makedirs(src)
 
         e = load_table(spark, sf_dir, "events")
-        half = F.coalesce(F.pmod(F.col("event_id"), F.lit(2)), F.lit(0))
-
-        def stage_half(k: int) -> str:
-            stage = os.path.join(tmp, f"stage{k}")
-            e.filter(half == k).coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            return part
 
         def build(batch: DataFrame) -> DataFrame:
             return hll_partials(
@@ -2180,7 +2135,7 @@ def et35_incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
         def merge(both: DataFrame) -> DataFrame:
             return hll_merge(both, F.col("bucket"))
 
-        part0, part1 = stage_half(0), stage_half(1)
+        part0, part1 = stage_halves(e, tmp)
         kwargs = dict(build=build, merge=merge)
         shutil.copyfile(part0, os.path.join(src, "events_a.parquet"))
         maintain_partials_incrementally(spark, src, store, ck, **kwargs)
@@ -2211,8 +2166,6 @@ def et35_incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
             F.countDistinct("user_id").alias("n_exact")
         )
         return est.join(exact, "bucket").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2259,15 +2212,11 @@ def et35_incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def et36_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
-    import os
-    import shutil
-    import tempfile
 
     from etl_batch_spark.operators.merge import merge_upsert_partitioned
 
-    tmp = tempfile.mkdtemp(prefix="et36_merge_")
-    target = os.path.join(tmp, "target")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et36_merge_", ignore_cleanup_errors=True) as tmp:
+        target = os.path.join(tmp, "target")
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.col("o_totalprice").alias("price"),
@@ -2331,8 +2280,6 @@ def et36_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return back.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2358,9 +2305,6 @@ def et36_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et37_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from etl_batch_spark.sources.txlog import TxTable
 
     c = load_table(spark, sf_dir, "customer").select(
@@ -2369,8 +2313,7 @@ def et37_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("c_acctbal", 2).alias("acctbal"),
         F.col("c_mktsegment").alias("segment"),
     )
-    tmp = tempfile.mkdtemp(prefix="et37_txtable_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et37_txtable_", ignore_cleanup_errors=True) as tmp:
         t = TxTable(spark, tmp)
         bucket = F.coalesce(F.pmod(F.col("c_custkey"), F.lit(3)), F.lit(2))
         for residue in (0, 1, 2):  # v0..v2: three small appends
@@ -2393,8 +2336,6 @@ def et37_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         if t.vacuum(retain_versions=1):
             raise AssertionError("second vacuum was not a no-op")
         return t.read().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2429,29 +2370,16 @@ def et37_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et38_versioned_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.operators.rollup import _merge_partials, _partials_from_raw
     from etl_batch_spark.streaming.events import maintain_partials_versioned
 
-    tmp = tempfile.mkdtemp(prefix="et38_vroll_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et38_vroll_", ignore_cleanup_errors=True) as tmp:
         src = os.path.join(tmp, "src")
         table_path = os.path.join(tmp, "table")
         ck = os.path.join(tmp, "ck")
         os.makedirs(src)
 
         e = load_table(spark, sf_dir, "events")
-        half = F.coalesce(F.pmod(F.col("event_id"), F.lit(2)), F.lit(0))
-
-        def stage_half(k: int) -> str:
-            stage = os.path.join(tmp, f"stage{k}")
-            e.filter(half == k).coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            return part
 
         def build(batch: DataFrame) -> DataFrame:
             return _partials_from_raw(
@@ -2462,7 +2390,7 @@ def et38_versioned_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataF
         def merge(both: DataFrame) -> DataFrame:
             return _merge_partials(both, key_cols=("event_type",), level="day")
 
-        part0, part1 = stage_half(0), stage_half(1)
+        part0, part1 = stage_halves(e, tmp)
         kwargs = dict(build=build, merge=merge)
         shutil.copyfile(part0, os.path.join(src, "events_a.parquet"))
         _, t = maintain_partials_versioned(spark, src, table_path, ck, **kwargs)
@@ -2485,7 +2413,8 @@ def et38_versioned_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataF
         # Compare on (bucket, event_type, n) — deterministic integers;
         # float sums are checked at HEAD through the oracle's rebuild
         v0 = t.read(version=0).select("bucket", "event_type", "n")
-        b0 = merge(build(e.filter(half == 0))).select("bucket", "event_type", "n")
+        batch0 = spark.read.schema(e.schema).parquet(part0)
+        b0 = merge(build(batch0)).select("bucket", "event_type", "n")
         if v0.exceptAll(b0).count() or b0.exceptAll(v0).count():
             raise AssertionError("read(version=0) != batch-0 recomputation")
 
@@ -2498,8 +2427,6 @@ def et38_versioned_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataF
             F.round("max_v", 2).alias("max_value"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2540,10 +2467,6 @@ def et38_versioned_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataF
     """,
 )
 def et39_concurrent_merge_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.operators.merge import merge_dataframes
     from etl_batch_spark.sources.txlog import (
         ConcurrentWriteConflict,
@@ -2574,8 +2497,7 @@ def et39_concurrent_merge_conflict(spark: SparkSession, sf_dir: str) -> DataFram
         )
         return merge_dataframes(target, updates, ["c_custkey"])
 
-    tmp = tempfile.mkdtemp(prefix="et39_occ_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et39_occ_", ignore_cleanup_errors=True) as tmp:
         t = TxTable(spark, os.path.join(tmp, "table"))
         t.append(seed)  # v0, the shared snapshot
 
@@ -2609,8 +2531,6 @@ def et39_concurrent_merge_conflict(spark: SparkSession, sf_dir: str) -> DataFram
             "c_custkey", F.round("acctbal", 2).alias("acctbal"), "segment"
         )
         return out.select(*out_cols).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2646,10 +2566,6 @@ def et39_concurrent_merge_conflict(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def et40_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.sources.txlog import SchemaEvolutionError, TxTable
 
     seed = (
@@ -2670,8 +2586,7 @@ def et40_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not seed.head(1):
         return spark.createDataFrame([], out_schema)
 
-    tmp = tempfile.mkdtemp(prefix="et40_schema_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et40_schema_", ignore_cleanup_errors=True) as tmp:
         t = TxTable(spark, os.path.join(tmp, "table"))
         t.append(v0)  # v0: two columns
         try:
@@ -2694,8 +2609,6 @@ def et40_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         if head.columns != ["custkey", "acctbal", "segment"]:
             raise AssertionError(f"evolved head columns: {head.columns}")
         return head.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2733,10 +2646,6 @@ def et40_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et41_log_checkpoint_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.sources.txlog import TxTable
 
     seed = (
@@ -2759,8 +2668,7 @@ def et41_log_checkpoint_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in seed.groupBy("slice").agg(F.count("*").alias("n")).collect()
     }
 
-    tmp = tempfile.mkdtemp(prefix="et41_ckpt_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et41_ckpt_", ignore_cleanup_errors=True) as tmp:
         t = TxTable(spark, os.path.join(tmp, "table"), checkpoint_interval=4)
         for k in range(12):  # v0..v11 — checkpoints land at v4, v8
             t.append(seed.filter(F.col("slice") == k))
@@ -2807,8 +2715,6 @@ def et41_log_checkpoint_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
         if t.read(version=6).count() != expect_v6:
             raise AssertionError("raw-log time travel diverged")
         return fast.select("custkey", "acctbal", "slice")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2845,9 +2751,6 @@ def et41_log_checkpoint_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def et42_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import os
-    import shutil
-    import tempfile
 
     from etl_batch_spark.sources.txlog import TxTable
 
@@ -2868,8 +2771,7 @@ def et42_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         if r["y"] is not None
     )
 
-    tmp = tempfile.mkdtemp(prefix="et42_skip_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="et42_skip_", ignore_cleanup_errors=True) as tmp:
         t = TxTable(spark, os.path.join(tmp, "table"), checkpoint_interval=4)
         # range-clustered layout in ONE shuffle+commit: tight per-file
         # date envelopes (the layout half of data skipping).  NULL
@@ -2902,5 +2804,3 @@ def et42_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -52,10 +52,14 @@ lesson), and it has TWO exclusions:
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_batch_spark.catalog import load_table
+from etl_batch_spark.catalog import load_table, read_landed, stage_halves
 from etl_batch_spark.queries.registry import query
 from etl_batch_spark.streaming.events import (
     dedup_stream,
@@ -362,14 +366,9 @@ def st07_streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def st08_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.streaming.events import write_idempotent_batches
 
-    tmp = tempfile.mkdtemp(prefix="st08_sink_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="st08_sink_", ignore_cleanup_errors=True) as tmp:
         stream = read_events_stream(spark, sf_dir).filter(
             F.col("value").isNotNull()
         )
@@ -379,22 +378,7 @@ def st08_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = os.path.join(tmp, "out")
         write_idempotent_batches(result, path=out, checkpoint=os.path.join(tmp, "ck"))
-        if not os.path.exists(out):
-            # an empty source drains zero batches, so the sink never
-            # creates the directory — the contract is an empty table of
-            # the projection's schema (the e0 corpus path)
-            return spark.createDataFrame([], result.schema)
-        # schema pinned explicitly: an all-NULL column in a small batch
-        # must not re-infer differently than the projection declared
-        back = (
-            spark.read.schema(result.schema)
-            .option("basePath", out)
-            .parquet(out)
-            .select(*result.columns)
-        )
-        return back.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return read_landed(spark, out, result.schema).localCheckpoint(eager=True)
 
 
 @query(
@@ -419,15 +403,9 @@ def st08_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st09_incremental_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.streaming.events import ingest_incrementally
 
-    tmp = tempfile.mkdtemp(prefix="st09_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="st09_ingest_", ignore_cleanup_errors=True) as tmp:
         src = os.path.join(tmp, "src")
         dst = os.path.join(tmp, "dst")
         ck = os.path.join(tmp, "ck")
@@ -439,29 +417,13 @@ def st09_incremental_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFram
             .select("event_id", "user_id", "event_type", "value")
         )
 
-        def stage_half(k: int) -> str:
-            """One flat parquet file holding the pmod(event_id,2)==k half
-            (pmod: negids corpora sign-flip event_id; coalesce: NULL
-            event_id rows must land in a half, not vanish — et33 lesson,
-            matching et35/et38/st10)."""
-            stage = os.path.join(tmp, f"stage{k}")
-            half = F.coalesce(F.pmod(F.col("event_id"), F.lit(2)), F.lit(0))
-            (
-                base.filter(half == k)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            return part
-
         def transform(s: DataFrame) -> DataFrame:
             return s.select(
                 "event_id", "user_id", "event_type",
                 F.round(F.col("value") * 3, 2).alias("tripled"),
             )
 
-        part0, part1 = stage_half(0), stage_half(1)
+        part0, part1 = stage_halves(base, tmp)
         kwargs = dict(schema=base.schema, transform=transform)
         shutil.copyfile(part0, os.path.join(src, "f0.parquet"))
         ingest_incrementally(spark, src, dst, ck, **kwargs)
@@ -476,21 +438,8 @@ def st09_incremental_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFram
                 f"replayed source file was re-ingested ({replay_batches} "
                 "batches); exactly-once file tracking is broken"
             )
-
-        out_schema = transform(base).schema
-        if not os.path.exists(dst):
-            # e0 corpus: a zero-row source file still drains, but an
-            # entirely absent one never creates dst
-            return spark.createDataFrame([], out_schema)
-        # explicit schema: zero-row drains leave dst with no partition
-        # dirs to infer from; the batch_id partition column is excluded
-        # by not naming it
-        back = spark.read.schema(out_schema).parquet(dst).select(
-            *[f.name for f in out_schema.fields]
-        )
+        back = read_landed(spark, dst, transform(base).schema)
         return back.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -522,30 +471,15 @@ def st09_incremental_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def st10_streaming_upsert_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.streaming.events import upsert_latest_versioned
 
-    tmp = tempfile.mkdtemp(prefix="st10_upsert_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="st10_upsert_", ignore_cleanup_errors=True) as tmp:
         src = os.path.join(tmp, "src")
         table_path = os.path.join(tmp, "table")
         ck = os.path.join(tmp, "ck")
         os.makedirs(src)
 
-        e = load_table(spark, sf_dir, "events")
-        half = F.coalesce(F.pmod(F.col("event_id"), F.lit(2)), F.lit(0))
-
-        def stage_half(k: int) -> str:
-            stage = os.path.join(tmp, f"stage{k}")
-            e.filter(half == k).coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            return part
-
-        part0, part1 = stage_half(0), stage_half(1)
+        part0, part1 = stage_halves(load_table(spark, sf_dir, "events"), tmp)
         kwargs = dict(key_col="user_id", delete_type="purchase")
         shutil.copyfile(part0, os.path.join(src, "events_a.parquet"))
         _, t, live = upsert_latest_versioned(spark, src, table_path, ck, **kwargs)
@@ -566,8 +500,6 @@ def st10_streaming_upsert_tombstones(spark: SparkSession, sf_dir: str) -> DataFr
             )
         out = live().select("user_id", "ts", "event_id", "event_type", "value")
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -595,15 +527,9 @@ def st10_streaming_upsert_tombstones(spark: SparkSession, sf_dir: str) -> DataFr
     """,
 )
 def st11_torn_crash_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.streaming.events import ingest_incrementally
 
-    tmp = tempfile.mkdtemp(prefix="st11_torn_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="st11_torn_", ignore_cleanup_errors=True) as tmp:
         src = os.path.join(tmp, "src")
         dst = os.path.join(tmp, "dst")
         ck = os.path.join(tmp, "ck")
@@ -614,20 +540,6 @@ def st11_torn_crash_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("value").isNotNull())
             .select("event_id", "user_id", "event_type", "value")
         )
-
-        def stage_half(k: int) -> str:
-            """coalesce(pmod): NULL event_id rows must land in a half,
-            not vanish (et33 lesson, same as st09/st10/et35/et38)."""
-            stage = os.path.join(tmp, f"stage{k}")
-            half = F.coalesce(F.pmod(F.col("event_id"), F.lit(2)), F.lit(0))
-            (
-                base.filter(half == k)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            return part
 
         def transform(s: DataFrame) -> DataFrame:
             return s.select(
@@ -653,14 +565,13 @@ def st11_torn_crash_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.remove(crc)
             return True
 
-        part0, part1 = stage_half(0), stage_half(1)
+        part0, part1 = stage_halves(base, tmp)
         kwargs = dict(schema=base.schema, transform=transform)
         shutil.copyfile(part0, os.path.join(src, "f0.parquet"))
         ingest_incrementally(spark, src, dst, ck, **kwargs)
         shutil.copyfile(part1, os.path.join(src, "f1.parquet"))
         ingest_incrementally(spark, src, dst, ck, **kwargs)
 
-        out_schema = transform(base).schema
         if drop_last_commit():
             # restart after the torn crash: the lost epoch MUST re-run
             # (not skip), and its batch_id-partition overwrite must
@@ -671,14 +582,8 @@ def st11_torn_crash_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"torn-crash restart re-ran {replayed} batches, "
                     "expected exactly the one lost epoch"
                 )
-        if not os.path.exists(dst):
-            return spark.createDataFrame([], out_schema)
-        back = spark.read.schema(out_schema).parquet(dst).select(
-            *[f.name for f in out_schema.fields]
-        )
+        back = read_landed(spark, dst, transform(base).schema)
         return back.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -713,30 +618,15 @@ def st11_torn_crash_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st12_streaming_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from etl_batch_spark.streaming.events import upsert_latest_versioned
 
-    tmp = tempfile.mkdtemp(prefix="st12_evolve_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="st12_evolve_", ignore_cleanup_errors=True) as tmp:
         src = os.path.join(tmp, "src")
         table_path = os.path.join(tmp, "table")
         ck = os.path.join(tmp, "ck")
         os.makedirs(src)
 
-        e = load_table(spark, sf_dir, "events")
-        half = F.coalesce(F.pmod(F.col("event_id"), F.lit(2)), F.lit(0))
-
-        def stage_half(k: int) -> str:
-            stage = os.path.join(tmp, f"stage{k}")
-            e.filter(half == k).coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-            return part
-
-        part0, part1 = stage_half(0), stage_half(1)
+        part0, part1 = stage_halves(load_table(spark, sf_dir, "events"), tmp)
         base = dict(key_col="user_id", delete_type="purchase")
         widened = dict(
             transform=lambda df: df.withColumn(
@@ -788,5 +678,3 @@ def st12_streaming_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
             "user_id", "ts", "event_id", "event_type", "value", "v2"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

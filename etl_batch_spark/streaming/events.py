@@ -371,6 +371,12 @@ def write_idempotent_batches(
     Drains with availableNow; the checkpoint carries source offsets so
     a restart resumes, not re-reads.
     """
+    _drain(result, _batch_partition_sink(path), checkpoint)
+
+
+def _batch_partition_sink(path: str):
+    """foreachBatch sink writing each micro-batch to ``path`` as its own
+    ``batch_id=N`` partition, under dynamic partition overwrite."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -381,13 +387,28 @@ def write_idempotent_batches(
             .parquet(path)
         )
 
-    q = (
-        result.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
+    return sink
+
+
+def _drain(stream: DataFrame, sink, checkpoint_dir: str) -> int:
+    """Run ``sink(batch_df, batch_id)`` over every micro-batch pending
+    under ``checkpoint_dir`` (``trigger(availableNow=True)``), wait for
+    the stream to stop, and return the number of batches delivered."""
+    n_batches = 0
+
+    def counted(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal n_batches
+        n_batches += 1
+        sink(batch_df, batch_id)
+
+    (
+        stream.writeStream.foreachBatch(counted)
+        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
+    return n_batches
 
 
 def enrich_with_dimension(stream: DataFrame, dim: DataFrame, *, on: str, how: str = "left") -> DataFrame:
@@ -495,26 +516,7 @@ def ingest_incrementally(
                     "under a mergeSchema read)"
                 )
             out_schema = merged
-    n_batches = 0
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(dst_dir)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    n_batches = _drain(stream, _batch_partition_sink(dst_dir), checkpoint_dir)
     # pin (or re-pin, post-evolution) the output schema only after a
     # successful drain — a failed run must leave the pin untouched
     os.makedirs(checkpoint_dir, exist_ok=True)
@@ -699,7 +701,6 @@ def maintain_partials_incrementally(
     import uuid
 
     stream = read_events_stream(spark, src_dir)
-    n_batches = 0
     marker = "_applied_batch_id"  # leading _ => ignored by parquet readers
     incarnation = _checkpoint_incarnation(checkpoint_dir)
 
@@ -716,8 +717,6 @@ def maintain_partials_incrementally(
             return "", -1
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
         tok, applied = applied_state(store_dir) if os.path.isdir(store_dir) else ("", -1)
         same_run = tok == incarnation
         if same_run and applied >= batch_id:
@@ -744,14 +743,7 @@ def maintain_partials_incrementally(
         if os.path.isdir(old):
             shutil.rmtree(old, ignore_errors=True)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
+    return _drain(stream, sink, checkpoint_dir)
 
 
 def maintain_partials_versioned(
@@ -781,12 +773,9 @@ def maintain_partials_versioned(
 
     table = TxTable(spark, table_path)
     stream = read_events_stream(spark, src_dir)
-    n_batches = 0
     incarnation = _checkpoint_incarnation(checkpoint_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
         meta = table.latest_meta()
         same_run = meta is not None and meta.get("incarnation") == incarnation
         if same_run and meta.get("batch_id", -1) >= batch_id:
@@ -801,14 +790,7 @@ def maintain_partials_versioned(
             merged = fresh
         table.overwrite(merged, meta={"batch_id": batch_id, "incarnation": incarnation})
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches, table
+    return _drain(stream, sink, checkpoint_dir), table
 
 
 
@@ -892,7 +874,6 @@ def upsert_latest_versioned(
     stream = read_events_stream(spark, src_dir)
     if transform is not None:
         stream = transform(stream)
-    n_batches = 0
     incarnation = _checkpoint_incarnation(checkpoint_dir)
 
     def latest_per_key(df: DataFrame) -> DataFrame:
@@ -905,8 +886,6 @@ def upsert_latest_versioned(
     drift_refusal: "list[SchemaEvolutionError]" = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
         meta = table.latest_meta()
         same_run = meta is not None and meta.get("incarnation") == incarnation
         if same_run and meta.get("batch_id", -1) >= batch_id:
@@ -952,14 +931,8 @@ def upsert_latest_versioned(
         # batch's OLDER event for the key still loses latest-wins
         table.overwrite(merged, meta={"batch_id": batch_id, "incarnation": incarnation})
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        n_batches = _drain(stream, sink, checkpoint_dir)
     except Exception as exc:
         if drift_refusal:  # unwrap to the documented exception type
             raise drift_refusal[0] from exc

@@ -33,6 +33,15 @@ def _one(con, sql):
 
 
 class TestGenSubset:
+    def test_help_exits_zero(self, capsys):
+        from gen_subset import main
+
+        # argparse %-formats help strings: a bare % in one crashes --help
+        with pytest.raises(SystemExit) as exit_:
+            main(["--help"])
+        assert exit_.value.code == 0
+        assert "pmod" in capsys.readouterr().out
+
     def test_deterministic_per_seed(self, subsets):
         out1, out1b, _ = subsets
         con = duckdb.connect()

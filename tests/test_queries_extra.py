@@ -3,9 +3,14 @@ and registry hygiene."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
-from etl_batch_spark.catalog import load_table
+from etl_batch_spark.catalog import DATA_TABLES, load_table, stage_halves, table_path
 from etl_batch_spark.queries import QUERIES
 
 
@@ -70,3 +75,40 @@ def test_et12_fifo_conserves_quantity(spark, sf_dir):
         .count()
     )
     assert bad == 0
+
+
+def test_stage_halves_routes_every_row_to_one_file(spark, tmp_path):
+    """Negative ids (``%`` leaves -1, which matches no half) and NULL ids
+    (NULL equals nothing) must each land in exactly one half file."""
+    df = spark.createDataFrame(
+        [(3, "a"), (4, "b"), (-1, "c"), (-2, "d"), (None, "e")],
+        "event_id bigint, tag string",
+    )
+    part0, part1 = stage_halves(df, str(tmp_path))
+    assert os.path.isfile(part0) and os.path.isfile(part1)
+    half0 = spark.read.schema(df.schema).parquet(part0)
+    half1 = spark.read.schema(df.schema).parquet(part1)
+    assert sorted(r.tag for r in half0.collect()) == ["b", "d", "e"]  # 4, -2, NULL
+    assert sorted(r.tag for r in half1.collect()) == ["a", "c"]  # 3, -1
+    both = half0.unionByName(half1)
+    assert both.exceptAll(df).count() == 0
+    assert df.exceptAll(both).count() == 0
+
+
+@pytest.mark.parametrize(
+    "name", ["et30_time_travel", "st09_incremental_ingest_replay"]
+)
+def test_scratch_dir_removed_after_build(spark, sf_dir, tmp_path, monkeypatch, name):
+    """A scratch-table query leaves no temp dir behind, and the frame it
+    returns was materialized before its files were deleted."""
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    df = QUERIES[name].build(spark, sf_dir)
+    assert list(scratch.iterdir()) == []
+    duck = duckdb.connect()
+    for t in DATA_TABLES:
+        duck.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
+        )
+    assert df.count() == len(duck.execute(QUERIES[name].oracle).fetchall())

@@ -228,7 +228,7 @@ def main(argv: "list[str] | None" = None) -> int:
         help="percent of ID VALUES sign-flipped, drawn per value within "
              "its shared value space so every occurrence flips together "
              "and joins stay consistent — negative-id ingestion: probes "
-             "% -vs- pmod, residue routing, hash-of-id strings and "
+             "%% -vs- pmod, residue routing, hash-of-id strings and "
              "MIN/MAX keeper picks",
     )
     ap.add_argument(
