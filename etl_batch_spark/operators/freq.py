@@ -114,7 +114,7 @@ def mg_merge(both: DataFrame, cap: int) -> DataFrame:
     """Merge unioned MG partials and prune back to ``cap`` counters (the
     mergeable-summaries rule: subtract the (cap+1)-largest merged count
     from every counter, drop non-positives).  Associative and idempotent
-    over row UNION, so it rides ``maintain_partials_incrementally`` —
+    over row UNION, so it rides ``maintain_partials_versioned`` —
     a streaming heavy-hitters summary with the classic guarantee
     ``freq(x) − N/(cap+1) ≤ counter(x) ≤ freq(x)`` (Agarwal et al.,
     Mergeable Summaries, PODS 2012).  The NULL-key total row SUMs.

@@ -20,15 +20,15 @@ touch (``partition_filter``) and leave the rest of the table on disk
 untouched, which is how table formats (Delta/Iceberg/Hudi) bound
 merge cost too.
 
-Atomicity: same staging-dir + rename swap as
-``sources.io.compact_small_files`` — a reader never sees a MIX of old
-and new rows.  POSIX cannot atomically exchange two directories, so
-the swap is two renames: a reader racing the swap can hit a brief
-path-not-found and should retry, and a crash BETWEEN the renames
-leaves the data intact in ``<path>.__old__`` for manual recovery (a
-crash before the first rename leaves the target untouched).  Writers
-needing no-window swaps should use ``sources.txlog.TxTable``, whose
-commits are a single log-file rename.  Concurrency control belongs to
+Atomicity: the merged table is written to a staging directory and
+swapped in by rename — a reader never sees a MIX of old and new rows.
+POSIX cannot atomically exchange two directories, so the swap is two
+renames: a reader racing the swap can hit a brief path-not-found and
+should retry, and a crash BETWEEN the renames leaves the data intact
+in ``<path>.__old__`` for manual recovery (a crash before the first
+rename leaves the target untouched).  Writers needing no-window swaps
+should use ``sources.txlog.TxTable``, whose commits are a single
+log-file link.  Concurrency control belongs to
 the control plane: run it inside a BatchRunner module with the
 duplicate-run check (body.sql:219–247 semantics) so two writers never
 race the swap.

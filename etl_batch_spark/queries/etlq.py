@@ -2056,23 +2056,24 @@ def et34_zorder_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # et35 — incremental maintenance of a NON-NUMERIC partials family across
-# multiple triggers (streaming/events.py::maintain_partials_incrementally
+# multiple triggers (streaming/events.py::maintain_partials_versioned
 # over operators/sketch.py's portable HLL): the events table is split
 # into two source files, each drained in its own availableNow run
-# against one checkpoint, the day-grain HLL register store merging
-# incrementally (MAX per register); a replay of the first file must be
-# a no-op.  The maintained store is then rolled up day→month and
-# estimated — and the oracle REBUILDS the same monthly registers from
-# scratch in SQL (et23's exactly-portable estimator), so
-# "incrementally maintained == full rebuild" is what the value hash
-# proves.  At scale each trigger touches only its batch's buckets;
-# store size is buckets × 256 registers regardless of row count.
+# against one checkpoint, the day-grain HLL register table merging
+# incrementally (MAX per register, one TxTable commit per batch); a
+# replay of the first file must be a no-op.  The maintained store is
+# then rolled up day→month and estimated — and the oracle REBUILDS the
+# same monthly registers from scratch in SQL (et23's exactly-portable
+# estimator), so "incrementally maintained == full rebuild" is what the
+# value hash proves.  At scale each trigger touches only its batch's
+# buckets; store size is buckets × 256 registers regardless of row
+# count (plus superseded versions until a vacuum).
 # ---------------------------------------------------------------------------
 @query(
     "et35_incremental_hll_maintenance",
     doc="streaming continuous aggregate for HLL registers: day partials "
     "maintained incrementally across two drains + a replayed file "
-    "(maintain_partials_incrementally), rolled up to monthly estimates "
+    "(maintain_partials_versioned), rolled up to monthly estimates "
     "== full SQL rebuild",
     oracle=f"""
     WITH h AS (
@@ -2117,7 +2118,7 @@ def et34_zorder_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def et35_incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_batch_spark.operators.sketch import hll_estimate, hll_merge, hll_partials
-    from etl_batch_spark.streaming.events import maintain_partials_incrementally
+    from etl_batch_spark.streaming.events import maintain_partials_versioned
 
     with tempfile.TemporaryDirectory(prefix="et35_hll_", ignore_cleanup_errors=True) as tmp:
         src = os.path.join(tmp, "src")
@@ -2138,13 +2139,13 @@ def et35_incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
         part0, part1 = stage_halves(e, tmp)
         kwargs = dict(build=build, merge=merge)
         shutil.copyfile(part0, os.path.join(src, "events_a.parquet"))
-        maintain_partials_incrementally(spark, src, store, ck, **kwargs)
+        maintain_partials_versioned(spark, src, store, ck, **kwargs)
         shutil.copyfile(part1, os.path.join(src, "events_b.parquet"))
-        maintain_partials_incrementally(spark, src, store, ck, **kwargs)
+        maintain_partials_versioned(spark, src, store, ck, **kwargs)
         # replay: same path, same contents, new mtime — the checkpoint
         # must treat the file as consumed and deliver zero batches
         shutil.copyfile(part0, os.path.join(src, "events_a.parquet"))
-        replayed = maintain_partials_incrementally(spark, src, store, ck, **kwargs)
+        replayed, t = maintain_partials_versioned(spark, src, store, ck, **kwargs)
         if replayed != 0:
             raise AssertionError(
                 f"replayed source file re-delivered {replayed} batches; "
@@ -2155,12 +2156,10 @@ def et35_incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
             "bucket timestamp, est_distinct double, est_branch string, "
             "n_exact bigint"
         )
-        if not os.path.isdir(store):
-            # an entirely file-less source never creates the store
+        if t.latest_version() < 0:
+            # an entirely file-less source never commits to the store
             return spark.createDataFrame([], out_schema)
-        month = hll_merge(
-            spark.read.parquet(store), F.date_trunc("MONTH", F.col("bucket"))
-        )
+        month = hll_merge(t.read(), F.date_trunc("MONTH", F.col("bucket")))
         est = hll_estimate(month)
         exact = e.groupBy(F.date_trunc("MONTH", F.col("ts")).alias("bucket")).agg(
             F.countDistinct("user_id").alias("n_exact")
@@ -2350,8 +2349,8 @@ def et37_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nothing, read(version=0) equals a recomputation of batch 0's partials
 # on bucket/key/count — int columns only; float sums are compared at
 # HEAD through the oracle), then the oracle rebuilds the final rollup
-# from scratch.  et35's sibling: same trigger discipline, numeric
-# family, versioned store instead of marker-file store.
+# from scratch.  et35's sibling: same store and trigger discipline,
+# numeric family instead of HLL registers.
 # ---------------------------------------------------------------------------
 @query(
     "et38_versioned_rollup_maintenance",

@@ -338,54 +338,6 @@ def write_zordered(
     )
 
 
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    schema: T.StructType | None = None,
-) -> tuple[int, int]:
-    """Rewrite a parquet directory into ~``target_file_bytes`` files.
-
-    The small-files problem is the quiet killer of 100 TB table scans:
-    a day of streaming micro-batches leaves thousands of KB-sized
-    files, and every query pays a task + an object-store GET per file.
-    Compaction = read → ``coalesce(ceil(bytes/target))`` → atomic
-    swap-by-rewrite.  ``coalesce`` (not ``repartition``) so the rewrite
-    is shuffle-free: input files merge into output tasks map-side.
-
-    Returns (files_before, files_after).  The rewrite stages into a
-    sibling ``<path>.__compact__`` directory and swaps via rename, so
-    readers never observe a half-written table; crash before the swap
-    leaves the original untouched.
-    """
-    import math
-    import os
-    import shutil
-
-    files = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(".")
-    ]
-    if not files:
-        raise ValueError(f"no parquet files under {path}")
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.parquet(path)
-    staged = path.rstrip("/") + ".__compact__"
-    if os.path.exists(staged):
-        shutil.rmtree(staged)
-    df.coalesce(n_out).write.mode("overwrite").parquet(staged)
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(staged, path)
-    shutil.rmtree(old)
-    n_after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    return len(files), n_after
-
-
 def with_audit_columns(
     df: DataFrame,
     *,

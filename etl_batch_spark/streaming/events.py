@@ -594,17 +594,10 @@ def _checkpoint_incarnation(checkpoint_dir: str) -> str:
     """Token identifying one checkpoint directory's lifetime.
 
     Minted when the checkpoint is first used and stored INSIDE it, so it
-    lives and dies with the checkpoint.  Replay guards must pair the
-    recorded batch id with this token: after a checkpoint loss a fresh
-    ``availableNow`` run re-reads the full source with batch ids
-    restarting at 0 and a different file→batch mapping, so a bare
-    ``stored_batch_id >= batch_id`` check would silently drop the new
-    run's data.  With the token, an incarnation mismatch instead routes
-    the sink to rebuild-from-scratch over the full re-read — correct as
-    long as source retention covers the checkpoint's loss window (keep
-    state and checkpoint together; vacuum source files only past both).
+    lives and dies with the checkpoint: a lost checkpoint means a new
+    token, and :func:`_exactly_once_sink` reads the mismatch as "rebuild",
+    not "replay".
     """
-    import os
     import uuid
 
     os.makedirs(checkpoint_dir, exist_ok=True)
@@ -624,126 +617,78 @@ def _checkpoint_incarnation(checkpoint_dir: str) -> str:
     return tok
 
 
+def _exactly_once_sink(table, checkpoint_dir: str, *, build, merge):
+    """foreachBatch sink maintaining ``table`` (a
+    :class:`~etl_batch_spark.sources.txlog.TxTable`) as derived state:
+    ``build(batch_df)`` turns one micro-batch into state rows and
+    ``merge(stored, fresh)`` folds them into the stored snapshot.
+
+    The exactly-once rule, for every streaming store in this module.
+    ``foreachBatch`` is only at-least-once: a crash between the table
+    commit and the checkpoint's epoch commit re-delivers the same
+    batch id on restart.  Each commit therefore records
+    ``{"batch_id", "incarnation"}`` in its metadata, atomically with the
+    data, and each batch reads the head commit's metadata once:
+
+    - same incarnation, ``batch_id`` already committed: a replay — skip;
+    - same incarnation, newer batch: merge into ``table.read()``;
+    - no commit yet, or another incarnation: rebuild from this batch
+      alone.  A lost checkpoint restarts batch ids at 0 over a full
+      source re-read, so its batches must neither be skipped (old ids
+      would gate them) nor merged (double count).  This is correct as
+      long as source retention covers the checkpoint's loss window:
+      keep state and checkpoint together, and vacuum source files only
+      past both.
+
+    A crash before the commit leaves the head as it was, so the re-run
+    merges the re-delivered batch exactly once.  Superseded versions
+    stay on disk until the caller runs ``table.vacuum(...)``.
+    """
+    incarnation = _checkpoint_incarnation(checkpoint_dir)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        meta = table.latest_meta()
+        same_run = meta is not None and meta.get("incarnation") == incarnation
+        if same_run and meta["batch_id"] >= batch_id:
+            return
+        fresh = build(batch_df)
+        state = merge(table.read(), fresh) if same_run else fresh
+        table.overwrite(state, meta={"batch_id": batch_id, "incarnation": incarnation})
+
+    return sink
+
+
 def maintain_rollup_incrementally(
     spark: SparkSession,
     src_dir: str,
-    rollup_dir: str,
+    table_path: str,
     checkpoint_dir: str,
     *,
     level: str = "day",
     key_cols: "tuple[str, ...]" = ("event_type",),
-) -> int:
+):
     """Streaming continuous aggregate: keep an et04-style partial-
     aggregate table (n/sum/min/max per bucket×keys) up to date as new
-    event files arrive, WITHOUT ever re-scanning history.
+    event files arrive, WITHOUT ever re-scanning history — the numeric
+    family of :func:`maintain_partials_versioned`.
 
-    Each micro-batch aggregates only its own rows to partials, then
-    merges them into the stored partial table (read-merge-swap; the
-    partial merge is associative, so batch boundaries don't matter).
-    The checkpoint tracks which source files were consumed, and the
-    rollup directory carries an ``_applied_batch_id`` marker written
-    atomically with the data (staged into the directory BEFORE the
-    swap): if a crash lands between the swap and the checkpoint commit,
-    the restart re-delivers the same batch_id, the marker shows it was
-    already merged, and the sink skips it — resume, never double-count.
-    The marker also records the checkpoint's incarnation token, so if
-    the checkpoint itself is lost the fresh run (which re-reads the full
-    source under restarted batch ids) rebuilds the rollup instead of
-    mistaking its batches for replays — see
-    :func:`_checkpoint_incarnation`.
-    Returns micro-batches processed.  Query the result with
-    ``operators.rollup.read_level``.
-
-    At scale the merge touches only buckets present in the batch (a
-    day's stream touches ~1 bucket); the swap is the same atomic
-    directory rename every overwrite in this engine uses.
+    Returns ``(n_batches, TxTable)``; query the result with
+    ``operators.rollup.read_level(table.read())``.  At scale the merge
+    touches only buckets present in the batch (a day's stream touches
+    ~1 bucket).
     """
-    import os
     from etl_batch_spark.operators.rollup import _merge_partials, _partials_from_raw
 
-    return maintain_partials_incrementally(
+    return maintain_partials_versioned(
         spark,
         src_dir,
-        rollup_dir,
+        table_path,
         checkpoint_dir,
         build=lambda batch: _partials_from_raw(
             batch, ts_col="ts", key_cols=key_cols, value_col="value", level=level
         ),
         merge=lambda both: _merge_partials(both, key_cols=key_cols, level=level),
     )
-
-
-def maintain_partials_incrementally(
-    spark: SparkSession,
-    src_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    *,
-    build,
-    merge,
-) -> int:
-    """Generic streaming continuous aggregate over ANY mergeable-partials
-    family: ``build(batch_df) -> partials`` turns one micro-batch into
-    partial rows, ``merge(stored ∪ fresh) -> partials`` re-aggregates —
-    the only requirement is that ``merge`` is associative/idempotent over
-    row UNION, which every partials family in this engine satisfies
-    (numeric n/sum/min/max: operators/rollup.py; HLL registers via MAX:
-    operators/sketch.py::hll_merge; histogram bins and count-min
-    counters via SUM: hist_merge / cms_merge).
-
-    Shares one exactly-once discipline: the streaming checkpoint tracks
-    consumed files, and the ``_applied_batch_id`` marker staged into the
-    store directory BEFORE the atomic swap makes replayed batches no-ops
-    (see ``maintain_rollup_incrementally``).  Returns batches processed.
-    """
-    import os
-    import shutil
-    import uuid
-
-    stream = read_events_stream(spark, src_dir)
-    marker = "_applied_batch_id"  # leading _ => ignored by parquet readers
-    incarnation = _checkpoint_incarnation(checkpoint_dir)
-
-    def applied_state(path: str) -> "tuple[str, int]":
-        """(incarnation, batch_id) recorded in the store's marker; a
-        pre-incarnation bare-int marker reads as a foreign incarnation
-        (safe: triggers rebuild, never a silent skip)."""
-        try:
-            with open(os.path.join(path, marker)) as f:
-                raw = f.read().strip()
-            tok, _, bid = raw.rpartition(":")
-            return tok, int(bid)
-        except (OSError, ValueError):
-            return "", -1
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        tok, applied = applied_state(store_dir) if os.path.isdir(store_dir) else ("", -1)
-        same_run = tok == incarnation
-        if same_run and applied >= batch_id:
-            return  # checkpoint replay of a batch already merged — skip
-        fresh = build(batch_df)
-        if os.path.isdir(store_dir) and same_run:
-            existing = spark.read.parquet(store_dir)
-            merged = merge(existing.unionByName(fresh))
-        else:
-            # no store yet, or state written under a DIFFERENT checkpoint
-            # incarnation: batch ids from the old run must not gate this
-            # one, and a fresh checkpoint re-reads the FULL source, so the
-            # correct move is rebuild-from-this-run, never merge (double
-            # count) or skip (drop)
-            merged = fresh
-        tmp = f"{store_dir}.__stage_{uuid.uuid4().hex}__"
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, marker), "w") as f:
-            f.write(f"{incarnation}:{batch_id}")
-        old = f"{store_dir}.__old_{uuid.uuid4().hex}__"
-        if os.path.isdir(store_dir):
-            os.rename(store_dir, old)
-        os.rename(tmp, store_dir)
-        if os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
-
-    return _drain(stream, sink, checkpoint_dir)
 
 
 def maintain_partials_versioned(
@@ -755,43 +700,36 @@ def maintain_partials_versioned(
     build,
     merge,
 ):
-    """:func:`maintain_partials_incrementally` with the store as a
-    :class:`~etl_batch_spark.sources.txlog.TxTable` instead of a bare
-    directory: each micro-batch's merge lands as one versioned commit
-    whose metadata records the batch id, so
+    """Generic streaming continuous aggregate over ANY mergeable-partials
+    family, stored as a :class:`~etl_batch_spark.sources.txlog.TxTable`:
+    ``build(batch_df) -> partials`` turns one micro-batch into partial
+    rows, ``merge(stored ∪ fresh) -> partials`` re-aggregates.  The only
+    requirement is that ``merge`` is associative/idempotent over row
+    UNION, which every partials family in this engine satisfies
+    (numeric n/sum/min/max: operators/rollup.py; HLL registers via MAX:
+    operators/sketch.py::hll_merge; histogram bins and count-min
+    counters via SUM: hist_merge / cms_merge; Misra–Gries counters:
+    operators/freq.py::mg_merge).
 
-    - replay detection is part of the atomic commit itself (no separate
-      marker file to keep in step with the data);
-    - the rollup's full history is queryable — ``table.read(version=k)``
-      shows the aggregate exactly as it stood after batch k, the
-      continuous-aggregate analogue of time travel;
-    - compaction/vacuum come for free from the table format.
+    Each micro-batch's merge lands as one versioned commit (replays
+    follow :func:`_exactly_once_sink`), so the aggregate's history is
+    queryable — ``table.read(version=k)`` shows it exactly as it stood
+    after commit k, the continuous-aggregate analogue of time travel —
+    and compaction/vacuum come from the table format.  Read the store
+    through ``table.read()``: the directory also holds superseded files.
 
     Returns ``(n_batches, TxTable)``.
     """
     from etl_batch_spark.sources.txlog import TxTable
 
     table = TxTable(spark, table_path)
-    stream = read_events_stream(spark, src_dir)
-    incarnation = _checkpoint_incarnation(checkpoint_dir)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        meta = table.latest_meta()
-        same_run = meta is not None and meta.get("incarnation") == incarnation
-        if same_run and meta.get("batch_id", -1) >= batch_id:
-            return  # checkpoint replay of a committed batch — skip
-        fresh = build(batch_df)
-        if table.latest_version() >= 0 and same_run:
-            merged = merge(table.read().unionByName(fresh))
-        else:
-            # fresh table, or state committed under a different checkpoint
-            # incarnation (checkpoint lost → full source re-read): rebuild
-            # from this run's batches — see _checkpoint_incarnation
-            merged = fresh
-        table.overwrite(merged, meta={"batch_id": batch_id, "incarnation": incarnation})
-
-    return _drain(stream, sink, checkpoint_dir), table
-
+    sink = _exactly_once_sink(
+        table,
+        checkpoint_dir,
+        build=build,
+        merge=lambda stored, fresh: merge(stored.unionByName(fresh)),
+    )
+    return _drain(read_events_stream(spark, src_dir), sink, checkpoint_dir), table
 
 
 def _latest_per_key(df: DataFrame, key_col: str) -> DataFrame:
@@ -836,13 +774,8 @@ def upsert_latest_versioned(
     builder (``read()`` filtered of tombstones); a retention job may
     vacuum tombstones older than the source's max lateness.
 
-    Exactly-once discipline is the table's own commit metadata (batch
-    id + checkpoint incarnation recorded atomically with the data:
-    replays within a checkpoint's lifetime skip, and a LOST checkpoint —
-    whose fresh run renumbers batches over a full source re-read —
-    triggers a rebuild instead of a silent skip, see
-    :func:`_checkpoint_incarnation`); per-batch work
-    is one batch-local reduce + one keyed merge against current state —
+    Replays follow :func:`_exactly_once_sink`; per-batch work is one
+    batch-local reduce + one keyed merge against current state —
     O(state + batch), never reprocessing history.  Returns
     ``(n_batches, TxTable, live)`` with ``live()`` the tombstone-free
     view of the current version.
@@ -874,7 +807,6 @@ def upsert_latest_versioned(
     stream = read_events_stream(spark, src_dir)
     if transform is not None:
         stream = transform(stream)
-    incarnation = _checkpoint_incarnation(checkpoint_dir)
 
     def latest_per_key(df: DataFrame) -> DataFrame:
         return _latest_per_key(df, key_col)
@@ -885,52 +817,38 @@ def upsert_latest_versioned(
     # not a wrapper they must string-match
     drift_refusal: "list[SchemaEvolutionError]" = []
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        meta = table.latest_meta()
-        same_run = meta is not None and meta.get("incarnation") == incarnation
-        if same_run and meta.get("batch_id", -1) >= batch_id:
-            return  # checkpoint replay of a committed batch — skip
-        fresh = latest_per_key(batch_df)
-        if table.latest_version() >= 0 and same_run:
-            cur = table.read()
-            cur_s = _norm_schema(cur.schema)
-            new_s = _norm_schema(fresh.schema)
-            if {(x.name, x.dataType) for x in cur_s.fields} != {
-                (x.name, x.dataType) for x in new_s.fields
-            }:
-                # union schema first: a type change raises regardless —
-                # record EITHER refusal path (drift with
-                # merge_schema=False, or _merge_schemas' type-change
-                # error) so both unwrap identically at awaitTermination,
-                # honoring the docstring's "refuses either way" contract
-                try:
-                    union_s = _merge_schemas(cur_s, new_s)
-                    if not merge_schema:
-                        raise SchemaEvolutionError(
-                            f"batch schema {new_s.simpleString()} drifted "
-                            f"from stored state {cur_s.simpleString()}; pass "
-                            "merge_schema=True to evolve at this batch "
-                            "boundary (the checkpoint has not advanced)"
-                        )
-                except SchemaEvolutionError as refusal:
-                    drift_refusal.append(refusal)
-                    raise
-                merged = latest_per_key(
-                    cur.unionByName(fresh, allowMissingColumns=True)
-                    .select(*union_s.fieldNames())
+    def merge(cur: DataFrame, fresh: DataFrame) -> DataFrame:
+        cur_s = _norm_schema(cur.schema)
+        new_s = _norm_schema(fresh.schema)
+        if {(x.name, x.dataType) for x in cur_s.fields} == {
+            (x.name, x.dataType) for x in new_s.fields
+        }:
+            return latest_per_key(cur.unionByName(fresh))
+        # union schema first: a type change raises regardless — record
+        # EITHER refusal path (drift with merge_schema=False, or
+        # _merge_schemas' type-change error) so both unwrap identically
+        # at awaitTermination, honoring the docstring's "refuses either
+        # way" contract
+        try:
+            union_s = _merge_schemas(cur_s, new_s)
+            if not merge_schema:
+                raise SchemaEvolutionError(
+                    f"batch schema {new_s.simpleString()} drifted "
+                    f"from stored state {cur_s.simpleString()}; pass "
+                    "merge_schema=True to evolve at this batch "
+                    "boundary (the checkpoint has not advanced)"
                 )
-            else:
-                merged = latest_per_key(cur.unionByName(fresh))
-        else:
-            # fresh table, or state from a different checkpoint
-            # incarnation (checkpoint lost → full source re-read):
-            # rebuild — latest-wins over the full replay reproduces the
-            # exact state, so nothing is dropped or double-applied
-            merged = fresh
-        # tombstones are state, not garbage: keep them so a later
-        # batch's OLDER event for the key still loses latest-wins
-        table.overwrite(merged, meta={"batch_id": batch_id, "incarnation": incarnation})
+        except SchemaEvolutionError as refusal:
+            drift_refusal.append(refusal)
+            raise
+        return latest_per_key(
+            cur.unionByName(fresh, allowMissingColumns=True)
+            .select(*union_s.fieldNames())
+        )
 
+    # tombstones are state, not garbage: the merge keeps them so a later
+    # batch's OLDER event for the key still loses latest-wins
+    sink = _exactly_once_sink(table, checkpoint_dir, build=latest_per_key, merge=merge)
     try:
         n_batches = _drain(stream, sink, checkpoint_dir)
     except Exception as exc:

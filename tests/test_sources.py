@@ -227,34 +227,6 @@ class TestZorder:
         assert got.agg(F.sum("l_quantity")).first()[0] == li.agg(F.sum("l_quantity")).first()[0]
 
 
-class TestCompaction:
-    def test_merges_small_files_and_preserves_content(self, spark, sf_dir, tmp_path):
-        from etl_batch_spark.sources.io import compact_small_files
-
-        path = str(tmp_path / "frag")
-        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-        li.repartition(40).write.parquet(path)  # fragmented layout
-        before_sum = spark.read.parquet(path).agg(F.sum("l_quantity")).first()[0]
-
-        n_before, n_after = compact_small_files(
-            spark, path, target_file_bytes=64 * 1024 * 1024
-        )
-        assert n_before == 40
-        assert n_after < 4  # tiny table -> a couple of files
-        got = spark.read.parquet(path)
-        assert got.count() == li.count()
-        assert got.agg(F.sum("l_quantity")).first()[0] == before_sum
-
-    def test_rejects_empty_dir(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import compact_small_files
-        import os, pytest as _pytest
-
-        p = str(tmp_path / "empty")
-        os.makedirs(p)
-        with _pytest.raises(ValueError):
-            compact_small_files(spark, p)
-
-
 class TestBinaryFiles:
     def test_reads_whole_files_with_metadata(self, spark, tmp_path):
         from etl_batch_spark.sources.io import read_binary_files

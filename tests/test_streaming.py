@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import datetime
 import os
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_batch_spark.catalog import load_table
@@ -461,12 +463,12 @@ def test_incremental_rollup_matches_batch_and_skips_replay(spark, sf_dir, tmp_pa
 
     rollup_dir = str(tmp_path / "rollup")
     ckpt = str(tmp_path / "ckpt")
-    n1 = maintain_rollup_incrementally(spark, sf_dir, rollup_dir, ckpt)
+    n1, table = maintain_rollup_incrementally(spark, sf_dir, rollup_dir, ckpt)
     assert n1 >= 1
 
     streamed = {
         (r["bucket"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in read_level(spark.read.parquet(rollup_dir)).collect()
+        for r in read_level(table.read()).collect()
     }
     batch = read_level(
         rollup_cascade(load_table(spark, sf_dir, "events"), levels=("day",))["day"]
@@ -478,11 +480,11 @@ def test_incremental_rollup_matches_batch_and_skips_replay(spark, sf_dir, tmp_pa
     assert streamed == want
 
     # re-drain: checkpoint knows every file was consumed -> no new batch
-    n2 = maintain_rollup_incrementally(spark, sf_dir, rollup_dir, ckpt)
+    n2, table = maintain_rollup_incrementally(spark, sf_dir, rollup_dir, ckpt)
     assert n2 == 0
     again = {
         (r["bucket"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in read_level(spark.read.parquet(rollup_dir)).collect()
+        for r in read_level(table.read()).collect()
     }
     assert again == want
 
@@ -490,33 +492,31 @@ def test_incremental_rollup_matches_batch_and_skips_replay(spark, sf_dir, tmp_pa
 def test_incremental_rollup_replay_after_torn_crash_is_idempotent(
     spark, sf_dir, tmp_path
 ):
-    """Crash between the directory swap and the checkpoint commit re-delivers
-    the same batch_id on restart UNDER THE SAME CHECKPOINT; the
-    _applied_batch_id marker (written atomically with the data, carrying the
-    checkpoint's incarnation token) makes the sink skip it instead of merging
+    """Crash between the table commit and the checkpoint commit re-delivers
+    the same batch_id on restart UNDER THE SAME CHECKPOINT; the commit's
+    metadata (batch id + the checkpoint's incarnation token, written
+    atomically with the data) makes the sink skip it instead of merging
     the same partials twice."""
-    import os
-
     from etl_batch_spark.operators.rollup import read_level
     from etl_batch_spark.streaming.events import maintain_rollup_incrementally
 
     rollup_dir = str(tmp_path / "rollup")
     ckpt = str(tmp_path / "ckpt")
-    maintain_rollup_incrementally(spark, sf_dir, rollup_dir, ckpt)
+    n, table = maintain_rollup_incrementally(spark, sf_dir, rollup_dir, ckpt)
     want = {
         (r["bucket"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in read_level(spark.read.parquet(rollup_dir)).collect()
+        for r in read_level(table.read()).collect()
     }
-    assert os.path.exists(os.path.join(rollup_dir, "_applied_batch_id"))
+    assert table.latest_meta()["batch_id"] == n - 1
 
     # simulate the torn crash: offsets written, epoch COMMIT lost — the
     # restart re-delivers the last batch id under the same incarnation
     _drop_last_commit(ckpt)
-    n = maintain_rollup_incrementally(spark, sf_dir, rollup_dir, ckpt)
+    n, table = maintain_rollup_incrementally(spark, sf_dir, rollup_dir, ckpt)
     assert n >= 1  # the torn batch was re-delivered...
     got = {
         (r["bucket"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in read_level(spark.read.parquet(rollup_dir)).collect()
+        for r in read_level(table.read()).collect()
     }
     assert got == want  # ...but not re-merged
 
@@ -549,22 +549,94 @@ def test_incremental_rollup_rebuilds_after_lost_checkpoint(spark, sf_dir, tmp_pa
         event_type="click",
         value=10.0,
     )
-    n = maintain_rollup_incrementally(spark, src, rollup_dir, ckpt)
+    n, table = maintain_rollup_incrementally(spark, src, rollup_dir, ckpt)
     assert n >= 1
     got = {
         (r["bucket"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in read_level(spark.read.parquet(rollup_dir)).collect()
+        for r in read_level(table.read()).collect()
     }
     # fresh ground truth over BOTH files, built independently
     fresh_dir = str(tmp_path / "rollup_fresh")
-    maintain_rollup_incrementally(spark, src, fresh_dir, str(tmp_path / "ckpt_fresh"))
+    _, fresh = maintain_rollup_incrementally(
+        spark, src, fresh_dir, str(tmp_path / "ckpt_fresh")
+    )
     want = {
         (r["bucket"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in read_level(spark.read.parquet(fresh_dir)).collect()
+        for r in read_level(fresh.read()).collect()
     }
     assert got == want
     # the new event's bucket really is present (not dropped)
     assert (datetime.datetime(2030, 6, 1), "click") in got
+
+
+def _drain_rollup(spark, src, table_path, ckpt):
+    from etl_batch_spark.operators.rollup import read_level
+    from etl_batch_spark.streaming.events import maintain_rollup_incrementally
+
+    _, table = maintain_rollup_incrementally(spark, src, table_path, ckpt)
+    return Counter(tuple(r) for r in read_level(table.read()).collect())
+
+
+def _drain_upsert(spark, src, table_path, ckpt):
+    from etl_batch_spark.streaming.events import upsert_latest_versioned
+
+    _, table, _ = upsert_latest_versioned(spark, src, table_path, ckpt)
+    return Counter(tuple(r) for r in table.read().collect())
+
+
+@pytest.mark.parametrize(
+    "drain,k",
+    [(_drain_rollup, 1), (_drain_rollup, 2), (_drain_upsert, 1)],
+    ids=["rollup-k1", "rollup-k2", "upsert-k1"],
+)
+def test_crashed_drain_converges_on_rerun(spark, sf_dir, tmp_path, monkeypatch, drain, k):
+    """A drain that dies at its k-th os.rename/os.replace/os.link call —
+    wherever that falls in the sink's write — must leave a store the
+    re-run completes: the state then equals a fresh store and checkpoint
+    drained over the same files, never a store rebuilt from the
+    re-delivered batch alone."""
+    import shutil
+
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet"))
+    table_path = str(tmp_path / "store")
+    ckpt = str(tmp_path / "ckpt")
+    drain(spark, src, table_path, ckpt)
+    _write_event_file(
+        os.path.join(src, "events_0001.parquet"),
+        event_id=99_000_003,
+        ts=datetime.datetime(2030, 6, 1, 12, 0, 0),
+        user_id=1,
+        event_type="click",
+        value=10.0,
+    )
+
+    calls = 0
+
+    def failing(real):
+        def op(*args, **kwargs):
+            nonlocal calls
+            calls += 1
+            if calls == k:
+                raise OSError(f"injected fault at filesystem call {k}")
+            return real(*args, **kwargs)
+
+        return op
+
+    with monkeypatch.context() as m:
+        for name in ("rename", "replace", "link"):
+            m.setattr(os, name, failing(getattr(os, name)))
+        try:
+            drain(spark, src, table_path, ckpt)
+        except StreamingQueryException:
+            assert calls >= k  # only the injected fault may fail the drain
+
+    got = drain(spark, src, table_path, ckpt)
+    want = drain(spark, src, str(tmp_path / "fresh"), str(tmp_path / "ckpt_fresh"))
+    assert got == want
 
 
 def test_incremental_hll_registers_match_batch(spark, sf_dir, tmp_path):
@@ -576,11 +648,11 @@ def test_incremental_hll_registers_match_batch(spark, sf_dir, tmp_path):
 
     from etl_batch_spark.catalog import load_table
     from etl_batch_spark.operators.sketch import hll_estimate, hll_merge, hll_partials
-    from etl_batch_spark.streaming.events import maintain_partials_incrementally
+    from etl_batch_spark.streaming.events import maintain_partials_versioned
 
     store = str(tmp_path / "hll")
     ckpt = str(tmp_path / "ckpt")
-    n = maintain_partials_incrementally(
+    n, table = maintain_partials_versioned(
         spark,
         sf_dir,
         store,
@@ -593,7 +665,7 @@ def test_incremental_hll_registers_match_batch(spark, sf_dir, tmp_path):
     assert n >= 1
     streamed = {
         (r["bucket"], r["idx"]): r["max_rho"]
-        for r in spark.read.parquet(store).collect()
+        for r in table.read().collect()
     }
     batch = hll_partials(
         load_table(spark, sf_dir, "events"),
@@ -602,7 +674,7 @@ def test_incremental_hll_registers_match_batch(spark, sf_dir, tmp_path):
     )
     want = {(r["bucket"], r["idx"]): r["max_rho"] for r in batch.collect()}
     assert streamed == want
-    est = hll_estimate(spark.read.parquet(store)).collect()
+    est = hll_estimate(table.read()).collect()
     assert all(r["est_distinct"] > 0 for r in est)
 
 
@@ -614,11 +686,11 @@ def test_incremental_cms_counters_match_batch(spark, sf_dir, tmp_path):
 
     from etl_batch_spark.catalog import load_table
     from etl_batch_spark.operators.sketch import cms_estimate, cms_merge, cms_partials
-    from etl_batch_spark.streaming.events import maintain_partials_incrementally
+    from etl_batch_spark.streaming.events import maintain_partials_versioned
 
     store = str(tmp_path / "cms")
     ckpt = str(tmp_path / "ckpt")
-    n = maintain_partials_incrementally(
+    n, table = maintain_partials_versioned(
         spark,
         sf_dir,
         store,
@@ -631,7 +703,7 @@ def test_incremental_cms_counters_match_batch(spark, sf_dir, tmp_path):
     assert n >= 1
     streamed = {
         (r["bucket"], r["r"], r["c"]): r["cnt"]
-        for r in spark.read.parquet(store).collect()
+        for r in table.read().collect()
     }
     events = load_table(spark, sf_dir, "events")
     batch = cms_partials(
@@ -642,9 +714,7 @@ def test_incremental_cms_counters_match_batch(spark, sf_dir, tmp_path):
     probes = spark.range(5).select(F.col("id").alias("user_id"))
     est = {
         (r["bucket"], r["user_id"]): r["est_count"]
-        for r in cms_estimate(
-            spark.read.parquet(store), probes, key_col="user_id"
-        ).collect()
+        for r in cms_estimate(table.read(), probes, key_col="user_id").collect()
     }
     exact = {
         (r["bucket"], r["user_id"]): r["n"]
@@ -733,13 +803,13 @@ def test_incremental_mg_heavy_hitters_guarantees(spark, sf_dir, tmp_path):
 
     from etl_batch_spark.catalog import load_table
     from etl_batch_spark.operators.freq import mg_merge, mg_partials, mg_report
-    from etl_batch_spark.streaming.events import maintain_partials_incrementally
+    from etl_batch_spark.streaming.events import maintain_partials_versioned
 
     support = 0.02
     cap = math.ceil(1 / support) + 1
     store = str(tmp_path / "mg")
     ckpt = str(tmp_path / "ckpt")
-    n = maintain_partials_incrementally(
+    n, table = maintain_partials_versioned(
         spark,
         sf_dir,
         store,
@@ -748,7 +818,7 @@ def test_incremental_mg_heavy_hitters_guarantees(spark, sf_dir, tmp_path):
         merge=lambda both: mg_merge(both, cap),
     )
     assert n >= 1
-    partials = spark.read.parquet(store)
+    partials = table.read()
     assert partials.count() <= cap + 1  # bounded state incl. total row
 
     events = load_table(spark, sf_dir, "events")
