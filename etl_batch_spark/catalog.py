@@ -138,14 +138,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` has shipped as both parquet TIMESTAMP(NANOS) — which
     Spark's vectorized reader refuses — and TIMESTAMP(MICROS), depending
     on fixture generation.  We sniff the footer once per load: the nanos
-    variant is read as raw int64 (legacy nanosAsLong) and truncated to
-    microseconds (the same conversion the DuckDB oracle applies); the
-    micros variant reads natively.
+    variant is read as raw int64 under an explicit ``ts long`` schema
+    (no session conf involved) and truncated to microseconds (the same
+    conversion the DuckDB oracle applies); the micros variant reads
+    natively.
     """
     if name not in DATA_TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(DATA_TABLES)}")
     if name == "events" and _events_ts_is_nanos(sf_dir):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw_schema = T.StructType(
             [
                 f if f.name != "ts" else T.StructField("ts", T.LongType())
@@ -217,17 +217,14 @@ def stage_halves(df: DataFrame, tmp: str) -> tuple[str, str]:
     return stage(0), stage(1)
 
 
-def read_landed(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Read back a directory a streaming sink landed, as ``schema``.
-
-    A source that drained no batch never creates ``path``; that reads as
-    an empty frame.  The explicit schema keeps zero-row and all-NULL
-    batches from inferring other types, and selecting its columns drops
-    the sink's ``batch_id`` partition column.
+def read_landed(table, schema: T.StructType) -> DataFrame:
+    """Read back the :class:`~etl_batch_spark.sources.txlog.TxTable` a
+    streaming sink landed.  A source that drained no batch leaves the
+    table without a commit; that reads as an empty frame of ``schema``.
     """
-    if not os.path.exists(path):
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(path).select(*schema.fieldNames())
+    if table.latest_version() < 0:
+        return table.spark.createDataFrame([], schema)
+    return table.read()
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1,8 +1,7 @@
-"""MERGE-style upsert into a parquet table — the load-side write the
-reference's batches perform with Oracle ``UPDATE``/``INSERT``
-(pkg_batch_util_body.sql:185–215, 422–467 drive such loads), re-expressed
-for immutable storage: read target → key-merge in one DataFrame plan →
-stage → atomic swap.
+"""MERGE-style upsert — the load-side write the reference's batches
+perform with Oracle ``UPDATE``/``INSERT`` (pkg_batch_util_body.sql:185–215,
+422–467 drive such loads), re-expressed for immutable storage as one
+DataFrame plan.
 
 Merge semantics (one full-outer-shaped pass, no row-at-a-time logic):
 
@@ -12,26 +11,22 @@ Merge semantics (one full-outer-shaped pass, no row-at-a-time logic):
 - carry   : target key untouched by ``updates`` → passes through
 
 Distribution: the merge is a single ``left_anti`` + ``unionByName`` on
-the key — one shuffle of each side.  The rewrite cost is the real
-scale decision: this operator rewrites the WHOLE target (fine for
-dimension-sized tables, the reference's regime).  For fact-scale
-targets, partition-scope it — merge only the partitions the updates
-touch (``partition_filter``) and leave the rest of the table on disk
-untouched, which is how table formats (Delta/Iceberg/Hudi) bound
-merge cost too.
+the key — one shuffle of each side.
 
-Atomicity: the merged table is written to a staging directory and
-swapped in by rename — a reader never sees a MIX of old and new rows.
-POSIX cannot atomically exchange two directories, so the swap is two
-renames: a reader racing the swap can hit a brief path-not-found and
-should retry, and a crash BETWEEN the renames leaves the data intact
-in ``<path>.__old__`` for manual recovery (a crash before the first
-rename leaves the target untouched).  Writers needing no-window swaps
-should use ``sources.txlog.TxTable``, whose commits are a single
-log-file link.  Concurrency control belongs to
-the control plane: run it inside a BatchRunner module with the
-duplicate-run check (body.sql:219–247 semantics) so two writers never
-race the swap.
+:func:`merge_dataframes` is the pure plan.  A whole-table merge commits
+it through ``sources.txlog.TxTable.merge``: one log-file link, so a
+crash leaves the previous version as the head and readers never see a
+mix.  :func:`merge_upsert_partitioned` is the fact-scale path for
+Hive-layout ``partitionBy`` tables: it merges only the partitions the
+updates touch and leaves the rest of the table on disk untouched, which
+is how table formats (Delta/Iceberg/Hudi) bound merge cost too.  Each
+touched partition is swapped in by two renames — a reader racing the
+swap can hit a brief path-not-found and should retry, and a crash
+BETWEEN the renames leaves that partition's data in
+``<partition>.__old__`` for manual recovery.  Concurrency control
+belongs to the control plane: run it inside a BatchRunner module with
+the duplicate-run check (body.sql:219–247 semantics) so two writers
+never race the swap.
 """
 
 from __future__ import annotations
@@ -84,32 +79,6 @@ def merge_dataframes(
         raise ValueError(f"updates has columns absent from target: {sorted(extra)}")
     carried = target.join(updates.select(*keys).distinct(), keys, "left_anti")
     return carried.unionByName(surviving.select(*target.columns))
-
-
-def merge_upsert(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    *,
-    delete_col: str | None = None,
-) -> tuple[int, int]:
-    """Merge ``updates`` into the parquet table at ``target_path`` and
-    swap the result in (two renames — see the module docstring for the
-    exact crash/race window).  Returns (rows_before, rows_after)."""
-    target = spark.read.parquet(target_path)
-    n_before = target.count()
-    merged = merge_dataframes(target, updates, keys, delete_col=delete_col)
-    staged = target_path.rstrip("/") + ".__merge__"
-    if os.path.exists(staged):
-        shutil.rmtree(staged)
-    merged.write.mode("overwrite").parquet(staged)
-    n_after = spark.read.parquet(staged).count()
-    old = target_path.rstrip("/") + ".__old__"
-    os.rename(target_path, old)
-    os.rename(staged, target_path)
-    shutil.rmtree(old)
-    return n_before, n_after
 
 
 def merge_upsert_partitioned(

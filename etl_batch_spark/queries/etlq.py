@@ -1855,22 +1855,22 @@ def et30_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# et31 — merge upsert through the table-swap IO path (operators/
-# merge.py): a scratch parquet target absorbs one MERGE of
+# et31 — merge upsert through the transaction log (sources/txlog.py::
+# TxTable.merge): a scratch TxTable target absorbs one MERGE of
 # latest-order-per-customer updates with all four verbs exercised —
 # update (existing keys), insert (keys shifted past the dimension's
 # range), delete (mod-50 flag), carry (customers with no orders).  The
 # oracle replays the same MERGE as a latest-wins fold in SQL.  The
 # delete-flag and insert-shift predicates are disjoint by construction
 # (%100==7 ⇒ %50==7 ≠ 3).  At fact scale the partitioned variant
-# (merge_upsert_partitioned) rewrites only touched partitions; this
-# entry drives the whole-table swap on a dimension-sized target, which
-# is the honest plan for dims.
+# (merge_upsert_partitioned, et36) rewrites only touched partitions;
+# this entry rewrites the whole snapshot of a dimension-sized target in
+# one commit, which is the honest plan for dims.
 # ---------------------------------------------------------------------------
 @query(
     "et31_merge_upsert",
-    doc="MERGE upsert via atomic table swap: update/insert/delete/carry in "
-    "one pass (operators.merge.merge_upsert over a scratch parquet target)",
+    doc="MERGE upsert as one transaction-log commit: update/insert/delete/"
+    "carry in one pass (sources.txlog.TxTable.merge over a scratch table)",
     oracle="""
     WITH latest AS (
       SELECT o_custkey, o_totalprice,
@@ -1898,16 +1898,16 @@ def et30_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def et31_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_batch_spark.operators.merge import merge_upsert
+    from etl_batch_spark.sources.txlog import TxTable
 
     with tempfile.TemporaryDirectory(prefix="et31_merge_", ignore_cleanup_errors=True) as tmp:
-        target_path = os.path.join(tmp, "target")
         c = load_table(spark, sf_dir, "customer").select(
             "c_custkey",
             F.col("c_acctbal").alias("acctbal"),
             F.col("c_mktsegment").alias("segment"),
         )
-        c.write.parquet(target_path)
+        target = TxTable(spark, os.path.join(tmp, "target"))
+        target.overwrite(c)
         o = load_table(spark, sf_dir, "orders")
         latest = o.withColumn(
             "rn",
@@ -1923,8 +1923,8 @@ def et31_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("UPDATED").alias("segment"),
             (F.col("o_custkey") % 50 == 3).alias("is_del"),
         )
-        merge_upsert(spark, target_path, updates, ["c_custkey"], delete_col="is_del")
-        merged = spark.read.parquet(target_path).select(
+        target.merge(updates, ["c_custkey"], delete_col="is_del")
+        merged = target.read().select(
             "c_custkey", F.round("acctbal", 2).alias("acctbal"), "segment"
         )
         return merged.localCheckpoint(eager=True)

@@ -351,13 +351,12 @@ def st07_streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFram
 @query(
     "st08_streaming_file_sink",
     doc="exactly-once foreachBatch file sink under the hash gate "
-    "(streaming.events.write_idempotent_batches): the stream lands in "
-    "batch_id partitions with dynamic partition overwrite, is read "
-    "back from parquet, materialized, and compared by value against "
-    "the batch projection — the sink's idempotence layout verified at "
-    "the contents level, not just by tests.  Stateless row-level "
-    "transform, so no watermark caveats; a single-batch source makes "
-    "batch_id deterministic (0) and is dropped from the output",
+    "(streaming.events.write_idempotent_batches): the stream lands as "
+    "TxTable commits (one per micro-batch, batch id and checkpoint "
+    "incarnation in the commit metadata), is read back through the "
+    "table's log, materialized, and compared by value against the batch "
+    "projection — the sink verified at the contents level, not just by "
+    "tests.  Stateless row-level transform, so no watermark caveats",
     oracle="""
     SELECT event_id, ts, user_id, event_type,
            ROUND(value * 2, 2) AS doubled
@@ -376,9 +375,9 @@ def st08_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "ts", "user_id", "event_type",
             F.round(F.col("value") * 2, 2).alias("doubled"),
         )
-        out = os.path.join(tmp, "out")
-        write_idempotent_batches(result, path=out, checkpoint=os.path.join(tmp, "ck"))
-        return read_landed(spark, out, result.schema).localCheckpoint(eager=True)
+        out, ck = os.path.join(tmp, "out"), os.path.join(tmp, "ck")
+        _, table = write_idempotent_batches(result, path=out, checkpoint=ck)
+        return read_landed(table, result.schema).localCheckpoint(eager=True)
 
 
 @query(
@@ -432,13 +431,13 @@ def st09_incremental_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFram
         # replay the first file: same path, same contents, NEW mtime —
         # the checkpoint tracks it as seen, so this drain must be a no-op
         shutil.copyfile(part0, os.path.join(src, "f0.parquet"))
-        replay_batches = ingest_incrementally(spark, src, dst, ck, **kwargs)
+        replay_batches, table = ingest_incrementally(spark, src, dst, ck, **kwargs)
         if replay_batches != 0:
             raise AssertionError(
                 f"replayed source file was re-ingested ({replay_batches} "
                 "batches); exactly-once file tracking is broken"
             )
-        back = read_landed(spark, dst, transform(base).schema)
+        back = read_landed(table, transform(base).schema)
         return back.localCheckpoint(eager=True)
 
 
@@ -513,12 +512,13 @@ def st10_streaming_upsert_tombstones(spark: SparkSession, sf_dir: str) -> DataFr
     "marker (offsets intact) between drains, exactly the tests-only "
     "simulation in tests/test_streaming.py promoted to the oracle "
     "gate.  foreachBatch is only at-least-once per batch, so a bare "
-    "append sink would now hold batch 1 twice; the batch_id-partition "
-    "dynamic overwrite must rewrite its own output instead.  Asserts "
-    "in-query that the replay drain actually re-ran (1 batch — the "
-    "opposite of st09's 0) and the value-hash compare against the "
-    "plain batch oracle catches any double-append (reference "
-    "analogue: restartability/resume, pkg_batch_util_body.sql:632-645)",
+    "append sink would now hold batch 1 twice; the TxTable sink finds "
+    "batch 1 already committed under this checkpoint's incarnation and "
+    "skips it.  Asserts in-query that the replay drain actually re-ran "
+    "(1 batch — the opposite of st09's 0) and the value-hash compare "
+    "against the plain batch oracle catches any double-append "
+    "(reference analogue: restartability/resume, "
+    "pkg_batch_util_body.sql:632-645)",
     oracle="""
     SELECT event_id, user_id, event_type,
            ROUND(value * 3, 2) AS tripled
@@ -570,19 +570,19 @@ def st11_torn_crash_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.copyfile(part0, os.path.join(src, "f0.parquet"))
         ingest_incrementally(spark, src, dst, ck, **kwargs)
         shutil.copyfile(part1, os.path.join(src, "f1.parquet"))
-        ingest_incrementally(spark, src, dst, ck, **kwargs)
+        _, table = ingest_incrementally(spark, src, dst, ck, **kwargs)
 
         if drop_last_commit():
             # restart after the torn crash: the lost epoch MUST re-run
-            # (not skip), and its batch_id-partition overwrite must
-            # rewrite the sink output rather than append a second copy
-            replayed = ingest_incrementally(spark, src, dst, ck, **kwargs)
+            # (not skip), and the sink must find its commit already in
+            # the table rather than append a second copy
+            replayed, _ = ingest_incrementally(spark, src, dst, ck, **kwargs)
             if replayed != 1:
                 raise AssertionError(
                     f"torn-crash restart re-ran {replayed} batches, "
                     "expected exactly the one lost epoch"
                 )
-        back = read_landed(spark, dst, transform(base).schema)
+        back = read_landed(table, transform(base).schema)
         return back.localCheckpoint(eager=True)
 
 

@@ -229,16 +229,6 @@ def read_avro(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
         ) from exc
 
 
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution read: merge footers across files so a dataset
-    whose writer gained columns over time reads as the union schema,
-    older files null-filling the new columns.  Footer merging scans
-    metadata only; reserve it for evolving layouts — fixed-schema reads
-    should pass an explicit schema (:func:`read_parquet`) and skip the
-    footer pass entirely."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
 def zorder_key(
     df: DataFrame, cols: list[str], *, bits: int = 10, equal_frequency: bool = False
 ) -> "F.Column":

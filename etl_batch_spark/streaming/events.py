@@ -15,6 +15,13 @@ DAILY000 (SURVEY.md §2.D); the engine adds real Structured Streaming:
 - :func:`purchase_attribution_join` — stream-stream interval join with
   two-sided watermarks (evictable join state)
 
+Durable sinks drain with ``foreachBatch`` into a
+:class:`~etl_batch_spark.sources.txlog.TxTable`, one commit per
+micro-batch, and replay by the single rule in :func:`_exactly_once_sink`:
+:func:`write_idempotent_batches` and :func:`ingest_incrementally` append
+rows, :func:`maintain_partials_versioned` and
+:func:`upsert_latest_versioned` merge into stored state.
+
 Tests run with ``trigger(availableNow=True)`` against the fixture
 parquet and assert equivalence with the batch semantics.  At production
 scale the same code points at a Kafka/object-store source; state is
@@ -23,7 +30,6 @@ checkpointed per trigger.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator
 from typing import Any
@@ -49,7 +55,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ts as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS); mirror the
     # batch catalog's footer sniff (catalog.load_table).
     if _events_ts_is_nanos(sf_dir):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return (
             spark.readStream.schema(_RAW_EVENTS)
             .option("pathGlobFilter", "events*.parquet")
@@ -360,34 +365,28 @@ def sliding_event_counts(
     )
 
 
-def write_idempotent_batches(
-    result: DataFrame, *, path: str, checkpoint: str
-) -> None:
-    """Exactly-once file sink via ``foreachBatch``: each micro-batch
-    lands in a ``batch_id=N`` partition with dynamic partition
-    overwrite, so a batch replayed after a crash (same batch_id)
-    overwrites its own output instead of appending duplicates —
-    idempotence from partition layout rather than sink transactions.
-    Drains with availableNow; the checkpoint carries source offsets so
-    a restart resumes, not re-reads.
+def write_idempotent_batches(result: DataFrame, *, path: str, checkpoint: str):
+    """Exactly-once append sink via ``foreachBatch``: each micro-batch of
+    ``result`` lands as one commit of the
+    :class:`~etl_batch_spark.sources.txlog.TxTable` at ``path``, and
+    replays follow :func:`_exactly_once_sink` (a re-delivered batch is
+    skipped, a lost checkpoint rebuilds the table from the re-read).
+    Drains with availableNow; the checkpoint carries source offsets so a
+    restart resumes, not re-reads.
+
+    A stream whose schema differs from the table's refuses with
+    :class:`~etl_batch_spark.sources.txlog.SchemaEvolutionError` before
+    it starts, leaving the checkpoint and the table untouched.
+
+    Returns ``(n_batches, TxTable)``; read the rows with ``table.read()``
+    (the directory also holds files a rebuild superseded).
     """
-    _drain(result, _batch_partition_sink(path), checkpoint)
+    from etl_batch_spark.sources.txlog import TxTable
 
-
-def _batch_partition_sink(path: str):
-    """foreachBatch sink writing each micro-batch to ``path`` as its own
-    ``batch_id=N`` partition, under dynamic partition overwrite."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    return sink
+    table = TxTable(result.sparkSession, path)
+    table._evolved_schema(result, merge_schema=False)
+    sink = _exactly_once_sink(table, checkpoint, build=lambda batch: batch)
+    return _drain(result, sink, checkpoint), table
 
 
 def _drain(stream: DataFrame, sink, checkpoint_dir: str) -> int:
@@ -434,97 +433,63 @@ def ingest_incrementally(
     file_format: str = "parquet",
     transform=None,
     merge_schema: bool = False,
-) -> int:
+):
     """Incremental file ingestion (the cloud "auto loader" pattern):
     each call discovers files in ``src_dir`` that no previous call
     processed — tracked in the streaming checkpoint, not by listing
-    diffs — transforms them, and appends to ``dst_dir``.  Returns the
-    number of micro-batches processed (0 when nothing is new).
+    diffs — transforms them, and appends them to the
+    :class:`~etl_batch_spark.sources.txlog.TxTable` at ``dst_dir``.
+    Returns ``(n_batches, TxTable)``; ``n_batches`` is 0 when nothing
+    is new.
 
     ``trigger(availableNow=True)`` drains everything pending and stops,
     so this runs as a plain batch job on a schedule (the engine's
     BatchRunner slots it like any module) while inheriting streaming's
-    exactly-once file tracking: a crashed run replays from the
-    checkpoint instead of double-loading, the property the reference
-    approximates with duplicate-run checks + loader file lists
-    (pkg_batch_util_body.sql:219–247, 1163–1251).
-
-    The sink lands each micro-batch in a ``batch_id=N`` partition with
-    dynamic partition overwrite (the ``write_idempotent_batches``
-    layout) rather than a bare append: ``foreachBatch`` is only
-    AT-LEAST-once per batch — a crash between the sink write and the
-    checkpoint commit re-runs the same batch_id on restart, and an
-    append sink would then hold the batch twice.  The partition
-    overwrite makes the replay rewrite its own output instead
-    (tests/test_streaming.py pins the torn-crash path).  Readers take
-    ``spark.read.parquet(dst_dir)`` as usual; ``batch_id`` rides along
-    as a partition column they may drop.
+    exactly-once file tracking, the property the reference approximates
+    with duplicate-run checks + loader file lists
+    (pkg_batch_util_body.sql:219–247, 1163–1251).  ``foreachBatch`` is
+    only at-least-once per batch, so the sink is the append of
+    :func:`write_idempotent_batches`: a batch re-delivered after a torn
+    crash is skipped, and a lost checkpoint rebuilds the table from the
+    full re-read instead of landing on top of it.  Read the table with
+    ``table.read()``.
 
     At 100 TB the file listing is the bottleneck — cap per-batch intake
     with ``maxFilesPerTrigger`` upstream or partition ``src_dir`` by
     arrival date; state stays O(files seen), on storage, not memory.
 
-    **Schema evolution across runs is PINNED** (the checkpoint records
-    the ingest's output schema in ``_engine_ingest_schema.json``): a
-    later run whose output schema drifts REFUSES with
-    :class:`~etl_batch_spark.sources.txlog.SchemaEvolutionError`
-    BEFORE the stream starts — the checkpoint and ``dst_dir`` are
-    untouched — unless ``merge_schema=True``, which admits ADDED
-    nullable columns (older ``dst_dir`` files then lack them; read the
-    landing dir with ``sources.io.read_parquet_evolving`` /
-    ``mergeSchema`` so they NULL-fill).  A type change or a REMOVED
-    column refuses either way: silently narrowing a landing table is
-    how downstream batch jobs start reading garbage (reference
+    **Schema evolution across runs is checked against the table's log
+    schema** before the stream starts: a drifted output schema REFUSES
+    with :class:`~etl_batch_spark.sources.txlog.SchemaEvolutionError`
+    — the checkpoint and the table are untouched — unless
+    ``merge_schema=True``, which admits ADDED columns (the commit that
+    lands the first evolved batch records the union schema, and older
+    files NULL-fill the new columns on read).  A type change or a
+    REMOVED column refuses either way: silently narrowing a landing
+    table is how downstream batch jobs start reading garbage (reference
     analogue: resume with changed parameters,
     pkg_batch_util_body.sql:632–645 — the run either matches its
     registered definition or is rejected).
     """
-    from etl_batch_spark.sources.txlog import (
-        SchemaEvolutionError,
-        _merge_schemas,
-        _norm_schema,
-    )
+    from etl_batch_spark.sources.txlog import SchemaEvolutionError, TxTable
 
     reader = spark.readStream.schema(schema)
     stream = getattr(reader, file_format)(src_dir)
     if transform is not None:
         stream = transform(stream)
 
-    out_schema = _norm_schema(stream.schema)
-    pin_path = os.path.join(checkpoint_dir, "_engine_ingest_schema.json")
-    if os.path.exists(pin_path):
-        with open(pin_path) as f:
-            prior = _norm_schema(T.StructType.fromJson(json.load(f)))
-        if {(x.name, x.dataType) for x in prior.fields} != {
-            (x.name, x.dataType) for x in out_schema.fields
-        }:
-            removed = set(prior.fieldNames()) - set(out_schema.fieldNames())
-            if removed:
-                raise SchemaEvolutionError(
-                    f"ingest output drops column(s) {sorted(removed)} the "
-                    "checkpoint's pinned schema carries; narrowing a "
-                    "landing table needs a new checkpoint + dst, not a "
-                    "resumed stream"
-                )
-            merged = _merge_schemas(prior, out_schema)  # type change raises
-            if not merge_schema:
-                raise SchemaEvolutionError(
-                    f"ingest output schema {out_schema.simpleString()} "
-                    f"drifted from the checkpoint's pinned "
-                    f"{prior.simpleString()}; pass merge_schema=True to "
-                    "evolve (older landed files NULL-fill the new columns "
-                    "under a mergeSchema read)"
-                )
-            out_schema = merged
-    n_batches = _drain(stream, _batch_partition_sink(dst_dir), checkpoint_dir)
-    # pin (or re-pin, post-evolution) the output schema only after a
-    # successful drain — a failed run must leave the pin untouched
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    tmp = pin_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(out_schema.jsonValue(), f)
-    os.replace(tmp, pin_path)
-    return n_batches
+    table = TxTable(spark, dst_dir)
+    prior = table.schema_at() or T.StructType()
+    removed = set(prior.fieldNames()) - set(stream.columns)
+    if removed:
+        raise SchemaEvolutionError(
+            f"ingest output drops column(s) {sorted(removed)} the table's "
+            "schema carries; narrowing a landing table needs a new "
+            "checkpoint + table, not a resumed stream"
+        )
+    table._evolved_schema(stream, merge_schema=merge_schema)
+    sink = _exactly_once_sink(table, checkpoint_dir, build=lambda batch: batch)
+    return _drain(stream, sink, checkpoint_dir), table
 
 
 # ---------------------------------------------------------------------------
@@ -617,11 +582,13 @@ def _checkpoint_incarnation(checkpoint_dir: str) -> str:
     return tok
 
 
-def _exactly_once_sink(table, checkpoint_dir: str, *, build, merge):
+def _exactly_once_sink(table, checkpoint_dir: str, *, build, merge=None):
     """foreachBatch sink maintaining ``table`` (a
-    :class:`~etl_batch_spark.sources.txlog.TxTable`) as derived state:
-    ``build(batch_df)`` turns one micro-batch into state rows and
+    :class:`~etl_batch_spark.sources.txlog.TxTable`) from a stream:
+    ``build(batch_df)`` turns one micro-batch into rows and
     ``merge(stored, fresh)`` folds them into the stored snapshot.
+    ``merge=None`` marks an append-only store, whose new batches commit
+    as appends and leave the stored files in place.
 
     The exactly-once rule, for every streaming store in this module.
     ``foreachBatch`` is only at-least-once: a crash between the table
@@ -631,18 +598,21 @@ def _exactly_once_sink(table, checkpoint_dir: str, *, build, merge):
     data, and each batch reads the head commit's metadata once:
 
     - same incarnation, ``batch_id`` already committed: a replay — skip;
-    - same incarnation, newer batch: merge into ``table.read()``;
+    - same incarnation, newer batch: append, or merge into
+      ``table.read()``;
     - no commit yet, or another incarnation: rebuild from this batch
       alone.  A lost checkpoint restarts batch ids at 0 over a full
       source re-read, so its batches must neither be skipped (old ids
-      would gate them) nor merged (double count).  This is correct as
-      long as source retention covers the checkpoint's loss window:
-      keep state and checkpoint together, and vacuum source files only
-      past both.
+      would gate them) nor added to the old state (double count).  This
+      is correct as long as source retention covers the checkpoint's
+      loss window: keep state and checkpoint together, and vacuum source
+      files only past both.
 
     A crash before the commit leaves the head as it was, so the re-run
-    merges the re-delivered batch exactly once.  Superseded versions
-    stay on disk until the caller runs ``table.vacuum(...)``.
+    commits the re-delivered batch exactly once.  Superseded versions
+    stay on disk until the caller runs ``table.vacuum(...)``.  Append
+    callers settle the schema before the stream starts, so an append
+    admits it (``merge_schema=True``).
     """
     incarnation = _checkpoint_incarnation(checkpoint_dir)
 
@@ -652,8 +622,13 @@ def _exactly_once_sink(table, checkpoint_dir: str, *, build, merge):
         if same_run and meta["batch_id"] >= batch_id:
             return
         fresh = build(batch_df)
-        state = merge(table.read(), fresh) if same_run else fresh
-        table.overwrite(state, meta={"batch_id": batch_id, "incarnation": incarnation})
+        tag = {"batch_id": batch_id, "incarnation": incarnation}
+        if not same_run:
+            table.overwrite(fresh, meta=tag)
+        elif merge is None:
+            table.append(fresh, meta=tag, merge_schema=True)
+        else:
+            table.overwrite(merge(table.read(), fresh), meta=tag)
 
     return sink
 

@@ -737,24 +737,22 @@ class TestGroupedMadOutliers:
 
 class TestMergeUpsert:
     def test_update_insert_delete_carry(self, spark, tmp_path):
-        from etl_batch_spark.operators.merge import merge_upsert
+        from etl_batch_spark.sources.txlog import TxTable
 
-        path = str(tmp_path / "dim")
-        spark.createDataFrame(
+        t = TxTable(spark, str(tmp_path / "dim"))
+        t.overwrite(spark.createDataFrame(
             [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
             "k long, name string, v double",
-        ).write.parquet(path)
+        ))
         updates = spark.createDataFrame(
             [(2, "b2", 21.0, False),   # update
              (4, "d", 40.0, False),    # insert
              (3, None, None, True)],   # delete
             "k long, name string, v double, is_deleted boolean",
         )
-        n_before, n_after = merge_upsert(
-            spark, path, updates, ["k"], delete_col="is_deleted"
-        )
-        assert (n_before, n_after) == (3, 3)
-        got = {r["k"]: (r["name"], r["v"]) for r in spark.read.parquet(path).collect()}
+        t.merge(updates, ["k"], delete_col="is_deleted")
+        assert [v.n_rows for v in t.versions()] == [3, 3]
+        got = {r["k"]: (r["name"], r["v"]) for r in t.read().collect()}
         assert got == {1: ("a", 10.0), 2: ("b2", 21.0), 4: ("d", 40.0)}
 
     def test_rejects_bad_inputs(self, spark):
@@ -768,20 +766,23 @@ class TestMergeUpsert:
             merge_dataframes(t, t, [])
 
     def test_crash_before_swap_leaves_target(self, spark, tmp_path, monkeypatch):
-        from etl_batch_spark.operators import merge as m
+        """A fault at the commit's visibility point (the log entry's
+        ``os.link``) leaves the previous version as the head."""
+        from etl_batch_spark.sources import txlog
+        from etl_batch_spark.sources.txlog import TxTable
 
-        path = str(tmp_path / "dim2")
-        spark.createDataFrame([(1, "a")], "k long, name string").write.parquet(path)
+        t = TxTable(spark, str(tmp_path / "dim2"))
+        t.overwrite(spark.createDataFrame([(1, "a")], "k long, name string"))
         updates = spark.createDataFrame([(1, "CHANGED")], "k long, name string")
 
-        real_rename = m.os.rename
         def boom(src, dst):
-            raise OSError("simulated crash at swap")
-        monkeypatch.setattr(m.os, "rename", boom)
+            raise OSError("simulated crash at commit")
+        monkeypatch.setattr(txlog.os, "link", boom)
         with pytest.raises(OSError):
-            m.merge_upsert(spark, path, updates, ["k"])
-        monkeypatch.setattr(m.os, "rename", real_rename)
-        assert [r["name"] for r in spark.read.parquet(path).collect()] == ["a"]
+            t.merge(updates, ["k"])
+        monkeypatch.undo()
+        assert t.latest_version() == 0
+        assert [r["name"] for r in t.read().collect()] == ["a"]
 
 
 class TestMergeUpsertPartitioned:

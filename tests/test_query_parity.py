@@ -46,3 +46,16 @@ def test_query_matches_oracle(spark, duck, name):
     assert not errs, f"{name}: {errs[:5]}"
     # the driver hashes exactly — tolerance-only passes are latent failures
     assert bit_exact, f"{name}: floats differ below 1e-9 (driver hash risk)"
+
+
+def test_parity_refuses_unknown_query_names(monkeypatch, capsys):
+    """A misspelt query name fails the gate instead of passing zero
+    queries; it is refused before any session starts."""
+    import tools.parity as parity
+
+    monkeypatch.setattr(
+        sys, "argv", ["parity.py", SF, "q01_pricing_summary", "q01_typo"]
+    )
+    assert parity.main() == 2
+    err = capsys.readouterr().err
+    assert "q01_typo" in err and "q01_pricing_summary" not in err

@@ -135,21 +135,6 @@ def test_orc_roundtrip_pushdown(spark, tmp_path):
     assert "PushedFilters" in plan or "pushedFilters" in plan
 
 
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    from etl_batch_spark.sources.io import read_parquet_evolving
-
-    old = spark.range(5).select(F.col("id").alias("k"))
-    new = spark.range(5, 10).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("extra")
-    )
-    old.write.mode("overwrite").parquet(str(tmp_path / "t"))
-    new.write.mode("append").parquet(str(tmp_path / "t"))
-    back = read_parquet_evolving(spark, str(tmp_path / "t"))
-    assert set(back.columns) == {"k", "extra"}
-    rows = {r["k"]: r["extra"] for r in back.collect()}
-    assert rows[0] is None and rows[7] == 14 and len(rows) == 10
-
-
 class TestZorder:
     def test_key_interleaves_bits(self, spark):
         from etl_batch_spark.sources.io import zorder_key

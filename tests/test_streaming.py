@@ -220,17 +220,28 @@ def test_idempotent_batch_sink_no_duplicates_on_replay(spark, sf_dir, tmp_path):
     n_events = load_table(spark, sf_dir, "events").count()
 
     stream = read_events_stream(spark, sf_dir).select("event_id", "user_id")
-    write_idempotent_batches(stream, path=out, checkpoint=ck)
-    first = spark.read.parquet(out)
+    _, table = write_idempotent_batches(stream, path=out, checkpoint=ck)
+    first = table.read()
     assert first.count() == n_events
 
     # restart with the same checkpoint: offsets already committed, so a
-    # replay adds nothing and overwrite semantics keep partitions clean
+    # replay adds nothing to the table
     stream2 = read_events_stream(spark, sf_dir).select("event_id", "user_id")
     write_idempotent_batches(stream2, path=out, checkpoint=ck)
-    again = spark.read.parquet(out)
+    again = table.read()
     assert again.count() == n_events
     assert again.select("event_id").distinct().count() == n_events
+
+    # a stream of another shape refuses before it starts
+    from etl_batch_spark.sources.txlog import SchemaEvolutionError
+
+    head = table.latest_version()
+    with pytest.raises(SchemaEvolutionError, match="merge_schema"):
+        write_idempotent_batches(
+            read_events_stream(spark, sf_dir).select("event_id"),
+            path=out, checkpoint=ck,
+        )
+    assert table.latest_version() == head
 
 
 def test_session_window_aggregate_complete_matches_batch(spark, sf_dir):
@@ -347,28 +358,28 @@ class TestIncrementalIngest:
             "append"
         ).parquet(src)
 
-        n1 = ingest_incrementally(spark, src, dst, cp, schema=schema)
+        n1, table = ingest_incrementally(spark, src, dst, cp, schema=schema)
         assert n1 >= 1
-        assert spark.read.parquet(dst).count() == 2
+        assert table.read().count() == 2
 
         # second run with no new files: nothing re-processed
         ingest_incrementally(spark, src, dst, cp, schema=schema)
-        assert spark.read.parquet(dst).count() == 2
+        assert table.read().count() == 2
 
         # new arrivals: only the delta lands, history not re-loaded
         spark.createDataFrame([(3, 3.0)], schema).coalesce(1).write.mode(
             "append"
         ).parquet(src)
         ingest_incrementally(spark, src, dst, cp, schema=schema)
-        got = sorted(r["id"] for r in spark.read.parquet(dst).collect())
+        got = sorted(r["id"] for r in table.read().collect())
         assert got == [1, 2, 3]
 
     def test_torn_crash_replay_does_not_double_load(self, spark, tmp_path):
         """foreachBatch is at-least-once per batch: a crash AFTER the
         sink wrote but BEFORE the checkpoint commit re-runs the same
         batch_id on restart.  Simulated by deleting the batch's commit
-        marker; the batch_id-partition overwrite layout must absorb the
-        replay instead of appending the batch twice."""
+        marker; the table's commit metadata must mark the replay as
+        already landed instead of appending the batch twice."""
         import os
 
         from etl_batch_spark.streaming.events import ingest_incrementally
@@ -383,8 +394,8 @@ class TestIncrementalIngest:
         spark.createDataFrame([(3,), (4,)], schema).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        ingest_incrementally(spark, src, dst, cp, schema=schema)
-        assert sorted(r["id"] for r in spark.read.parquet(dst).collect()) == [
+        _, table = ingest_incrementally(spark, src, dst, cp, schema=schema)
+        assert sorted(r["id"] for r in table.read().collect()) == [
             1, 2, 3, 4,
         ]
         # torn crash: offsets/1 exists, sink ran, commits/1 lost (the
@@ -397,9 +408,9 @@ class TestIncrementalIngest:
         crc = os.path.join(cp, "commits", f".{last}.crc")
         if os.path.exists(crc):
             os.remove(crc)
-        n3 = ingest_incrementally(spark, src, dst, cp, schema=schema)
+        n3, _ = ingest_incrementally(spark, src, dst, cp, schema=schema)
         assert n3 == 1  # the batch re-runs...
-        got = sorted(r["id"] for r in spark.read.parquet(dst).collect())
+        got = sorted(r["id"] for r in table.read().collect())
         assert got == [1, 2, 3, 4]  # ...but the sink held exactly-once
 
     def test_transform_applies_per_batch(self, spark, tmp_path):
@@ -409,12 +420,92 @@ class TestIncrementalIngest:
         src, dst, cp = str(tmp_path / "s2"), str(tmp_path / "d2"), str(tmp_path / "c2")
         schema = T.StructType([T.StructField("id", T.LongType())])
         spark.createDataFrame([(1,), (2,)], schema).coalesce(1).write.parquet(src)
-        ingest_incrementally(
+        _, table = ingest_incrementally(
             spark, src, dst, cp, schema=schema,
             transform=lambda df: df.withColumn("doubled", F.col("id") * 2),
         )
-        rows = {(r["id"], r["doubled"]) for r in spark.read.parquet(dst).collect()}
+        rows = {(r["id"], r["doubled"]) for r in table.read().collect()}
         assert rows == {(1, 2), (2, 4)}
+
+
+def _ingest_ids(spark, src, dst, cp):
+    from etl_batch_spark.streaming.events import ingest_incrementally
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    return ingest_incrementally(spark, src, dst, cp, schema=schema)
+
+
+def _write_ids(spark, src, dst, cp):
+    from etl_batch_spark.streaming import write_idempotent_batches
+
+    stream = spark.readStream.schema("id long").parquet(src)
+    return write_idempotent_batches(stream, path=dst, checkpoint=cp)
+
+
+@pytest.mark.parametrize(
+    "drain", [_ingest_ids, _write_ids], ids=["ingest", "write_idempotent"]
+)
+def test_lost_checkpoint_lands_rows_once(spark, tmp_path, drain):
+    """A lost checkpoint restarts batch ids at 0 over a full re-read of
+    the source.  The table must then hold each source row once: the
+    re-read rebuilds it under the new checkpoint's incarnation instead
+    of landing on top of the rows the old checkpoint committed."""
+    import shutil
+
+    src, dst, cp = (str(tmp_path / n) for n in ("src", "dst", "cp"))
+    for ids in ([1, 2], [3, 4]):
+        spark.createDataFrame([(i,) for i in ids], "id long").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        _, table = drain(spark, src, dst, cp)
+    assert sorted(r["id"] for r in table.read().collect()) == [1, 2, 3, 4]
+
+    shutil.rmtree(cp)
+    n, table = drain(spark, src, dst, cp)
+    assert n >= 1  # the re-read is delivered again...
+    assert sorted(r["id"] for r in table.read().collect()) == [1, 2, 3, 4]
+
+
+def test_nanos_events_read_without_session_conf(spark, tmp_path):
+    """``events.ts`` stored as parquet TIMESTAMP(NANOS) reads as micros
+    truncated from the raw int64, NULL kept, in batch and stream alike,
+    and neither read leaves a conf on the caller's session."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_700_000_000_123_456_789, None, -1_000_000_000]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "user_id": pa.array([10, 20, 30], pa.int64()),
+            "event_type": pa.array(["view", "click", "view"], pa.string()),
+            "value": pa.array([1.0, 2.0, 3.0], pa.float64()),
+            "props": pa.array(["{}"] * 3, pa.string()),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    sf = str(tmp_path)
+    want = {
+        1: 1_700_000_000_123_456,
+        2: None,
+        3: -1_000_000,
+    }
+
+    batch = load_table(spark, sf, "events").select("event_id", F.unix_micros("ts"))
+    assert {r[0]: r[1] for r in batch.collect()} == want
+
+    run_stream_to_memory(
+        read_events_stream(spark, sf).select(
+            "event_id", F.unix_micros("ts").alias("us")
+        ),
+        query_name="nanos_stream",
+        output_mode="append",
+    )
+    streamed = spark.sql("SELECT event_id, us FROM nanos_stream").collect()
+    assert {r[0]: r[1] for r in streamed} == want
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) is None
 
 
 def test_transform_with_state_running_agg_matches_batch(spark, sf_dir):
@@ -1148,8 +1239,8 @@ def test_streaming_multimodal_decode_matches_batch(spark, tmp_path):
 
 
 class TestStreamingSchemaEvolution:
-    """A column added mid-stream: the checkpoint's pinned schema and
-    the evolved state/landing schema must never silently disagree —
+    """A column added mid-stream: the table's logged schema and the
+    evolved state/landing schema must never silently disagree —
     drift REFUSES at the next run/batch boundary (checkpoint and
     stored state untouched), evolves only under merge_schema=True, and
     a type change refuses either way."""
@@ -1157,7 +1248,6 @@ class TestStreamingSchemaEvolution:
     def test_ingest_drift_refuses_then_evolves(self, spark, tmp_path):
         import pytest as _pytest
 
-        from etl_batch_spark.sources.io import read_parquet_evolving
         from etl_batch_spark.sources.txlog import SchemaEvolutionError
         from etl_batch_spark.streaming.events import ingest_incrementally
         from pyspark.sql import types as T
@@ -1167,7 +1257,7 @@ class TestStreamingSchemaEvolution:
         spark.createDataFrame([(1,), (2,)], schema).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        ingest_incrementally(spark, src, dst, cp, schema=schema)
+        _, table = ingest_incrementally(spark, src, dst, cp, schema=schema)
 
         spark.createDataFrame([(3,)], schema).coalesce(1).write.mode(
             "append"
@@ -1180,23 +1270,23 @@ class TestStreamingSchemaEvolution:
         with _pytest.raises(SchemaEvolutionError, match="merge_schema"):
             ingest_incrementally(spark, src, dst, cp, **widened)
         assert sorted(
-            r["id"] for r in spark.read.parquet(dst).collect()
+            r["id"] for r in table.read().collect()
         ) == [1, 2]
         # evolve: the PENDING file (not yet ingested — the refusal did
         # not advance the checkpoint) lands with the new column
-        n = ingest_incrementally(spark, src, dst, cp, merge_schema=True,
-                                 **widened)
+        n, _ = ingest_incrementally(spark, src, dst, cp, merge_schema=True,
+                                    **widened)
         assert n == 1
-        back = read_parquet_evolving(spark, dst)
+        back = table.read()
         got = {(r["id"], r["v2"]) for r in back.select("id", "v2").collect()}
         assert got == {(1, None), (2, None), (3, 6)}
-        # the pin follows the evolution: the widened shape now resumes
-        # without the flag
+        # the logged schema follows the evolution: the widened shape now
+        # resumes without the flag
         spark.createDataFrame([(4,)], schema).coalesce(1).write.mode(
             "append"
         ).parquet(src)
         ingest_incrementally(spark, src, dst, cp, **widened)
-        assert read_parquet_evolving(spark, dst).count() == 4
+        assert table.read().count() == 4
 
     def test_ingest_narrowing_and_type_change_refuse(self, spark, tmp_path):
         import pytest as _pytest
@@ -1213,7 +1303,7 @@ class TestStreamingSchemaEvolution:
             "append"
         ).parquet(src)
         ingest_incrementally(spark, src, dst, cp, schema=schema)
-        # dropping a pinned column refuses even with merge_schema=True
+        # dropping a logged column refuses even with merge_schema=True
         with _pytest.raises(SchemaEvolutionError, match="drops column"):
             ingest_incrementally(
                 spark, src, dst, cp, schema=schema, merge_schema=True,

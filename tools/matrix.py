@@ -137,7 +137,7 @@ def main() -> int:
         out = ensure_dir(n, regen=args.regen)
         cmd = [sys.executable, os.path.join(REPO, "tools", "parity.py"), out]
         if args.only:
-            cmd += ["--only", *args.only]
+            cmd += args.only
         r = subprocess.run(cmd, capture_output=True, text=True)
         tail = [ln for ln in r.stdout.splitlines() if "pass," in ln]
         summary = tail[-1] if tail else f"rc={r.returncode} (no summary line)"

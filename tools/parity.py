@@ -110,6 +110,10 @@ def compare(name: str, spark_rows, spark_cols, duck_rows, duck_cols):
 
 def main() -> int:
     only = set(sys.argv[2:])
+    unknown = sorted(only - set(QUERIES))
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
     spark = get_spark("parity")
     con = duck_connect(SF_DIR)
     n_pass = n_fail = 0
