@@ -118,13 +118,16 @@ def main() -> None:
     min_gap: dict[str, float] = {}
     # per-query job count + build/exec split (round 11): measured on ONE
     # extra INSTRUMENTED run per query AFTER its timed runs — the timed
-    # region and the stdout JSON line are untouched (job-group tagging
-    # adds py4j calls that must not land inside the timed window).
+    # region and the stdout JSON line are untouched (the job-id reads
+    # are py4j calls that must not land inside the timed window).
     # Lands in BENCH_DETAIL.json only, so round-over-round comparisons
     # can separate dispatch drift (jobs × host per-job latency) from
-    # data work mechanically.
+    # data work mechanically.  A phase's jobs are the DAGScheduler job
+    # ids it spans, not a job group's: a foreachBatch micro-batch runs
+    # its jobs under the stream's own group, and this loop is
+    # single-threaded, so the id window holds exactly the phase's jobs.
     jobs_split: dict[str, dict] = {}
-    sc = spark.sparkContext
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
     for name, q in bench_queries.items():
         build = q.bench_build or q.build
         build(spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -141,23 +144,20 @@ def main() -> None:
         # jackknife bound needs a second sample; degenerate n_runs=1
         # (smoke runs) reports 0 rather than crashing
         min_gap[name] = round(runs[1] - runs[0], 3) if len(runs) > 1 else 0.0
-        gb, ge = f"bench-b-{name}", f"bench-e-{name}"
-        sc.setJobGroup(gb, f"build {name}")
+        j0 = dag.nextJobId()
         t0 = time.perf_counter()
         df = build(spark, SF_DIR)
         t1 = time.perf_counter()
-        sc.setJobGroup(ge, f"exec {name}")
+        j1 = dag.nextJobId()
         df.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
-        sc.setJobGroup(None, None)
-        tracker = sc.statusTracker()
+        j2 = dag.nextJobId()
         jobs_split[name] = {
             "build_sec": round(t1 - t0, 3),
             "exec_sec": round(t2 - t1, 3),
-            "jobs": len(tracker.getJobIdsForGroup(gb))
-            + len(tracker.getJobIdsForGroup(ge)),
-            "jobs_build": len(tracker.getJobIdsForGroup(gb)),
-            "jobs_exec": len(tracker.getJobIdsForGroup(ge)),
+            "jobs": j2 - j0,
+            "jobs_build": j1 - j0,
+            "jobs_exec": j2 - j1,
         }
 
     # The external driver captures only the LAST 2,000 chars of stdout;

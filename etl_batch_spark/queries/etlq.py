@@ -1862,10 +1862,10 @@ def et30_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # range), delete (mod-50 flag), carry (customers with no orders).  The
 # oracle replays the same MERGE as a latest-wins fold in SQL.  The
 # delete-flag and insert-shift predicates are disjoint by construction
-# (%100==7 ⇒ %50==7 ≠ 3).  At fact scale the partitioned variant
-# (merge_upsert_partitioned, et36) rewrites only touched partitions;
-# this entry rewrites the whole snapshot of a dimension-sized target in
-# one commit, which is the honest plan for dims.
+# (%100==7 ⇒ %50==7 ≠ 3).  The target is one overwrite, so its files'
+# key envelopes all overlap the updates' bounds and the merge rewrites
+# the whole dimension-sized snapshot in one commit; et36 shows the same
+# merge pruning files on a fact-scale layout.
 # ---------------------------------------------------------------------------
 @query(
     "et31_merge_upsert",
@@ -2168,24 +2168,28 @@ def et35_incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 # ---------------------------------------------------------------------------
-# et36 — fact-scale partitioned MERGE (operators/merge.py::
-# merge_upsert_partitioned): the orders projection laid out as a
-# partitionBy(o_orderstatus) table absorbs an update batch that touches
-# ONLY the 'O' partition — updates (+1000.00 on %7==3, exact 2dp so no
-# ROUND boundary), deletes (%7==4), inserts (keys shifted past the
-# fact's range on %7==5) — while 'F'/'P' (and any NULL-status Hive
-# default partition) carry through UNREAD: the query asserts every
-# untouched partition's files are byte-identical (md5) before
-# returning, then the oracle replays the merge as per-row set algebra.
-# Updates are DISTINCT-folded per key on both sides (exact-duplicate
-# corpora).  This is the 100 TB merge plan: cost tracks the update's
-# partition footprint, never the table size.
+# et36 — fact-scale MERGE through the transaction log (sources/txlog.py::
+# TxTable.merge): the orders projection appended once per o_orderstatus
+# value, so every file holds one status (the TxTable counterpart of
+# partitionBy), absorbs an update batch that touches ONLY status 'O' —
+# updates (+1000.00 on %7==3, exact 2dp so no ROUND boundary), deletes
+# (%7==4), inserts (keys shifted past the fact's range on %7==5).  The
+# merge keys on (o_orderstatus, o_orderkey), so files whose logged
+# status envelope excludes 'O' are pruned and carry through UNREAD: the
+# query asserts from the log, before returning, that the merge commit
+# removed only files whose envelope holds 'O' (or that have none: the
+# NULL-status file) and that every other file is still live — live
+# TxTable files are immutable, so byte-identical.  The oracle replays
+# the merge as per-row set algebra.  Updates are DISTINCT-folded per
+# key on both sides (exact-duplicate corpora).  This is the 100 TB
+# merge plan: cost tracks the update's file footprint, never the table
+# size.
 # ---------------------------------------------------------------------------
 @query(
     "et36_partitioned_merge",
-    doc="touched-partition-only MERGE: update/insert/delete in one "
-    "partition, untouched partitions byte-identical "
-    "(operators.merge.merge_upsert_partitioned)",
+    doc="file-pruned MERGE: update/insert/delete within one status, "
+    "files of other statuses left live and unread "
+    "(sources.txlog.TxTable.merge on log key envelopes)",
     oracle="""
     WITH upd AS (
       SELECT DISTINCT
@@ -2210,33 +2214,17 @@ def et35_incremental_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     """,
 )
 def et36_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-
-    from etl_batch_spark.operators.merge import merge_upsert_partitioned
+    from etl_batch_spark.sources.txlog import TxTable
 
     with tempfile.TemporaryDirectory(prefix="et36_merge_", ignore_cleanup_errors=True) as tmp:
-        target = os.path.join(tmp, "target")
+        table = TxTable(spark, os.path.join(tmp, "target"))
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.col("o_totalprice").alias("price"),
             "o_orderstatus",
         )
-        o.write.partitionBy("o_orderstatus").parquet(target)
-
-        def partition_digests(skip_value: str) -> "dict[str, str]":
-            out = {}
-            for d in os.listdir(target):
-                full = os.path.join(target, d)
-                if not os.path.isdir(full) or d == f"o_orderstatus={skip_value}":
-                    continue
-                for name in sorted(os.listdir(full)):
-                    p = os.path.join(full, name)
-                    if os.path.isfile(p):
-                        with open(p, "rb") as f:
-                            out[f"{d}/{name}"] = hashlib.md5(f.read()).hexdigest()
-            return out
-
-        before = partition_digests("O")
+        for (status,) in o.select("o_orderstatus").distinct().collect():
+            table.append(o.filter(F.col("o_orderstatus").eqNullSafe(status)))
         updates = (
             o.filter(
                 (F.col("o_orderstatus") == "O")
@@ -2255,28 +2243,26 @@ def et36_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        rewritten = merge_upsert_partitioned(
-            spark, target, updates, ["o_orderkey"],
-            partition_col="o_orderstatus", delete_col="is_del",
+        v = table.merge(
+            updates, ["o_orderstatus", "o_orderkey"], delete_col="is_del"
         )
-        if [v for v in rewritten if v != "O"]:
-            raise AssertionError(f"untouched partitions rewritten: {rewritten}")
-        after = partition_digests("O")
-        if before != after:
-            raise AssertionError(
-                "untouched partition files changed: "
-                f"{sorted(set(before.items()) ^ set(after.items()))[:4]}"
-            )
-        # schema pinned: a zero-row source writes no partition dirs at
-        # all (the e0 corpus), leaving nothing to infer from
-        back = (
-            spark.read.schema("o_orderkey bigint, price double, o_orderstatus string")
-            .parquet(target)
-            .select(
-                "o_orderkey",
-                F.round("price", 2).alias("price"),
-                "o_orderstatus",
-            )
+        stats = table._snapshot(v - 1)[2]  # noqa: SLF001
+
+        def may_hold_o(f: str) -> bool:
+            env = stats.get(f, {}).get("o_orderstatus")
+            return env is None or env[0] <= "O" <= env[1]
+
+        removed = table._read_entry(v).removed  # noqa: SLF001
+        live = set(table._snapshot(v)[0])  # noqa: SLF001
+        wrong = [f for f in removed if not may_hold_o(f)] + [
+            f for f in stats if not may_hold_o(f) and f not in live
+        ]
+        if wrong:
+            raise AssertionError(f"merge rewrote files without 'O': {wrong[:4]}")
+        back = table.read().select(
+            "o_orderkey",
+            F.round("price", 2).alias("price"),
+            "o_orderstatus",
         )
         return back.localCheckpoint(eager=True)
 

@@ -405,11 +405,10 @@ def overwrite_dynamic_partitions(
 ) -> None:
     """Partition-scoped overwrite via Spark's DYNAMIC partitionOverwriteMode:
     only partitions present in ``df`` are replaced; all others are left
-    byte-identical.  This is the built-in counterpart of
-    operators/merge.py::merge_upsert_partitioned — use THIS when the
-    incoming batch is already the full intended content of its
-    partitions (e.g. a day's reload), and the MERGE form when row-level
-    reconciliation inside a partition is needed.  The mode is set on
+    byte-identical.  Use it when the incoming batch is already the full
+    intended content of its partitions (e.g. a day's reload); row-level
+    reconciliation belongs to sources/txlog.py::TxTable.merge, which
+    rewrites only the files that can hold an update key.  The mode is set on
     the single write (not session-wide) so concurrent writers keep
     STATIC semantics.
     """

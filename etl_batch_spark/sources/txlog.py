@@ -83,9 +83,11 @@ class SchemaEvolutionError(ValueError):
 @dataclass(frozen=True)
 class Version:
     version: int
-    action: str  # append | overwrite | compact
+    action: str  # append | overwrite | merge | compact
     added: "list[str]"
     removed: "list[str]"
+    # rows in the files THIS commit added (a merge counts only the
+    # rewritten files, not the snapshot)
     n_rows: int
     # free-form commit metadata (e.g. the streaming maintainer records
     # the micro-batch id here, making replay detection part of the
@@ -190,6 +192,26 @@ def _file_stats(full_path: str) -> "tuple[int, dict[str, list]]":
         if envs and col not in unusable
     }
     return md.num_rows, out
+
+
+def _disjoint(envelopes: "dict | None", bounds: "dict[str, tuple]") -> bool:
+    """True when a file's logged envelopes ({col: [min, max]}) lie
+    wholly outside ``bounds`` ({col: (lo, hi)}, ``_stat_value``-normal,
+    None = unbounded) on at least one column, so no row of the file can
+    fall inside them.  A column without an envelope, or a bound of
+    another type than its envelope, never decides: the file is read."""
+    for col, (lo, hi) in bounds.items():
+        env = (envelopes or {}).get(col)
+        if env is None:
+            continue
+        try:
+            if (hi is not None and env[0] > hi) or (
+                lo is not None and env[1] < lo
+            ):
+                return True
+        except TypeError:
+            continue
+    return False
 
 
 def _norm_schema(schema: T.StructType) -> T.StructType:
@@ -537,6 +559,47 @@ class TxTable:
                     f"commit meta must be JSON-serializable: {exc}"
                 ) from None
 
+    def _rewrite(self, action: str, df: DataFrame, removed: "list[str]",
+                 read_version: int, meta: "dict | None",
+                 schema: "T.StructType | None") -> int:
+        """Stage ``df`` and commit it in place of ``removed`` at exactly
+        ``read_version + 1`` — the snapshot-conditioned write overwrite,
+        merge and compact share.  A lost slot raises
+        :class:`ConcurrentWriteConflict`; any failure reclaims the
+        staged files."""
+        added, n, stats = self._write_files(df)
+        try:
+            return self._commit(action, added, removed, n, meta,
+                                expected_version=read_version + 1,
+                                schema=schema, stats=stats)
+        except Exception:
+            # the rewrite will never be referenced (conflict: stale and
+            # recomputed from the fresh snapshot; any other failure:
+            # _commit raises only before the entry links).  Exception,
+            # not BaseException — see append's handler: an interrupt
+            # escaping _commit post-link must leak staging (vacuum
+            # sweeps it), never delete a committed version's data.
+            self._cleanup_staged(added)
+            raise
+
+    def _scan(self, files: "list[str]", schema: "T.StructType | None",
+              version: "int | None" = None) -> DataFrame:
+        """Read exactly ``files`` under the log schema (footer inference
+        only for logs that predate schema tracking).  No files reads as
+        an empty frame typed from the log schema — an EMPTIED table
+        (e.g. a merge that deleted every row) is a valid snapshot."""
+        if not files:
+            if schema is None:
+                raise ValueError(
+                    f"table {self.path} has no data at version {version} "
+                    "and no log-recorded schema to type an empty snapshot"
+                )
+            return self.spark.createDataFrame([], schema)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*[os.path.join(self.path, f) for f in files])
+
     def _cleanup_staged(self, files: "list[str] | None") -> None:
         """Best-effort delete of parquet staged for a commit that will
         never land.  Unreferenced files are invisible to readers, but
@@ -652,25 +715,13 @@ class TxTable:
         self._check_meta(meta)
         if read_version is None:
             read_version = self.latest_version()
-        added, n, stats = self._write_files(df)
-        try:
-            # an overwrite replaces the rows, so it may replace the schema
-            # too (Delta's overwriteSchema shape) — the new snapshot's
-            # schema IS df's schema
-            return self._commit(
-                "overwrite", added, self._active_files(read_version), n, meta,
-                expected_version=read_version + 1,
-                schema=_norm_schema(df.schema), stats=stats,
-            )
-        except Exception:
-            # the rewrite will never be referenced (conflict: stale and
-            # recomputed from the fresh snapshot; any other failure:
-            # _commit raises only before the entry links).  Exception,
-            # not BaseException — see append's handler: an interrupt
-            # escaping _commit post-link must leak staging (vacuum
-            # sweeps it), never delete a committed version's data.
-            self._cleanup_staged(added)
-            raise
+        # an overwrite replaces the rows, so it may replace the schema
+        # too (Delta's overwriteSchema shape) — the new snapshot's
+        # schema IS df's schema
+        return self._rewrite(
+            "overwrite", df, self._active_files(read_version), read_version,
+            meta, _norm_schema(df.schema),
+        )
 
     def merge(
         self,
@@ -682,43 +733,70 @@ class TxTable:
         max_retries: int = 3,
     ) -> int:
         """MERGE with automatic optimistic-concurrency retry — the
-        user-facing read-modify-write (Delta's MERGE contract): read
-        the current snapshot, apply ``operators.merge.merge_dataframes``
-        (update/insert/delete/carry by ``keys``), commit conditioned on
-        the snapshot read; on :class:`ConcurrentWriteConflict` re-read
-        the NOW-current snapshot and recompute, up to ``max_retries``
-        times, so racing merges serialize instead of one failing out to
-        the caller.  Manual conflict handling (et39's shape) remains
-        available through ``overwrite(read_version=...)`` directly.
+        user-facing read-modify-write (Delta's MERGE contract): apply
+        ``operators.merge.merge_dataframes`` (update/insert/delete/carry
+        by ``keys``) to the live files that can hold an update key, and
+        commit their rewrite conditioned on the snapshot read; on
+        :class:`ConcurrentWriteConflict` re-read the NOW-current
+        snapshot and recompute, up to ``max_retries`` times, so racing
+        merges serialize instead of one failing out to the caller.
+        Manual conflict handling (et39's shape) remains available
+        through ``overwrite(read_version=...)`` directly.
 
-        The retry recomputes the full merge plan — correct by
-        construction, and the recompute cost is the merge itself, which
-        is the right trade for dimension-scale tables (fact-scale
-        targets should partition-scope via ``operators.merge.
-        merge_upsert_partitioned`` under a control-plane writer lock
-        instead)."""
+        Cost tracks the update's footprint, not the table size (Delta
+        prunes a MERGE's target files on log statistics the same way):
+        one aggregate over ``updates`` bounds each integral or string
+        key, and a file whose logged envelope is disjoint from those
+        bounds on any such key holds no update key, so it stays live
+        untouched.  Files without an envelope are read; other key types
+        never prune (a timestamp bound collected on the driver would
+        bring the driver's time zone into the decision).  The touched
+        set is recomputed on every retry — an interleaved append may
+        have landed a file inside the bounds.  A key whose update values
+        are all NULL matches no target row (NULL never equals), so then
+        no file is touched.
+
+        ``updates`` must be unique per key and deterministic: it is
+        evaluated once for the bounds and once per attempt for the
+        rows."""
         from pyspark.sql import functions as F
 
         from etl_batch_spark.operators.merge import merge_dataframes
 
+        self._check_meta(meta)
+        types = {f.name: f.dataType for f in updates.schema.fields}
+        prunable = [
+            k for k in keys
+            if isinstance(types.get(k), T.IntegralType)
+            or types.get(k) == T.StringType()
+        ]
+        bounds: "dict[str, tuple]" = {}
+        if prunable:
+            row = updates.agg(*[F.min(k) for k in prunable],
+                              *[F.max(k) for k in prunable]).first()
+            bounds = {k: (row[i], row[len(prunable) + i])
+                      for i, k in enumerate(prunable)}
         last: "ConcurrentWriteConflict | None" = None
         for _ in range(max(1, max_retries)):
             rv = self.latest_version()
+            files, schema, stats = self._snapshot(rv)
+            # a key whose update values are all NULL matches no row
+            touched = [] if any(lo is None for lo, _ in bounds.values()) else [
+                f for f in files if not _disjoint(stats.get(f), bounds)
+            ]
             if rv < 0:
                 # bootstrap: no target to merge into — inserts minus
                 # explicit deletes ARE the first snapshot
-                merged = updates
-                if delete_col is not None:
-                    merged = merged.filter(
-                        ~F.coalesce(F.col(delete_col), F.lit(False))
-                    ).drop(delete_col)
+                target = updates.select(
+                    *[c for c in updates.columns if c != delete_col]
+                ).limit(0)
             else:
-                merged = merge_dataframes(
-                    self.read(version=rv), updates, keys,
-                    delete_col=delete_col,
-                )
+                target = self._scan(touched, schema, rv)
+            merged = merge_dataframes(target, updates, keys,
+                                      delete_col=delete_col)
             try:
-                return self.overwrite(merged, meta=meta, read_version=rv)
+                return self._rewrite("merge", merged, touched, rv, meta,
+                                     _norm_schema(merged.schema))
             except ConcurrentWriteConflict as exc:
                 last = exc
                 continue
@@ -761,20 +839,7 @@ class TxTable:
         if read_version < 0:
             raise ValueError(f"table {self.path} has no commits to compact")
         files, schema, _ = self._snapshot(read_version, names=names)
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        if files:
-            current = reader.parquet(
-                *[os.path.join(self.path, f) for f in files]
-            )
-        elif schema is not None:  # emptied table: a valid (empty) rewrite
-            current = self.spark.createDataFrame([], schema)
-        else:
-            raise ValueError(
-                f"table {self.path} has no data at version {read_version} "
-                "and no log-recorded schema to type an empty snapshot"
-            )
+        current = self._scan(files, schema, read_version)
         if zorder_cols:
             from etl_batch_spark.sources.io import zorder_key
 
@@ -789,7 +854,6 @@ class TxTable:
             )
         else:
             clustered = current.coalesce(target_files)
-        added, n, stats = self._write_files(clustered)
         # carry the previous commit's meta forward: compaction is a
         # logical no-op, and consumers of latest_meta() (the streaming
         # sinks' replay/incarnation detection) must still see the state's
@@ -798,17 +862,8 @@ class TxTable:
         # CAS at read_version + 1: a writer landing mid-rewrite means
         # this compaction was computed from a stale snapshot — removing
         # its files would drop the concurrent commit's effect
-        try:
-            return self._commit(
-                "compact", added, files, n,
-                meta=self._read_entry(read_version).meta,
-                expected_version=read_version + 1,
-                schema=schema, stats=stats,
-            )
-        except Exception:
-            # Exception, not BaseException — see append's handler
-            self._cleanup_staged(added)
-            raise
+        return self._rewrite("compact", clustered, files, read_version,
+                             self._read_entry(read_version).meta, schema)
 
     def vacuum(self, *, retain_versions: int = 1,
                orphan_age_seconds: float = 3600.0) -> "list[str]":
@@ -902,23 +957,9 @@ class TxTable:
         at most ``checkpoint_interval`` tail entries, however old the
         table is."""
         files, schema, _ = self._snapshot(version)
-        if not files:
-            if schema is not None:
-                # an EMPTIED table (e.g. a merge that deleted every
-                # row) is a valid snapshot: return it typed from the
-                # log schema, so merge/compact/streaming sinks keep
-                # working instead of bricking until a non-empty write
-                return self.spark.createDataFrame([], schema)
-            raise ValueError(
-                f"table {self.path} has no data at version {version} "
-                "and no log-recorded schema to type an empty snapshot"
-            )
         if version is not None:
             self._require_present(files, f"snapshot at version {version}")
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(*[os.path.join(self.path, f) for f in files])
+        return self._scan(files, schema, version)
 
     def read_where(
         self, version: "int | None" = None, **ranges
@@ -964,42 +1005,17 @@ class TxTable:
             )
             for col, (lo, hi) in ranges.items()
         }
-        keep = []
-        for f in files:
-            fs = stats.get(f) or {}
-            skip = False
-            for col, (lo, hi) in norm.items():
-                env = fs.get(col)
-                if env is None:
-                    continue  # no envelope: must read
-                fmin, fmax = env
-                try:
-                    if (hi is not None and fmin > hi) or (
-                        lo is not None and fmax < lo
-                    ):
-                        skip = True
-                        break
-                except TypeError:  # incomparable bound vs envelope
-                    continue
-            if not skip:
-                keep.append(f)
+        keep = [f for f in files if not _disjoint(stats.get(f), norm)]
         residual = F.lit(True)
         for col, (lo, hi) in ranges.items():
             if lo is not None:
                 residual = residual & (F.col(col) >= F.lit(lo))
             if hi is not None:
                 residual = residual & (F.col(col) <= F.lit(hi))
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
         if not keep:
             # every file pruned: an empty, correctly-typed relation
-            return reader.parquet(
-                os.path.join(self.path, files[0])
-            ).limit(0).filter(residual)
-        return reader.parquet(
-            *[os.path.join(self.path, f) for f in keep]
-        ).filter(residual)
+            return self._scan(files[:1], schema).limit(0).filter(residual)
+        return self._scan(keep, schema).filter(residual)
 
     def changes(
         self,
@@ -1024,7 +1040,7 @@ class TxTable:
         commits ADDED — resolved from log metadata alone, reading none
         of the pre-existing table (the common incremental-ETL case, and
         O(changed data) no matter how large the table is).  Overwrites /
-        compactions fall back to a full multiset diff (``exceptAll``)
+        merges / compactions fall back to a full multiset diff (``exceptAll``)
         of the two snapshots — the honest cost when commits rewrite
         arbitrary rows; its shuffle is 2× a snapshot scan, linear.
         Compaction alone therefore yields an EMPTY feed (same rows).
@@ -1069,12 +1085,7 @@ class TxTable:
         )
 
         def snap(files: "list[str]") -> DataFrame:
-            reader = self.spark.read
-            if feed_schema is not None:
-                reader = reader.schema(feed_schema)
-            return reader.parquet(
-                *[os.path.join(self.path, f) for f in files]
-            )
+            return self._scan(files, feed_schema)
 
         if not before_files and not after_files:
             # bootstrap cursor over a still-empty table: an empty feed,

@@ -737,6 +737,8 @@ class TestGroupedMadOutliers:
 
 class TestMergeUpsert:
     def test_update_insert_delete_carry(self, spark, tmp_path):
+        import os
+
         from etl_batch_spark.sources.txlog import TxTable
 
         t = TxTable(spark, str(tmp_path / "dim"))
@@ -751,7 +753,12 @@ class TestMergeUpsert:
             "k long, name string, v double, is_deleted boolean",
         )
         t.merge(updates, ["k"], delete_col="is_deleted")
-        assert [v.n_rows for v in t.versions()] == [3, 3]
+        v0, v1 = t.versions()
+        assert v0.n_rows == 3
+        # a merge counts the rows it rewrote, not the snapshot
+        assert v1.n_rows == spark.read.parquet(
+            *[os.path.join(t.path, f) for f in v1.added]
+        ).count()
         got = {r["k"]: (r["name"], r["v"]) for r in t.read().collect()}
         assert got == {1: ("a", 10.0), 2: ("b2", 21.0), 4: ("d", 40.0)}
 
@@ -783,63 +790,6 @@ class TestMergeUpsert:
         monkeypatch.undo()
         assert t.latest_version() == 0
         assert [r["name"] for r in t.read().collect()] == ["a"]
-
-
-class TestMergeUpsertPartitioned:
-    def test_only_touched_partitions_rewritten(self, spark, tmp_path):
-        import glob
-        from etl_batch_spark.operators.merge import merge_upsert_partitioned
-
-        path = str(tmp_path / "fact")
-        spark.createDataFrame(
-            [(1, "2024-01-01", 10.0), (2, "2024-01-01", 20.0), (3, "2024-01-02", 30.0)],
-            "k long, day string, v double",
-        ).write.partitionBy("day").parquet(path)
-        untouched_files = sorted(glob.glob(f"{path}/day=2024-01-02/*.parquet"))
-
-        updates = spark.createDataFrame(
-            [(2, "2024-01-01", 21.0, False),    # update in day 1
-             (9, "2024-01-03", 90.0, False)],   # insert into brand-new day 3
-            "k long, day string, v double, is_deleted boolean",
-        )
-        rewritten = merge_upsert_partitioned(
-            spark, path, updates, ["k"], partition_col="day", delete_col="is_deleted"
-        )
-        assert rewritten == ["2024-01-01", "2024-01-03"]
-        # untouched partition: same physical files
-        assert sorted(glob.glob(f"{path}/day=2024-01-02/*.parquet")) == untouched_files
-        got = {
-            (r["k"], str(r["day"])): r["v"]  # partition col re-infers as date
-            for r in spark.read.parquet(path).collect()
-        }
-        assert got == {
-            (1, "2024-01-01"): 10.0, (2, "2024-01-01"): 21.0,
-            (3, "2024-01-02"): 30.0, (9, "2024-01-03"): 90.0,
-        }
-
-    def test_delete_within_partition(self, spark, tmp_path):
-        from etl_batch_spark.operators.merge import merge_upsert_partitioned
-
-        path = str(tmp_path / "fact2")
-        spark.createDataFrame(
-            [(1, "a", 1.0), (2, "a", 2.0)], "k long, p string, v double"
-        ).write.partitionBy("p").parquet(path)
-        updates = spark.createDataFrame(
-            [(1, "a", None, True)], "k long, p string, v double, is_deleted boolean"
-        )
-        merge_upsert_partitioned(
-            spark, path, updates, ["k"], partition_col="p", delete_col="is_deleted"
-        )
-        assert [r["k"] for r in spark.read.parquet(path).collect()] == [2]
-
-    def test_requires_partition_column(self, spark, tmp_path):
-        from etl_batch_spark.operators.merge import merge_upsert_partitioned
-
-        updates = spark.createDataFrame([(1, 1.0)], "k long, v double")
-        with pytest.raises(ValueError):
-            merge_upsert_partitioned(
-                spark, str(tmp_path), updates, ["k"], partition_col="day"
-            )
 
 
 class TestSplitValid:
@@ -1516,50 +1466,6 @@ class TestOperatorNullAndEdgeHardening:
         df = spark.createDataFrame(rows, "grp string, v double")
         got = grouped_mad_outliers(df, group_col="grp", value_col="v", k=3.0).collect()
         assert [r["v"] for r in got] == [1000.0]
-
-    def test_merge_upsert_partitioned_matches_spark_escaped_dirs(self, spark, tmp_path):
-        import datetime
-        import os
-
-        from etl_batch_spark.operators.merge import merge_upsert_partitioned
-
-        t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-        tgt = str(tmp_path / "t")
-        spark.createDataFrame(
-            [(1, "a", t0), (2, "b", t0)], "id long, v string, ts_hour timestamp"
-        ).write.partitionBy("ts_hour").parquet(tgt)
-        upd = spark.createDataFrame(
-            [(1, "A", t0)], "id long, v string, ts_hour timestamp"
-        )
-        merge_upsert_partitioned(spark, tgt, upd, ["id"], partition_col="ts_hour")
-        # the ESCAPED directory was merged in place; no duplicate
-        # unescaped sibling was created
-        dirs = [d for d in os.listdir(tgt) if d.startswith("ts_hour=")]
-        assert dirs == ["ts_hour=2024-01-01 00%3A00%3A00"]
-        got = {r["id"]: r["v"] for r in spark.read.parquet(tgt).collect()}
-        assert got == {1: "A", 2: "b"}
-
-    def test_merge_upsert_partitioned_legacy_raw_percent_dir(self, spark, tmp_path):
-        """A directory written RAW by a non-escaping producer, whose
-        value literally contains a %XX sequence, must merge in place —
-        not be mis-read as its unquoted form (creating an escaped
-        sibling beside the legacy dir)."""
-        import os
-
-        from etl_batch_spark.operators.merge import merge_upsert_partitioned
-
-        tgt = str(tmp_path / "t")
-        # legacy producer wrote the value '50%40' without escaping
-        legacy = os.path.join(tgt, "seg=50%40")
-        spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(legacy)
-        upd = spark.createDataFrame(
-            [(1, "A", "50%40"), (2, "b", "50%40")], "id long, v string, seg string"
-        )
-        merge_upsert_partitioned(spark, tgt, upd, ["id"], partition_col="seg")
-        dirs = sorted(d for d in os.listdir(tgt) if d.startswith("seg="))
-        assert dirs == ["seg=50%40"], dirs
-        got = {r["id"]: r["v"] for r in spark.read.parquet(legacy).collect()}
-        assert got == {1: "A", 2: "b"}
 
     def test_apply_changelog_seq_tie_delete_beats_upsert(self, spark):
         from etl_batch_spark.operators.cdc import apply_changelog

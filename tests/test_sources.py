@@ -1014,6 +1014,127 @@ class TestTxTable:
         # every interleaved append survived; b's merge never landed
         assert {r["v"] for r in a.read().collect()} == {"x", "w"}
 
+    # -- merge rewrites only the files that can hold an update key ----
+
+    def _keyed_appends(self, spark, t, ddl, groups):
+        """One single-file append per group, so each file's key
+        envelope is exactly its group's span."""
+        for rows in groups:
+            t.append(spark.createDataFrame(rows, ddl).coalesce(1))
+        return [v.added for v in t.versions()]
+
+    def test_merge_rewrites_exactly_the_overlapping_files(self, spark, tmp_path):
+        from etl_batch_spark.operators.merge import merge_dataframes
+
+        t = self._table(spark, tmp_path)
+        added = self._keyed_appends(spark, t, "k int, v string", [
+            [(k, "old") for k in range(lo, lo + 5)] for lo in (0, 10, 20, 30)
+        ])
+        ups = spark.createDataFrame(
+            [(12, "new", False), (21, None, True), (25, "ins", False)],
+            "k int, v string, del boolean",
+        )
+        expected = sorted(map(tuple, merge_dataframes(
+            t.read(), ups, ["k"], delete_col="del").collect()))
+        v = t.merge(ups, ["k"], delete_col="del")
+        entry = t.versions()[v]
+        # bounds [12, 25]: only the [10, 14] and [20, 24] files overlap
+        assert entry.action == "merge"
+        assert sorted(entry.removed) == sorted(added[1] + added[2])
+        assert sorted(map(tuple, t.read().collect())) == expected
+        assert entry.n_rows == t._scan(entry.added, None).count()  # noqa: SLF001
+
+    def test_merge_crash_at_commit_keeps_head_and_rerun_converges(
+        self, spark, tmp_path, monkeypatch
+    ):
+        import pytest as _pytest
+
+        from etl_batch_spark.sources import txlog
+
+        groups = [[(0, "a"), (1, "a")], [(10, "b"), (11, "b")]]
+        ups = spark.createDataFrame([(1, "A"), (2, "new")], "k int, v string")
+        ref = txlog.TxTable(spark, str(tmp_path / "ref"))
+        self._keyed_appends(spark, ref, "k int, v string", groups)
+        ref.merge(ups, ["k"])
+        fault_free = sorted(map(tuple, ref.read().collect()))
+
+        t = self._table(spark, tmp_path)
+        self._keyed_appends(spark, t, "k int, v string", groups)
+        head = t.latest_version()
+        rows = sorted(map(tuple, t.read().collect()))
+
+        def boom(src, dst):
+            raise OSError("simulated crash at commit")
+        monkeypatch.setattr(txlog.os, "link", boom)
+        with _pytest.raises(OSError, match="simulated crash"):
+            t.merge(ups, ["k"])
+        monkeypatch.undo()
+        assert t.latest_version() == head
+        assert sorted(map(tuple, t.read().collect())) == rows
+        committed = {f.split("/", 1)[0] for v in t.versions() for f in v.added}
+        assert self._data_subdirs(t) == committed  # staging reclaimed
+        t.merge(ups, ["k"])
+        assert sorted(map(tuple, t.read().collect())) == fault_free
+
+    def test_merge_retry_recomputes_files_an_append_landed_in_bounds(
+        self, spark, tmp_path
+    ):
+        """The first attempt read the snapshot before an append landed
+        k=5 inside the updates' bounds [1, 5]; the retry must rewrite
+        that file too, so k=5 is updated once, not inserted beside it."""
+        a, b = self._two_writers(spark, tmp_path)
+        added = self._keyed_appends(spark, a, "k int, v string",
+                                    [[(0, "x"), (1, "x")], [(20, "x")]])
+        real_write = type(b)._write_files
+        fired = {"n": 0}
+
+        def interleave_once(df):
+            files = real_write(b, df)
+            if fired["n"] == 0:
+                fired["n"] += 1
+                a.append(spark.createDataFrame([(5, "late")], "k int, v string"))
+            return files
+
+        b._write_files = interleave_once
+        try:
+            v = b.merge(spark.createDataFrame(
+                [(1, "U"), (5, "U")], "k int, v string"), ["k"])
+        finally:
+            del b._write_files
+        assert fired["n"] == 1 and v == 3
+        assert sorted(map(tuple, a.read().collect())) == [
+            (0, "x"), (1, "U"), (5, "U"), (20, "x"),
+        ]
+        assert added[1][0] in a._snapshot()[0]  # noqa: SLF001
+
+    def test_merge_on_timestamp_and_double_keys_reads_every_file(
+        self, spark, tmp_path
+    ):
+        import datetime as _dt
+
+        from etl_batch_spark.operators.merge import merge_dataframes
+        from etl_batch_spark.sources.txlog import TxTable
+
+        day = _dt.datetime(2024, 1, 1)
+        cases = {
+            "ts": ("k timestamp, v string",
+                   [[(day, "a")], [(day + _dt.timedelta(days=30), "b")]],
+                   [(day, "A")]),
+            "dbl": ("k double, v string",
+                    [[(0.5, "a"), (1.5, "a")], [(10.5, "b")]],
+                    [(1.5, "A"), (2.5, "new")]),
+        }
+        for name, (ddl, groups, up_rows) in cases.items():
+            t = TxTable(spark, str(tmp_path / name))
+            self._keyed_appends(spark, t, ddl, groups)
+            ups = spark.createDataFrame(up_rows, ddl)
+            expected = sorted(map(tuple, merge_dataframes(
+                t.read(), ups, ["k"]).collect()))
+            live = t._snapshot()[0]  # noqa: SLF001
+            v = t.merge(ups, ["k"])
+            assert sorted(t.versions()[v].removed) == live, name
+            assert sorted(map(tuple, t.read().collect())) == expected, name
+
     # -- schema OCC + orphan reclamation (round 9) ---------------------
 
     def test_concurrent_schema_evolution_is_not_lost(self, spark, tmp_path):

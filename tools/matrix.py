@@ -146,6 +146,9 @@ def main() -> int:
         print(f"{n}: {summary}")
         for ln in fails:
             print(f"  {ln.lstrip()}")
+        if not tail:  # parity refused or crashed: show why
+            for ln in r.stderr.strip().splitlines()[-5:]:
+                print(f"  | {ln}")
     print(f"matrix: {len(names)} corpora, {failures} failing (dir, query) pairs")
     return min(failures, 125)
 

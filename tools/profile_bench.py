@@ -7,8 +7,9 @@ For every benched query, measures separately:
   localCheckpoints, staged table writes);
 - ``t_exec``   — the noop-sink write of the returned DataFrame (what a
   deployment pays per run of the final plan);
-- ``jobs``     — Spark job count triggered by each phase (via job-group
-  tagging), the per-job fixed-overhead axis.
+- ``jobs``     — Spark job count triggered by each phase (the
+  DAGScheduler job ids it spans, so jobs a ``foreachBatch`` stream runs
+  under its own job group count too), the per-job fixed-overhead axis.
 
 Usage: python tools/profile_bench.py [sf_dir] [query ...]
 Prints a TSV sorted by total descending, plus a JSON line per query.
@@ -27,16 +28,14 @@ from etl_batch_spark.queries import QUERIES
 from etl_batch_spark.session import get_spark
 
 
-def njobs(sc, group: str) -> int:
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2:] or [n for n, q in QUERIES.items() if q.bench]
     spark = get_spark("profile_bench")
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
+    # single-threaded: the id window a phase spans holds exactly its jobs
+    dag = sc._jsc.sc().dagScheduler()
     spark.range(1).collect()
 
     # steady-state warm-up (same rationale as bench.py)
@@ -58,23 +57,22 @@ def main() -> None:
         build(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
         best = None
-        for run in range(3):
-            gb, ge = f"b-{name}-{run}", f"e-{name}-{run}"
-            sc.setJobGroup(gb, f"build {name}")
+        for _ in range(3):
+            j0 = dag.nextJobId()
             t0 = time.perf_counter()
             df = build(spark, sf_dir)
             t1 = time.perf_counter()
-            sc.setJobGroup(ge, f"exec {name}")
+            j1 = dag.nextJobId()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
-            sc.setJobGroup(None, None)
+            j2 = dag.nextJobId()
             rec = {
                 "query": name,
                 "t_build": round(t1 - t0, 3),
                 "t_exec": round(t2 - t1, 3),
                 "t_total": round(t2 - t0, 3),
-                "jobs_build": njobs(sc, gb),
-                "jobs_exec": njobs(sc, ge),
+                "jobs_build": j1 - j0,
+                "jobs_exec": j2 - j1,
             }
             if best is None or rec["t_total"] < best["t_total"]:
                 best = rec
