@@ -117,10 +117,6 @@ DATA_TABLES: dict[str, T.StructType] = {
     ),
 }
 
-# Small dimension tables that are always broadcast-safe, even at 100 TB
-# scale (regions/nations are bounded; part/supplier/customer grow with SF
-# and must NOT be assumed broadcastable — AQE decides for those).
-BROADCAST_SAFE = frozenset({"region", "nation"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

@@ -1,12 +1,2 @@
-from etl_batch_spark.functions.scalars import (  # noqa: F401
-    atol,
-    check_date,
-    datediff_hms,
-    datediff_hms_col,
-    field_counter,
-    field_counter_col,
-    get_nth_field,
-    nth_field_col,
-    string_to_number,
-    string_to_number_col,
-)
+"""Exact-parity scalar utilities (``scalars``) and the Oracle SQL
+dialect bridge (``oracle_sql``)."""

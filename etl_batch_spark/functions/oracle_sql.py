@@ -136,7 +136,9 @@ def _quote_fmt(arg: str) -> str | None:
 
 
 def translate(sql: str) -> str:
-    """Rewrite one Oracle SQL statement into Spark SQL (see module doc)."""
+    """Rewrite one Oracle SQL statement into Spark SQL (see module doc).
+    Serves the reference's embedded SQL (body.sql:133-1197); no query
+    calls it."""
     out = re.sub(r"\bSYSDATE\b", "current_timestamp()", sql, flags=re.IGNORECASE)
 
     def trunc(args: list[str]) -> str:
@@ -189,5 +191,5 @@ def translate(sql: str) -> str:
 
 def run_oracle_sql(spark: SparkSession, sql: str) -> DataFrame:
     """Translate an Oracle statement from the reference's idiom set and
-    execute it against this session's registered views."""
+    execute it against this session's registered views (body.sql:133-1197)."""
     return spark.sql(translate(sql))

@@ -71,17 +71,6 @@ def check_date(value: str | None) -> tuple[int, str | None, str | None]:
     return 0, parsed.strftime(_ORACLE_DATE_FMT).upper(), None
 
 
-def check_date_status_col(col: Column) -> Column:
-    """Column version of the status code (-1/1/2/0)."""
-    canon = F.to_date(F.initcap(F.lower(col)), "dd-MMM-yyyy")
-    return (
-        F.when(col.isNull() | (F.length(col) < 10), F.lit(-1))
-        .when(F.length(col) > 11, F.lit(1))
-        .when(canon.isNull(), F.lit(2))
-        .otherwise(F.lit(0))
-    )
-
-
 # ---------------------------------------------------------------------------
 # func_field_counter (body.sql:729-762): number of delimited fields.
 # Counts delimiter occurrences: len(s) - len(replace(s, delim)); a string
@@ -191,7 +180,10 @@ def string_to_number_col(col: Column) -> Column:
 def register_sql_functions(spark) -> list[str]:
     """Register func_datediff / func_check_date / func_field_counter /
     func_get_nth_field / func_string_to_number / func_atol as SQL
-    functions on this session; returns the registered names."""
+    functions on this session; returns the registered names.
+
+    The reference's SQL-callable functions (body.sql:17-123, 729-857):
+    no query calls it, it exists so reference SQL can."""
     from pyspark.sql import types as T
 
     regs = {

@@ -78,14 +78,6 @@ def shingle_sets(
     )
 
 
-def shingles(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Distinct (id, shingle) pairs — the substrate for Jaccard/MinHash."""
-    return (
-        shingle_sets(df, id_col=id_col, text_col=text_col, n=n)
-        .select(id_col, F.explode("sh").alias("shingle"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # exact + fingerprint
 # ---------------------------------------------------------------------------

@@ -10,8 +10,8 @@ monotonic coded-number consistency check), yielding a frame index and
 the walked sample count, which is cross-checkable against STREAMINFO's
 declared total.  Duration is exact: ``total_samples / sample_rate``,
 both plain integers.  The audio subframe decode (LPC/fixed predictors,
-Rice residuals) stays behind the same quarantine boundary as the other
-codecs (:func:`decode_samples`), because frame-level structure is what
+Rice residuals) is out of scope, as for the other long-tail codecs,
+because frame-level structure is what
 a 100 TB ingest pipeline needs from FLAC: exact durations, sample-rate
 / bit-depth census for routing, tag metadata, and a validated frame
 index enabling range reads.
@@ -371,16 +371,6 @@ def parse_flac(data: bytes, *, keep_frames: bool = False) -> FlacInfo:
         comments=comments,
         n_metadata_blocks=n_blocks,
         frames=frames,
-    )
-
-
-def decode_samples(data: bytes):  # pragma: no cover - quarantine boundary
-    """Subframe decode (fixed/LPC predictors + Rice residuals) is out of
-    scope for the pure-stdlib tier; route to quarantine or an
-    ffmpeg/libFLAC-backed decoder behind the same interface."""
-    raise NotImplementedError(
-        "FLAC sample decode is quarantined; parse_flac() covers duration/"
-        "metadata/census needs from the container+frame tier"
     )
 
 

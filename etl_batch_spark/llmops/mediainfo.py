@@ -389,7 +389,7 @@ def probe_media_df(
     keep_cols: "tuple[str, ...]" = (),
 ) -> DataFrame:
     """Probe every payload of a column (see :func:`probe_media`) — the
-    scan stage in front of decode_image/decode_audio/sample_video_frames.
+    scan stage in front of decode_image/decode_audio.
     A NULL payload gives a ``container='unknown'`` row with a
     ``NullPayload`` error, like any other unprobeable payload.
 

@@ -6,10 +6,9 @@ FRAME STRUCTURE completely — every frame header in the stream is
 walked and validated, VBR metadata (Xing/Info/VBRI) is parsed, and
 duration is computed EXACTLY as sum(samples-per-frame / sample-rate)
 over the walked frames — while the audio sample decode (Huffman main
-data, requantization, IMDCT, synthesis filterbank) stays behind the
-same quarantine boundary as the other long-tail codecs
-(:func:`decode_samples` raises ``NotImplementedError``; a real cluster
-swaps in ffmpeg behind the same interface).
+data, requantization, IMDCT, synthesis filterbank) is out of scope,
+as for the other long-tail codecs: a real cluster routes it to an
+ffmpeg-backed decoder.
 
 Frame-level decode is what a 100 TB ingest pipeline actually needs
 from MP3: exact durations for budgeting/sharding, CBR/VBR and
@@ -34,8 +33,6 @@ from __future__ import annotations
 
 import struct
 from dataclasses import dataclass, field
-
-SIGNATURE_ID3 = b"ID3"
 
 # bitrate_kbps[version_group][layer][index]; version_group 0 = MPEG1,
 # 1 = MPEG2/2.5 (they share tables); layer keyed 1/2/3; index 1..14
@@ -346,17 +343,6 @@ def parse_frames(
         id3v2_bytes=id3_bytes,
         trailing_bytes=trailing,
         frames=frames,
-    )
-
-
-def decode_samples(data: bytes):  # pragma: no cover - quarantine boundary
-    """PCM decode is out of scope for the pure-stdlib tier (Huffman main
-    data + IMDCT + synthesis filterbank); at pipeline scale these route
-    to the quarantine sink or an ffmpeg-backed decoder behind the same
-    interface."""
-    raise NotImplementedError(
-        "MP3 sample decode is quarantined; frame-level parse_frames() "
-        "covers duration/bitrate/census needs without entropy decode"
     )
 
 

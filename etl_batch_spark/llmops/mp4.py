@@ -17,10 +17,9 @@ What a 100 TB ingest pipeline needs from MP4 is exactly this tier:
 exact durations for budgeting, codec identification for routing,
 frame/sample counts for sampling plans, and the chunk-offset index
 enabling range reads — all O(metadata), never touching mdat.  The
-bitstream decode (H.264/H.265/AAC entropy coding) stays behind the
-same quarantine boundary as the other codecs
-(:func:`decode_samples`); a real cluster swaps in ffmpeg behind the
-same interface.
+bitstream decode (H.264/H.265/AAC entropy coding) is out of scope,
+as for the other long-tail codecs: a real cluster routes it to an
+ffmpeg-backed decoder.
 
 Everything here derives from the public ISO/IEC 14496-12 box
 structure.  Malformed paths raise :class:`Mp4Error`, never a raw
@@ -320,16 +319,6 @@ def parse_mp4(data: bytes, *, keep_chunks: bool = False) -> Mp4Info:
         n_tracks=len(tracks),
         tracks=tracks,
         has_mdat=has_mdat,
-    )
-
-
-def decode_samples(data: bytes):  # pragma: no cover - quarantine boundary
-    """Bitstream decode (H.264/HEVC/AAC entropy coding) is out of scope
-    for the pure-stdlib tier; route to quarantine or an ffmpeg-backed
-    decoder behind the same interface."""
-    raise NotImplementedError(
-        "MP4 bitstream decode is quarantined; parse_mp4() covers "
-        "duration/codec/sample-index census needs from the container tier"
     )
 
 

@@ -1,11 +1,10 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads.
 
-Images/audio/video are carried as ``binary`` columns with a typed
-metadata struct (modality, mime, width/height/duration, sha256,
-n_bytes).  Decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` transforms — the right shape for 100 TB:
-payloads never pass through the driver, batches stream per partition,
-and the Python stage is a narrow map (no shuffle).
+Images/audio/video are carried as ``binary`` columns.  Decode /
+feature-extract / census run as Arrow-batched ``mapInPandas``
+transforms — the right shape for 100 TB: payloads never pass through
+the driver, batches stream per partition, and the Python stage is a
+narrow map (no shuffle).
 
 Payload-map contract — every payload operator here and
 :func:`..mediainfo.probe_media_df` is one :func:`_payload_map`: a
@@ -15,18 +14,18 @@ into zero or more output rows.
 - The output keys on the caller's ``id_col``, with its name and type
   (ids are often URLs or content hashes at crawl scale).
 - ``errors="raise"`` (the default where an operator offers
-  ``errors``; the only mode of ``resize_image`` and
-  ``window_energy``): a NULL payload raises ``ValueError`` naming the
-  operator and the column, and a bad payload aborts the job.
+  ``errors``; the only mode of ``window_energy``): a NULL payload
+  raises ``ValueError`` naming the operator and the column, and a bad
+  payload aborts the job.
 - ``errors="quarantine"`` (always on for the ``*_census`` operators):
   the output gains a trailing ``error`` column, NULL on good rows.  A
   NULL payload becomes ONE row of NULL fields with
   ``"NullPayload: payload is NULL"``; a payload whose decode raises the
   caught type becomes ONE row of NULL fields with
-  ``"{Type}: {msg}"``.  The ``decode_*`` operators and
-  ``sample_video_frames`` catch ``Exception``; each census catches only
-  its codec's error type, so a foreign exception is a codec bug that
-  fails loudly (``tools/fuzz_codecs.py`` soaks every codec for them).
+  ``"{Type}: {msg}"``.  The ``decode_*`` operators catch
+  ``Exception``; each census catches only its codec's error type, so
+  a foreign exception is a codec bug that fails loudly
+  (``tools/fuzz_codecs.py`` soaks every codec for them).
   Filter ``error IS NULL`` for the clean side and ``IS NOT NULL`` for
   the quarantine sink.
 
@@ -35,9 +34,7 @@ codecs: PNG (:mod:`..png`: zlib inflate + scanline unfilter), JPEG
 baseline AND progressive (:mod:`..jpeg`: SOF0/SOF1/SOF2 Huffman DCT),
 GIF first frames (:mod:`..gif`: LZW, palettes, interlace), BMP
 (:mod:`..bmp`) and PGM/PPM (:mod:`..pnm`) for images; RIFF/WAVE PCM
-audio (:mod:`..wav`, ``decode_audio``); MJPEG-AVI video
-(:mod:`..avi`, ``sample_video_frames``: container parse -> fps
-sampling -> JPEG decode of only the sampled frames).
+audio (:mod:`..wav`, ``decode_audio``).
 ``decode_image(..., fake=False)`` / ``decode_audio(..., fake=False)``
 dispatch on the payload signature and raise ``NotImplementedError``
 only for formats that genuinely need external libraries
@@ -51,7 +48,6 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Callable, Iterator
-from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -71,18 +67,6 @@ from etl_batch_spark.llmops.pnm import decode_pnm as _decode_pnm
 from etl_batch_spark.llmops.wav import SIGNATURE as _WAV_SIGNATURE
 from etl_batch_spark.llmops.wav import decode_wav as _decode_wav
 from etl_batch_spark.llmops.wav import to_float as _wav_to_float
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("modality", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("sha256", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
 
 
 def attach_payload(
@@ -221,8 +205,8 @@ def _fake_decode(payload: bytes) -> tuple[int, int, list[float]]:
 def _decode_any_image(payload: bytes) -> tuple[int, int, int, bytes]:
     """Signature-dispatched decode across every in-repo image codec:
     PNG, sequential/progressive JPEG, first-frame GIF, uncompressed
-    BMP, and binary/ASCII PGM/PPM.  One place to add the next format —
-    decode_image and resize_image both consume this."""
+    BMP, and binary/ASCII PGM/PPM.  One place to add the next format
+    for decode_image."""
     payload = bytes(payload)
     if payload.startswith(_PNG_SIGNATURE):
         return _decode_png(payload)
@@ -398,82 +382,6 @@ def resize_plan(
     )
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("target_width", T.IntegerType()),
-        T.StructField("target_height", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def _round6_half_up(v: float) -> float:
-    """Mirror Spark ``F.round(x, 6)`` exactly: HALF_UP over the double's
-    shortest decimal form (``BigDecimal.valueOf`` uses
-    ``Double.toString``, which is what Python ``repr`` produces).
-    Python's builtin ``round()`` is half-EVEN, so exact 6dp ties — e.g.
-    224/28672 = 0.0078125 — would round to a different scale than the
-    :func:`resize_plan` SQL and flip a target dimension."""
-    return float(Decimal(repr(v)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
-
-
-def _bilinear_resize(arr: np.ndarray, tw: int, th: int) -> np.ndarray:
-    """Vectorized bilinear resample of an (h, w, c) uint8 array to
-    (th, tw, c) — pixel-center aligned, clamped at the edges."""
-    h, w = arr.shape[:2]
-    if (tw, th) == (w, h):
-        return arr
-    ys = np.clip((np.arange(th) + 0.5) * (h / th) - 0.5, 0, h - 1)
-    xs = np.clip((np.arange(tw) + 0.5) * (w / tw) - 0.5, 0, w - 1)
-    y0 = np.floor(ys).astype(np.int64)
-    x0 = np.floor(xs).astype(np.int64)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = (ys - y0)[:, None, None]
-    wx = (xs - x0)[None, :, None]
-    a = arr.astype(np.float64)
-    top = a[y0][:, x0] * (1 - wx) + a[y0][:, x1] * wx
-    bot = a[y1][:, x0] * (1 - wx) + a[y1][:, x1] * wx
-    out = top * (1 - wy) + bot * wy
-    return np.clip(np.round(out), 0, 255).astype(np.uint8)
-
-
-def resize_image(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    max_side: int = 224,
-) -> DataFrame:
-    """REAL codec-side resize: decode each payload (PNG/JPEG/GIF via
-    the same signature dispatch as :func:`decode_image`), bilinear-
-    resample to the EXACT dims :func:`resize_plan` computes for the
-    same inputs (scale = round(least(1, max_side/longest), 6), targets
-    ceil'd from the rounded scale and clamped), and re-encode as PNG —
-    binary in, binary out, the CLIP-preprocessing shape.  Images already
-    within ``max_side`` pass through resized-by-identity (re-encoded,
-    so downstream sees one uniform container)."""
-    from etl_batch_spark.llmops.png import encode_png
-
-    def resize_one(p: bytes) -> list[tuple]:
-        w, h, ch, px = _decode_any_image(p)
-        # the resize_plan contract, replicated bit-for-bit:
-        # round the scale to 6dp FIRST, then ceil, then clamp
-        scale = _round6_half_up(min(1.0, max_side / float(max(w, h))))
-        tw = min(max_side, int(-(-w * scale // 1)))
-        th = min(max_side, int(-(-h * scale // 1)))
-        arr = np.frombuffer(px, np.uint8).reshape(h, w, ch)
-        resized = _bilinear_resize(arr, tw, th)
-        return [(tw, th, bytearray(encode_png(tw, th, ch, resized.tobytes())))]
-
-    return _payload_map(
-        df, resize_one, RESIZED_SCHEMA, op="resize_image", id_col=id_col,
-        payload_col=payload_col,
-        casts={"target_width": "int32", "target_height": "int32"},
-    )
-
-
 def frame_sample_plan(
     df: DataFrame, *, id_col: str = "doc_id", fps: float = 1.0, duration_col: str = "duration_s"
 ) -> DataFrame:
@@ -484,72 +392,6 @@ def frame_sample_plan(
         df.withColumn("frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1)))
         .withColumn("frame_ts", F.round(F.col("frame_idx") / fps, 3))
         .select(id_col, "frame_idx", "frame_ts")
-    )
-
-
-SAMPLED_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("src_frame_idx", T.IntegerType()),
-        T.StructField("frame_ts", T.DoubleType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def sample_video_frames(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    fps: float = 1.0,
-    errors: str = "raise",
-) -> DataFrame:
-    """REAL video frame sampling: parse each payload as an MJPEG AVI
-    (:mod:`etl_batch_spark.llmops.avi`), pick frame indices at ``fps``
-    using :func:`frame_sample_plan`'s timestamp grid, and JPEG-decode
-    ONLY the sampled frames (a 1 fps sample of a 30 fps clip pays for
-    1/30th of the decodes — the container hands back raw payloads, the
-    sampler chooses what to decode).  A quarantined payload
-    (out-of-scope codec, corrupt container, broken frame, NULL payload)
-    survives as ONE row with NULL frame fields and the message in
-    ``error``.
-
-    Column contract vs :func:`frame_sample_plan`: the plan's
-    ``frame_idx`` is the SAMPLE ordinal (0,1,2,...); the codec side
-    emits ``src_frame_idx``, the SOURCE frame index actually decoded
-    (e.g. 0,4,8 for a 1 fps sample of 4 fps video).  ``frame_ts`` is
-    identical on both sides and is the join key between them."""
-    if not fps > 0:
-        raise ValueError(f"fps must be > 0, got {fps!r}")
-    from etl_batch_spark.llmops.avi import decode_avi_mjpeg
-    from etl_batch_spark.llmops.jpeg import decode_jpeg
-
-    def sample_one(p: bytes) -> list[tuple]:
-        _w, _h, src_fps, frames = decode_avi_mjpeg(p)
-        duration = len(frames) / src_fps
-        rows = []
-        for k in range(max(1, int(duration * fps))):
-            ts = k / fps
-            idx = min(int(round(ts * src_fps)), len(frames) - 1)
-            fw, fh, ch, px = decode_jpeg(frames[idx])
-            arr = (
-                np.frombuffer(px, np.uint8)
-                .reshape(fh * fw, ch)
-                .astype(np.float64)
-                / 255.0
-            )
-            feat = list(arr.mean(axis=0)) + list(arr.std(axis=0))
-            feat = [round(float(v), 6) for v in (feat + [0.0] * 8)[:8]]
-            rows.append((idx, round(ts, 3), fw, fh, feat))
-        return rows
-
-    return _payload_map(
-        df, sample_one, SAMPLED_FRAMES_SCHEMA, op="sample_video_frames",
-        id_col=id_col, payload_col=payload_col, errors=errors,
-        casts={"src_frame_idx": "int32", "frame_ts": "float64"},
     )
 
 

@@ -12,8 +12,8 @@ OpusTags metadata block (vendor string and user key=value comments:
 ARTIST/TITLE/...).  Duration is exact from the stream's last page
 granule position (Vorbis: PCM samples at the stream rate; Opus:
 48 kHz samples minus pre-skip).  The audio packet decode (Vorbis
-floor/residue/MDCT, Opus SILK/CELT) stays behind the quarantine
-boundary (:func:`decode_samples`), matching mp3.py/jpeg.py's split:
+floor/residue/MDCT, Opus SILK/CELT) is out of scope, matching
+mp3.py's split:
 the container tier covers what ingest needs — exact duration,
 metadata census, stream routing, integrity checks — at O(pages) cost.
 
@@ -217,16 +217,6 @@ def _vorbis_comments(d: bytes) -> "tuple[str, dict[str, str]]":
         return vendor, out
     except struct.error as exc:
         raise OggError(f"malformed comment header: {exc}") from exc
-
-
-def decode_samples(data: bytes):  # pragma: no cover - quarantine boundary
-    """Audio packet decode (Vorbis MDCT / Opus SILK+CELT) is out of
-    scope for the pure-stdlib tier; route to quarantine or an
-    ffmpeg-backed decoder behind the same interface."""
-    raise NotImplementedError(
-        "Ogg audio decode is quarantined; parse_ogg() covers duration/"
-        "metadata/census needs from the container tier"
-    )
 
 
 # -- structural encoder (tests/fixtures) -----------------------------------

@@ -204,8 +204,8 @@ def shuffle_order(
     relative order of surviving rows never changes.  The ranking runs
     through :func:`~etl_batch_spark.operators.ranks.global_row_number`
     — range-sliced parallel ranking, NOT a single-task global window —
-    so it survives 100 TB; writing in rank order then falls out of
-    ``write_range_sorted`` on the rank.
+    so it survives 100 TB; writing in rank order then falls out of a
+    ``repartitionByRange`` + ``sortWithinPartitions`` on the rank.
     """
     from etl_batch_spark.operators.ranks import global_row_number
 
@@ -274,24 +274,6 @@ def shard_assign(df: DataFrame, *, key_col: str, n_shards: int, salt: str = "sha
     """
     return df.withColumn(
         "shard", hash_bucket(key_col, salt=salt, n_buckets=n_shards).cast("int")
-    )
-
-
-def write_training_shards(
-    df: DataFrame, path: str, *, key_col: str, n_shards: int, salt: str = "shard"
-) -> None:
-    """Materialize the deterministic shuffle: one sorted file set per
-    shard, row order within a shard fixed by the intra-shard hash."""
-    order = _h60(key_col, "order")
-    (
-        shard_assign(df, key_col=key_col, n_shards=n_shards, salt=salt)
-        .withColumn("__ord", order)
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "__ord")
-        .drop("__ord")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
     )
 
 

@@ -710,17 +710,6 @@ def _pq_parts(
     return d, cb_rows, sd
 
 
-def _sqd_micro(a: str, b: str) -> Column:
-    """Squared L2 distance in integer micro-units (≈6dp).
-
-    Integer distances make every downstream SUM and argmin
-    order-independent and therefore bit-identical across engines —
-    float partial-distance sums would drift with aggregation order.
-    """
-    sqd = SQDIST.format(a=a, b=b)
-    return F.round(F.expr(sqd) * 1e6, 0).cast("long")
-
-
 def _pq_cb_literal(cb_rows, sub: int, id_sql_type: str) -> str:
     """array(named_struct('code', ..., 'cvec', ...), ...) for one subspace."""
     entries = [
@@ -796,36 +785,6 @@ def _pq_encode_with(
     )
 
 
-def pq_encode(
-    corpus: DataFrame,
-    *,
-    m: int = 8,
-    ks: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization encoding: ``(id, sub, code)`` long form.
-
-    Each vector is split into ``m`` subspaces; each sub-vector is replaced
-    by the id of its nearest codebook entry — compressing a 64-dim float
-    vector to ``m`` small ints (32× smaller at m=8/ks=16; the reason PQ is
-    THE 100 TB embedding-store layout).  Long form is exactly what the
-    ADC search join consumes; the compact ``array<int>`` storage form is
-    one ``groupBy(id).agg(sort_array(collect_list(...)))`` away.
-
-    Distributed shape: a row-local argmin per subspace against the
-    plan-literal codebook (``array_min(transform(...))``) — ZERO
-    shuffles, no window, no join; the encode runs at scan speed (the
-    round-11 rewrite of the explode ×m + broadcast join + min(struct)
-    sort-aggregate, which shuffled rows×m).
-    """
-    d, cb_rows, sd = _pq_parts(corpus, m=m, ks=ks, id_col=id_col, vec_col=vec_col)
-    return _pq_encode_with(
-        d, cb_rows, sd, m=m, id_col=id_col,
-        id_sql_type=dict(corpus.dtypes)[id_col],
-    )
-
-
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -843,7 +802,9 @@ def pq_topk(
     codebook entry) is broadcast, and each candidate's approximate
     distance is the SUM of m table hits — no corpus vector is read at
     search time.  Returned ``adist_micro`` is that sum in integer
-    micro-units (see :func:`_sqd_micro`).
+    micro-units (≈6dp): integer partial distances make every SUM and
+    argmin order-independent, so bit-identical across engines, where
+    float sums would drift with aggregation order.
 
     Distributed shape: codes ⋈ broadcast LUT on (sub, code) — a broadcast
     hash join over the rows×m code table — then a partial-aggregating

@@ -1,5 +1,1 @@
-from etl_batch_spark.operators.joins import (  # noqa: F401
-    bucketed_join_tables,
-    salted_join,
-    write_bucketed,
-)
+"""Reusable DataFrame operators; each module is imported by the queries that use it."""

@@ -78,55 +78,3 @@ def evaluate(df: DataFrame, rules: Sequence[Rule], *, unique: Sequence[str] = ()
     return wide.selectExpr(f"stack({len(names)}, {pairs}) AS (rule, violations)")
 
 
-def split_valid(
-    df: DataFrame, rules: Sequence[Rule]
-) -> tuple[DataFrame, DataFrame]:
-    """Quarantine split: (clean rows, violating rows + ``_violations``).
-
-    The load-side counterpart of :func:`evaluate` — instead of counting
-    violations, route them: clean rows flow on to the sink, violators
-    land in a dead-letter table carrying the comma-joined names of
-    every rule they broke (one bad row never hides a second defect).
-
-    Both frames derive from ONE annotated plan — a row-local projection,
-    no shuffle, no second scan; Spark evaluates the rule predicates
-    once per row per output.  Uniqueness rules are not row-local and
-    stay in :func:`evaluate`.
-    """
-    if not rules:
-        raise ValueError("rules must be non-empty")
-    names = F.array(
-        *[F.when(r.violated, F.lit(r.name)) for r in rules]
-    )
-    annotated = df.withColumn(
-        "_violations",
-        F.array_join(F.filter(names, lambda x: x.isNotNull()), ","),
-    )
-    good = annotated.filter(F.col("_violations") == "").drop("_violations")
-    bad = annotated.filter(F.col("_violations") != "")
-    return good, bad
-
-
-def observe_rules(df: DataFrame, rules: Sequence[Rule], *, name: str = "expectations"):
-    """Attach zero-cost expectation metrics to a DataFrame: returns
-    ``(df, observation)`` where the metrics ride the NEXT action on
-    ``df`` — no second scan, no separate job, the ``observe()`` analogue
-    of :func:`evaluate`.
-
-    This is the right shape for production writes at 100 TB: the
-    violation counts fall out of the write job itself
-    (``observation.get`` after the write returns
-    ``{rule_name: count, "n_rows": n}``), where a post-hoc
-    :func:`evaluate` would re-read the table.  Row-local rules only —
-    `observe` aggregates cannot be distinct-based.
-    """
-    from pyspark.sql import Observation
-
-    if not rules:
-        raise ValueError("observe_rules requires at least one rule")
-    obs = Observation(name)
-    metrics = [
-        F.sum(F.when(r.violated, 1).otherwise(0)).cast("long").alias(r.name)
-        for r in rules
-    ]
-    return df.observe(obs, F.count(F.lit(1)).alias("n_rows"), *metrics), obs

@@ -94,86 +94,6 @@ def mg_candidates(df: DataFrame, key_col: str, support: float) -> DataFrame:
     return df.select(key_col).mapInPandas(summarize, out_schema)
 
 
-def mg_partials(batch: DataFrame, key_col: str) -> DataFrame:
-    """One micro-batch → exact MG partials ``(mg_key, mg_count)``, plus a
-    NULL-key row carrying the batch's non-null row count (the running N
-    the error bound needs).  Pure ``groupBy`` — JVM-side, no Python."""
-    counts = (
-        batch.filter(F.col(key_col).isNotNull())
-        .groupBy(F.col(key_col).alias("mg_key"))
-        .agg(F.count(F.lit(1)).alias("mg_count"))
-    )
-    total = batch.select(
-        F.lit(None).cast(batch.schema[key_col].dataType).alias("mg_key"),
-        F.count(key_col).alias("mg_count"),
-    )
-    return counts.unionByName(total)
-
-
-def mg_merge(both: DataFrame, cap: int) -> DataFrame:
-    """Merge unioned MG partials and prune back to ``cap`` counters (the
-    mergeable-summaries rule: subtract the (cap+1)-largest merged count
-    from every counter, drop non-positives).  Associative and idempotent
-    over row UNION, so it rides ``maintain_partials_versioned`` —
-    a streaming heavy-hitters summary with the classic guarantee
-    ``freq(x) − N/(cap+1) ≤ counter(x) ≤ freq(x)`` (Agarwal et al.,
-    Mergeable Summaries, PODS 2012).  The NULL-key total row SUMs.
-    State is ≤ cap+1 rows regardless of stream length."""
-    summed = both.groupBy("mg_key").agg(F.sum("mg_count").alias("mg_count"))
-    keys = summed.filter(F.col("mg_key").isNotNull())
-    total = summed.filter(F.col("mg_key").isNull())
-    # pivot = (cap+1)-th largest counter, NULL when ≤ cap survive as-is.
-    # The sort feeding it is a TakeOrdered over ≤ cap + batch-distinct
-    # rows — bounded state, never the stream.
-    pivot = (
-        keys.orderBy(F.desc("mg_count"), F.asc("mg_key"))
-        .limit(cap + 1)
-        .groupBy()
-        .agg(
-            F.when(F.count(F.lit(1)) > cap, F.min("mg_count"))
-            .otherwise(F.lit(0))
-            .alias("__pivot")
-        )
-    )
-    pruned = (
-        keys.crossJoin(F.broadcast(pivot))
-        .select(
-            "mg_key",
-            (F.col("mg_count") - F.col("__pivot")).alias("mg_count"),
-        )
-        .filter(F.col("mg_count") > 0)
-    )
-    return pruned.unionByName(total)
-
-
-def mg_report(partials: DataFrame, support: float, cap: int) -> DataFrame:
-    """Heavy-hitter report from a (possibly streamed) MG summary:
-    ``(mg_key, est_count, max_count, n_total, threshold)`` for every key
-    that CAN be ≥ support·N given the one-sided undercount bound —
-    no false negatives (est ≤ freq ≤ est + N/(cap+1)); false positives
-    are confined to the error band and carry their honest bounds."""
-    n_total = (
-        partials.filter(F.col("mg_key").isNull())
-        .groupBy()
-        .agg(F.coalesce(F.sum("mg_count"), F.lit(0)).alias("n_total"))
-    )
-    err = (F.col("n_total") / F.lit(cap + 1)).cast("long")
-    return (
-        partials.filter(F.col("mg_key").isNotNull())
-        .crossJoin(F.broadcast(n_total))
-        .withColumn("threshold", F.ceil(F.lit(support) * F.col("n_total")).cast("long"))
-        .withColumn("max_count", F.col("mg_count") + err)
-        .filter(F.col("max_count") >= F.col("threshold"))
-        .select(
-            "mg_key",
-            F.col("mg_count").alias("est_count"),
-            "max_count",
-            "n_total",
-            "threshold",
-        )
-    )
-
-
 def frequent_items(df: DataFrame, key_col: str, support: float) -> DataFrame:
     """All keys with exact frequency ≥ ``ceil(support · N)`` (N = non-null
     rows), as ``(key_col, n, threshold)`` — exact output, sketch-pruned

@@ -8,17 +8,11 @@ runtime; these operators cover the cases AQE cannot:
   *partitions*, but a single hot key still lands in one task when the
   other side must be shuffled too; salting replicates the small side
   across ``n_salts`` sub-keys so the hot key fans out over the cluster.
-- :func:`write_bucketed` / :func:`bucketed_join_tables` — co-located
-  joins for tables that are joined repeatedly on the same key (the
-  fact-to-fact case where neither side broadcasts).  Bucketing pays one
-  shuffle at write time and then every subsequent join is
-  exchange-free — at 100 TB that converts the dominant per-query cost
-  into a one-time ingest cost.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -58,34 +52,3 @@ def salted_join(
     return out.drop("__salt")
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    *,
-    keys: list[str] | str,
-    n_buckets: int = 64,
-    path: str | None = None,
-    sort: bool = True,
-) -> None:
-    """Persist ``df`` hash-bucketed (and optionally sorted) by ``keys``.
-
-    Both sides of a repeated fact-to-fact join written with the same
-    (keys, n_buckets) join with **zero exchanges**: the scan itself
-    reports the hash partitioning, so Catalyst plans a sort-merge join
-    straight off the files.  ``n_buckets`` bounds per-bucket file size —
-    at 100 TB size it so a bucket ≈ one task's worth (128–512 MB)."""
-    keys = [on] if isinstance((on := keys), str) else list(keys)
-    w = df.write.bucketBy(n_buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
-    if path:
-        w = w.option("path", path)
-    w.mode("overwrite").format("parquet").saveAsTable(table)
-
-
-def bucketed_join_tables(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str] | str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed catalog tables (see :func:`write_bucketed`)."""
-    keys = [on] if isinstance(on, str) else list(on)
-    return spark.table(left_table).join(spark.table(right_table), keys, how)

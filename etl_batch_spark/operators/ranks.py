@@ -4,7 +4,7 @@ A bare ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY collapses
 the whole input onto ONE task (`WindowExec: No Partition Defined`) — fine
 on a bounded aggregate, a cluster-killer on a growing table.  The
 scale-safe equivalent splits the keyspace into contiguous range slices
-(sampled boundaries, same mechanism as sources/io.py::write_range_sorted),
+(sampled boundaries, the mechanism of ``repartitionByRange``),
 ranks inside each slice in parallel, and re-bases each slice by the total
 row count of the slices before it:
 

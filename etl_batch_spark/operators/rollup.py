@@ -90,33 +90,3 @@ def read_level(partials: DataFrame, *, round_sum: int = 2, round_avg: int = 4) -
     )
 
 
-def sketch_rollup(
-    df: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    levels: Sequence[str] = ("day",),
-) -> DataFrame:
-    """Mergeable distinct-count rollup: per-bucket HLL sketches of
-    ``key_col`` (binary, storable next to the numeric partials) that
-    re-aggregate upward with ``hll_union_agg`` — distinct users per
-    month from daily sketches without ever re-scanning raw data, the
-    thing exact COUNT(DISTINCT) partials fundamentally cannot do."""
-    lv = levels[0]
-    return df.groupBy(
-        F.date_trunc(_LEVEL_FMT[lv], F.col(ts_col)).alias("bucket")
-    ).agg(F.hll_sketch_agg(key_col).alias("sketch"))
-
-
-def sketch_estimate_over(partials: DataFrame, *, level: str) -> DataFrame:
-    """Merge finer sketches to ``level`` buckets and estimate distincts."""
-    return (
-        partials.groupBy(
-            F.date_trunc(_LEVEL_FMT[level], F.col("bucket")).alias("bucket")
-        )
-        .agg(F.hll_union_agg("sketch").alias("sketch"))
-        .select(
-            "bucket",
-            F.hll_sketch_estimate("sketch").alias("approx_distinct"),
-        )
-    )

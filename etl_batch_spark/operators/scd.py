@@ -10,8 +10,8 @@ new open row; new keys get an open row; untouched keys pass through.
 Scale: one shuffle on the dimension key joins snapshot and updates;
 every branch (changed / unchanged / inserted) derives from that single
 join — no second pass over the snapshot.  At 100 TB-dimension scale the
-snapshot is bucketed on the key so the daily merge is exchange-free
-(`operators/joins.py::write_bucketed`).
+snapshot is bucketed on the key (``DataFrameWriter.bucketBy``) so the
+daily merge is exchange-free.
 """
 
 from __future__ import annotations

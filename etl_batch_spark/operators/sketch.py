@@ -1,9 +1,8 @@
 """Engine-portable HyperLogLog distinct-count sketch.
 
-``operators/rollup.py::sketch_rollup`` demonstrates Spark's native
-Datasketches HLL (binary sketches, ``hll_union_agg``) — maximally
-efficient but engine-specific, so its estimates can only be
-closeness-tested.  This module is the complementary design point: a
+Spark's native Datasketches HLL (binary sketches, ``hll_union_agg``)
+is maximally efficient but engine-specific, so its estimates can only
+be closeness-tested.  This module is the complementary design point: a
 deterministic HLL (Flajolet et al. 2007) built from the same md5-based
 60-bit hash the MinHash oracle uses, so ANY engine that can md5 computes
 bit-identical registers and the whole sketch pipeline — including
@@ -35,25 +34,7 @@ from pyspark.sql import functions as F
 
 from etl_batch_spark.llmops.dedup import H60
 
-P_BITS = 8
-M = 1 << P_BITS  # 256 registers at the default precision
-
-
-def hll_register_cols(key_col: str, p_bits: int = P_BITS) -> "tuple[Column, Column]":
-    """(idx, rho) register coordinates for one key value.
-
-    ``p_bits`` trades register count for accuracy: the low ``p_bits``
-    of the 60-bit hash pick the register, the remaining ``60 - p_bits``
-    give ``rho = (61 - p_bits) - bitlength(w)`` — std error
-    1.04/sqrt(2^p_bits) (6.5% at the default p=8, 1.6% at p=12).
-
-    NOTE: both returned Columns embed the md5 hash — Spark does not CSE
-    across Column objects, so consuming BOTH in one projection hashes
-    every key twice.  :func:`hll_partials` avoids that by hashing into
-    a named column first (:func:`hll_register_cols_from_hash`); do the
-    same in any new hot path."""
-    h = H60.format(expr=f"cast({key_col} as string)")
-    return hll_register_cols_from_hash(h, p_bits)
+P_BITS = 8  # 256 registers at the default precision
 
 
 def hll_register_cols_from_hash(h: str, p_bits: int = P_BITS) -> "tuple[Column, Column]":
@@ -120,7 +101,7 @@ def hll_estimate(
     """(bucket, est_distinct, est_branch) from a register table.
 
     ``p_bits`` MUST match the precision the partials were built with
-    (:func:`hll_register_cols` / ``hll_register_cols_from_hash``) —
+    (:func:`hll_register_cols_from_hash`) —
     the register count m = 2^p_bits enters the bias constant, the
     linear-counting threshold, and the absent-register term, so a
     mismatch skews every estimate silently.  Partials cannot carry m

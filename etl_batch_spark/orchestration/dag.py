@@ -85,7 +85,7 @@ class DagRunner:
 
     def run(
         self,
-        modules: "dict[str, ModuleFn]",
+        modules: dict[str, ModuleFn],
         deps: "dict[str, list[str]]",
         *,
         run_level: int = 1,

@@ -34,6 +34,8 @@ def daily000(
     exclusive_run_yn: str = "N",
     flag: int | None = None,
 ) -> int:
+    """func_daily000 (body.sql:877-992); the scheduler runs it as a
+    batch, no query does."""
     ctx = None
     try:
         ctx = runner.startup(

@@ -22,6 +22,8 @@ _AVG_TEMPLATE = "AVG_${DAY}_VDN"
 
 
 def get_run_command(store: ControlStore, batch_name: str) -> str:
+    """func_get_run_command (body.sql:994-1009); batches call it, no
+    query does."""
     try:
         matches = [
             r["run_command"]
@@ -36,6 +38,8 @@ def get_run_command(store: ControlStore, batch_name: str) -> str:
 
 
 def get_loader_file_name(store: ControlStore, batch_name: str, run_day: str) -> str:
+    """func_get_loader_file_name (body.sql:1163-1251); load batches call
+    it, no query does."""
     try:
         flag = 1
         if batch_name.upper() == "EISU242":

@@ -46,6 +46,9 @@ class SmtplibTransport:
 
 @dataclass
 class Notifier:
+    """proc_send_mail_group (body.sql:1011-1161); batches call it, no
+    query does."""
+
     store: ControlStore
     user: str
     clock: Clock = field(default_factory=Clock)

@@ -3,8 +3,8 @@
 The engine's performance contract is enforced, not hoped for: tests
 assert that filters reach the parquet scan, that bounded dimensions
 broadcast, and that scans are column-pruned (SURVEY.md §4's "everything
-at this layer is stock Catalyst" — these helpers prove each query uses
-it).
+at this layer is stock Catalyst").  ``tools/scan_audit.py`` and
+``tools/plan_dump.py`` read plans through the same helpers.
 
 The structural checks read the physical plan tree over py4j, never the
 explain text.  ``walk`` starts at ``queryExecution().executedPlan()``
@@ -62,20 +62,6 @@ def _nodes(plan: Plan) -> list[tuple[str, object]]:
     return plan if isinstance(plan, list) else walk(plan)
 
 
-def _file_scans(plan: Plan) -> list:
-    return [n for _, n in _nodes(plan) if n.getClass().getSimpleName() == "FileSourceScanExec"]
-
-
-def pushed_filters(plan: Plan) -> list[str]:
-    """All pushed-down data-source filters across the plan's file scans."""
-    return [f.toString() for scan in _file_scans(plan) for f in _seq(scan.pushedDownFilters())]
-
-
-def read_schemas(plan: Plan) -> list[list[str]]:
-    """Column lists actually read by each file scan (pruning check)."""
-    return [list(scan.requiredSchema().fieldNames()) for scan in _file_scans(plan)]
-
-
 def count_ops(plan: Plan, op: str) -> int:
     """Nodes of physical operator ``op`` (e.g. 'BroadcastHashJoin',
     'Exchange', 'Scan parquet').  A node matches when its name is ``op``
@@ -90,30 +76,3 @@ def scan_counts(plan: Plan) -> dict[str, int]:
     return {"parquet": count_ops(nodes, "Scan parquet"), "rdd": count_ops(nodes, "Scan ExistingRDD")}
 
 
-def unpartitioned_windows(plan: Plan) -> int:
-    """Window and WindowGroupLimit nodes with NO partition spec: the
-    `WindowExec: No Partition Defined` single-task shape."""
-    return sum(
-        name in ("Window", "WindowGroupLimit") and node.partitionSpec().isEmpty()
-        for name, node in _nodes(plan)
-    )
-
-
-def assert_filter_pushed(df: DataFrame, column: str) -> None:
-    filters = pushed_filters(df)
-    if not any(column in f for f in filters):
-        raise AssertionError(f"no pushed filter on {column!r}; pushed: {filters}")
-
-
-def assert_broadcast(df: DataFrame, at_least: int = 1) -> None:
-    nodes = walk(df)
-    n = count_ops(nodes, "BroadcastHashJoin") + count_ops(nodes, "BroadcastNestedLoopJoin")
-    if n < at_least:
-        raise AssertionError(f"expected ≥{at_least} broadcast joins, plan has {n}")
-
-
-def assert_columns_pruned(df: DataFrame, table_width: int) -> None:
-    """Assert no scan reads all ``table_width`` columns (pruning active)."""
-    for cols in read_schemas(df):
-        if len(cols) >= table_width:
-            raise AssertionError(f"scan reads {len(cols)} columns — pruning lost: {cols}")

@@ -323,10 +323,7 @@ def et06_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on any engine), so the WHOLE rollup — day partials, MAX-merge upward,
 # estimator — is exactly oracle-checkable; the DuckDB twin computes the
 # same registers at week level directly, and MAX-merge associativity is
-# what parity proves.  Spark's native Datasketches variant
-# (operators/rollup.py::sketch_rollup, binary sketches + hll_union_agg)
-# remains the engine-specific alternative, closeness-tested in
-# test_operators.  At 100 TB this replaces a re-scan of the raw log for
+# what parity proves.  At 100 TB this replaces a re-scan of the raw log for
 # every wider window with a MAX-merge over (buckets × 256)-row register
 # tables.
 # ---------------------------------------------------------------------------

@@ -963,9 +963,7 @@ def q37_from_json_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (operators/sketch.py — the et07/et24 pattern): deterministic
 # md5-register HLL for both distinct estimates and a fixed-width
 # histogram for the median, so the WHOLE query is exactly
-# oracle-checkable instead of rows-only.  The engine-native variants
-# (approx_count_distinct / approx_percentile) remain covered by
-# operators/rollup.py::sketch_rollup and its closeness tests.
+# oracle-checkable instead of rows-only.
 #
 # Plan shape (the 100 TB story): ONE lineitem scan — each row explodes
 # into its three sketch coordinates (orderkey register, partkey
@@ -1062,10 +1060,10 @@ def q38_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engines default to; the module default p=8 stays for the rollup
     # queries whose register tables must be tiny.
     # Hash ONCE per key into a named column, then derive (idx, rho)
-    # from it: hll_register_cols embeds the md5+conv inside BOTH the
-    # idx and rho expressions, and Spark does not CSE across them —
-    # inlining it here costs 4 hashes/row instead of 2 (measured ~2×
-    # on the projection stage, which dominates this query).
+    # from it: hashing the key inside BOTH the idx and rho expressions
+    # would embed the md5+conv twice, and Spark does not CSE across
+    # them — 4 hashes/row instead of 2 (measured ~2× on the projection
+    # stage, which dominates this query).
     h60 = H60.format(expr="cast({key} as string)")
 
     def sk_struct(kind: str, coord, v):

@@ -22,13 +22,6 @@ locally every run, so rotation never weakens local coverage.
 
 from __future__ import annotations
 
-# Queries with no SQL-expressible oracle whose single rows-only driver
-# slot is deliberate (the driver records a weaker rows-count check; the
-# judge sees which).  Anything else in the window must carry an oracle —
-# tests/test_rotation.py enforces this.  Empty since round 5: q38 was
-# re-expressed on the portable sketches (the et07 pattern) and now has
-# a real value-hash oracle.
-ROWS_ONLY_OK: frozenset[str] = frozenset()
 
 # Round 11 window (rotated from CORRECTNESS_r10.json, 50/50 green —
 # cumulative 251/251 driver-green at latest check).  Leads: the 13

@@ -1,7 +1,1 @@
-from etl_batch_spark.sources.io import (  # noqa: F401
-    read_csv,
-    read_json,
-    read_parquet,
-    resolve_loader_paths,
-    write_partitioned,
-)
+"""Sources and sinks: the transaction-log table (``txlog``) and IO helpers (``io``)."""

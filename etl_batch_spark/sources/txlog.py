@@ -750,15 +750,18 @@ class TxTable:
         bounds on any such key holds no update key, so it stays live
         untouched.  Files without an envelope are read; other key types
         never prune (a timestamp bound collected on the driver would
-        bring the driver's time zone into the decision).  The touched
-        set is recomputed on every retry — an interleaved append may
-        have landed a file inside the bounds.  A key whose update values
-        are all NULL matches no target row (NULL never equals), so then
-        no file is touched.
+        bring the driver's time zone into the decision).  The aggregate
+        re-runs the plan of ``updates``, so it runs only once a snapshot
+        holds at least two live files with an envelope on such a key —
+        with fewer there is nothing it could prune — and its bounds are
+        kept for later attempts.  The touched set is recomputed on every
+        retry — an interleaved append may have landed a file inside the
+        bounds.  A key whose update values are all NULL matches no
+        target row (NULL never equals), so then no file is touched.
 
         ``updates`` must be unique per key and deterministic: it is
-        evaluated once for the bounds and once per attempt for the
-        rows."""
+        evaluated at most once for the bounds and once per attempt for
+        the rows."""
         from pyspark.sql import functions as F
 
         from etl_batch_spark.operators.merge import merge_dataframes
@@ -770,20 +773,25 @@ class TxTable:
             if isinstance(types.get(k), T.IntegralType)
             or types.get(k) == T.StringType()
         ]
-        bounds: "dict[str, tuple]" = {}
-        if prunable:
-            row = updates.agg(*[F.min(k) for k in prunable],
-                              *[F.max(k) for k in prunable]).first()
-            bounds = {k: (row[i], row[len(prunable) + i])
-                      for i, k in enumerate(prunable)}
+        bounds: "dict[str, tuple] | None" = None
         last: "ConcurrentWriteConflict | None" = None
         for _ in range(max(1, max_retries)):
             rv = self.latest_version()
             files, schema, stats = self._snapshot(rv)
-            # a key whose update values are all NULL matches no row
-            touched = [] if any(lo is None for lo, _ in bounds.values()) else [
-                f for f in files if not _disjoint(stats.get(f), bounds)
-            ]
+            if bounds is None and sum(
+                any((stats.get(f) or {}).get(k) is not None for k in prunable)
+                for f in files
+            ) >= 2:
+                row = updates.agg(*[F.min(k) for k in prunable],
+                                  *[F.max(k) for k in prunable]).first()
+                bounds = {k: (row[i], row[len(prunable) + i])
+                          for i, k in enumerate(prunable)}
+            if bounds is None:
+                touched = files
+            elif any(lo is None for lo, _ in bounds.values()):
+                touched = []  # a key whose update values are all NULL matches no row
+            else:
+                touched = [f for f in files if not _disjoint(stats.get(f), bounds)]
             if rv < 0:
                 # bootstrap: no target to merge into — inserts minus
                 # explicit deletes ARE the first snapshot

@@ -1,14 +1,1 @@
-from etl_batch_spark.streaming.events import (  # noqa: F401
-    dedup_stream,
-    enrich_with_dimension,
-    funnel_stateful,
-    purchase_attribution_join,
-    purchase_attribution_join_outer,
-    read_events_stream,
-    run_stream_to_memory,
-    session_window_aggregate,
-    sessionize_stateful,
-    sliding_event_counts,
-    windowed_event_counts,
-    write_idempotent_batches,
-)
+"""Structured Streaming over the ``events`` table (``events``)."""

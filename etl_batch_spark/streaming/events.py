@@ -7,9 +7,9 @@ DAILY000 (SURVEY.md §2.D); the engine adds real Structured Streaming:
   nanos→micros ts handling as the batch catalog
 - :func:`windowed_event_counts`    — watermarked tumbling-window aggs
   (late data dropped past the watermark)
-- :func:`sessionize_stateful`      — custom stateful operator via
-  ``applyInPandasWithState`` (per-user session tracking with a gap
-  timeout), the pattern for operators Spark lacks natively
+- :func:`funnel_stateful`          — custom stateful operator via
+  ``applyInPandasWithState`` (per-user funnel progress kept across
+  triggers), the pattern for operators Spark lacks natively
 - :func:`dedup_stream`             — bounded-state exact dedup via
   ``dropDuplicatesWithinWatermark`` (at-least-once → exactly-once)
 - :func:`purchase_attribution_join` — stream-stream interval join with
@@ -86,62 +86,6 @@ def windowed_event_counts(
     )
 
 
-_SESSION_STATE = T.StructType(
-    [
-        T.StructField("session_count", T.LongType()),
-        T.StructField("event_count", T.LongType()),
-        T.StructField("last_ts_us", T.LongType()),
-    ]
-)
-
-_SESSION_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_count", T.LongType()),
-        T.StructField("event_count", T.LongType()),
-    ]
-)
-
-
-def sessionize_stateful(stream: DataFrame, *, gap_minutes: int = 30) -> DataFrame:
-    """Custom stateful operator: per-user session/event counters with a
-    gap rule, kept across triggers in GroupState.  This is the engine's
-    template for operators the built-in surface can't express."""
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def update(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],  # noqa: F821
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        if state.exists:
-            sessions, events, last_us = state.get
-        else:
-            sessions, events, last_us = 0, 0, None
-        ts_list: list[int] = []
-        for pdf in batches:
-            ts_list.extend(int(v) for v in pdf["ts_us"])
-        for ts_us in sorted(ts_list):
-            if last_us is None or ts_us - last_us > gap_us:
-                sessions += 1
-            events += 1
-            last_us = ts_us
-        state.update((sessions, events, last_us))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "session_count": [sessions], "event_count": [events]}
-        )
-
-    return (
-        stream.withColumn("ts_us", F.unix_micros("ts"))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update, _SESSION_OUT, _SESSION_STATE, "Update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
 def dedup_stream(
     stream: DataFrame, *, id_col: str = "event_id", watermark: str = "2 hours"
 ) -> DataFrame:
@@ -211,51 +155,6 @@ def purchase_attribution_join(
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {attribution_window}"))
     )
     return c.join(p, cond).select(
-        F.col("p_user_id").alias("user_id"),
-        "purchase_id",
-        "purchase_ts",
-        "purchase_value",
-        "click_id",
-        "click_ts",
-    )
-
-
-def purchase_attribution_join_outer(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    *,
-    attribution_window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Left-outer stream-stream interval join: every purchase emits —
-    attributed rows as in :func:`purchase_attribution_join`, ORGANIC
-    purchases (no qualifying click) with NULL click columns.
-
-    The outer side is the genuinely stateful case: a purchase cannot be
-    declared organic until the click watermark has passed its whole
-    attribution window, so null rows surface only when state for that
-    event-time range is evicted.  Purchases younger than the final
-    watermark stay buffered (exactly-once under the checkpoint) — a
-    batch backfill over closed data sees every row, a live stream sees
-    nulls trail by the watermark delay.  Same evictable-state bounds as
-    the inner form; the join order is purchases LEFT OUTER clicks."""
-    c = clicks.select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
-    p = purchases.select(
-        F.col("user_id").alias("p_user_id"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    ).withWatermark("purchase_ts", watermark)
-    cond = (
-        (F.col("c_user_id") == F.col("p_user_id"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {attribution_window}"))
-    )
-    return p.join(c, cond, "leftOuter").select(
         F.col("p_user_id").alias("user_id"),
         "purchase_id",
         "purchase_ts",
@@ -492,69 +391,6 @@ def ingest_incrementally(
     return _drain(stream, sink, checkpoint_dir), table
 
 
-# ---------------------------------------------------------------------------
-# transformWithState (Spark 4): the successor API to
-# applyInPandasWithState — typed per-key state primitives
-# (ValueState/ListState/MapState), timers, and state evolution.  The
-# running per-user aggregate below is the reference pattern: RocksDB-
-# backed ValueState at scale, one row emitted per key per micro-batch.
-# NB the TWS driver worker imports google.protobuf; environments
-# without a working protobuf install (this container) must stay on
-# applyInPandasWithState (sessionize_stateful above) — the test skips
-# itself when protobuf is absent.
-# ---------------------------------------------------------------------------
-RUNNING_AGG_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-    ]
-)
-
-_AGG_STATE = T.StructType(
-    [T.StructField("n", T.LongType()), T.StructField("s", T.DoubleType())]
-)
-
-
-def running_user_aggregate(stream: DataFrame) -> DataFrame:
-    """Per-user lifetime (event count, value sum), maintained in typed
-    ValueState via ``transformWithStateInPandas`` and re-emitted on
-    every micro-batch that touches the user."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", _AGG_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = (self._state.get() or (0, 0.0)) if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._state.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningAgg(),
-            outputStructType=RUNNING_AGG_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def _checkpoint_incarnation(checkpoint_dir: str) -> str:
     """Token identifying one checkpoint directory's lifetime.
 
@@ -633,39 +469,6 @@ def _exactly_once_sink(table, checkpoint_dir: str, *, build, merge=None):
     return sink
 
 
-def maintain_rollup_incrementally(
-    spark: SparkSession,
-    src_dir: str,
-    table_path: str,
-    checkpoint_dir: str,
-    *,
-    level: str = "day",
-    key_cols: "tuple[str, ...]" = ("event_type",),
-):
-    """Streaming continuous aggregate: keep an et04-style partial-
-    aggregate table (n/sum/min/max per bucket×keys) up to date as new
-    event files arrive, WITHOUT ever re-scanning history — the numeric
-    family of :func:`maintain_partials_versioned`.
-
-    Returns ``(n_batches, TxTable)``; query the result with
-    ``operators.rollup.read_level(table.read())``.  At scale the merge
-    touches only buckets present in the batch (a day's stream touches
-    ~1 bucket).
-    """
-    from etl_batch_spark.operators.rollup import _merge_partials, _partials_from_raw
-
-    return maintain_partials_versioned(
-        spark,
-        src_dir,
-        table_path,
-        checkpoint_dir,
-        build=lambda batch: _partials_from_raw(
-            batch, ts_col="ts", key_cols=key_cols, value_col="value", level=level
-        ),
-        merge=lambda both: _merge_partials(both, key_cols=key_cols, level=level),
-    )
-
-
 def maintain_partials_versioned(
     spark: SparkSession,
     src_dir: str,
@@ -683,8 +486,7 @@ def maintain_partials_versioned(
     UNION, which every partials family in this engine satisfies
     (numeric n/sum/min/max: operators/rollup.py; HLL registers via MAX:
     operators/sketch.py::hll_merge; histogram bins and count-min
-    counters via SUM: hist_merge / cms_merge; Misra–Gries counters:
-    operators/freq.py::mg_merge).
+    counters via SUM: hist_merge / cms_merge).
 
     Each micro-batch's merge lands as one versioned commit (replays
     follow :func:`_exactly_once_sink`), so the aggregate's history is

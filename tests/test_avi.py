@@ -1,7 +1,5 @@
-"""MJPEG AVI container: bit-exact frame payload round-trips, loud
-failure on corrupt/out-of-scope payloads, and the real
-sample_video_frames transform (container parse -> fps sampling ->
-selective JPEG decode)."""
+"""MJPEG AVI container: bit-exact frame payload round-trips and loud
+failure on corrupt/out-of-scope payloads."""
 
 from __future__ import annotations
 
@@ -93,42 +91,6 @@ class TestContainer:
             decode_avi_mjpeg(data, max_frames=2)
 
 
-class TestSampleVideoFrames:
-    def test_samples_and_decodes_selected_frames(self, spark):
-        from etl_batch_spark.llmops.multimodal import sample_video_frames
-
-        # 12 frames at 4 fps = 3 s of video; sampling at 1 fps -> 3 rows
-        frames = _jpeg_frames(12, seed=8)
-        data = encode_avi_mjpeg(16, 12, 4.0, frames)
-        df = spark.createDataFrame(
-            [(7, bytearray(data))], "doc_id long, payload binary"
-        )
-        rows = sorted(
-            sample_video_frames(df, fps=1.0).collect(),
-            key=lambda r: r["src_frame_idx"],
-        )
-        assert [r["src_frame_idx"] for r in rows] == [0, 4, 8]
-        assert [r["frame_ts"] for r in rows] == [0.0, 1.0, 2.0]
-        for r in rows:
-            assert (r["width"], r["height"]) == (16, 12)
-            # feature matches an independent local decode of that frame
-            fw, fh, ch, px = decode_jpeg(frames[r["src_frame_idx"]])
-            arr = np.frombuffer(px, np.uint8).reshape(fh * fw, ch).astype(np.float64) / 255.0
-            want = list(arr.mean(axis=0)) + list(arr.std(axis=0))
-            want = [round(float(v), 6) for v in (want + [0.0] * 8)[:8]]
-            assert [round(float(v), 6) for v in r["feature"]] == want
-
-    def test_short_clip_yields_one_frame(self, spark):
-        from etl_batch_spark.llmops.multimodal import sample_video_frames
-
-        data = encode_avi_mjpeg(16, 12, 30.0, _jpeg_frames(5, seed=9))
-        df = spark.createDataFrame(
-            [(1, bytearray(data))], "doc_id long, payload binary"
-        )
-        rows = sample_video_frames(df, fps=1.0).collect()
-        assert len(rows) == 1 and rows[0]["src_frame_idx"] == 0
-
-
 class TestContainerProperty:
     from hypothesis import given, settings, strategies as st
 
@@ -146,42 +108,3 @@ class TestContainerProperty:
             decode_avi_mjpeg(blob)
 
 
-class TestSampleVideoFramesQuarantine:
-    def test_bad_payloads_survive_as_error_rows(self, spark):
-        from etl_batch_spark.llmops.multimodal import sample_video_frames
-
-        frames = _jpeg_frames(8, seed=20)
-        good = encode_avi_mjpeg(16, 12, 4.0, frames)
-        h264 = encode_avi_mjpeg(16, 12, 4.0, frames, handler=b"H264")
-        # valid container, one frame's JPEG payload corrupted: break the
-        # EOI byte (APPn bytes are skipped by the codec, markers are not)
-        broken = bytearray(good)
-        fi = good.index(frames[0][:16])
-        broken[fi + len(frames[0]) - 1] ^= 0xFF
-        rows = [
-            (1, bytearray(good)),
-            (2, bytearray(h264)),
-            (3, bytearray(broken)),
-            (4, None),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, payload binary")
-        got = sample_video_frames(df, fps=1.0, errors="quarantine").collect()
-        by_id = {}
-        for r in got:
-            by_id.setdefault(r["doc_id"], []).append(r)
-        assert len(by_id[1]) == 2 and all(r["error"] is None for r in by_id[1])
-        assert len(by_id[2]) == 1 and "AviError" in by_id[2][0]["error"]
-        assert by_id[2][0]["src_frame_idx"] is None
-        assert len(by_id[3]) == 1 and "JpegError" in by_id[3][0]["error"]
-        assert len(by_id[4]) == 1 and "NullPayload" in by_id[4][0]["error"]
-
-    def test_raise_mode_unchanged(self, spark):
-        from etl_batch_spark.llmops.multimodal import sample_video_frames
-
-        frames = _jpeg_frames(8, seed=21)
-        df = spark.createDataFrame(
-            [(1, bytearray(encode_avi_mjpeg(16, 12, 4.0, frames)))],
-            "doc_id long, payload binary",
-        )
-        rows = sample_video_frames(df, fps=1.0).collect()
-        assert len(rows) == 2 and "error" not in rows[0].asDict()

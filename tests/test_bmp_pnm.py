@@ -128,19 +128,6 @@ class TestDispatch:
         # BMP and PPM carry identical pixels -> identical features
         assert list(got[1]["feature"]) == list(got[2]["feature"])
 
-    def test_resize_accepts_bmp(self, spark):
-        from etl_batch_spark.llmops.multimodal import resize_image
-        from etl_batch_spark.llmops.png import decode_png
-
-        img = _rand(300, 100, 3, seed=10)
-        df = spark.createDataFrame(
-            [(1, bytearray(encode_bmp(300, 100, 3, img.tobytes())))],
-            "doc_id long, payload binary",
-        )
-        r = resize_image(df, max_side=150).collect()[0]
-        w, h, ch, _ = decode_png(bytes(r["payload"]))
-        assert (w, h) == (150, 50)
-
 
 class TestCodecProperty:
     from hypothesis import given, settings, strategies as st

@@ -147,11 +147,6 @@ class TestErrors:
         with pytest.raises(FlacError):
             parse_flac(bytes(data))
 
-    def test_sample_decode_is_quarantined(self):
-        from etl_batch_spark.llmops.flac import decode_samples
-
-        with pytest.raises(NotImplementedError):
-            decode_samples(encode_flac(n_frames=1, block_size=256))
 
     def test_encoder_rejects_bad_params(self):
         with pytest.raises(ValueError):

@@ -23,6 +23,17 @@ def corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _pq_codes(corpus, *, m, ks, id_col="vec_id", vec_col="embedding"):
+    """``(id, sub, code)``: pq_topk's encode path (codebook, then the
+    row-local argmin against it)."""
+    d, cb_rows, sd = similarity._pq_parts(
+        corpus, m=m, ks=ks, id_col=id_col, vec_col=vec_col
+    )
+    return similarity._pq_encode_with(
+        d, cb_rows, sd, m=m, id_col=id_col, id_sql_type=dict(corpus.dtypes)[id_col]
+    )
+
+
 class TestDedup:
     def test_exact_groups_and_drop(self, corpus):
         groups = {r["keeper_doc_id"]: r["n_copies"] for r in dedup.exact_groups(corpus).collect()}
@@ -132,7 +143,7 @@ class TestSimilarity:
 
     def test_pq_encode_shape_and_code_range(self, spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")
-        codes = similarity.pq_encode(emb, m=8, ks=16).collect()
+        codes = _pq_codes(emb, m=8, ks=16).collect()
         n = emb.count()
         assert len(codes) == n * 8  # one code per (vector, subspace)
         assert {r["sub"] for r in codes} == set(range(8))
@@ -336,19 +347,6 @@ class TestMultimodal:
         assert by_doc[2] == [0.0]  # short clip → at least one frame
         assert by_doc[1][:3] == [0.0, 0.5, 1.0]
 
-    def test_round6_half_up_matches_spark_round(self, spark):
-        """The codec-side scale must match resize_plan's F.round(x, 6)
-        on exact 6dp ties: Spark rounds HALF_UP over the double's
-        shortest decimal form, Python's builtin round() is half-even
-        (224/28672 = 0.0078125 is such a tie and would flip a target
-        dim)."""
-        ties = [0.0078125, 224 / 28672, 0.0000005, 0.1234565, 0.9999995,
-                224 / 293, 1.0, 1 / 3]
-        df = spark.createDataFrame([(v,) for v in ties], "v double")
-        got = [r["r"] for r in df.select(F.round("v", 6).alias("r")).collect()]
-        assert got == [multimodal._round6_half_up(v) for v in ties]
-        # the builtin would NOT have matched on the tie:
-        assert round(0.0078125, 6) != multimodal._round6_half_up(0.0078125)
 
     def test_payload_transforms_accept_string_ids(self, spark):
         """Every payload transform keys by the caller's id column —
@@ -360,15 +358,6 @@ class TestMultimodal:
         )
         we = multimodal.window_energy(df, id_col="url").collect()
         assert we and we[0]["url"] == "u://x" and we[0]["widx"] == 0
-        from etl_batch_spark.llmops.png import encode_png
-
-        img = spark.createDataFrame(
-            [("u://img", bytearray(encode_png(3, 2, 3, bytes(18))))],
-            "url string, payload binary",
-        )
-        (rs,) = multimodal.resize_image(img, id_col="url").collect()
-        assert rs["url"] == "u://img"
-        assert (rs["target_width"], rs["target_height"]) == (3, 2)
         # a NULL payload fails with a clear error naming the operator
         nul = spark.createDataFrame(
             [("u://x", bytearray(b"abc")), ("u://null", None)],
@@ -376,14 +365,6 @@ class TestMultimodal:
         )
         with pytest.raises(Exception, match="NULL 'payload' — window_energy"):
             multimodal.window_energy(nul, id_col="url").collect()
-
-    def test_sample_video_frames_rejects_bad_fps(self, spark):
-        df = spark.createDataFrame(
-            [(1, bytearray(b"RIFF"))], "doc_id long, payload binary"
-        )
-        for bad in (0.0, -1.0):
-            with pytest.raises(ValueError, match="fps"):
-                multimodal.sample_video_frames(df, fps=bad)
 
 
 class TestConnectedComponents:
@@ -869,24 +850,6 @@ class TestTrainingShards:
         # balanced-ish: no shard empty, none > 2x the mean
         sizes = {r["shard"]: r["n"] for r in a.groupBy("shard").agg(F.count("*").alias("n")).collect()}
         assert len(sizes) == 8 and max(sizes.values()) < 2 * (500 / 8)
-
-    def test_write_training_shards_layout(self, spark, tmp_path):
-        from etl_batch_spark.llmops import sampling
-
-        df = spark.range(0, 300).select(F.col("id").alias("doc_id"), (F.col("id") * 2).alias("payload"))
-        out = str(tmp_path / "shards")
-        sampling.write_training_shards(df, out, key_col="doc_id", n_shards=4)
-        back = spark.read.parquet(out)
-        assert back.count() == 300
-        assert sorted(r["shard"] for r in back.select("shard").distinct().collect()) == [0, 1, 2, 3]
-        # rereading keeps every row exactly once
-        assert back.select("doc_id").distinct().count() == 300
-        # order within a shard is the intra-shard hash: deterministic across writes
-        out2 = str(tmp_path / "shards2")
-        sampling.write_training_shards(df, out2, key_col="doc_id", n_shards=4)
-        first = spark.read.parquet(out + "/shard=0").limit(5).collect()
-        second = spark.read.parquet(out2 + "/shard=0").limit(5).collect()
-        assert [r["doc_id"] for r in first] == [r["doc_id"] for r in second]
 
 
 class TestWeightedTopk:
@@ -1485,7 +1448,7 @@ class TestRowLocalArgminRewrite:
         from etl_batch_spark.llmops import similarity
 
         corp = self._adv_corpus(spark)
-        codes = similarity.pq_encode(corp, m=8, ks=4).collect()
+        codes = _pq_codes(corp, m=8, ks=4).collect()
         # every distinct id encodes once per subspace (dup id collapsed)
         assert len(codes) == 4 * 8
         assert {r["vec_id"] for r in codes} == {0, 1, 2, 3}
@@ -1496,7 +1459,7 @@ class TestRowLocalArgminRewrite:
         corp = spark.createDataFrame(
             [(0, None), (1, None)], "vec_id bigint, embedding array<double>"
         )
-        assert similarity.pq_encode(corp, m=8, ks=2).count() == 0
+        assert _pq_codes(corp, m=8, ks=2).count() == 0
 
     def test_ivf_assign_collapses_duplicate_ids(self, spark):
         from pyspark.sql import functions as F

@@ -286,11 +286,6 @@ class TestErrors:
         with pytest.raises(Mp3Error, match="syncsafe"):
             parse_frames(bad)
 
-    def test_sample_decode_is_quarantined(self):
-        from etl_batch_spark.llmops.mp3 import decode_samples
-
-        with pytest.raises(NotImplementedError):
-            decode_samples(encode_frames(n_frames=1, sample_rate=44100))
 
     def test_xing_declared_vs_walked_divergence_visible(self):
         """A tag lying about the frame count is the caller's signal to

@@ -156,12 +156,6 @@ class TestErrors:
         with pytest.raises(Mp4Error, match="out of bounds"):
             parse_mp4(bytes(d))
 
-    def test_sample_decode_is_quarantined(self):
-        from etl_batch_spark.llmops.mp4 import decode_samples
-
-        with pytest.raises(NotImplementedError):
-            decode_samples(encode_mp4(video=dict(
-                n_samples=1, timescale=30, sample_delta=1, width=8, height=8)))
 
     def test_encoder_rejects_empty(self):
         with pytest.raises(ValueError):

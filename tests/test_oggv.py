@@ -145,8 +145,3 @@ class TestFraming:
         with pytest.raises(OggError, match="BOS"):
             parse_ogg(data[second:])
 
-    def test_sample_decode_is_quarantined(self):
-        from etl_batch_spark.llmops.oggv import decode_samples
-
-        with pytest.raises(NotImplementedError):
-            decode_samples(encode_ogg(codec="vorbis"))

@@ -1,5 +1,5 @@
-"""Operator-level tests: salted skew join equivalence, bucketed
-co-located joins (exchange-free plan contract)."""
+"""Operator-level tests: salted skew join equivalence, SCD2/CDC merges,
+expectations and the other reusable operators."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_batch_spark import plans
-from etl_batch_spark.operators import bucketed_join_tables, salted_join, write_bucketed
+from etl_batch_spark.operators.joins import salted_join
 
 
 @pytest.fixture()
@@ -49,31 +49,6 @@ class TestSaltedJoin:
         big, dim = skewed
         with pytest.raises(ValueError):
             salted_join(big, dim, "k", how="right")
-
-
-class TestBucketedJoin:
-    def test_join_is_exchange_free(self, spark, tmp_path):
-        left = spark.range(2_000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-        )
-        right = spark.range(1_500).select(
-            F.col("id").alias("k"), (F.col("id") * 5).alias("b")
-        )
-        write_bucketed(left, "t_bleft", keys="k", n_buckets=8, path=str(tmp_path / "l"))
-        write_bucketed(right, "t_bright", keys="k", n_buckets=8, path=str(tmp_path / "r"))
-        try:
-            prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            try:
-                joined = bucketed_join_tables(spark, "t_bleft", "t_bright", "k")
-                assert plans.count_ops(joined, "Exchange") == 0
-                assert plans.count_ops(joined, "SortMergeJoin") == 1
-                assert joined.count() == 1_500
-            finally:
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        finally:
-            spark.sql("DROP TABLE IF EXISTS t_bleft")
-            spark.sql("DROP TABLE IF EXISTS t_bright")
 
 
 class TestScd2Merge:
@@ -245,28 +220,6 @@ class TestAsofJoin:
         row = asof_join(ldf, rdf, on="ts", by=["k"], direction="backward").collect()[0]
         assert row["ts_right"] == datetime(2024, 1, 1, 0, 0, 20)
         assert row["price_right"] is None
-
-
-class TestSketchRollup:
-    def test_weekly_estimate_close_to_exact(self, spark, sf_dir):
-        from etl_batch_spark.catalog import load_table
-        from etl_batch_spark.operators.rollup import sketch_estimate_over, sketch_rollup
-
-        e = load_table(spark, sf_dir, "events")
-        daily = sketch_rollup(e, ts_col="ts", key_col="user_id", levels=("day",))
-        approx = {
-            r["bucket"]: r["approx_distinct"]
-            for r in sketch_estimate_over(daily, level="week").collect()
-        }
-        exact = {
-            r["bucket"]: r["n"]
-            for r in e.groupBy(F.date_trunc("week", "ts").alias("bucket"))
-            .agg(F.countDistinct("user_id").alias("n"))
-            .collect()
-        }
-        assert set(approx) == set(exact)
-        for b, n in exact.items():
-            assert abs(approx[b] - n) <= max(2, 0.05 * n), (b, approx[b], n)
 
 
 class TestPageRank:
@@ -790,39 +743,6 @@ class TestMergeUpsert:
         monkeypatch.undo()
         assert t.latest_version() == 0
         assert [r["name"] for r in t.read().collect()] == ["a"]
-
-
-class TestSplitValid:
-    def test_routes_rows_and_names_all_violations(self, spark):
-        from etl_batch_spark.operators import expectations as ex
-
-        df = spark.createDataFrame(
-            [(1, "a", 5.0), (2, None, 5.0), (3, "c", -1.0), (4, None, -2.0)],
-            "k long, name string, v double",
-        )
-        rules = [ex.not_null("name"), ex.in_range("v", lo=0.0)]
-        good, bad = ex.split_valid(df, rules)
-        assert [r["k"] for r in good.orderBy("k").collect()] == [1]
-        got = {r["k"]: r["_violations"] for r in bad.collect()}
-        assert got[2] == "not_null(name)"
-        assert got[3] == "in_range(v)"
-        assert set(got[4].split(",")) == {"not_null(name)", "in_range(v)"}
-
-    def test_no_shuffle_in_plan(self, spark):
-        from etl_batch_spark.operators import expectations as ex
-
-        df = spark.createDataFrame([(1, "a")], "k long, name string")
-        good, bad = ex.split_valid(df, [ex.not_null("name")])
-        for frame in (good, bad):
-            plan = frame._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan
-
-    def test_rejects_empty_rules(self, spark):
-        from etl_batch_spark.operators import expectations as ex
-
-        df = spark.createDataFrame([(1,)], "k long")
-        with pytest.raises(ValueError):
-            ex.split_valid(df, [])
 
 
 class TestTriangleCount:

@@ -361,42 +361,6 @@ class TestFrequentItemsProperty:
         }
         assert got == want
 
-    @settings(max_examples=6, deadline=None)
-    @given(
-        st.lists(st.integers(0, 15), min_size=1, max_size=100),
-        st.lists(st.integers(0, 15), min_size=1, max_size=100),
-    )
-    def test_mg_merge_keeps_heavy_keys_with_bounded_undercount(
-        self, spark, batch_a, batch_b
-    ):
-        import math
-        from collections import Counter
-
-        from etl_batch_spark.operators.freq import mg_merge, mg_partials, mg_report
-
-        support = 0.2
-        cap = math.ceil(1 / support) + 1
-        a = spark.createDataFrame([(f"k{k}",) for k in batch_a], "k string")
-        b = spark.createDataFrame([(f"k{k}",) for k in batch_b], "k string")
-        merged = mg_merge(
-            mg_partials(a, "k").unionByName(mg_partials(b, "k")), cap
-        )
-        rows = merged.collect()
-        assert len(rows) <= cap + 1  # bounded state
-        n = len(batch_a) + len(batch_b)
-        exact = Counter(f"k{k}" for k in batch_a + batch_b)
-        counters = {r["mg_key"]: r["mg_count"] for r in rows if r["mg_key"]}
-        total = sum(r["mg_count"] for r in rows if r["mg_key"] is None)
-        assert total == n
-        err = n // (cap + 1)
-        for k, c in counters.items():
-            assert c <= exact[k] <= c + err  # never over-counts, bounded under
-        report = {
-            r["mg_key"] for r in mg_report(merged, support, cap).collect()
-        }
-        thr = math.ceil(support * n)
-        assert {k for k, v in exact.items() if v >= thr} <= report
-
 
 class TestGlobalPrefixAggProperty:
     @settings(max_examples=8, deadline=None)

@@ -58,7 +58,8 @@ def test_daily_warehouse_flow(spark):
         [(1, "AUTO", 11.0), (2, None, 21.0), (3, "SHIP", 30.0)],
         "c_custkey long, seg string, bal double",
     )
-    good, bad = ex.split_valid(feed, [ex.not_null("seg")])
+    rule = ex.not_null("seg")
+    good, bad = feed.filter(~rule.violated), feed.filter(rule.violated)
     merged = scd2_merge(
         current, good, key="c_custkey", attrs=("seg", "bal"),
         effective_date="2026-03-02",

@@ -10,11 +10,59 @@ from etl_batch_spark import plans
 from etl_batch_spark.queries import QUERIES
 
 
+def _file_scans(nodes) -> list:
+    return [n for _, n in nodes if n.getClass().getSimpleName() == "FileSourceScanExec"]
+
+
+def pushed_filters(df) -> list[str]:
+    """All pushed-down data-source filters across the plan's file scans."""
+    return [
+        f.toString()
+        for scan in _file_scans(plans.walk(df))
+        for f in plans._seq(scan.pushedDownFilters())
+    ]
+
+
+def read_schemas(df) -> list[list[str]]:
+    """Column lists actually read by each file scan (pruning check)."""
+    return [list(scan.requiredSchema().fieldNames()) for scan in _file_scans(plans.walk(df))]
+
+
+def unpartitioned_windows(plan) -> int:
+    """Window and WindowGroupLimit nodes with NO partition spec: the
+    `WindowExec: No Partition Defined` single-task shape.  ``plan`` is a
+    DataFrame or its ``plans.walk``."""
+    nodes = plan if isinstance(plan, list) else plans.walk(plan)
+    return sum(
+        name in ("Window", "WindowGroupLimit") and node.partitionSpec().isEmpty()
+        for name, node in nodes
+    )
+
+
+def assert_filter_pushed(df, column: str) -> None:
+    filters = pushed_filters(df)
+    assert any(column in f for f in filters), f"no pushed filter on {column!r}; pushed: {filters}"
+
+
+def assert_broadcast(df, at_least: int = 1) -> None:
+    nodes = plans.walk(df)
+    n = plans.count_ops(nodes, "BroadcastHashJoin") + plans.count_ops(
+        nodes, "BroadcastNestedLoopJoin"
+    )
+    assert n >= at_least, f"expected ≥{at_least} broadcast joins, plan has {n}"
+
+
+def assert_columns_pruned(df, table_width: int) -> None:
+    """No scan reads all ``table_width`` columns (pruning active)."""
+    for cols in read_schemas(df):
+        assert len(cols) < table_width, f"scan reads {len(cols)} columns — pruning lost: {cols}"
+
+
 def test_q01_filter_pushed_and_columns_pruned(spark, sf_dir):
     df = QUERIES["q01_pricing_summary"].build(spark, sf_dir)
-    plans.assert_filter_pushed(df, "l_shipdate")
+    assert_filter_pushed(df, "l_shipdate")
     # lineitem has 11 columns; q01 needs 7
-    plans.assert_columns_pruned(df, table_width=11)
+    assert_columns_pruned(df, table_width=11)
 
 
 def test_plan_checks_see_what_explain_text_hides(spark, tmp_path):
@@ -26,7 +74,7 @@ def test_plan_checks_see_what_explain_text_hides(spark, tmp_path):
     from pyspark.sql import Window, functions as F
 
     w = spark.range(10).select(F.sum("id").over(Window.partitionBy()).alias("s"))
-    assert plans.unpartitioned_windows(w) == 1
+    assert unpartitioned_windows(w) == 1
 
     events = str(tmp_path / "events")
     spark.createDataFrame(
@@ -35,7 +83,7 @@ def test_plan_checks_see_what_explain_text_hides(spark, tmp_path):
     ev = spark.read.parquet(events).filter(
         F.col("event_type").isin("click", "purchase") & (F.col("value") > 1)
     )
-    filters = plans.pushed_filters(ev)
+    filters = pushed_filters(ev)
     assert "In(event_type, [click,purchase])" in filters, filters
     assert "GreaterThan(value,1.0)" in filters, filters
     sub = spark.sql(f"SELECT (SELECT max(value) FROM parquet.`{events}`) AS m")
@@ -46,7 +94,7 @@ def test_plan_checks_see_what_explain_text_hides(spark, tmp_path):
         [(1, [0.5, 1.5], 3)], "vec_id long, embedding array<float>, label int"
     ).write.parquet(embeddings)
     scan = spark.read.parquet(embeddings)
-    assert plans.read_schemas(scan) == [["vec_id", "embedding", "label"]]
+    assert read_schemas(scan) == [["vec_id", "embedding", "label"]]
 
     g = spark.range(100).groupBy((F.col("id") % 5).alias("k")).count()
     assert plans.count_ops(g, "Exchange") == 1
@@ -56,15 +104,15 @@ def test_plan_checks_see_what_explain_text_hides(spark, tmp_path):
 
 def test_q09_broadcasts_dimensions(spark, sf_dir):
     df = QUERIES["q09_multiway_join_revenue"].build(spark, sf_dir)
-    plans.assert_broadcast(df, at_least=2)  # nation + region at minimum
-    plans.assert_filter_pushed(df, "o_orderdate")
+    assert_broadcast(df, at_least=2)  # nation + region at minimum
+    assert_filter_pushed(df, "o_orderdate")
 
 
 def test_q02_point_lookup_pushdown(spark, sf_dir):
     df = QUERIES["q02_point_lookup"].build(spark, sf_dir)
     # the segment equality is pushable (upper() folds on literal side
     # is not — but IsNotNull + custkey arithmetic guard the scan)
-    assert plans.pushed_filters(df), "point lookup should push something to the scan"
+    assert pushed_filters(df), "point lookup should push something to the scan"
 
 
 def test_q12_topk_uses_take_ordered(spark, sf_dir):
@@ -86,14 +134,14 @@ def test_range_join_is_broadcast_nested_loop(spark, sf_dir):
 
 def test_q42_broadcasts_filtered_part_side(spark, sf_dir):
     df = QUERIES["q42_small_qty_revenue"].build(spark, sf_dir)
-    plans.assert_broadcast(df)
-    plans.assert_filter_pushed(df, "p_brand")
+    assert_broadcast(df)
+    assert_filter_pushed(df, "p_brand")
 
 
 def test_q45_broadcasts_region_nation(spark, sf_dir):
     df = QUERIES["q45_local_supplier_volume"].build(spark, sf_dir)
     assert plans.count_ops(df, "BroadcastHashJoin") >= 2
-    plans.assert_filter_pushed(df, "r_name")
+    assert_filter_pushed(df, "r_name")
 
 
 def test_q47_plans_semi_and_anti(spark, sf_dir):
@@ -112,7 +160,7 @@ def registry_plans(spark, sf_dir):
         nodes = plans.walk(q.build(spark, sf_dir))
         out[name] = {
             "cartesian": plans.count_ops(nodes, "CartesianProduct"),
-            "unpartitioned_windows": plans.unpartitioned_windows(nodes),
+            "unpartitioned_windows": unpartitioned_windows(nodes),
             "scans": plans.scan_counts(nodes),
         }
     return out
@@ -191,7 +239,7 @@ def test_tx14_bm25_topk_is_take_ordered(spark, sf_dir):
     df = QUERIES["tx14_bm25_search"].build(spark, sf_dir)
     assert plans.count_ops(df, "TakeOrderedAndProject") == 1
     # corpus stats + df join ride broadcasts, never a fact-side shuffle join
-    plans.assert_broadcast(df, at_least=2)
+    assert_broadcast(df, at_least=2)
 
 
 def test_et17_skew_profile_hot_keys_bounded(spark, sf_dir):
@@ -199,7 +247,7 @@ def test_et17_skew_profile_hot_keys_bounded(spark, sf_dir):
     p = plans.formatted_plan(df)
     assert plans.count_ops(df, "TakeOrderedAndProject") == 1  # top-5, not a sort
     assert "CartesianProduct" not in p  # one-row sides cross via broadcast
-    plans.assert_broadcast(df, at_least=1)
+    assert_broadcast(df, at_least=1)
 
 
 def test_ss09_centroids_broadcast_fact_stays_parallel(spark, sf_dir):
@@ -233,7 +281,7 @@ def test_q85_data_windows_are_partitioned(spark, sf_dir):
     # offset cumsums inside global_row_number, which run over the bounded
     # num_partitions-row count aggregates (the q92/et18-style exemption).
     df = QUERIES["q85_null_ordering"].build(spark, sf_dir)
-    assert plans.unpartitioned_windows(df) <= 2
+    assert unpartitioned_windows(df) <= 2
 
 
 def test_global_row_number_matches_window_semantics(spark, sf_dir):
@@ -314,7 +362,7 @@ def test_dd11_hot_span_scrub_is_linear(spark, sf_dir):
     # shuffle count (gram count, doc window, span/doc aggs, summary join)
     df = QUERIES["dd11_hot_span_scrub"].build(spark, sf_dir)
     assert plans.count_ops(df, "CartesianProduct") == 0
-    assert plans.unpartitioned_windows(df) == 0
+    assert unpartitioned_windows(df) == 0
     assert plans.count_ops(df, "Exchange") <= 6
 
 
@@ -357,7 +405,7 @@ def test_pipe03_composes_without_cartesian_or_python(spark, sf_dir):
     s = plans.formatted_plan(df)
     assert plans.count_ops(df, "CartesianProduct") == 0
     assert "BatchEvalPython" not in s  # all stages native expressions
-    assert plans.unpartitioned_windows(df) == 0
+    assert unpartitioned_windows(df) == 0
 
 
 def test_ss10_pq_searches_codes_via_broadcast_joins(spark, sf_dir):
@@ -370,13 +418,13 @@ def test_ss10_pq_searches_codes_via_broadcast_joins(spark, sf_dir):
     codebook appears nowhere as a join."""
     df = QUERIES["ss10_pq_ann"].build(spark, sf_dir)
     s = plans.formatted_plan(df)
-    plans.assert_broadcast(df, at_least=1)  # LUT join
+    assert_broadcast(df, at_least=1)  # LUT join
     assert plans.count_ops(df, "CartesianProduct") == 0
     assert "SortMergeJoin" not in s
     assert "BatchEvalPython" not in s
     # the encode argmin is a row-local expression, not a join
     assert "array_min" in s
-    assert plans.unpartitioned_windows(df) == 0  # top-k partitioned by query
+    assert unpartitioned_windows(df) == 0  # top-k partitioned by query
 
 
 def test_dd12_semantic_dedup_pairs_only_within_cluster(spark, sf_dir):
@@ -386,7 +434,7 @@ def test_dd12_semantic_dedup_pairs_only_within_cluster(spark, sf_dir):
     s = plans.formatted_plan(df)
     assert plans.count_ops(df, "CartesianProduct") == 0
     assert "BatchEvalPython" not in s
-    assert plans.unpartitioned_windows(df) == 0  # argmin windows keyed by id
+    assert unpartitioned_windows(df) == 0  # argmin windows keyed by id
 
 
 def test_sm11_shuffle_rank_has_no_global_window(spark, sf_dir):
@@ -433,7 +481,7 @@ def test_tx17_bigram_lm_all_native_no_cartesian(spark, sf_dir):
     # the only nested-loop input is the broadcast 1-row vocab scalar
     assert plans.count_ops(df, "CartesianProduct") == 0
     assert "BatchEvalPython" not in s
-    assert plans.unpartitioned_windows(df) == 0
+    assert unpartitioned_windows(df) == 0
 
 
 def test_tx19_recount_broadcasts_candidates_no_wide_shuffle(spark, sf_dir):
@@ -442,7 +490,7 @@ def test_tx19_recount_broadcasts_candidates_no_wide_shuffle(spark, sf_dir):
     cartesian; the final groupBy shuffles candidate keys only."""
     df = QUERIES["tx19_vocab_heavy_hitters"].build(spark, sf_dir)
     s = plans.formatted_plan(df)
-    plans.assert_broadcast(df, at_least=2)  # candidates + n_total
+    assert_broadcast(df, at_least=2)  # candidates + n_total
     assert plans.count_ops(df, "CartesianProduct") == 0
     assert "SortMergeJoin" not in s
 
@@ -453,7 +501,7 @@ def test_ss13_multitable_joins_all_broadcast(spark, sf_dir):
     probes the query side — not 3 unioned scans+joins; the dedup
     aggregate must not introduce a cartesian."""
     df = QUERIES["ss13_multitable_ann"].build(spark, sf_dir)
-    plans.assert_broadcast(df, at_least=1)
+    assert_broadcast(df, at_least=1)
     assert plans.count_ops(df, "BroadcastHashJoin") == 1
     assert plans.count_ops(df, "CartesianProduct") == 0
     assert plans.count_ops(df, "Scan parquet") <= 2  # corpus + query side
@@ -467,7 +515,7 @@ def test_q97_skyline_never_goes_quadratic(spark, sf_dir):
     s = plans.formatted_plan(df)
     assert plans.count_ops(df, "CartesianProduct") == 0
     assert "BroadcastNestedLoopJoin" not in s
-    assert plans.unpartitioned_windows(df) <= 1
+    assert unpartitioned_windows(df) <= 1
 
 
 def test_decode_image_both_modes_are_narrow_maps(spark):

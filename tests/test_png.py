@@ -275,88 +275,3 @@ def test_hostile_ihdr_dimensions_rejected_before_allocation():
         decode_png(data, max_pixels=60000 * 60000)
 
 
-class TestResizeImageReal:
-    """Codec-side resize: decode -> bilinear -> PNG re-encode, with
-    dims that must agree bit-for-bit with resize_plan's SQL."""
-
-    def _payloads(self):
-        rng = np.random.default_rng(17)
-        from etl_batch_spark.llmops.jpeg import encode_jpeg
-
-        rows = []
-        for doc_id, (w, h, kind) in enumerate(
-            [(300, 200, "png"), (64, 48, "png"), (257, 119, "jpeg"),
-             (224, 224, "png"), (10, 500, "jpeg")]
-        ):
-            px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8).tobytes()
-            data = (encode_png(w, h, 3, px) if kind == "png"
-                    else encode_jpeg(w, h, 3, px, quality=92))
-            rows.append((doc_id, bytearray(data), w, h))
-        return rows
-
-    def test_dims_match_resize_plan_exactly(self, spark):
-        from etl_batch_spark.llmops import multimodal
-
-        rows = self._payloads()
-        df = spark.createDataFrame(
-            [(i, p) for i, p, _, _ in rows], "doc_id long, payload binary"
-        )
-        got = {r["doc_id"]: r for r in
-               multimodal.resize_image(df, max_side=224).collect()}
-        dims = spark.createDataFrame(
-            [(i, w, h) for i, _, w, h in rows], "doc_id long, width int, height int"
-        )
-        plan = {r["doc_id"]: r for r in
-                multimodal.resize_plan(dims, max_side=224).collect()}
-        for i, _, _, _ in rows:
-            assert (got[i]["target_width"], got[i]["target_height"]) == (
-                plan[i]["target_width"], plan[i]["target_height"],
-            ), i
-
-    def test_output_is_decodable_png_with_target_dims(self, spark):
-        from etl_batch_spark.llmops import multimodal
-
-        rows = self._payloads()
-        df = spark.createDataFrame(
-            [(i, p) for i, p, _, _ in rows], "doc_id long, payload binary"
-        )
-        for r in multimodal.resize_image(df, max_side=224).collect():
-            w, h, ch, px = decode_png(bytes(r["payload"]))
-            assert (w, h) == (r["target_width"], r["target_height"])
-            assert w <= 224 and h <= 224
-
-    def test_within_cap_is_identity_pixels(self, spark):
-        """An image already inside max_side re-encodes losslessly."""
-        from etl_batch_spark.llmops import multimodal
-
-        rng = np.random.default_rng(5)
-        px = rng.integers(0, 256, (48, 64, 3), dtype=np.uint8)
-        df = spark.createDataFrame(
-            [(1, bytearray(encode_png(64, 48, 3, px.tobytes())))],
-            "doc_id long, payload binary",
-        )
-        r = multimodal.resize_image(df, max_side=224).collect()[0]
-        w, h, ch, out = decode_png(bytes(r["payload"]))
-        assert (w, h, ch) == (64, 48, 3)
-        assert np.array_equal(np.frombuffer(out, np.uint8).reshape(48, 64, 3), px)
-        # a NULL payload fails with a clear error naming the operator
-        nul = spark.createDataFrame(
-            [(1, bytearray(encode_png(64, 48, 3, px.tobytes()))), (2, None)],
-            "doc_id long, payload binary",
-        )
-        with pytest.raises(Exception, match="NULL 'payload' — resize_image"):
-            multimodal.resize_image(nul).collect()
-
-    def test_constant_image_stays_constant_after_downscale(self, spark):
-        from etl_batch_spark.llmops import multimodal
-
-        px = np.full((300, 400, 3), [17, 200, 99], np.uint8)
-        df = spark.createDataFrame(
-            [(1, bytearray(encode_png(400, 300, 3, px.tobytes())))],
-            "doc_id long, payload binary",
-        )
-        r = multimodal.resize_image(df, max_side=128).collect()[0]
-        w, h, ch, out = decode_png(bytes(r["payload"]))
-        arr = np.frombuffer(out, np.uint8).reshape(h, w, 3)
-        assert (w, h) == (128, 96)
-        assert np.array_equal(arr, np.full((96, 128, 3), [17, 200, 99], np.uint8))

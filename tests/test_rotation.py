@@ -40,12 +40,18 @@ def test_new_queries_land_in_the_middle_tier():
     assert len(DRIVER_WINDOW) + len(middle) + len(green) == len(names)
 
 
+# Queries with no SQL-expressible oracle whose single rows-only driver
+# slot is deliberate (the driver records a weaker rows-count check; the
+# judge sees which).  Empty since round 5: q38 was re-expressed on the
+# portable sketches (the et07 pattern) and now has a real value-hash
+# oracle.
+ROWS_ONLY_OK: frozenset[str] = frozenset()
+
+
 def test_every_window_query_has_an_oracle_or_documented_rows_only():
     # the point of the window is driver-green rows; rows-only entries
     # burn a slot for a weaker check, so they must be deliberate —
-    # listed in rotation.ROWS_ONLY_OK with a reason
-    from etl_batch_spark.queries.rotation import ROWS_ONLY_OK
-
+    # listed in ROWS_ONLY_OK above with a reason
     rows_only = [n for n in DRIVER_WINDOW if QUERIES[n].oracle is None]
     assert set(rows_only) <= ROWS_ONLY_OK
 

@@ -1,138 +1,24 @@
-"""IO layer tests: partitioned writes, CSV corrupt-record capture,
-loader-path resolution."""
+"""Sources tests: z-order clustering keys and the transaction-log
+table (``TxTable``)."""
 
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from etl_batch_spark.catalog import DATA_TABLES, load_table
-from etl_batch_spark.orchestration import ControlStore
-from etl_batch_spark.sources import (
-    read_csv,
-    read_parquet,
-    resolve_loader_paths,
-    write_partitioned,
-)
+from etl_batch_spark.catalog import load_table
 
 
-def test_write_partitioned_by_day_prunes(spark, sf_dir, tmp_path):
-    events = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "events_by_day")
-    write_partitioned(events, out, day_column="ts")
-    # physical layout: day=YYYY-MM-DD directories
-    days = [d for d in os.listdir(out) if d.startswith("day=")]
-    assert len(days) >= 2
-    back = spark.read.parquet(out)
-    one_day = sorted(days)[0].split("=", 1)[1]
-    pruned = back.filter(F.col("day") == one_day)
-    # partition filter must prune: selected files < total files
-    assert pruned.count() > 0
-    assert back.count() == events.count()
+def _zordered_files(spark, df, path, cols, *, n_files, equal_frequency=False):
+    """Live parquet files of a TxTable holding ``df`` after a z-order
+    compaction on ``cols`` (the engine's one z-order write path)."""
+    from etl_batch_spark.sources.txlog import TxTable
 
-
-def test_write_partitioned_bounds_file_count(spark, sf_dir, tmp_path):
-    events = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "bounded")
-    write_partitioned(events, out, day_column="ts", files_per_partition=1)
-    for d in os.listdir(out):
-        if d.startswith("day="):
-            files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
-            assert len(files) == 1, f"{d} has {files}"
-
-
-def test_roundtrip_with_schema(spark, sf_dir, tmp_path):
-    nation = load_table(spark, sf_dir, "nation")
-    out = str(tmp_path / "nation_copy")
-    write_partitioned(nation, out)
-    back = read_parquet(spark, out, DATA_TABLES["nation"])
-    assert back.count() == nation.count()
-    assert back.schema == DATA_TABLES["nation"]
-
-
-def test_read_csv_captures_corrupt_records(spark, tmp_path):
-    p = tmp_path / "in.csv"
-    p.write_text("id,amount\n1,10.5\n2,not_a_number\n3,7.25\n")
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("amount", T.DoubleType())]
-    )
-    df = read_csv(spark, str(p), schema).cache()
-    ok = df.filter(F.col("_corrupt_record").isNull())
-    bad = df.filter(F.col("_corrupt_record").isNotNull())
-    assert ok.count() == 2
-    assert bad.count() == 1
-    assert "not_a_number" in bad.first()["_corrupt_record"]
-
-
-def test_resolve_loader_paths(spark):
-    store = ControlStore()
-    store.append("tmp_run_loader", {"batch_name": "B", "file_name": "x_${DAY}.csv", "file_seq": 1})
-    store.append("tmp_run_loader", {"batch_name": "B", "file_name": "y_${DAY}.csv", "file_seq": 2})
-    paths = resolve_loader_paths(store, "B", "MONDAY", base_dir="/data/in")
-    assert paths == ["/data/in/x_MONDAY.csv", "/data/in/y_MONDAY.csv"]
-    assert resolve_loader_paths(store, "MISSING", "MONDAY") == []
-
-
-class TestCorpusIngestion:
-    def test_text_corpus_line_mode(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import read_text_corpus
-
-        (tmp_path / "a.txt").write_text("first doc\nsecond doc\n\n  \n")
-        (tmp_path / "b.txt").write_text("third doc\n")
-        docs = read_text_corpus(spark, str(tmp_path))
-        rows = docs.collect()
-        assert {r["text"] for r in rows} == {"first doc", "second doc", "third doc"}
-        assert {r["source"] for r in rows} == {"a.txt", "b.txt"}
-        # ids deterministic across re-reads
-        again = {r["doc_id"] for r in read_text_corpus(spark, str(tmp_path)).collect()}
-        assert {r["doc_id"] for r in rows} == again
-        assert len(again) == 3
-
-    def test_text_corpus_whole_files(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import read_text_corpus
-
-        (tmp_path / "a.txt").write_text("line one\nline two\n")
-        docs = read_text_corpus(spark, str(tmp_path), whole_files=True).collect()
-        assert len(docs) == 1
-        assert "line one" in docs[0]["text"] and "line two" in docs[0]["text"]
-
-    def test_jsonl_documents_with_corrupt_capture(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import read_jsonl_documents
-
-        (tmp_path / "d.jsonl").write_text(
-            '{"text": "good doc", "lang": "en"}\n'
-            "this is not json\n"
-            '{"text": "another doc", "lang": "fr"}\n'
-            '{"lang": "de"}\n'  # missing text -> dropped
-        )
-        docs = read_jsonl_documents(
-            spark, str(tmp_path), keep_fields=["lang"]
-        ).collect()
-        assert {(r["text"], r["lang"]) for r in docs} == {
-            ("good doc", "en"), ("another doc", "fr"),
-        }
-
-
-def test_orc_roundtrip_pushdown(spark, tmp_path):
-    from etl_batch_spark import plans
-    from etl_batch_spark.sources.io import read_orc, write_orc
-    from pyspark.sql import types as T
-
-    df = spark.range(1_000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("grp")
-    )
-    path = str(tmp_path / "orc_t")
-    write_orc(df, path)
-    schema = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("grp", T.LongType())]
-    )
-    back = read_orc(spark, path, schema).filter(F.col("grp") == 3).select("k")
-    assert back.count() == df.filter(F.col("grp") == 3).count()
-    # filter reaches the ORC scan
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan or "pushedFilters" in plan
+    t = TxTable(spark, path)
+    t.append(df)
+    t.compact(target_files=n_files, zorder_cols=cols, equal_frequency=equal_frequency)
+    return [os.path.join(t.path, f) for f in t._active_files()]  # noqa: SLF001
 
 
 class TestZorder:
@@ -159,13 +45,12 @@ class TestZorder:
             zorder_key(df, ["x"], bits=63)
 
     @staticmethod
-    def _file_envelopes(path, cols):
+    def _file_envelopes(files, cols):
         """Per-file footer min/max envelope over ``cols``."""
         import pyarrow.parquet as pq
-        import glob as g
 
         out = []
-        for f in g.glob(f"{path}/*.parquet"):
+        for f in files:
             md = pq.ParquetFile(f).metadata
             names = md.schema.to_arrow_schema().names
             lo, hi = {}, {}
@@ -181,16 +66,15 @@ class TestZorder:
         return out
 
     def test_zorder_tightens_file_envelopes(self, spark, sf_dir, tmp_path):
-        from etl_batch_spark.sources.io import write_zordered
+        import glob as g
 
         li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_quantity")
-        plain, zord = str(tmp_path / "plain"), str(tmp_path / "zord")
+        plain = str(tmp_path / "plain")
         li.repartition(8).write.parquet(plain)
-        write_zordered(li, zord, ["l_partkey", "l_suppkey"], n_files=8)
-
         cols = ["l_partkey", "l_suppkey"]
+        zord = _zordered_files(spark, li, str(tmp_path / "zord"), cols, n_files=8)
 
-        def area_sum(path):
+        def area_sum(files):
             # sum of per-file bounding-box areas: a random layout's files
             # each span ~the whole (partkey x suppkey) rectangle, so the
             # sum is ~n_files x full area; z-ordered files tile the space
@@ -199,254 +83,26 @@ class TestZorder:
             # repartitionByRange sample seed varies with session RDD ids).
             return sum(
                 (hi[cols[0]] - lo[cols[0]] + 1) * (hi[cols[1]] - lo[cols[1]] + 1)
-                for lo, hi in self._file_envelopes(path, cols)
+                for lo, hi in self._file_envelopes(files, cols)
             )
 
-        plain_area, zord_area = area_sum(plain), area_sum(zord)
+        plain_area = area_sum(g.glob(f"{plain}/*.parquet"))
+        zord_area = area_sum(zord)
         assert len(self._file_envelopes(zord, cols)) == 8
         assert zord_area < plain_area / 2
 
         # layout change must not change content
-        got = spark.read.parquet(zord)
+        got = spark.read.parquet(*zord)
         assert got.count() == li.count()
         assert got.agg(F.sum("l_quantity")).first()[0] == li.agg(F.sum("l_quantity")).first()[0]
 
 
-class TestBinaryFiles:
-    def test_reads_whole_files_with_metadata(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import read_binary_files
-
-        (tmp_path / "a.bin").write_bytes(b"\x00\x01payload-a")
-        (tmp_path / "b.bin").write_bytes(b"payload-b")
-        (tmp_path / "skip.txt").write_bytes(b"nope")
-        df = read_binary_files(spark, str(tmp_path), glob="*.bin")
-        rows = {r["path"].split("/")[-1]: r for r in df.collect()}
-        assert set(rows) == {"a.bin", "b.bin"}
-        assert bytes(rows["a.bin"]["content"]) == b"\x00\x01payload-a"
-        assert rows["b.bin"]["length"] == 9
-
-    def test_metadata_projection_prunes_content(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import read_binary_files
-
-        (tmp_path / "a.bin").write_bytes(b"x" * 100)
-        df = read_binary_files(spark, str(tmp_path)).select("path", "length")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "content" not in plan
-
-
-class TestObserveRules:
-    def test_metrics_ride_the_action(self, spark):
-        from etl_batch_spark.operators import expectations as ex
-
-        df = spark.createDataFrame(
-            [(1, "a", 5.0), (2, None, 50.0), (3, None, -1.0)],
-            "k long, name string, v double",
-        )
-        observed, obs = ex.observe_rules(
-            df, [ex.not_null("name"), ex.in_range("v", lo=0.0, hi=10.0)]
-        )
-        observed.write.format("noop").mode("overwrite").save()
-        got = obs.get
-        assert got["n_rows"] == 3
-        assert got["not_null(name)"] == 2
-        assert got["in_range(v)"] == 2
-
-    def test_rejects_empty_rules(self, spark):
-        from etl_batch_spark.operators import expectations as ex
-
-        df = spark.createDataFrame([(1,)], "k long")
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            ex.observe_rules(df, [])
-
-
-class TestFixedWidth:
-    def test_slices_trims_casts_and_nulls(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import read_fixed_width
-
-        lines = [
-            "001Widget    00125.50",
-            "002          00003.25",   # blank name -> NULL
-            "003Gadget       19.00",   # short-padded number still parses
-        ]
-        p = tmp_path / "items.dat"
-        p.write_text("\n".join(lines) + "\n")
-        df = read_fixed_width(
-            spark,
-            str(p),
-            [("item_id", 1, 3, "int"), ("name", 4, 10, "string"), ("price", 14, 8, "double")],
-        )
-        rows = {r["item_id"]: r for r in df.collect()}
-        assert rows[1]["name"] == "Widget" and rows[1]["price"] == 125.5
-        assert rows[2]["name"] is None and rows[2]["price"] == 3.25
-        assert rows[3]["price"] == 19.0
-
-    def test_no_shuffle(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import read_fixed_width
-
-        p = tmp_path / "x.dat"
-        p.write_text("1A\n")
-        df = read_fixed_width(spark, str(p), [("k", 1, 1, "int"), ("v", 2, 1, "string")])
-        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
-
-
-class TestDynamicPartitionOverwrite:
-    def test_only_touched_partitions_replaced(self, spark, tmp_path):
-        import os
-
-        from etl_batch_spark.sources.io import overwrite_dynamic_partitions
-
-        path = str(tmp_path / "t")
-        base = spark.createDataFrame(
-            [("2026-01-01", 1, "a"), ("2026-01-02", 2, "b"), ("2026-01-03", 3, "c")],
-            "day string, k long, v string",
-        )
-        overwrite_dynamic_partitions(base, path, partition_by=["day"])
-
-        def mtimes():
-            out = {}
-            for d in os.listdir(path):
-                if d.startswith("day="):
-                    full = os.path.join(path, d)
-                    out[d] = max(os.path.getmtime(os.path.join(full, f))
-                                 for f in os.listdir(full) if f.endswith(".parquet"))
-            return out
-
-        before = mtimes()
-        # reload day 2 only, with different content
-        patch = spark.createDataFrame(
-            [("2026-01-02", 20, "B"), ("2026-01-02", 21, "B2")],
-            "day string, k long, v string",
-        )
-        overwrite_dynamic_partitions(patch, path, partition_by=["day"])
-        after = mtimes()
-        assert after["day=2026-01-01"] == before["day=2026-01-01"]
-        assert after["day=2026-01-03"] == before["day=2026-01-03"]
-
-        got = {(str(r["day"]), r["k"]) for r in spark.read.parquet(path).collect()}
-        assert got == {("2026-01-01", 1), ("2026-01-02", 20), ("2026-01-02", 21),
-                       ("2026-01-03", 3)}
-
-
-class TestCalendarDataSource:
-    def test_generates_partitioned_date_spine(self, spark):
-        from etl_batch_spark.sources.calendar_source import CalendarDataSource
-
-        spark.dataSource.register(CalendarDataSource)
-        df = (
-            spark.read.format("calendar")
-            .option("start", "2025-12-29")
-            .option("end", "2026-01-04")
-            .load()
-        )
-        rows = sorted(df.collect(), key=lambda r: r["day"])
-        assert len(rows) == 7
-        assert str(rows[0]["day"]) == "2025-12-29"
-        assert rows[0]["dow"] == 1 and rows[0]["iso_week"] == 1  # ISO week of 2026
-        assert rows[-1]["is_weekend"] is True
-        # year boundary -> two input partitions
-        assert df.rdd.getNumPartitions() == 2
-
-    def test_agrees_with_sql_sequence_spine(self, spark):
-        from pyspark.sql import functions as F
-
-        from etl_batch_spark.sources.calendar_source import CalendarDataSource
-
-        spark.dataSource.register(CalendarDataSource)
-        src = (
-            spark.read.format("calendar")
-            .option("start", "2026-02-25").option("end", "2026-03-05")
-            .load().select("day", "quarter", "iso_week")
-        )
-        sql = spark.sql(
-            "SELECT explode(sequence(DATE'2026-02-25', DATE'2026-03-05')) AS day"
-        ).select(
-            "day", F.quarter("day").alias("quarter"), F.weekofyear("day").alias("iso_week")
-        )
-        assert sorted(map(tuple, src.collect())) == sorted(map(tuple, sql.collect()))
-
-    def test_rejects_inverted_range(self, spark):
-        from etl_batch_spark.sources.calendar_source import CalendarDataSource
-
-        spark.dataSource.register(CalendarDataSource)
-        import pytest as _pytest
-
-        with _pytest.raises(Exception):
-            (spark.read.format("calendar")
-             .option("start", "2026-01-02").option("end", "2026-01-01")
-             .load().collect())
-
-
-class TestMissingPartitions:
-    def test_finds_gaps_in_partition_listing(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import missing_partitions, write_partitioned
-
-        df = spark.createDataFrame(
-            [("2026-01-01 01:00:00", 1), ("2026-01-02 01:00:00", 2),
-             ("2026-01-04 01:00:00", 4)],
-            "ts string, k long",
-        ).select(F.col("ts").cast("timestamp").alias("ts"), "k")
-        out = str(tmp_path / "t")
-        write_partitioned(df, out, day_column="ts")
-        got = missing_partitions(spark, out, start="2026-01-01", end="2026-01-05")
-        assert got == ["2026-01-03", "2026-01-05"]
-
-    def test_empty_table_returns_full_spine(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import missing_partitions
-
-        got = missing_partitions(
-            spark, str(tmp_path / "nope"), start="2026-02-01", end="2026-02-03"
-        )
-        assert got == ["2026-02-01", "2026-02-02", "2026-02-03"]
-
-
-class TestRangeSortedWrite:
-    def test_envelopes_disjoint_and_prunable(self, spark, tmp_path):
-        import glob as g
-
-        import pyarrow.parquet as pq
-
-        from etl_batch_spark.sources.io import write_range_sorted
-
-        df = spark.range(10_000).select(
-            (F.col("id") * 37 % 10_000).alias("k"), F.col("id").alias("v")
-        )
-        path = str(tmp_path / "sorted")
-        write_range_sorted(df, path, sort_cols=["k"], num_files=4)
-
-        spans = []
-        for f in g.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            names = md.schema.to_arrow_schema().names
-            ki = names.index("k")
-            lo = min(md.row_group(rg).column(ki).statistics.min for rg in range(md.num_row_groups))
-            hi = max(md.row_group(rg).column(ki).statistics.max for rg in range(md.num_row_groups))
-            spans.append((lo, hi))
-        spans.sort()
-        assert len(spans) == 4
-        for (a_lo, a_hi), (b_lo, b_hi) in zip(spans, spans[1:]):
-            assert a_hi < b_lo, f"overlap: {spans}"
-        # and the data round-trips
-        assert spark.read.parquet(path).count() == 10_000
-
-    def test_rejects_empty_sort_cols(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from etl_batch_spark.sources.io import write_range_sorted
-
-        with _pytest.raises(ValueError):
-            write_range_sorted(spark.range(1), str(tmp_path / "x"), sort_cols=[])
-
-
 class TestZorderEqualFrequency:
-    def _envelopes(self, path, col):
-        import glob as g
-
+    def _envelopes(self, files, col):
         import pyarrow.parquet as pq
 
         spans = []
-        for f in g.glob(f"{path}/*.parquet"):
+        for f in files:
             md = pq.ParquetFile(f).metadata
             names = md.schema.to_arrow_schema().names
             ci = names.index(col)
@@ -456,8 +112,6 @@ class TestZorderEqualFrequency:
         return spans
 
     def test_outlier_does_not_starve_bucketing(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import write_zordered
-
         # mass in [0, 10000), one outlier at 1e9: linear min/max scaling
         # collapses the whole mass into bucket 0 (no k1 clustering at
         # all); quantile buckets ignore the outlier's leverage
@@ -467,10 +121,10 @@ class TestZorderEqualFrequency:
             .alias("k1"),
             (F.col("id") * 91 % 10_000).alias("k2"),
         )
-        lin, eqf = str(tmp_path / "lin"), str(tmp_path / "eqf")
-        write_zordered(df, lin, ["k1", "k2"], bits=8, n_files=16)
-        write_zordered(
-            df, eqf, ["k1", "k2"], bits=8, n_files=16, equal_frequency=True
+        lin = _zordered_files(spark, df, str(tmp_path / "lin"), ["k1", "k2"], n_files=16)
+        eqf = _zordered_files(
+            spark, df, str(tmp_path / "eqf"), ["k1", "k2"], n_files=16,
+            equal_frequency=True,
         )
 
         def median_width(spans):
@@ -482,20 +136,20 @@ class TestZorderEqualFrequency:
         assert eqf_w < lin_w / 2, f"eqf {eqf_w} vs linear {lin_w}"
         assert eqf_w < 6_000  # real clustering of the mass region
         # data round-trips intact
-        assert spark.read.parquet(eqf).count() == 20_000
+        assert spark.read.parquet(*eqf).count() == 20_000
 
     def test_equal_frequency_still_prunes_both_columns(self, spark, tmp_path):
-        from etl_batch_spark.sources.io import write_zordered
-
         df = spark.range(20_000).select(
             (F.col("id") * 37 % 10_000).alias("k1"),
             (F.col("id") * 91 % 10_000).alias("k2"),
         )
-        path = str(tmp_path / "z")
-        write_zordered(df, path, ["k1", "k2"], bits=8, n_files=16, equal_frequency=True)
+        files = _zordered_files(
+            spark, df, str(tmp_path / "z"), ["k1", "k2"], n_files=16,
+            equal_frequency=True,
+        )
 
         for col in ("k1", "k2"):
-            spans = self._envelopes(path, col)
+            spans = self._envelopes(files, col)
             mean_w = sum(hi - lo for lo, hi in spans) / len(spans)
             # 16 files over a 2-d curve ≈ 4 splits per dimension
             assert mean_w < 0.6 * 10_000, f"{col}: envelope {mean_w}"
@@ -1043,6 +697,35 @@ class TestTxTable:
         assert sorted(entry.removed) == sorted(added[1] + added[2])
         assert sorted(map(tuple, t.read().collect())) == expected
         assert entry.n_rows == t._scan(entry.added, None).count()  # noqa: SLF001
+
+    def test_merge_bounds_aggregate_runs_only_where_it_could_prune(
+        self, spark, tmp_path
+    ):
+        """The bounds aggregate re-runs the updates' plan, so a target
+        with fewer than two enveloped files (nothing to prune) skips it;
+        with two it runs once and prunes."""
+        def counted(df, calls):
+            real = df.agg
+            df.agg = lambda *cols: calls.append(cols) or real(*cols)
+            return df
+
+        one = self._table(spark, tmp_path / "one")
+        one.append(spark.createDataFrame([(0, "x"), (9, "x")], "k int, v string")
+                   .coalesce(1))
+        calls: list = []
+        one.merge(counted(spark.createDataFrame([(9, "U")], "k int, v string"),
+                          calls), ["k"])
+        assert calls == []
+        assert sorted(map(tuple, one.read().collect())) == [(0, "x"), (9, "U")]
+
+        two = self._table(spark, tmp_path / "two")
+        added = self._keyed_appends(spark, two, "k int, v string",
+                                    [[(0, "x")], [(9, "x")]])
+        v = two.merge(counted(spark.createDataFrame([(9, "U")], "k int, v string"),
+                              calls), ["k"])
+        assert len(calls) == 1
+        assert two.versions()[v].removed == added[1]
+        assert sorted(map(tuple, two.read().collect())) == [(0, "x"), (9, "U")]
 
     def test_merge_crash_at_commit_keeps_head_and_rerun_converges(
         self, spark, tmp_path, monkeypatch
