@@ -167,7 +167,7 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
         return False
 
 
-def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition a narrow input so per-row-heavy stages (tokenize,
     shingle, hash, vector folds) use every core.
 
@@ -178,7 +178,7 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     of the scan runs on one core regardless of cluster size.
     """
     spark = df.sparkSession
-    target = min_parallelism or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     # probe with inputFiles(), not rdd.getNumPartitions(): the RDD probe
     # forces a full plan->RDD compile (~1 s of driver time per query),
     # while file listing is metadata-only.  Files under-count partitions

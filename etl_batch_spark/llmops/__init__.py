@@ -12,7 +12,7 @@ these over the fixture tables.
 - ``sampling``   — reproducible hash / stratified training-mix sampling
 - ``multimodal`` — opaque binary columns with typed metadata and
   Arrow-batched decode/transform plumbing (real pure-stdlib codecs:
-  png/jpeg/gif/bmp/pnm images, wav audio, mjpeg-avi video)
+  png/jpeg/gif/bmp/pnm images, wav audio)
 - ``mediainfo``  — header-only media triage (container/dims/duration
   probe in front of every decode stage)
 """

@@ -14,9 +14,9 @@ whole-stage codegen, zero Python UDFs):
 
 Scale notes: every pairwise operator funnels through an equi-join key
 (shingle, band, signature position), so shuffles are linear in corpus
-size.  For production corpora add a document-frequency cap on shingles
-(drop shingles appearing in > df_cap docs) to bound hot-key fanout —
-exposed as ``df_cap`` on :func:`jaccard_pairs`.
+size.  For production corpora a document-frequency cap on shingles
+(drop shingles appearing in more than N docs) would bound hot-key
+fanout; no query here needs one.
 
 Hashes are md5-derived (not Spark's murmur ``hash()``) so results are
 engine-portable and stable across Spark versions.
@@ -57,10 +57,7 @@ def shingle_array(toks_expr: str = "toks", n: int = 3) -> Column:
     return F.expr(SHINGLES_EXPR.format(toks=toks_expr, n=n, parts=parts))
 
 
-def shingle_sets(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
-    toks_col: "str | None" = None,
-) -> DataFrame:
+def shingle_sets(df: DataFrame, *, n: int = 3, toks_col: "str | None" = None) -> DataFrame:
     """(id, sh: array<string>) — the *distinct* shingle set per document,
     built entirely per-row (tokenize → shingle → array_distinct).  No
     shuffle: dedup within a document never needs to leave the row, so the
@@ -71,10 +68,10 @@ def shingle_sets(
     the tokenize pass and the fan-out here."""
     if toks_col is not None:
         return df.select(
-            id_col, F.array_distinct(shingle_array(toks_col, n)).alias("sh")
+            "doc_id", F.array_distinct(shingle_array(toks_col, n)).alias("sh")
         )
-    return fan_out(df).withColumn("toks", tokens(text_col)).select(
-        id_col, F.array_distinct(shingle_array("toks", n)).alias("sh")
+    return fan_out(df).withColumn("toks", tokens("text")).select(
+        "doc_id", F.array_distinct(shingle_array("toks", n)).alias("sh")
     )
 
 
@@ -82,13 +79,13 @@ def shingle_sets(
 # exact + fingerprint
 # ---------------------------------------------------------------------------
 
-def exact_groups(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_groups(df: DataFrame) -> DataFrame:
     """Group identical content: (content_hash, keeper_doc_id, n_copies).
     Hash first — grouping 100 TB of raw text by the text itself would
     shuffle the full payload; md5 shuffles 32 bytes/row."""
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(F.min(id_col).alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
+        df.groupBy(F.md5(F.col("text")).alias("content_hash"))
+        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
@@ -96,19 +93,19 @@ def normalized_fingerprint(text_col: str = "text") -> Column:
     return F.md5(F.trim(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " ")))
 
 
-def fingerprint_groups(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprint_groups(df: DataFrame) -> DataFrame:
     return (
-        df.groupBy(normalized_fingerprint(text_col).alias("fingerprint"))
-        .agg(F.min(id_col).alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
+        df.groupBy(normalized_fingerprint("text").alias("fingerprint"))
+        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
-def drop_exact_duplicates(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def drop_exact_duplicates(df: DataFrame) -> DataFrame:
     """Return the deduplicated corpus (keeper row per identical text)."""
-    keepers = exact_groups(df, id_col=id_col, text_col=text_col).select(
-        F.col("keeper_doc_id").alias(id_col)
+    keepers = exact_groups(df).select(
+        F.col("keeper_doc_id").alias("doc_id")
     )
-    return df.join(keepers, id_col, "left_semi")
+    return df.join(keepers, "doc_id", "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -137,107 +134,54 @@ def _pairs_from_groups(df: DataFrame, group_cols: list[str], id_col: str) -> Dat
     return groups.select(F.explode(pairs).alias("p")).select("p.doc_a", "p.doc_b")
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    df_cap: int | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b, jaccard) for pairs with shingle-set Jaccard ≥
-    threshold.  ``df_cap`` drops shingles occurring in more than that
-    many documents (hot-key guard for web-scale corpora).
+def _shared_shingles(df: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_a, n_b, n_common) for every document pair that
+    shares a shingle, with both set sizes and the shared count.
 
-    Shape (df_cap=None): each exploded (id, shingle) row carries the
-    document's set size, and the per-shingle ``collect_set`` collects
-    (id, n_sh) structs — so the pair explode already knows both set
-    sizes and the Jaccard needs **no size joins**: two shuffles total
-    (by shingle, then by pair), versus four (plus a persist) for the
-    join-back formulation.  With ``df_cap`` sizes must count *post-cap*
-    shingles, so the capped path re-aggregates sizes and joins them."""
-    ss = shingle_sets(df, id_col=id_col, text_col=text_col, n=n)
-    jac = F.col("n_common").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    out = ["doc_a", "doc_b", F.round(jac, 4).alias("jaccard")]
-    if df_cap is None:
-        sh = ss.select(
-            F.col(id_col), F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle")
-        )
-        groups = (
-            sh.groupBy("shingle")
-            .agg(F.array_sort(F.collect_set(F.struct(id_col, "n_sh"))).alias("ds"))
-            .filter(F.size("ds") >= 2)
-        )
-        pairs = F.expr(
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds) - i - 1), y -> "
-            f"struct(x.{id_col} AS doc_a, x.n_sh AS n_a, y.{id_col} AS doc_b, y.n_sh AS n_b))))"
-        )
-        common = (
-            groups.select(F.explode(pairs).alias("p"))
-            .select("p.*")
-            .groupBy("doc_a", "doc_b", "n_a", "n_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        return common.filter(jac >= threshold).select(*out)
-    # localCheckpoint, not persist: the exploded shingle table is the
-    # job's largest intermediate and a bare persist() is never unpersisted
-    # — it would pin executor storage for the session across calls
-    sh = ss.select(id_col, F.explode("sh").alias("shingle")).localCheckpoint(eager=True)
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= df_cap)
-        .select("shingle")
+    Shape: each exploded (id, shingle) row carries the document's set
+    size, and the per-shingle ``collect_set`` collects (id, n_sh)
+    structs — so the pair explode already knows both set sizes and
+    needs **no size joins**: two shuffles total (by shingle, then by
+    pair), versus four (plus a persist) for the join-back formulation."""
+    sh = shingle_sets(df).select(
+        F.col("doc_id"), F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle")
     )
-    capped = sh.join(rare, "shingle", "left_semi")
-    sizes = capped.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    common = (
-        _pairs_from_groups(capped, ["shingle"], id_col)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return common.join(sa, "doc_a").join(sb, "doc_b").filter(jac >= threshold).select(*out)
-
-
-def containment_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """(doc_a, doc_b, containment) where containment = |A∩B| / min(|A|,|B|).
-
-    Jaccard under-scores subset relations (a document embedded verbatim
-    in a much longer one scores |A|/|B| ≈ 0); containment normalizes by
-    the *smaller* set, so quote-inclusion and boilerplate-wrapping dups
-    score ~1.0.  Same two-shuffle shape as :func:`jaccard_pairs`
-    (sizes ride the shingle explode — no size join-back)."""
-    ss = shingle_sets(df, id_col=id_col, text_col=text_col, n=n)
-    cont = F.col("n_common").cast("double") / F.least("n_a", "n_b")
-    sh = ss.select(F.col(id_col), F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle"))
     groups = (
         sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_set(F.struct(id_col, "n_sh"))).alias("ds"))
+        .agg(F.array_sort(F.collect_set(F.struct("doc_id", "n_sh"))).alias("ds"))
         .filter(F.size("ds") >= 2)
     )
     pairs = F.expr(
         "flatten(transform(ds, (x, i) -> "
         "transform(slice(ds, i + 2, size(ds) - i - 1), y -> "
-        f"struct(x.{id_col} AS doc_a, x.n_sh AS n_a, y.{id_col} AS doc_b, y.n_sh AS n_b))))"
+        "struct(x.doc_id AS doc_a, x.n_sh AS n_a, y.doc_id AS doc_b, y.n_sh AS n_b))))"
     )
-    common = (
+    return (
         groups.select(F.explode(pairs).alias("p"))
         .select("p.*")
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    return common.filter(cont >= threshold).select(
+
+
+def jaccard_pairs(df: DataFrame, *, threshold: float = 0.8) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for pairs with shingle-set Jaccard ≥
+    threshold."""
+    jac = F.col("n_common").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    return _shared_shingles(df).filter(jac >= threshold).select(
+        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
+    )
+
+
+def containment_pairs(df: DataFrame, *, threshold: float = 0.5) -> DataFrame:
+    """(doc_a, doc_b, containment) where containment = |A∩B| / min(|A|,|B|).
+
+    Jaccard under-scores subset relations (a document embedded verbatim
+    in a much longer one scores |A|/|B| ≈ 0); containment normalizes by
+    the *smaller* set, so quote-inclusion and boilerplate-wrapping dups
+    score ~1.0."""
+    cont = F.col("n_common").cast("double") / F.least("n_a", "n_b")
+    return _shared_shingles(df).filter(cont >= threshold).select(
         "doc_a", "doc_b", F.round(cont, 4).alias("containment")
     )
 
@@ -246,9 +190,7 @@ def containment_pairs(
 # MinHash LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(
-    ss: DataFrame, *, id_col: str = "doc_id", num_hashes: int = 8
-) -> DataFrame:
+def minhash_signatures(ss: DataFrame, *, num_hashes: int = 8) -> DataFrame:
     """(id, i, minh): position-i minhash per document over its shingle
     set (from :func:`shingle_sets`).  Seeded family: h_i(s) = md5-60bit
     of "i|s".
@@ -262,24 +204,22 @@ def minhash_signatures(
     whole-stage codegen.)"""
     spark = ss.sparkSession
     seeds = spark.range(num_hashes).select(F.col("id").cast("int").alias("i"))
-    sh = ss.select(id_col, F.explode("sh").alias("shingle"))
+    sh = ss.select("doc_id", F.explode("sh").alias("shingle"))
     h = F.expr(H60.format(expr="concat(cast(i as string), '|', shingle)"))
     return (
         sh.crossJoin(F.broadcast(seeds))
-        .groupBy(id_col, "i")
+        .groupBy("doc_id", "i")
         .agg(F.min(h).alias("minh"))
     )
 
 
-def minhash_candidate_pairs(
-    sig: DataFrame, *, id_col: str = "doc_id", num_hashes: int = 8
-) -> DataFrame:
+def minhash_candidate_pairs(sig: DataFrame, *, num_hashes: int = 8) -> DataFrame:
     """(doc_a, doc_b, n_hash_agree, est_jaccard) for pairs agreeing on ≥1
     signature position (b=num_hashes, r=1 OR-amplification).  Pair
     generation groups by (position, minhash) — a band bucket is a set of
     near-identical docs, so bucket sizes are naturally small."""
     return (
-        _pairs_from_groups(sig, ["i", "minh"], id_col)
+        _pairs_from_groups(sig, ["i", "minh"], "doc_id")
         .groupBy("doc_a", "doc_b")
         .agg(
             F.count(F.lit(1)).alias("n_hash_agree"),
@@ -292,14 +232,7 @@ def minhash_candidate_pairs(
 # connected components (near-dup clustering over candidate-pair graphs)
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 25,
-    stats: "dict | None" = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; component
     is the minimum node id reachable.  This turns near-dup candidate
     *pairs* (MinHash/SimHash/embedding buckets) into dedup *clusters* —
@@ -316,10 +249,6 @@ def connected_components(
     optimizer re-plans the whole history each round.  Convergence is
     detected with an order-independent edge-set signature
     (count + bit_xor of pair hashes) — one tiny action per round.
-
-    Pass ``stats={}`` to receive ``stats["rounds"]`` — the observed
-    round count, the number the O(log n) convergence claim is about
-    (SCALE.md cites measured values at sf0.1 vs sf1).
 
     Loop-cost discipline (optimization guide §1/§2, measured round 10):
     every round's shuffle partitioning is DERIVED from the observed
@@ -357,7 +286,7 @@ def connected_components(
     # edge count rides the same materialization (no separate count job).
     obs0 = Observation()
     raw = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
@@ -389,7 +318,6 @@ def connected_components(
             "spark.sql.adaptive.enabled", "true" if parts > 1 else "false"
         )
 
-    rounds = 0
     try:
         raw.createOrReplaceGlobalTempView(view)
         raw_loop = loop.table(f"global_temp.{view}")
@@ -433,8 +361,7 @@ def connected_components(
             ) WHERE u <> v
         """
         prev_sig = None
-        for _ in range(max_iterations):
-            rounds += 1
+        for _ in range(25):  # round cap; dense dup clusters converge in ~2
             obs = Observation()
             e = (
                 loop.sql(round_sql, e=e)
@@ -461,8 +388,6 @@ def connected_components(
         e = spark.table(f"global_temp.{view}")
     finally:
         spark.catalog.dropGlobalTempView(view)
-    if stats is not None:
-        stats["rounds"] = rounds
     # fixed point is a star per component: u → component-min v
     members = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("node")).distinct().withColumn(
@@ -482,9 +407,7 @@ def connected_components(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", bits: int = 16
-) -> DataFrame:
+def simhash(df: DataFrame, *, bits: int = 16) -> DataFrame:
     """(id, simhash): bit-vote signature over distinct tokens; near-dups
     differ in few bits (compare with Hamming distance downstream).
 
@@ -503,20 +426,14 @@ def simhash(
         "then shiftleft(cast(1 as bigint), j) else 0 end)"
     )
     return (
-        df.withColumn("toks", F.array_distinct(tokens(text_col)))
+        df.withColumn("toks", F.array_distinct(tokens("text")))
         .filter(F.size("toks") >= 1)
         .withColumn("hs", F.expr(f"transform(toks, t -> {h})"))
-        .select(id_col, sig.alias(f"simhash{bits}"))
+        .select("doc_id", sig.alias(f"simhash{bits}"))
     )
 
 
-def drop_duplicates_against(
-    new: DataFrame,
-    corpus: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def drop_duplicates_against(new: DataFrame, corpus: DataFrame) -> DataFrame:
     """Incremental ingestion dedup: from ``new``, keep one row per
     content hash (min id) that does not already exist in ``corpus``.
 
@@ -528,24 +445,24 @@ def drop_duplicates_against(
     ~1.3B corpus docs a 60-bit key has even odds of one collision, and
     each collision anti-joins a genuinely new document away silently.
 
-    Rows with a NULL ``text_col`` PASS THROUGH untouched (all of them,
+    Rows with a NULL ``text`` PASS THROUGH untouched (all of them,
     not a collapsed representative): a missing text has no content hash,
     so it can neither be proven a duplicate of the corpus nor of another
     NULL-text row — content dedup has no say over it.  Filter them
     upstream if ingestion should reject them.
     """
-    h = F.md5(F.col(text_col).cast("binary"))
-    with_text = new.filter(F.col(text_col).isNotNull())
-    no_text = new.filter(F.col(text_col).isNull())
+    h = F.md5(F.col("text").cast("binary"))
+    with_text = new.filter(F.col("text").isNotNull())
+    no_text = new.filter(F.col("text").isNull())
     corpus_hashes = (
-        corpus.filter(F.col(text_col).isNotNull()).select(h.alias("_ch")).distinct()
+        corpus.filter(F.col("text").isNotNull()).select(h.alias("_ch")).distinct()
     )
     batch_keepers = (
         with_text.withColumn("_ch", h)
         .withColumn(
             "_rn",
             F.row_number().over(
-                Window.partitionBy("_ch").orderBy(id_col)
+                Window.partitionBy("_ch").orderBy("doc_id")
             ),
         )
         .filter(F.col("_rn") == 1)
@@ -561,8 +478,6 @@ def drop_duplicates_against(
 def hot_span_scrub(
     df: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
     min_count: int = 2,
     toks_col: "str | None" = None,
@@ -589,7 +504,7 @@ def hot_span_scrub(
     fan-out shuffle here.
     """
     if toks_col is not None:
-        toks = df.select(id_col, F.col(toks_col).alias("toks"))
+        toks = df.select("doc_id", F.col(toks_col).alias("toks"))
     else:
         # materialize the token arrays once: three consumers below (the
         # n-gram corpus count, the flagged-position side of the join,
@@ -601,11 +516,11 @@ def hot_span_scrub(
         # the same order as the exploded shuffle it feeds.
         toks = (
             fan_out(df)
-            .select(id_col, tokens(text_col).alias("toks"))
+            .select("doc_id", tokens("text").alias("toks"))
             .localCheckpoint(eager=False)
         )
     sh = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("toks").alias("n_tokens"),
         F.posexplode(shingle_array("toks", n)).alias("pos", "gram"),
     )
@@ -615,27 +530,27 @@ def hot_span_scrub(
         .filter(F.col("cnt") >= min_count)
         .select("gram")
     )
-    flagged = sh.join(hot, "gram").select(id_col, "pos")
+    flagged = sh.join(hot, "gram").select("doc_id", "pos")
 
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     prev_end = F.max(F.col("pos") + n).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     new_span = F.when(prev_end.isNull() | (F.col("pos") > prev_end), 1).otherwise(0)
     spans = (
         flagged.withColumn("span_id", F.sum(new_span).over(w))
-        .groupBy(id_col, "span_id")
+        .groupBy("doc_id", "span_id")
         .agg(F.min("pos").alias("s"), (F.max("pos") + n).alias("e"))
     )
-    summary = spans.groupBy(id_col).agg(
+    summary = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum(F.col("e") - F.col("s")).alias("n_scrubbed"),
     )
-    base = toks.select(F.col(id_col), F.size("toks").alias("n_tokens"))
+    base = toks.select(F.col("doc_id"), F.size("toks").alias("n_tokens"))
     return (
-        base.join(summary, id_col, "left")
+        base.join(summary, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.coalesce("n_spans", F.lit(0)).cast("bigint").alias("n_spans"),
             F.coalesce("n_scrubbed", F.lit(0)).cast("bigint").alias("n_scrubbed"),
@@ -649,17 +564,12 @@ def hot_span_scrub(
     )
 
 
-def dedup_lines_global(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_lines_global(df: DataFrame) -> DataFrame:
     """C4-style GLOBAL line-level deduplication (Raffel et al. 2020
     §2.2 dedupe three-sentence spans; the line-granular variant used by
     most C4 reproductions): every distinct line survives exactly once
     in the whole corpus — in the document where it first occurs
-    (smallest ``id_col``, then smallest line index) — and is removed
+    (smallest ``doc_id``, then smallest line index) — and is removed
     from every other document.  Returns one row per input doc:
     ``(id, text_dedup, n_kept, n_dropped)``; a doc whose every line is
     owned elsewhere comes back with an empty string.
@@ -677,19 +587,19 @@ def dedup_lines_global(
     this is an entity-keyed op.
     """
     docs = df.filter(
-        F.col(text_col).isNotNull() & F.col(id_col).isNotNull()
-    ).select(id_col, text_col)
+        F.col("text").isNotNull() & F.col("doc_id").isNotNull()
+    ).select("doc_id", "text")
     lines = docs.select(
-        id_col,
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("idx", "line"),
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), "\n")).alias("idx", "line"),
     )
     winners = lines.groupBy("line").agg(
-        F.min(F.struct(id_col, "idx")).alias("w")
+        F.min(F.struct("doc_id", "idx")).alias("w")
     )
     kept = lines.join(winners, "line").filter(
-        (F.col(id_col) == F.col(f"w.{id_col}")) & (F.col("idx") == F.col("w.idx"))
+        (F.col("doc_id") == F.col("w.doc_id")) & (F.col("idx") == F.col("w.idx"))
     )
-    reassembled = kept.groupBy(id_col).agg(
+    reassembled = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("idx", "line"))),
@@ -700,13 +610,13 @@ def dedup_lines_global(
         F.count(F.lit(1)).alias("n_kept"),
     )
     n_lines = docs.select(
-        id_col,
-        F.size(F.split(F.col(text_col), "\n")).alias("n_lines"),
+        "doc_id",
+        F.size(F.split(F.col("text"), "\n")).alias("n_lines"),
     )
     return (
-        n_lines.join(reassembled, id_col, "left")
+        n_lines.join(reassembled, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("text_dedup", F.lit("")).alias("text_dedup"),
             F.coalesce("n_kept", F.lit(0)).cast("bigint").alias("n_kept"),
             (F.col("n_lines") - F.coalesce("n_kept", F.lit(0)))

@@ -16,8 +16,8 @@ web-exported JPEGs use) — 8-bit precision, 1-component (grayscale) or
 3-component (YCbCr) images, sampling factors 1 or 2 per axis, restart
 intervals.  Arithmetic coding, lossless/hierarchical, 12-bit and CMYK
 raise ``JpegError`` — at training-pipeline scale those long-tail
-variants route to a quarantine sink
-(``multimodal.decode_image(errors="quarantine")``) rather than a
+variants route to a quarantine sink (the header-only triage of
+``mediainfo.probe_media_df`` runs before any decode) rather than a
 slower universal decoder.
 
 Decoding is scan-driven: every scan (a baseline file has one; a

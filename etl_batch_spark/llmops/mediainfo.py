@@ -381,13 +381,7 @@ def probe_media(payload: bytes) -> dict:
     return out
 
 
-def probe_media_df(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    keep_cols: "tuple[str, ...]" = (),
-) -> DataFrame:
+def probe_media_df(df: DataFrame, *, keep_cols: "tuple[str, ...]" = ()) -> DataFrame:
     """Probe every payload of a column (see :func:`probe_media`) — the
     scan stage in front of decode_image/decode_audio.
     A NULL payload gives a ``container='unknown'`` row with a
@@ -398,19 +392,19 @@ def probe_media_df(
     filter on the probe verdict and hand the SAME rows to the decoder —
     no re-scan, no id re-join (which fans out under duplicate ids)."""
     probe_fields = {f.name for f in PROBE_SCHEMA.fields} - {"doc_id"}
-    clash = sorted(probe_fields & set(keep_cols) | ({id_col} & probe_fields))
+    clash = sorted(probe_fields & set(keep_cols))
     if clash:
         raise ValueError(
-            f"keep_cols/id_col collide with probe output fields: {clash} — "
+            f"keep_cols collide with probe output fields: {clash} — "
             "rename the input column(s) before probing"
         )
-    # id_col is always carried through; repeating it in keep_cols (or
+    # doc_id is always carried through; repeating it in keep_cols (or
     # repeating any name) would emit a duplicate output field, which
     # dies later as an opaque Arrow schema error — fail loudly here.
-    if id_col in keep_cols or len(set(keep_cols)) != len(keep_cols):
+    if "doc_id" in keep_cols or len(set(keep_cols)) != len(keep_cols):
         raise ValueError(
-            f"keep_cols must be unique and must not repeat id_col "
-            f"({id_col!r}): got {tuple(keep_cols)!r}"
+            "keep_cols must be unique and must not repeat 'doc_id': "
+            f"got {tuple(keep_cols)!r}"
         )
     cols = PROBE_SCHEMA.fieldNames()[1:]
     # probe_media never raises (its own error lands in the ``error``
@@ -418,6 +412,5 @@ def probe_media_df(
     null_row = tuple(dict(_EMPTY, error=_NULL_PAYLOAD)[c] for c in cols)
     return _payload_map(
         df, lambda p: [tuple(probe_media(p)[c] for c in cols)], PROBE_SCHEMA,
-        op="probe_media_df", id_col=id_col, payload_col=payload_col,
-        null_row=null_row, keep_cols=keep_cols,
+        op="probe_media_df", id_col="doc_id", null_row=null_row, keep_cols=keep_cols,
     )

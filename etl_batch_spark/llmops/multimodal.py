@@ -11,19 +11,18 @@ Payload-map contract — every payload operator here and
 single ``mapInPandas`` over ``(id, payload)`` that turns each payload
 into zero or more output rows.
 
-- The output keys on the caller's ``id_col``, with its name and type
-  (ids are often URLs or content hashes at crawl scale).
-- ``errors="raise"`` (the default where an operator offers
-  ``errors``; the only mode of ``window_energy``): a NULL payload
-  raises ``ValueError`` naming the operator and the column, and a bad
-  payload aborts the job.
-- ``errors="quarantine"`` (always on for the ``*_census`` operators):
+- The output keys on the id column (``doc_id`` unless a decoder is
+  given another), with its name and type (ids are often URLs or
+  content hashes at crawl scale).
+- raise mode (``decode_*``, ``window_energy``): a NULL payload raises
+  ``ValueError`` naming the operator and the column, and a bad payload
+  aborts the job.
+- quarantine mode (the ``*_census`` operators):
   the output gains a trailing ``error`` column, NULL on good rows.  A
   NULL payload becomes ONE row of NULL fields with
   ``"NullPayload: payload is NULL"``; a payload whose decode raises the
   caught type becomes ONE row of NULL fields with
-  ``"{Type}: {msg}"``.  The ``decode_*`` operators catch
-  ``Exception``; each census catches only its codec's error type, so
+  ``"{Type}: {msg}"``.  Each census catches only its codec's error type, so
   a foreign exception is a codec bug that fails loudly
   (``tools/fuzz_codecs.py`` soaks every codec for them).
   Filter ``error IS NULL`` for the clean side and ``IS NOT NULL`` for
@@ -70,15 +69,18 @@ from etl_batch_spark.llmops.wav import to_float as _wav_to_float
 
 
 def attach_payload(
-    df: DataFrame, *, text_col: str = "text", modality: str = "image", mime: str = "image/png"
+    df: DataFrame,
+    *,
+    modality: str = "image",
+    mime: str = "image/png",
 ) -> DataFrame:
     """Turn a text column into an opaque binary payload + metadata struct
     (fixture adapter: real pipelines read payloads from object storage).
-    Rows with a NULL ``text_col`` are dropped — there is nothing to
+    Rows with a NULL ``text`` are dropped — there is nothing to
     fabricate a payload from, and a NULL payload row entering the decode
     stage is a missing-data condition, not a decodable input."""
-    df = df.filter(F.col(text_col).isNotNull())
-    payload = F.encode(F.col(text_col), "UTF-8")
+    df = df.filter(F.col("text").isNotNull())
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.withColumn("payload", payload).withColumn(
         "media_meta",
         F.struct(
@@ -128,7 +130,6 @@ def _payload_map(
     *,
     op: str,
     id_col: str,
-    payload_col: str,
     errors: str = "raise",
     catch: "type[BaseException] | tuple[type[BaseException], ...]" = Exception,
     casts: "dict[str, str] | None" = None,
@@ -160,11 +161,11 @@ def _payload_map(
         for pdf in batches:
             src: list[int] = []
             rows: list[tuple] = []
-            for pos, p in enumerate(pdf[payload_col]):
+            for pos, p in enumerate(pdf["payload"]):
                 if p is None:
                     if null_row is None:
                         raise ValueError(
-                            f"NULL {payload_col!r} — {op} needs a payload; "
+                            f"NULL 'payload' — {op} needs a payload; "
                             "filter or quarantine missing rows"
                         )
                     out = [null_row]
@@ -187,8 +188,8 @@ def _payload_map(
             yield pdf_out.astype(casts) if casts and not quarantine else pdf_out
 
     in_cols = [id_col, *keep_cols]
-    if payload_col not in in_cols:
-        in_cols.append(payload_col)
+    if "payload" not in in_cols:
+        in_cols.append("payload")
     return df.select(*in_cols).mapInPandas(run, T.StructType(fields))
 
 
@@ -245,14 +246,7 @@ def _real_decode(payload: bytes) -> tuple[int, int, list[float]]:
     return width, height, [round(float(v), 6) for v in feat]
 
 
-def decode_image(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    fake: bool = False,
-    errors: str = "raise",
-) -> DataFrame:
+def decode_image(df: DataFrame, *, id_col: str = "doc_id", fake: bool = False) -> DataFrame:
     """Decode payloads to (id, width, height, n_pixels, feature).
 
     ``fake=False`` decodes PNG / JPEG (sequential + progressive) /
@@ -261,12 +255,8 @@ def decode_image(
     formats needing external libraries;
     ``fake=True`` runs the deterministic stub so the Spark-side
     plumbing (Arrow batches, schema, partition streaming) is exercised
-    on any payload.
-
-    ``errors="raise"`` (default) is right for curated inputs, where
-    corruption means a pipeline bug; ``errors="quarantine"`` is the
-    100 TB crawl shape, where one corrupt or out-of-scope payload among
-    billions must not kill the decode job.
+    on any payload.  A corrupt payload fails the job: the decoders
+    serve curated inputs, where corruption means a pipeline bug.
     """
     decode = _fake_decode if fake else _real_decode
 
@@ -274,10 +264,7 @@ def decode_image(
         width, height, feature = decode(p)
         return [(width, height, width * height, feature)]
 
-    return _payload_map(
-        df, decode_row, DECODED_SCHEMA, op="decode_image", id_col=id_col,
-        payload_col=payload_col, errors=errors,
-    )
+    return _payload_map(df, decode_row, DECODED_SCHEMA, op="decode_image", id_col=id_col)
 
 
 DECODED_AUDIO_SCHEMA = T.StructType(
@@ -332,14 +319,7 @@ def _fake_decode_audio(payload: bytes) -> tuple[int, int, int, float, list[float
     return rate, channels, n_frames, n_frames / rate, feature
 
 
-def decode_audio(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    fake: bool = False,
-    errors: str = "raise",
-) -> DataFrame:
+def decode_audio(df: DataFrame, *, id_col: str = "doc_id", fake: bool = False) -> DataFrame:
     """Decode audio payloads to (id, sample_rate, channels, n_frames,
     duration_s, feature) — the audio twin of :func:`decode_image`.
     ``fake=False`` decodes RIFF/WAVE integer-PCM / IEEE-float payloads
@@ -347,14 +327,11 @@ def decode_audio(
     ``fake=True`` runs the deterministic stub."""
     decode = _fake_decode_audio if fake else _real_decode_audio
     return _payload_map(
-        df, lambda p: [decode(p)], DECODED_AUDIO_SCHEMA, op="decode_audio",
-        id_col=id_col, payload_col=payload_col, errors=errors,
+        df, lambda p: [decode(p)], DECODED_AUDIO_SCHEMA, op="decode_audio", id_col=id_col
     )
 
 
-def resize_plan(
-    df: DataFrame, *, max_side: int = 224
-) -> DataFrame:
+def resize_plan(df: DataFrame) -> DataFrame:
     """Pure-SQL resize planning over decoded dims: target size + scale
     factor per row (the codec-side resize consumes this plan).
 
@@ -363,6 +340,7 @@ def resize_plan(
     noise (e.g. 293·(224/293) = 224.0000000000003 → 225), and a codec
     consuming the emitted scale must land on the same dims as the plan.
     """
+    max_side = 224  # the longest side a plan targets
     scale = F.round(
         F.least(
             F.lit(1.0), F.lit(max_side) / F.greatest("width", "height").cast("double")
@@ -382,16 +360,14 @@ def resize_plan(
     )
 
 
-def frame_sample_plan(
-    df: DataFrame, *, id_col: str = "doc_id", fps: float = 1.0, duration_col: str = "duration_s"
-) -> DataFrame:
+def frame_sample_plan(df: DataFrame, *, fps: float = 1.0) -> DataFrame:
     """Explode a video row into per-frame sample timestamps at ``fps`` —
     array+explode, no UDF; downstream codec extracts the frames."""
-    n_frames = F.greatest(F.lit(1), F.floor(F.col(duration_col) * fps)).cast("int")
+    n_frames = F.greatest(F.lit(1), F.floor(F.col("duration_s") * fps)).cast("int")
     return (
         df.withColumn("frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1)))
         .withColumn("frame_ts", F.round(F.col("frame_idx") / fps, 3))
-        .select(id_col, "frame_idx", "frame_ts")
+        .select("doc_id", "frame_idx", "frame_ts")
     )
 
 
@@ -404,14 +380,7 @@ WINDOW_ENERGY_SCHEMA = T.StructType(
 )
 
 
-def window_energy(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    win: int = 256,
-    hop: int = 128,
-) -> DataFrame:
+def window_energy(df: DataFrame, *, win: int = 256, hop: int = 128) -> DataFrame:
     """Windowed energy over raw payload bytes (the audio-analysis frame
     shape: overlapping windows at a hop, one feature per window); the
     per-window loop is numpy inside the batch, and an empty payload has
@@ -429,20 +398,19 @@ def window_energy(
         ]
 
     return _payload_map(
-        df, windows, WINDOW_ENERGY_SCHEMA, op="window_energy", id_col=id_col,
-        payload_col=payload_col, casts={"widx": "int32", "energy": "float64"},
+        df, windows, WINDOW_ENERGY_SCHEMA, op="window_energy", id_col="doc_id",
+        casts={"widx": "int32", "energy": "float64"},
     )
 
 
-def patch_grid_plan(
-    df: DataFrame, *, patch: int = 16
-) -> DataFrame:
+def patch_grid_plan(df: DataFrame) -> DataFrame:
     """ViT-style patch planning over resized dims: pad the target image
     up to ``patch`` multiples, count the patch grid.  Pure integer
     column arithmetic (no Python) — the per-patch pixel extraction is
     codec-side work that consumes this plan, exactly like
     :func:`resize_plan`'s scale factor.  Patch counts are what the
     training pipeline bills by (sequence length per image)."""
+    patch = 16  # ViT patch side, pixels
     tw, th = F.col("target_width"), F.col("target_height")
     npx = F.ceil(tw / F.lit(patch)).cast("int")
     npy = F.ceil(th / F.lit(patch)).cast("int")
@@ -474,12 +442,7 @@ MP3_CENSUS_SCHEMA = T.StructType(
 )
 
 
-def mp3_frame_census(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def mp3_frame_census(df: DataFrame) -> DataFrame:
     """Frame-level MPEG audio census (llmops/mp3.py::parse_frames) as
     an Arrow-batched narrow map: every frame header of every payload is
     walked — EXACT duration, CBR/VBR verdict, bitrate min/max/mode, VBR
@@ -514,8 +477,8 @@ def mp3_frame_census(
         )]
 
     return _payload_map(
-        df, census, MP3_CENSUS_SCHEMA, op="mp3_frame_census", id_col=id_col,
-        payload_col=payload_col, errors="quarantine", catch=Mp3Error,
+        df, census, MP3_CENSUS_SCHEMA, op="mp3_frame_census", id_col="doc_id",
+        errors="quarantine", catch=Mp3Error,
     )
 
 
@@ -533,12 +496,7 @@ OGG_CENSUS_SCHEMA = T.StructType(
 )
 
 
-def ogg_metadata_census(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def ogg_metadata_census(df: DataFrame) -> DataFrame:
     """Ogg container census (llmops/oggv.py::parse_ogg): full
     CRC-verified page walk + Vorbis/Opus identification and comment
     headers per payload — codec routing, exact duration from the final
@@ -554,8 +512,8 @@ def ogg_metadata_census(
         )]
 
     return _payload_map(
-        df, census, OGG_CENSUS_SCHEMA, op="ogg_metadata_census", id_col=id_col,
-        payload_col=payload_col, errors="quarantine", catch=OggError,
+        df, census, OGG_CENSUS_SCHEMA, op="ogg_metadata_census", id_col="doc_id",
+        errors="quarantine", catch=OggError,
     )
 
 
@@ -574,12 +532,7 @@ FLAC_CENSUS_SCHEMA = T.StructType(
 )
 
 
-def flac_metadata_census(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def flac_metadata_census(df: DataFrame) -> DataFrame:
     """FLAC container/frame census (llmops/flac.py::parse_flac):
     metadata-block walk (STREAMINFO, VorbisComment) plus the
     CRC-8-validated frame-header walk per payload — sample rate / bit
@@ -598,7 +551,7 @@ def flac_metadata_census(
 
     return _payload_map(
         df, census, FLAC_CENSUS_SCHEMA, op="flac_metadata_census",
-        id_col=id_col, payload_col=payload_col, errors="quarantine",
+        id_col="doc_id", errors="quarantine",
         catch=FlacError,
     )
 
@@ -622,12 +575,7 @@ MP4_CENSUS_SCHEMA = T.StructType(
 )
 
 
-def mp4_track_census(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def mp4_track_census(df: DataFrame) -> DataFrame:
     """MP4/ISO-BMFF census (llmops/mp4.py::parse_mp4): full box-tree +
     sample-table walk per payload — brand and codec routing, EXACT
     per-track durations (mdhd units / timescale, cross-checked against
@@ -654,8 +602,8 @@ def mp4_track_census(
         )]
 
     return _payload_map(
-        df, census, MP4_CENSUS_SCHEMA, op="mp4_track_census", id_col=id_col,
-        payload_col=payload_col, errors="quarantine", catch=Mp4Error,
+        df, census, MP4_CENSUS_SCHEMA, op="mp4_track_census", id_col="doc_id",
+        errors="quarantine", catch=Mp4Error,
     )
 
 
@@ -675,12 +623,7 @@ WEBP_CENSUS_SCHEMA = T.StructType(
 )
 
 
-def webp_structure_census(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def webp_structure_census(df: DataFrame) -> DataFrame:
     """WebP container census (llmops/webp.py::parse_webp): RIFF chunk
     walk + VP8/VP8L/VP8X frame headers per payload — variant, canvas
     dimensions, alpha, animation frame count and total duration, and
@@ -697,6 +640,6 @@ def webp_structure_census(
 
     return _payload_map(
         df, census, WEBP_CENSUS_SCHEMA, op="webp_structure_census",
-        id_col=id_col, payload_col=payload_col, errors="quarantine",
+        id_col="doc_id", errors="quarantine",
         catch=WebpError,
     )

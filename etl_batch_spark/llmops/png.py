@@ -11,9 +11,9 @@ decode path next to its deterministic fake twin.
 Scope (deliberate): 8-bit depth, color types 0 (gray), 2 (RGB),
 4 (gray+alpha), 6 (RGBA), non-interlaced.  Palette (type 3), 16-bit and
 Adam7 interlace raise ``PngError`` — at training-pipeline scale those
-long-tail variants route to a quarantine sink
-(``multimodal.decode_image(errors="quarantine")``) rather than a
-slower universal decoder.  The decoder verifies chunk CRCs and the zlib stream,
+long-tail variants route to a quarantine sink (the header-only
+triage of ``mediainfo.probe_media_df`` runs before any decode) rather
+than a slower universal decoder.  The decoder verifies chunk CRCs and the zlib stream,
 so corrupt payloads fail loudly instead of yielding garbage pixels.
 
 ``encode_png`` exists so tests can GENERATE real PNGs (any filter type

@@ -37,12 +37,10 @@ def hash_bucket(key_col: str, *, salt: str = "s0", n_buckets: int = _BUCKETS) ->
     return F.pmod(_h60(key_col, salt), F.lit(n_buckets))
 
 
-def hash_sample(
-    df: DataFrame, *, key_col: str, fraction: float, salt: str = "s0"
-) -> DataFrame:
+def hash_sample(df: DataFrame, *, key_col: str, fraction: float) -> DataFrame:
     """Keep ~``fraction`` of rows, membership decided by key hash.
     Narrow map + filter: no shuffle, no state, pushdown-friendly."""
-    return df.filter(hash_bucket(key_col, salt=salt) < int(fraction * _BUCKETS))
+    return df.filter(hash_bucket(key_col) < int(fraction * _BUCKETS))
 
 
 def stratified_hash_sample(
@@ -51,20 +49,18 @@ def stratified_hash_sample(
     key_col: str,
     strata_col: str,
     fractions: dict[str, float],
-    default_fraction: float = 0.0,
-    salt: str = "s0",
 ) -> DataFrame:
     """Per-stratum reproducible sampling — the training-mix primitive
     ("keep 100% of books, 10% of web, 0% of the rest").  The per-row
     threshold is a small CASE over ``strata_col``; membership still
     depends only on (salt, key), so changing one stratum's fraction
     never reshuffles another stratum's sample."""
-    thresh: Column = F.lit(int(default_fraction * _BUCKETS))
+    thresh: Column = F.lit(0)
     for stratum, frac in sorted(fractions.items()):
         thresh = F.when(
             F.col(strata_col) == stratum, F.lit(int(frac * _BUCKETS))
         ).otherwise(thresh)
-    return df.filter(hash_bucket(key_col, salt=salt) < thresh)
+    return df.filter(hash_bucket(key_col) < thresh)
 
 
 def temperature_mixture_sample(
@@ -74,7 +70,6 @@ def temperature_mixture_sample(
     strata_col: str,
     alpha: float = 0.5,
     total_fraction: float = 0.5,
-    salt: str = "s0",
 ) -> DataFrame:
     """Temperature-reweighted training mixture: per-stratum keep rates
     ∝ n_s^alpha (alpha < 1 upweights small/rare sources, alpha = 1 is
@@ -130,17 +125,11 @@ def temperature_mixture_sample(
             F.col(strata_col).eqNullSafe(F.col("__tm_stratum")),
         )
         .drop("__tm_stratum")
-        .filter(hash_bucket(key_col, salt=salt) < F.col("threshold"))
+        .filter(hash_bucket(key_col) < F.col("threshold"))
     )
 
 
-def weighted_hash_sample(
-    df: DataFrame,
-    *,
-    key_col: str,
-    weight_col: str,
-    salt: str = "s0",
-) -> DataFrame:
+def weighted_hash_sample(df: DataFrame, *, key_col: str, weight_col: str) -> DataFrame:
     """Importance sampling: each row's keep probability IS its weight
     (clamped to [0, 1]) — the quality-weighted data-selection primitive
     (keep good documents with high probability, junk with low, without
@@ -152,7 +141,7 @@ def weighted_hash_sample(
     thresh = F.floor(
         F.least(F.lit(1.0), F.greatest(F.lit(0.0), F.col(weight_col))) * _BUCKETS
     ).cast("long")
-    return df.filter(hash_bucket(key_col, salt=salt) < thresh)
+    return df.filter(hash_bucket(key_col) < thresh)
 
 
 def fixed_quota_sample(
@@ -161,7 +150,6 @@ def fixed_quota_sample(
     key_col: str,
     strata_col: str,
     n_per_stratum: int,
-    salt: str = "s0",
 ) -> DataFrame:
     """Exactly-N-per-stratum deterministic sample (eval-set carve-outs,
     per-source audit quotas): rows rank by their (salt, key) hash within
@@ -177,7 +165,7 @@ def fixed_quota_sample(
     from pyspark.sql import Window
 
     w = Window.partitionBy(strata_col).orderBy(
-        hash_bucket(key_col, salt=salt), F.col(key_col)
+        hash_bucket(key_col), F.col(key_col)
     )
     return (
         df.withColumn("_rk", F.row_number().over(w))
@@ -186,14 +174,7 @@ def fixed_quota_sample(
     )
 
 
-def shuffle_order(
-    df: DataFrame,
-    *,
-    key_col: str,
-    salt: str = "shuf",
-    out_col: str = "shuffle_rank",
-    num_partitions: int = 32,
-) -> DataFrame:
+def shuffle_order(df: DataFrame, *, key_col: str) -> DataFrame:
     """Reproducible global training-data shuffle: a 1-based position in
     the pseudorandom permutation ``ORDER BY md5(salt|key)`` — the order
     a training run should read the corpus in.
@@ -209,23 +190,13 @@ def shuffle_order(
     """
     from etl_batch_spark.operators.ranks import global_row_number
 
-    hashed = df.withColumn("__sh", _h60(key_col, salt))
+    hashed = df.withColumn("__sh", _h60(key_col, "shuf"))
     return global_row_number(
-        hashed,
-        [F.col("__sh").asc(), F.col(key_col).asc()],
-        out_col,
-        num_partitions=num_partitions,
+        hashed, [F.col("__sh").asc(), F.col(key_col).asc()], "shuffle_rank"
     ).drop("__sh")
 
 
-def quantile_calibrate(
-    df: DataFrame,
-    *,
-    score_col: str,
-    group_col: str,
-    out_col: str = "calibrated",
-    round_to: int = 6,
-) -> DataFrame:
+def quantile_calibrate(df: DataFrame, *, score_col: str, group_col: str) -> DataFrame:
     """Per-group quantile normalization: replace each row's score with
     its PERCENT_RANK within its group — uniform on [0, 1] per group.
 
@@ -252,15 +223,15 @@ def quantile_calibrate(
     w = W.partitionBy(group_col).orderBy(score_col)
     scored = (
         df.filter(F.col(score_col).isNotNull())
-        .withColumn(out_col, F.round(F.percent_rank().over(w), round_to))
+        .withColumn("calibrated", F.round(F.percent_rank().over(w), 6))
     )
     unscored = df.filter(F.col(score_col).isNull()).withColumn(
-        out_col, F.lit(None).cast("double")
+        "calibrated", F.lit(None).cast("double")
     )
     return scored.unionByName(unscored)
 
 
-def shard_assign(df: DataFrame, *, key_col: str, n_shards: int, salt: str = "shard") -> DataFrame:
+def shard_assign(df: DataFrame, *, key_col: str, n_shards: int) -> DataFrame:
     """Add a deterministic ``shard`` column in [0, n_shards).
 
     Training-data sharding needs a *global* shuffle — examples that were
@@ -273,18 +244,11 @@ def shard_assign(df: DataFrame, *, key_col: str, n_shards: int, salt: str = "sha
     are ordered by a second hash, never globally.
     """
     return df.withColumn(
-        "shard", hash_bucket(key_col, salt=salt, n_buckets=n_shards).cast("int")
+        "shard", hash_bucket(key_col, salt="shard", n_buckets=n_shards).cast("int")
     )
 
 
-def weighted_topk_sample(
-    df: DataFrame,
-    *,
-    key_col: str,
-    weight_col: str,
-    k: int,
-    salt: str = "s0",
-) -> DataFrame:
+def weighted_topk_sample(df: DataFrame, *, key_col: str, weight_col: str, k: int) -> DataFrame:
     """Exactly-k weighted sample WITHOUT replacement (Efraimidis–
     Spirakis A-ES): each row draws priority ``u^(1/w)`` from its
     deterministic (salt, key) uniform ``u`` and the k highest
@@ -303,7 +267,7 @@ def weighted_topk_sample(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    u = (hash_bucket(key_col, salt=salt) + F.lit(0.5)) / F.lit(float(_BUCKETS))
+    u = (hash_bucket(key_col) + F.lit(0.5)) / F.lit(float(_BUCKETS))
     raw = F.pow(u, F.lit(1.0) / F.col(weight_col))
     return (
         df.filter(F.col(weight_col) > 0)

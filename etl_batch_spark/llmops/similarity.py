@@ -32,7 +32,7 @@ def l2_norm(col: str = "e") -> Column:
     return F.sqrt(F.expr(f"aggregate({col}, cast(0.0 as double), (acc, x) -> acc + x * x)"))
 
 
-def _normed(df: DataFrame, *, id_col: str, vec_col: str, fan: bool = True) -> DataFrame:
+def _normed(df: DataFrame, *, fan: bool = True) -> DataFrame:
     # fan_out: the cosine folds downstream are per-row CPU — a
     # single-split corpus file must not serialize them on one core.
     # Query-side relations (bounded by the broadcast contract) pass
@@ -41,7 +41,7 @@ def _normed(df: DataFrame, *, id_col: str, vec_col: str, fan: bool = True) -> Da
     # a broadcast anyway (round 11; values are untouched either way).
     base = fan_out(df) if fan else df
     return base.select(
-        F.col(id_col), as_double(vec_col).alias("e")
+        F.col("vec_id"), as_double("embedding").alias("e")
     ).withColumn("nrm", l2_norm("e"))
 
 
@@ -74,7 +74,7 @@ def _sql_vec(vec) -> str:
     return "array(" + ",".join(_sql_double(x) for x in vec) + ")"
 
 
-def _seed_rows(corpus: DataFrame, *, id_col: str, vec_col: str, n: int) -> list:
+def _seed_rows(corpus: DataFrame, *, n: int) -> list:
     """First ``n`` normed rows by id, collected to the driver.
 
     The deterministic seed/codebook picks (ivf_topk, semantic_dedup, pq
@@ -92,13 +92,13 @@ def _seed_rows(corpus: DataFrame, *, id_col: str, vec_col: str, n: int) -> list:
     measured as most of the pick's cost.  e/nrm are computed in the
     same projection, so the collected values are the exact doubles the
     fanned path would produce (repartition does not touch values)."""
-    d = corpus.select(F.col(id_col), as_double(vec_col).alias("e")).withColumn(
+    d = corpus.select(F.col("vec_id"), as_double("embedding").alias("e")).withColumn(
         "nrm", l2_norm("e")
     )
-    return d.orderBy(id_col).limit(n).collect()
+    return d.orderBy("vec_id").limit(n).collect()
 
 
-def _cents_literal(rows, id_sql_type: str, id_col: str) -> str:
+def _cents_literal(rows, id_sql_type: str) -> str:
     """array(named_struct('ce', ..., 'cn', ..., 'cent_id', ...), ...)"""
     entries = []
     for r in rows:
@@ -108,28 +108,20 @@ def _cents_literal(rows, id_sql_type: str, id_col: str) -> str:
             + ", 'cn', "
             + _sql_double(r["nrm"])
             + ", 'cent_id', "
-            + _sql_scalar(r[id_col], id_sql_type)
+            + _sql_scalar(r["vec_id"], id_sql_type)
             + ")"
         )
     return "array(" + ",".join(entries) + ")"
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, *, k: int = 5) -> DataFrame:
     """(query_id, neighbor_id, cosine): exact top-k neighbors per query.
     ``queries`` must be small enough to broadcast (it is hinted)."""
-    c = _normed(corpus, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("e").alias("ce"), F.col("nrm").alias("cn")
+    c = _normed(corpus).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce"), F.col("nrm").alias("cn")
     )
-    q = _normed(queries, id_col=id_col, vec_col=vec_col, fan=False).select(
-        F.col(id_col).alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
+    q = _normed(queries, fan=False).select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
     )
     dot = F.expr(DOT.format(a="qe", b="ce"))
     pairs = (
@@ -138,7 +130,7 @@ def cosine_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(dot / (F.col("qn") * F.col("cn")), round_to).alias("cosine"),
+            F.round(dot / (F.col("qn") * F.col("cn")), 6).alias("cosine"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -162,15 +154,7 @@ def signbit_bucket(vec_expr: str = "e", n_bits: int = 6, offset: int = 0) -> Col
     return F.expr(f"({terms})")
 
 
-def neardup_pairs(
-    df: DataFrame,
-    *,
-    threshold: float = 0.35,
-    n_bits: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> DataFrame:
+def neardup_pairs(df: DataFrame, *, threshold: float = 0.35, n_bits: int = 6) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cosine) with
     id_a < id_b and cosine ≥ threshold.
 
@@ -181,17 +165,17 @@ def neardup_pairs(
     per-bucket fanout bounded.  The threshold is applied to the *rounded*
     cosine so boundary behavior is identical across engines.
     """
-    v = _normed(df, id_col=id_col, vec_col=vec_col).withColumn(
+    v = _normed(df).withColumn(
         "bucket", signbit_bucket("e", n_bits)
     )
     a = v.select(
-        F.col(id_col).alias("id_a"), F.col("e").alias("ea"), F.col("nrm").alias("na"), "bucket"
+        F.col("vec_id").alias("id_a"), F.col("e").alias("ea"), F.col("nrm").alias("na"), "bucket"
     )
     b = v.select(
-        F.col(id_col).alias("id_b"), F.col("e").alias("eb"), F.col("nrm").alias("nb"), "bucket"
+        F.col("vec_id").alias("id_b"), F.col("e").alias("eb"), F.col("nrm").alias("nb"), "bucket"
     )
     cos = F.round(
-        F.expr(DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb")), round_to
+        F.expr(DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb")), 6
     )
     return (
         a.join(b, ["bucket"])
@@ -209,9 +193,6 @@ def ivf_topk(
     k: int = 3,
     n_centroids: int = 16,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """IVF-Flat approximate top-k: partition the corpus into inverted
     lists by nearest centroid, probe the query's ``nprobe`` nearest lists.
@@ -229,23 +210,23 @@ def ivf_topk(
     comparator, same tie-break, bit-identical output).  Search is an
     equi-join on the centroid id — never a cross join against the corpus.
     """
-    c = _normed(corpus, id_col=id_col, vec_col=vec_col)
+    c = _normed(corpus)
     # first n_centroids vectors BY id (orderBy+limit), not filter(id < n):
     # the filter form silently seeds nothing when ids are sparse/offset.
     # Collected once (bounded: n rows) and inlined as plan literals.
-    seed_rows = _seed_rows(corpus, id_col=id_col, vec_col=vec_col, n=n_centroids)
+    seed_rows = _seed_rows(corpus, n=n_centroids)
     if not seed_rows:
         # empty corpus: no centroids, no assignments, no probes — the
         # typed-empty result the cross-join form produced
         return (
             c.select(
-                F.col(id_col).alias("query_id"),
-                F.col(id_col).alias("neighbor_id"),
+                F.col("vec_id").alias("query_id"),
+                F.col("vec_id").alias("neighbor_id"),
                 F.lit(None).cast("double").alias("cosine"),
             ).filter(F.lit(False))
         )
-    id_sql_type = dict(corpus.dtypes)[id_col]
-    cands = _cents_literal(seed_rows, id_sql_type, id_col)
+    id_sql_type = dict(corpus.dtypes)["vec_id"]
+    cands = _cents_literal(seed_rows, id_sql_type)
     dot_c = DOT.format(a="e", b="c.ce")
     # row-local argmin: one array_min over the literal centroids picks
     # the SAME struct the old ×C cross join fed into min(struct(...)) —
@@ -259,17 +240,17 @@ def ivf_topk(
     # post-combine state.
     best = F.expr(
         f"array_min(transform({cands}, c -> named_struct("
-        f"'negsim', -round(({dot_c}) / (nrm * c.cn), {round_to}), "
+        f"'negsim', -round(({dot_c}) / (nrm * c.cn), 6), "
         f"'cent_id', c.cent_id, 'e', e, 'nrm', nrm)))"
     )
     assign = (
-        c.select(F.col(id_col), best.alias("best"))
-        .groupBy(id_col)
+        c.select(F.col("vec_id"), best.alias("best"))
+        .groupBy("vec_id")
         .agg(F.min("best").alias("best"))
-        .select(F.col(id_col), F.col("best.e").alias("e"),
+        .select(F.col("vec_id"), F.col("best.e").alias("e"),
                 F.col("best.nrm").alias("nrm"), F.col("best.cent_id").alias("cent_id"))
     )
-    q = _normed(queries, id_col=id_col, vec_col=vec_col, fan=False)
+    q = _normed(queries, fan=False)
     # the query side needs top-NPROBE per query ID (not per row: under
     # duplicate-ingested query ids the rank spans every copy's
     # candidates, exactly as before) — explode the row-local candidate
@@ -277,21 +258,21 @@ def ivf_topk(
     # cent_id ASC carries the engine's NULL/NaN ordering natively
     cand_structs = F.expr(
         f"transform({cands}, c -> named_struct("
-        f"'sim', round(({dot_c}) / (nrm * c.cn), {round_to}), "
+        f"'sim', round(({dot_c}) / (nrm * c.cn), 6), "
         f"'cent_id', c.cent_id))"
     )
-    rn_w = W.partitionBy(id_col).orderBy(
+    rn_w = W.partitionBy("vec_id").orderBy(
         F.desc("cd.sim"), F.asc("cd.cent_id")
     )
     qprobe = (
         q.select(
-            F.col(id_col), F.col("e"), F.col("nrm"),
+            F.col("vec_id"), F.col("e"), F.col("nrm"),
             F.explode(cand_structs).alias("cd"),
         )
         .withColumn("rn", F.row_number().over(rn_w))
         .filter(F.col("rn") <= nprobe)
         .select(
-            F.col(id_col).alias("query_id"),
+            F.col("vec_id").alias("query_id"),
             F.col("e").alias("qe"),
             F.col("nrm").alias("qn"),
             F.col("cd.cent_id").alias("cent_id"),
@@ -300,11 +281,11 @@ def ivf_topk(
     dot = F.expr(DOT.format(a="qe", b="e"))
     pairs = (
         assign.join(F.broadcast(qprobe), "cent_id")
-        .filter(F.col(id_col) != F.col("query_id"))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(dot / (F.col("qn") * F.col("nrm")), round_to).alias("cosine"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(dot / (F.col("qn") * F.col("nrm")), 6).alias("cosine"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -321,21 +302,18 @@ def bucketed_topk(
     *,
     k: int = 3,
     n_bits: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """LSH-bucketed approximate top-k: candidates share the query's
     sign-bit bucket.  Recall can be raised by probing neighboring buckets
     (multi-probe) — at 100 TB the equi-join shape is what matters."""
-    c = _normed(corpus, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
+    c = _normed(corpus).select(
+        F.col("vec_id").alias("neighbor_id"),
         F.col("e").alias("ce"),
         F.col("nrm").alias("cn"),
         signbit_bucket("e", n_bits).alias("cbucket"),
     )
-    q = _normed(queries, id_col=id_col, vec_col=vec_col, fan=False).select(
-        F.col(id_col).alias("query_id"),
+    q = _normed(queries, fan=False).select(
+        F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
         F.col("nrm").alias("qn"),
         signbit_bucket("e", n_bits).alias("qbucket"),
@@ -350,7 +328,7 @@ def bucketed_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(dot / (F.col("qn") * F.col("cn")), round_to).alias("cosine"),
+            F.round(dot / (F.col("qn") * F.col("cn")), 6).alias("cosine"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -368,9 +346,6 @@ def multitable_topk(
     k: int = 3,
     n_bits: int = 6,
     n_tables: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Multi-table LSH ANN (the OR-construction): table ``t`` buckets on
     the sign bits of dimensions ``[t·n_bits, (t+1)·n_bits)``; a corpus
@@ -394,15 +369,15 @@ def multitable_topk(
     # `vec[i]` raises INVALID_ARRAY_INDEX at execution.  Callers running
     # ANSI-off sessions must pre-validate min(size(vec)) themselves
     # (session.get_spark pins spark.sql.ansi.enabled=true for this).
-    probe = corpus.select(F.size(F.col(vec_col)).alias("d")).head(1)
+    probe = corpus.select(F.size(F.col("embedding")).alias("d")).head(1)
     if probe and probe[0]["d"] < n_tables * n_bits:
         raise ValueError(
             f"multitable_topk needs dim >= n_tables*n_bits = "
-            f"{n_tables * n_bits}, but {vec_col} has dim {probe[0]['d']}; "
+            f"{n_tables * n_bits}, but embedding has dim {probe[0]['d']}; "
             f"lower n_tables/n_bits or random_project to a wider dim"
         )
-    c = _normed(corpus, id_col=id_col, vec_col=vec_col)
-    q = _normed(queries, id_col=id_col, vec_col=vec_col, fan=False)
+    c = _normed(corpus)
+    q = _normed(queries, fan=False)
     dot = F.expr(DOT.format(a="qe", b="ce"))
 
     # ONE corpus scan for all L tables: each row computes its L bucket
@@ -421,13 +396,13 @@ def multitable_topk(
         )
 
     ct = c.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.col("e").alias("ce"),
         F.col("nrm").alias("cn"),
         F.posexplode(buckets("e")).alias("t", "cbucket"),
     )
     qt = q.select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
         F.col("nrm").alias("qn"),
         F.posexplode(buckets("e")).alias("qt", "qbucket"),
@@ -440,7 +415,7 @@ def multitable_topk(
     ).select(
         "query_id",
         "neighbor_id",
-        F.round(dot / (F.col("qn") * F.col("cn")), round_to).alias("cosine"),
+        F.round(dot / (F.col("qn") * F.col("cn")), 6).alias("cosine"),
     )
     # same pair from several tables scores identically: max() dedups
     deduped = pairs.groupBy("query_id", "neighbor_id").agg(
@@ -460,15 +435,7 @@ SQDIST = (
 )
 
 
-def kmeans_lloyd(
-    df: DataFrame,
-    *,
-    k: int = 8,
-    max_iterations: int = 10,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_lloyd(df: DataFrame, *, k: int = 8, max_iterations: int = 10) -> DataFrame:
     """(id, cluster, sqdist) after Lloyd's iterations — the IVF-index
     trainer and general embedding clusterer.
 
@@ -488,22 +455,21 @@ def kmeans_lloyd(
     # it each iteration replays the scan+cast lineage and the plan grows
     d = (
         fan_out(df)
-        .select(F.col(id_col), as_double(vec_col).alias("e"))
+        .select(F.col("vec_id"), as_double("embedding").alias("e"))
         .localCheckpoint(eager=False)
     )
     first_row = d.select("e").first()
     if first_row is None:
         # empty corpus: no model to fit — a well-typed empty result, not
         # a crash (the empty-slice contract of test_empty_inputs)
-        id_type = dict(df.dtypes)[id_col]
+        id_type = dict(df.dtypes)["vec_id"]
         return spark.createDataFrame(
-            [], f"{id_col} {id_type}, cluster int, sqdist double"
+            [], f"vec_id {id_type}, cluster int, sqdist double"
         )
-    if dim is None:
-        dim = len(first_row["e"])
+    dim = len(first_row["e"])
     cents: list[list[float]] = [
         # first k BY id — filter(id < k) would seed nothing on sparse ids
-        list(r["e"]) for r in d.orderBy(id_col).limit(k).collect()
+        list(r["e"]) for r in d.orderBy("vec_id").limit(k).collect()
     ]
 
     def assign(centroids: list[list[float]]) -> DataFrame:
@@ -516,7 +482,7 @@ def kmeans_lloyd(
         return (
             d.crossJoin(F.broadcast(cdf))
             .withColumn("sqd", F.expr(SQDIST.format(a="e", b="ce")))
-            .groupBy(id_col)
+            .groupBy("vec_id")
             .agg(
                 F.min(
                     F.struct(
@@ -526,7 +492,7 @@ def kmeans_lloyd(
                     )
                 ).alias("best")
             )
-            .select(id_col, F.col("best.e").alias("e"),
+            .select("vec_id", F.col("best.e").alias("e"),
                     F.col("best.cluster").alias("cluster"),
                     F.col("best.sqd").alias("sqd"))
         )
@@ -550,26 +516,18 @@ def kmeans_lloyd(
         cents = new_cents
 
     return assign(cents).select(
-        id_col, "cluster", F.round("sqd", 6).alias("sqdist")
+        "vec_id", "cluster", F.round("sqd", 6).alias("sqdist")
     )
 
 
-def mmr_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 5,
-    pool: int = 20,
-    lam: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def mmr_topk(corpus: DataFrame, queries: DataFrame, *, k: int = 5, pool: int = 20) -> DataFrame:
     """Maximal-marginal-relevance top-k: diversified neighbors.
 
     Plain cosine top-k returns near-duplicates of each other; MMR
     greedily picks the candidate maximizing
-    ``lam * sim(query, c) - (1 - lam) * max_{s in selected} sim(c, s)``
-    so results cover the neighborhood instead of piling on one mode.
+    ``0.5 * (sim(query, c) - max_{s in selected} sim(c, s))`` (relevance
+    and diversity weighted equally), so results cover the neighborhood
+    instead of piling on one mode.
 
     Distributed shape: stage 1 is the existing :func:`cosine_topk`
     scan for a per-query candidate POOL (size ``pool`` — the only
@@ -595,20 +553,20 @@ def mmr_topk(
         StructType,
     )
 
-    pool_df = cosine_topk(corpus, queries, k=pool, id_col=id_col, vec_col=vec_col)
+    pool_df = cosine_topk(corpus, queries, k=pool)
     vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("nvec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.expr("transform(embedding, x -> cast(x as double))").alias("nvec"),
     )
     qvecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.expr("transform(embedding, x -> cast(x as double))").alias("qvec"),
     )
     pool_v = pool_df.join(vecs, "neighbor_id").join(qvecs, "query_id")
 
-    # id columns typed after the actual id_col — a hardcoded LongType
+    # id columns typed after the actual vec_id — a hardcoded LongType
     # would crash the Arrow serializer for string/uuid ids
-    id_type = corpus.schema[id_col].dataType
+    id_type = corpus.schema["vec_id"].dataType
     out_schema = StructType(
         [
             StructField("query_id", id_type),
@@ -636,7 +594,7 @@ def mmr_topk(
                 penalty = inter[:, chosen].max(axis=1)
             else:
                 penalty = np.zeros(len(ids))
-            mmr = lam * rel - (1 - lam) * penalty
+            mmr = 0.5 * (rel - penalty)
             mmr[~avail] = -np.inf
             best = int(np.argmax(mmr))     # first max = lowest id on ties
             chosen.append(best)
@@ -658,9 +616,7 @@ def mmr_topk(
     return pool_v.groupBy("query_id").applyInPandas(select, schema=out_schema)
 
 
-def _pq_parts(
-    corpus: DataFrame, *, m: int, ks: int, id_col: str, vec_col: str
-) -> "tuple[DataFrame, list, int]":
+def _pq_parts(corpus: DataFrame, *, m: int, ks: int) -> "tuple[DataFrame, list, int]":
     """Shared PQ prep: (prepared vectors, codebook rows, subdim).
 
     The codebook is deterministic — for each of the ``m`` subspaces, the
@@ -672,7 +628,7 @@ def _pq_parts(
     plain ``(sub, code, cvec)`` tuples so encode/LUT inline them as
     plan literals (row-local argmin, see :func:`_pq_encode_with`).
     """
-    d = _normed(corpus, id_col=id_col, vec_col=vec_col).select(id_col, "e")
+    d = _normed(corpus).select("vec_id", "e")
     # ONE bounded collect (ks rows) covers the dim probe AND the
     # codebook: before, a separate first() job probed the dim and the
     # two codebook broadcasts (encode side + query-LUT side) each
@@ -681,8 +637,8 @@ def _pq_parts(
     # UNFANNED corpus so the collect is a shuffle-free
     # TakeOrderedAndProject (see _seed_rows).
     seed_rows = (
-        corpus.select(F.col(id_col), as_double(vec_col).alias("e"))
-        .orderBy(id_col)
+        corpus.select(F.col("vec_id"), as_double("embedding").alias("e"))
+        .orderBy("vec_id")
         .limit(ks)
         .collect()
     )
@@ -702,7 +658,7 @@ def _pq_parts(
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sd = dim // m
     cb_rows = [
-        (sub, r[id_col],
+        (sub, r["vec_id"],
          None if r["e"] is None else list(r["e"][sub * sd:(sub + 1) * sd]))
         for r in seed_rows
         for sub in range(m)
@@ -725,8 +681,7 @@ def _pq_cb_literal(cb_rows, sub: int, id_sql_type: str) -> str:
 
 
 def _pq_encode_with(
-    d: DataFrame, cb_rows: list, sd: int, *, m: int, id_col: str,
-    id_sql_type: str
+    d: DataFrame, cb_rows: list, sd: int, *, m: int, id_sql_type: str
 ) -> DataFrame:
     """(id, sub, code): row-local PQ encode against the inlined codebook.
 
@@ -748,9 +703,9 @@ def _pq_encode_with(
         # empty codebook (empty corpus): the old inner join produced a
         # typed empty result — preserve it
         return d.select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.lit(0).cast("int").alias("sub"),
-            F.lit(None).cast(dict(d.dtypes)[id_col]).alias("code"),
+            F.lit(None).cast(dict(d.dtypes)["vec_id"]).alias("code"),
         ).filter(F.lit(False))
     # each sub-vector slice is bound ONCE per (row, sub) via a
     # one-element transform lambda (`sv`): written inline in the argmin
@@ -772,16 +727,16 @@ def _pq_encode_with(
             ).alias(f"__pq{sub}")
         )
     return (
-        d.select(id_col, *per_sub)
+        d.select("vec_id", *per_sub)
         .select(
-            id_col,
+            "vec_id",
             F.posexplode(F.array(*[f"__pq{s}" for s in range(m)])).alias(
                 "sub", "best"
             ),
         )
-        .groupBy(id_col, "sub")
+        .groupBy("vec_id", "sub")
         .agg(F.min("best").alias("best"))
-        .select(id_col, "sub", F.col("best.code").alias("code"))
+        .select("vec_id", "sub", F.col("best.code").alias("code"))
     )
 
 
@@ -792,8 +747,6 @@ def pq_topk(
     k: int = 3,
     m: int = 8,
     ks: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ asymmetric-distance top-k: the compressed-corpus ANN path.
 
@@ -814,13 +767,13 @@ def pq_topk(
     """
     # one shared prep: the encode path and the query LUT both use the
     # same corpus codebook (and its single dim-probe job)
-    id_sql_type = dict(corpus.dtypes)[id_col]
-    d, cb_rows, sd = _pq_parts(corpus, m=m, ks=ks, id_col=id_col, vec_col=vec_col)
+    id_sql_type = dict(corpus.dtypes)["vec_id"]
+    d, cb_rows, sd = _pq_parts(corpus, m=m, ks=ks)
     codes = _pq_encode_with(
-        d, cb_rows, sd, m=m, id_col=id_col, id_sql_type=id_sql_type
+        d, cb_rows, sd, m=m, id_sql_type=id_sql_type
     )
-    q = _normed(queries, id_col=id_col, vec_col=vec_col, fan=False).select(
-        id_col, "e"
+    q = _normed(queries, fan=False).select(
+        "vec_id", "e"
     )
     # the per-query LUT is |queries|·m·ks rows of partial distances:
     # built row-locally by exploding one flat (sub, code, cvec) literal
@@ -838,7 +791,7 @@ def pq_topk(
             f" * 1e6, 0) as bigint)"
         )
         lut = q.select(
-            F.col(id_col).alias("query_id"),
+            F.col("vec_id").alias("query_id"),
             F.explode(
                 F.expr(
                     f"transform(array({flat_entries}), c -> named_struct("
@@ -848,43 +801,35 @@ def pq_topk(
         ).select("query_id", "c.sub", "c.code", "c.pd")
     else:
         lut = q.select(
-            F.col(id_col).alias("query_id"),
+            F.col("vec_id").alias("query_id"),
             F.lit(0).cast("int").alias("sub"),
             F.lit(None).cast(id_sql_type).alias("code"),
             F.lit(None).cast("bigint").alias("pd"),
         ).filter(F.lit(False))
     dist = (
         codes.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", id_col)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
         .agg(F.sum("pd").alias("adist_micro"))
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("adist_micro"), F.asc(id_col))
+    w = W.partitionBy("query_id").orderBy(F.asc("adist_micro"), F.asc("vec_id"))
     return (
         dist.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "adist_micro")
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "adist_micro")
     )
 
 
-def _rademacher_sign(i: int, j: int, seed: str = "rp") -> int:
+def _rademacher_sign(i: int, j: int) -> int:
     """Deterministic ±1 from the shared md5-60bit hash — any engine that
     can md5 derives the identical projection matrix."""
     import hashlib
 
-    h = int(hashlib.md5(f"{seed}|{i}|{j}".encode()).hexdigest()[:15], 16)
+    h = int(hashlib.md5(f"rp|{i}|{j}".encode()).hexdigest()[:15], 16)
     return 1 if h % 2 == 0 else -1
 
 
-def random_project(
-    df: DataFrame,
-    *,
-    out_dim: int = 16,
-    in_dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: str = "rp",
-) -> DataFrame:
+def random_project(df: DataFrame, *, out_dim: int = 16, in_dim: int = 64) -> DataFrame:
     """Johnson–Lindenstrauss random projection to ``out_dim`` dims,
     long-form ``(id, j, proj_micro)`` — the ANN pre-processing step that
     shrinks embedding storage/compute before LSH or PQ indexing, with
@@ -894,7 +839,7 @@ def random_project(
     Determinism: inputs integerize to micro units first, and ±1 signs
     keep every output an exact INTEGER sum — bit-identical in any
     engine and any aggregation order (the pq_topk discipline).  The
-    projection matrix is md5-derived from ``seed``, never stored.
+    projection matrix is md5-derived from a fixed salt, never stored.
 
     Distributed shape: the whole operator is one row-local projection —
     ``out_dim`` codegen'd sums of ±x[i] with NO shuffle and NO UDF; at
@@ -904,21 +849,21 @@ def random_project(
     x = (
         fan_out(df)
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.expr(
-                f"transform({vec_col}, v -> cast(round(cast(v as double) * 1e6, 0) as bigint))"
+                "transform(embedding, v -> cast(round(cast(v as double) * 1e6, 0) as bigint))"
             ).alias("x"),
         )
     )
     projs = []
     for j in range(out_dim):
         terms = " + ".join(
-            f"({_rademacher_sign(i, j, seed)} * x[{i}])" for i in range(in_dim)
+            f"({_rademacher_sign(i, j)} * x[{i}])" for i in range(in_dim)
         )
         projs.append(F.expr(terms).alias(f"p{j}"))
-    wide = x.select(id_col, *projs)
+    wide = x.select("vec_id", *projs)
     return wide.select(
-        id_col,
+        "vec_id",
         F.posexplode(F.array(*[f"p{j}" for j in range(out_dim)])).alias(
             "j", "proj_micro"
         ),
@@ -930,9 +875,6 @@ def semantic_dedup(
     *,
     n_clusters: int = 16,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Semantic deduplication (SemDeDup, Abbas et al. 2023): cluster the
     embedding space, then inside each cluster drop every item that has an
@@ -955,23 +897,23 @@ def semantic_dedup(
     a production index would train seeds with :func:`kmeans_lloyd` and
     the rest of the plan is unchanged.
     """
-    c = _normed(corpus, id_col=id_col, vec_col=vec_col)
+    c = _normed(corpus)
     # first n_clusters BY id — see ivf_topk seeding note.  Round 11:
     # the seeds ARE collected here now (round 10 kept them lazy because
     # a single broadcast consumer saved no scans) — the row-local
     # argmin this enables removes the ×k candidate expansion and the
     # min(struct) SORT-aggregate whose exchange carried every row's
     # full embedding payload; that trade-off dwarfs the bounded collect.
-    seed_rows = _seed_rows(corpus, id_col=id_col, vec_col=vec_col, n=n_clusters)
+    seed_rows = _seed_rows(corpus, n=n_clusters)
     if not seed_rows:
         # empty corpus: typed-empty result, as the cross-join form gave
         return c.select(
-            F.col(id_col),
-            F.col(id_col).alias("cluster"),
+            F.col("vec_id"),
+            F.col("vec_id").alias("cluster"),
             F.lit(True).alias("kept"),
         ).filter(F.lit(False))
-    id_sql_type = dict(corpus.dtypes)[id_col]
-    cands = _cents_literal(seed_rows, id_sql_type, id_col)
+    id_sql_type = dict(corpus.dtypes)["vec_id"]
+    cands = _cents_literal(seed_rows, id_sql_type)
     dot_c = DOT.format(a="e", b="c.ce")
     # row-local argmin over the plan-literal centroids — the struct and
     # its interpreted ordering (ascending, NULL sim first) are exactly
@@ -981,14 +923,14 @@ def semantic_dedup(
     # of per row×k.
     best = F.expr(
         f"array_min(transform({cands}, c -> named_struct("
-        f"'negsim', -round(({dot_c}) / (nrm * c.cn), {round_to}), "
+        f"'negsim', -round(({dot_c}) / (nrm * c.cn), 6), "
         f"'cent_id', c.cent_id, 'e', e, 'nrm', nrm)))"
     )
     assign = (
-        c.select(F.col(id_col), best.alias("best"))
-        .groupBy(id_col)
+        c.select(F.col("vec_id"), best.alias("best"))
+        .groupBy("vec_id")
         .agg(F.min("best").alias("best"))
-        .select(F.col(id_col), F.col("best.e").alias("e"),
+        .select(F.col("vec_id"), F.col("best.e").alias("e"),
                 F.col("best.nrm").alias("nrm"), F.col("best.cent_id").alias("cluster"))
         # three consumers below (both pair sides + the final labeling
         # join) would each replay the scan+assignment lineage;
@@ -997,29 +939,29 @@ def semantic_dedup(
     )
     a = assign.select(
         F.col("cluster"),
-        F.col(id_col).alias("id_a"),
+        F.col("vec_id").alias("id_a"),
         F.col("e").alias("ea"),
         F.col("nrm").alias("na"),
     )
     b = assign.select(
         F.col("cluster"),
-        F.col(id_col).alias("id_b"),
+        F.col("vec_id").alias("id_b"),
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    cos = F.round(F.expr(DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb")), round_to)
+    cos = F.round(F.expr(DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb")), 6)
     dropped = (
         a.join(b, ["cluster"])
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", cos)
         .filter(F.col("cosine") >= threshold)
-        .select(F.col("id_b").alias(id_col))
+        .select(F.col("id_b").alias("vec_id"))
         .distinct()
     )
     return (
-        assign.join(dropped.withColumn("is_dup", F.lit(True)), id_col, "left")
+        assign.join(dropped.withColumn("is_dup", F.lit(True)), "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "cluster",
             F.coalesce(~F.col("is_dup"), F.lit(True)).alias("kept"),
         )

@@ -22,15 +22,15 @@ STOPWORDS = {
 }
 
 
-def text_stats(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def text_stats(df: DataFrame) -> DataFrame:
     """(id, n_tokens, n_uniq, ttr, avg_token_len) per document."""
-    d = df.withColumn("toks", tokens(text_col))
+    d = df.withColumn("toks", tokens("text"))
     n_tokens = F.size("toks").cast("long")
     n_uniq = F.size(F.array_distinct("toks")).cast("long")
     total_len = F.expr("aggregate(toks, 0L, (acc, x) -> acc + length(x))")
     denom = F.nullif(n_tokens, F.lit(0)).cast("double")
     return d.select(
-        id_col,
+        "doc_id",
         n_tokens.alias("n_tokens"),
         n_uniq.alias("n_uniq"),
         F.round(n_uniq / denom, 4).alias("ttr"),
@@ -43,9 +43,9 @@ def _stop_count(lang: str) -> Column:
     return F.expr(f"size(filter(toks, x -> x IN ({words})))")
 
 
-def lang_scores(df: DataFrame, *, text_col: str = "text") -> DataFrame:
+def lang_scores(df: DataFrame) -> DataFrame:
     """Adds per-language stopword-vote columns (<lang>_n) + toks."""
-    d = df.withColumn("toks", tokens(text_col))
+    d = df.withColumn("toks", tokens("text"))
     for lang in STOPWORDS:
         d = d.withColumn(f"{lang}_n", _stop_count(lang))
     return d
@@ -64,10 +64,10 @@ def lang_pred_col() -> Column:
     )
 
 
-def token_counts(df: DataFrame, *, text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Adds ws_tokens (whitespace) and bpe_tokens (regex lexer) columns."""
-    d = df.withColumn("toks", tokens(text_col))
-    bpe = F.expr(f"size(regexp_extract_all(lower({text_col}), '{TOK_RE_SPARK}', 0))").cast("long")
+    d = df.withColumn("toks", tokens("text"))
+    bpe = F.expr(f"size(regexp_extract_all(lower(text), '{TOK_RE_SPARK}', 0))").cast("long")
     return d.withColumn("ws_tokens", F.size("toks").cast("long")).withColumn("bpe_tokens", bpe)
 
 
@@ -92,21 +92,14 @@ def quality_column(text_col: str = "text", toks_col: str = "toks") -> Column:
     return F.round(quality + F.lit(1e-9), 4)
 
 
-def quality_score(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """(id, quality): length saturation + lexical diversity + alphabetic
     purity — the standard pretraining-data quality triple."""
-    d = df.withColumn("toks", tokens(text_col))
-    return d.select(id_col, quality_column(text_col, "toks").alias("quality"))
+    d = df.withColumn("toks", tokens("text"))
+    return d.select("doc_id", quality_column("text", "toks").alias("quality"))
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, *, k: int = 3, w: int = 4) -> DataFrame:
     """Document fingerprints by winnowing (Schleimer/Wilkerson/Aiken,
     SIGMOD'03): hash every word ``k``-gram in positional order, then keep
     the minimum hash of each sliding window of ``w`` consecutive k-gram
@@ -135,10 +128,10 @@ def winnow_fingerprints(
     )
     return (
         fan_out(df)
-        .withColumn("toks", tokens(text_col))
+        .withColumn("toks", tokens("text"))
         .filter(F.size("toks") >= k)
         .withColumn("hs", F.expr(hs))
-        .select(id_col, F.explode(F.expr(fps)).alias("fingerprint"))
+        .select("doc_id", F.explode(F.expr(fps)).alias("fingerprint"))
     )
 
 
@@ -151,26 +144,24 @@ REDACTIONS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def redact(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def redact(df: DataFrame) -> DataFrame:
     """(id, clean_text, n_redactions): scrub emails / URLs / long digit
     runs — the standard pre-training hygiene pass.  Pure
     ``regexp_replace`` chain, JVM-side; n_redactions is measured from
     the marker count so filtering 'heavily redacted' docs needs no
     second pass."""
-    clean = F.col(text_col)
+    clean = F.col("text")
     for _, pattern, marker in REDACTIONS:
         clean = F.regexp_replace(clean, pattern, marker)
-    d = df.select(F.col(id_col), clean.alias("clean_text"))
+    d = df.select(F.col("doc_id"), clean.alias("clean_text"))
     n = sum(
         (F.size(F.split(F.col("clean_text"), F.lit(marker), -1)) - 1)
         for _, _, marker in REDACTIONS
     )
-    return d.select(id_col, "clean_text", n.cast("long").alias("n_redactions"))
+    return d.select("doc_id", "clean_text", n.cast("long").alias("n_redactions"))
 
 
-def ngram_repetition(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", n: int = 2
-) -> DataFrame:
+def ngram_repetition(df: DataFrame, *, n: int = 2) -> DataFrame:
     """(id, n_grams, dup_gram_frac, top_gram_frac) — the Gopher-style
     repetition signals (Rae et al. 2021 §A1.1): fraction of duplicated
     word n-grams and the share held by the single most frequent one.
@@ -184,15 +175,15 @@ def ngram_repetition(
     from etl_batch_spark.llmops.dedup import shingle_array, tokens
 
     grams = (
-        fan_out(df).withColumn("toks", tokens(text_col))
-        .select(id_col, F.explode(shingle_array("toks", n=n)).alias("gram"))
+        fan_out(df).withColumn("toks", tokens("text"))
+        .select("doc_id", F.explode(shingle_array("toks", n=n)).alias("gram"))
     )
-    per_gram = grams.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("c"))
+    per_gram = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
     total = F.sum("c").cast("double")
     # +1e-9 before rounding: same half-boundary determinism nudge as
     # quality_score — ratios of small integers can land exactly on
     # .xxxx5 where engines round double halves differently.
-    return per_gram.groupBy(id_col).agg(
+    return per_gram.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_grams"),
         F.round(1 - F.count(F.lit(1)) / total + F.lit(1e-9), 4).alias(
             "dup_gram_frac"
@@ -201,9 +192,7 @@ def ngram_repetition(
     )
 
 
-def token_entropy(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def token_entropy(df: DataFrame) -> DataFrame:
     """(id, n_tokens, entropy) — Shannon entropy (nats) of the token
     distribution, a cheap gibberish/boilerplate signal: near-zero for
     pathologically repetitive docs, ~ln(vocab) for diverse ones.
@@ -215,12 +204,12 @@ def token_entropy(
     from etl_batch_spark.llmops.dedup import tokens
 
     toks = (
-        fan_out(df).withColumn("toks", tokens(text_col))
-        .select(id_col, F.explode("toks").alias("tok"))
+        fan_out(df).withColumn("toks", tokens("text"))
+        .select("doc_id", F.explode("toks").alias("tok"))
     )
-    counts = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
+    counts = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     n = F.sum("c").cast("double")
-    return counts.groupBy(id_col).agg(
+    return counts.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_tokens"),
         F.round(
             F.log(n) - F.sum(F.col("c") * F.log("c")) / n + F.lit(1e-9), 4
@@ -228,9 +217,7 @@ def token_entropy(
     )
 
 
-def bigram_lm_score(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def bigram_lm_score(df: DataFrame) -> DataFrame:
     """Self-scored bigram language-model fluency — the KenLM-perplexity
     quality signal (CCNet / Gopher filtering) without an external model:
     the corpus IS the LM.  Per doc: ``(n_bigrams, sum_logp_centi,
@@ -255,18 +242,18 @@ def bigram_lm_score(
 
     toks = (
         fan_out(df)
-        .withColumn("toks", tokens(text_col))
+        .withColumn("toks", tokens("text"))
         .filter(F.size("toks") >= 2)
     )
     bg = toks.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.expr(
                 "transform(sequence(0, size(toks) - 2), "
                 "i -> struct(toks[i] as w1, toks[i+1] as w2))"
             )
         ).alias("b"),
-    ).select(id_col, "b.w1", "b.w2")
+    ).select("doc_id", "b.w1", "b.w2")
     c2 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     vocab = toks.select(F.explode("toks").alias("tok")).agg(
@@ -287,7 +274,7 @@ def bigram_lm_score(
         .withColumn("logp_centi", logp_centi)
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.sum("logp_centi").alias("sum_logp_centi"),
@@ -303,8 +290,6 @@ def contamination(
     train: DataFrame,
     bench: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 4,
     train_toks_col: "str | None" = None,
 ) -> DataFrame:
@@ -323,15 +308,15 @@ def contamination(
     """
     from etl_batch_spark.llmops.dedup import shingle_sets
 
-    t = shingle_sets(
-        train, id_col=id_col, text_col=text_col, n=n, toks_col=train_toks_col
-    ).select(F.col(id_col), F.explode("sh").alias("gram"))
-    b = shingle_sets(bench, id_col=id_col, text_col=text_col, n=n).select(
-        F.col(id_col).alias("bench_id"), F.explode("sh").alias("gram")
+    t = shingle_sets(train, n=n, toks_col=train_toks_col).select(
+        F.col("doc_id"), F.explode("sh").alias("gram")
+    )
+    b = shingle_sets(bench, n=n).select(
+        F.col("doc_id").alias("bench_id"), F.explode("sh").alias("gram")
     )
     return (
         t.join(F.broadcast(b), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.countDistinct("gram").alias("n_shared_grams"),
             F.countDistinct("bench_id").alias("n_bench_docs"),
@@ -339,17 +324,9 @@ def contamination(
     )
 
 
-def pack_chunks(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    part_col: str = "source",
-    order_col: str = "doc_id",
-    text_col: str = "text",
-    capacity: int = 512,
-) -> DataFrame:
+def pack_chunks(df: DataFrame, *, capacity: int = 512) -> DataFrame:
     """Concat-and-chunk sequence packing: documents are concatenated in
-    ``order_col`` order within each ``part_col`` stream and split into
+    ``doc_id`` order within each ``source`` stream and split into
     fixed ``capacity``-token training chunks (the GPT-style packing
     layout).  Emits each doc's span: (doc, part, n_tokens, chunk_start,
     chunk_end) — a doc crossing a boundary spans several chunks.
@@ -361,16 +338,16 @@ def pack_chunks(
     from pyspark.sql import Window
     from etl_batch_spark.llmops.dedup import tokens
 
-    d = df.withColumn("n_tokens", F.size(tokens(text_col)).cast("long"))
+    d = df.withColumn("n_tokens", F.size(tokens("text")).cast("long"))
     w = (
-        Window.partitionBy(part_col)
-        .orderBy(order_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     offset = F.sum("n_tokens").over(w) - F.col("n_tokens")
     return d.select(
-        id_col,
-        part_col,
+        "doc_id",
+        "source",
         "n_tokens",
         F.floor(offset / capacity).cast("long").alias("chunk_start"),
         # greatest(n,1): a zero-token doc's span is (start, start), never
@@ -384,11 +361,8 @@ def pack_chunks(
 def pack_nextfit(
     df: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     capacity: int = 256,
     n_shards: int = 4,
-    salt: str = "pack",
     n_tok_col: "str | None" = None,
 ) -> DataFrame:
     """Next-fit-DECREASING bin packing: ``(id, shard, n_tok, bin,
@@ -422,7 +396,7 @@ def pack_nextfit(
     from etl_batch_spark.catalog import fan_out
     from etl_batch_spark.llmops.dedup import H60, tokens
 
-    h = H60.format(expr=f"concat('{salt}', '|', cast({id_col} as string))")
+    h = H60.format(expr="concat('pack', '|', cast(doc_id as string))")
     shard = F.expr(f"pmod({h}, {n_shards})").cast("int").alias("shard")
     if n_tok_col is not None:
         # pre-counted tokens (a pipeline that tokenized once upstream —
@@ -430,7 +404,7 @@ def pack_nextfit(
         # a NULL token array is NULL), so the skip rule is unchanged and
         # the heavy per-row tokenize pass never re-runs here
         prepped = df.filter(F.col(n_tok_col).isNotNull()).select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col(n_tok_col).cast("long").alias("n_tok"),
             shard,
         )
@@ -438,10 +412,10 @@ def pack_nextfit(
         # a NULL text has no token count: it cannot be placed in a bin
         # (and a NaN n_tok would crash the per-shard walk) — skip it
         prepped = (
-            fan_out(df.filter(F.col(text_col).isNotNull()))
+            fan_out(df.filter(F.col("text").isNotNull()))
             .select(
-                F.col(id_col),
-                F.size(tokens(text_col)).cast("long").alias("n_tok"),
+                F.col("doc_id"),
+                F.size(tokens("text")).cast("long").alias("n_tok"),
                 shard,
             )
         )
@@ -450,7 +424,7 @@ def pack_nextfit(
     # must honor the parameter too, not a hardcoded 'doc_id'
     out_schema = StructType(
         [
-            StructField(id_col, df.schema[id_col].dataType),
+            StructField("doc_id", df.schema["doc_id"].dataType),
             StructField("shard", IntegerType()),
             StructField("n_tok", LongType()),
             StructField("bin", IntegerType()),
@@ -459,7 +433,7 @@ def pack_nextfit(
     )
 
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["n_tok", id_col], ascending=[False, True])
+        pdf = pdf.sort_values(["n_tok", "doc_id"], ascending=[False, True])
         bins, fills = [], []
         cur_bin, fill = 0, 0
         for n in pdf["n_tok"]:
@@ -472,7 +446,7 @@ def pack_nextfit(
             fills.append(fill)
         return pd.DataFrame(
             {
-                id_col: pdf[id_col].to_numpy(),
+                "doc_id": pdf["doc_id"].to_numpy(),
                 "shard": pdf["shard"].to_numpy(),
                 "n_tok": pdf["n_tok"].to_numpy(),
                 "bin": pd.array(bins, dtype="int32"),
@@ -483,7 +457,7 @@ def pack_nextfit(
     return prepped.groupBy("shard").applyInPandas(walk, schema=out_schema)
 
 
-def score_batch(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def score_batch(df: DataFrame) -> DataFrame:
     """(id, score): a quality-classifier forward pass as an Arrow-batched
     pandas UDF — the inference plumbing (featurize → vectorized model →
     score column) that a real ONNX/sklearn classifier slots into by
@@ -496,7 +470,7 @@ def score_batch(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
     no per-row Python, no collect, model state broadcast by closure
     (a real model would load once per executor via a lazy global).
     """
-    schema = f"{id_col} long, score double"
+    schema = "doc_id long, score double"
 
     def _logistic(batches):
         import numpy as np
@@ -506,8 +480,8 @@ def score_batch(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
             # NULL text -> NULL score: a model cannot infer on missing
             # input, and fillna('') would fabricate the empty-string
             # score for it (0.182426 — a silent constant)
-            missing = pdf[text_col].isna().to_numpy()
-            txt = pdf[text_col].fillna("")
+            missing = pdf["text"].isna().to_numpy()
+            txt = pdf["text"].fillna("")
             n_chars = txt.str.len().clip(upper=2000)
             # explicit ASCII whitespace class (= Java regex \s), NOT
             # pandas .split(): Python's no-arg split is Unicode-aware
@@ -519,7 +493,7 @@ def score_batch(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
             digits = txt.str.count(r"[0-9]")
             ratio = digits / np.maximum(txt.str.len(), 1)
             z = -1.5 + 0.004 * n_chars + 0.02 * n_tok - 2.0 * ratio
-            out = pdf[[id_col]].copy()
+            out = pdf[["doc_id"]].copy()
             score = (1.0 / (1.0 + np.exp(-z))).round(6)
             out["score"] = pd.array(
                 np.where(missing, np.nan, score), dtype="Float64"
@@ -527,19 +501,10 @@ def score_batch(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
             out.loc[missing, "score"] = pd.NA
             yield out
 
-    return df.select(id_col, text_col).mapInPandas(_logistic, schema=schema)
+    return df.select("doc_id", "text").mapInPandas(_logistic, schema=schema)
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_terms: "list[str]",
-    *,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bm25_topk(df: DataFrame, query_terms: "list[str]", *, k: int = 10) -> DataFrame:
     """Okapi BM25 keyword search: top-``k`` documents for a bag of query
     terms; (id, score) with Lucene's idf = ln(1 + (N-df+.5)/(df+.5)).
 
@@ -555,6 +520,7 @@ def bm25_topk(
     from etl_batch_spark.catalog import fan_out
     from etl_batch_spark.llmops.dedup import tokens
 
+    k1, b = 1.2, 0.75  # the usual Okapi saturation and length-norm constants
     terms = F.array(*[F.lit(t) for t in query_terms])
     # ONE corpus pass: tokenize once into (id, dl, query-term hits) —
     # a shuffle-volume-sized projection — and localCheckpoint it so the
@@ -563,9 +529,9 @@ def bm25_topk(
     # form carried three full-corpus tokenization passes).
     base = (
         fan_out(df)
-        .select(F.col(id_col), tokens(text_col).alias("toks"))
+        .select(F.col("doc_id"), tokens("text").alias("toks"))
         .select(
-            id_col,
+            "doc_id",
             F.size("toks").cast("double").alias("dl"),
             F.filter("toks", lambda t: F.array_contains(terms, t)).alias("hits"),
         )
@@ -578,7 +544,7 @@ def bm25_topk(
     # doc and df must count each doc once, which the per-row form gets
     # wrong (caught by the t76 ties+dups stress corpus).
     toked = base.select(
-        id_col, "dl", F.explode("hits").alias("term")
+        "doc_id", "dl", F.explode("hits").alias("term")
     )
     # materialized once (round 11): both the scoring join AND the
     # per-term document frequency consume tf, and without the
@@ -588,7 +554,7 @@ def bm25_topk(
     # query-term HITS — |terms|·matching docs, tiny relative to the
     # corpus at any scale.
     tf = (
-        toked.groupBy(id_col, "term")
+        toked.groupBy("doc_id", "term")
         .agg(
             F.count(F.lit(1)).cast("double").alias("tf"),
             F.first("dl").alias("dl"),
@@ -621,17 +587,15 @@ def bm25_topk(
                 * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
             ),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
     )
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def chunk_tokens(
     df: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     size: int = 32,
     stride: int = 24,
     keep_cols: "tuple[str, ...]" = (),
@@ -644,10 +608,10 @@ def chunk_tokens(
     """
     from etl_batch_spark.llmops.dedup import tokens
 
-    d = df.select(id_col, *keep_cols, tokens(text_col).alias("toks"))
+    d = df.select("doc_id", *keep_cols, tokens("text").alias("toks"))
     n = F.size("toks")
     starts = d.filter(n > 0).select(
-        id_col,
+        "doc_id",
         *keep_cols,
         "toks",
         F.explode(F.sequence(F.lit(0), n - 1, F.lit(stride))).alias("start"),
@@ -659,7 +623,7 @@ def chunk_tokens(
         (F.col("start") == 0) | (F.col("start") - stride + size < F.size("toks"))
     )
     return starts.select(
-        id_col,
+        "doc_id",
         *keep_cols,
         (F.col("start") / stride).cast("int").alias("chunk_idx"),
         F.least(F.lit(size), F.size("toks") - F.col("start")).cast("int").alias("n_tokens"),
@@ -667,13 +631,7 @@ def chunk_tokens(
     )
 
 
-def feature_hash(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_features: int = 64,
-) -> DataFrame:
+def feature_hash(df: DataFrame, *, n_features: int = 64) -> DataFrame:
     """Hashing-trick featurizer (Weinberger et al., ICML 2009): sparse
     bag-of-tokens vectors in a FIXED ``n_features``-dim space, long-form
     ``(id, feature, tf, signed_tf)``.
@@ -688,7 +646,7 @@ def feature_hash(
     """
     from etl_batch_spark.llmops.dedup import H60, tokens
 
-    toks = df.select(id_col, F.explode(tokens(text_col)).alias("tok"))
+    toks = df.select("doc_id", F.explode(tokens("text")).alias("tok"))
     feat = (F.expr(H60.format(expr="tok")) % n_features).alias("feature")
     sign = (
         F.when(
@@ -696,7 +654,7 @@ def feature_hash(
         ).otherwise(-1)
     )
     return (
-        toks.groupBy(id_col, feat)
+        toks.groupBy("doc_id", feat)
         .agg(
             F.count(F.lit(1)).alias("tf"),
             F.sum(sign).alias("signed_tf"),
@@ -704,9 +662,7 @@ def feature_hash(
     )
 
 
-def gopher_rules(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_rules(df: DataFrame) -> DataFrame:
     """The published Gopher quality-rule set (Rae et al. 2021, App. A)
     as one native-expression pass — the standard pretraining heuristic
     filter, emitted with per-rule evidence columns so curation can
@@ -725,15 +681,15 @@ def gopher_rules(
     too short to evaluate (n_words < 50 fails rule 1 before any ratio
     can go NULL).  One scan, zero shuffles, zero Python.
     """
-    d = df.withColumn("toks", tokens(text_col)).withColumn(
-        "lines", F.split(F.col(text_col), "\n")
+    d = df.withColumn("toks", tokens("text")).withColumn(
+        "lines", F.split(F.col("text"), "\n")
     )
     n_words = F.size("toks").cast("long")
     denom = F.nullif(n_words, F.lit(0)).cast("double")
     mean_len = F.expr("aggregate(toks, 0L, (acc, x) -> acc + length(x))") / denom
     n_sym = (
-        F.length(text_col) - F.length(F.replace(text_col, F.lit("#"), F.lit("")))
-        + F.length(text_col) - F.length(F.replace(text_col, F.lit("…"), F.lit("")))
+        F.length("text") - F.length(F.replace("text", F.lit("#"), F.lit("")))
+        + F.length("text") - F.length(F.replace("text", F.lit("…"), F.lit("")))
     )
     symbol_ratio = n_sym / denom
     n_lines = F.nullif(F.size("lines"), F.lit(0)).cast("double")
@@ -760,7 +716,7 @@ def gopher_rules(
         & (stop_hits >= 2)
     )
     return d.select(
-        id_col,
+        "doc_id",
         n_words.alias("n_words"),
         mean_len.alias("mean_word_len"),
         symbol_ratio.alias("symbol_ratio"),

@@ -12,8 +12,9 @@ Scope (deliberate): uncompressed PCM and IEEE-float WAVE files — the
 format that dominates speech/audio training corpora at the ingest
 stage.  Compressed codecs (MP3/AAC/Opus/FLAC, and legacy ADPCM/mu-law
 format tags) raise ``WavError`` — at training-pipeline scale those
-route to a quarantine sink (``multimodal.decode_audio(
-errors="quarantine")``) rather than a slower universal decoder, and a
+route to a quarantine sink (the header-only triage of
+``mediainfo.probe_media_df`` runs before any decode) rather than a
+slower universal decoder, and a
 real cluster swaps this module for ffmpeg behind the same interface.
 
 Like the image codecs: every malformed-input path raises ``WavError``

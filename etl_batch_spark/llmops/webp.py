@@ -1,7 +1,7 @@
 """Pure-stdlib WebP container probe (the RIFF family's image member).
 
 WebP is the last common crawl image payload without a probe→census
-tier in the repo (JPEG/PNG/GIF/BMP/PNM decode; AVI/WAV walk).  This
+tier in the repo (JPEG/PNG/GIF/BMP/PNM decode; WAV walk).  This
 module parses the container and frame headers in O(header + chunk
 walk): canvas dimensions, lossy/lossless/extended variant, alpha,
 animation frame count and total duration, and metadata-chunk presence

@@ -5,7 +5,8 @@ shuffle-linear cost.
 nearest right row per key: ``backward`` (latest right ≤ left, the quote
 lookup), ``forward`` (earliest right ≥ left), or ``nearest``; an
 optional ``tolerance_s`` (seconds) discards matches farther than the
-bound.  ``allow_exact_matches=False`` makes the comparison strict.
+bound.  Exact matches count (the comparison is inclusive); matched
+right columns come back suffixed ``_right``.
 
 Shape: union both inputs tagged by side, then windows over (keys, time)
 — a single shuffle regardless of direction (``nearest`` adds a second
@@ -33,9 +34,7 @@ def asof_join(
     by: Sequence[str] = (),
     direction: str = "backward",
     tolerance_s: float | None = None,
-    allow_exact_matches: bool = True,
     right_value_cols: Sequence[str] | None = None,
-    suffix: str = "_right",
 ) -> DataFrame:
     """Left rows + matched right value columns (null when no match).
 
@@ -69,11 +68,9 @@ def asof_join(
 
     # exact matches are an ORDERING question, not a frame question: with
     # right rows (side 0) sorted before coincident left rows, an equal-ts
-    # right row falls inside the up-to-current frame (inclusive match);
-    # sorting left rows first pushes equal-ts right rows past the frame
-    # (strict match).  A -1 frame end would only skip one row, not every
-    # coincident one.
-    tie = F.col("_side").asc() if allow_exact_matches else F.col("_side").desc()
+    # right row falls inside the up-to-current frame (inclusive match).
+    # A -1 frame end would only skip one row, not every coincident one.
+    tie = F.col("_side").asc()
 
     def matched(dirn: str) -> Column:
         # forward direction flips the time axis and reuses the same frame.
@@ -123,7 +120,7 @@ def asof_join(
             F.abs(F.unix_micros(F.col(on)) - F.unix_micros(F.col("_m.__on"))) / 1e6
         )
         keep = keep & (gap <= tolerance_s)
-    out = out.withColumn(f"{on}{suffix}", F.when(keep, F.col("_m.__on")))
+    out = out.withColumn(f"{on}_right", F.when(keep, F.col("_m.__on")))
     for c in vals:
-        out = out.withColumn(f"{c}{suffix}", F.when(keep, F.col(f"_m.{c}")))
+        out = out.withColumn(f"{c}_right", F.when(keep, F.col(f"_m.{c}")))
     return out.drop("_m")

@@ -12,17 +12,17 @@ is the explicit, composable version with a controlled error budget.
 Everything is JVM-side expression arithmetic (``xxhash64`` + bit math,
 whole-stage-codegen'd):
 
-- **build**: per key, ``num_hashes`` positions ``pmod(xxhash64(key, i),
+- **build**: per key, ``NUM_HASHES`` positions ``pmod(xxhash64(key, i),
   num_bits)``; positions fold into a bitmap via ``explode`` →
   ``groupBy(word).bit_or(bit)`` — one partial-aggregated shuffle of at
   most ``num_bits/64`` longs per partition, then a driver collect that
   is bounded by ``num_bits`` (128 KiB at the 2^20 default), never by
   the dimension's row count.
 - **probe**: the bitmap is a foldable array literal (ConstantFolding
-  collapses it to a single ``Literal``), membership is ``num_hashes``
+  collapses it to a single ``Literal``), membership is ``NUM_HASHES``
   AND'ed bit tests — a scan-side Filter, no join node at all.
 
-False positives pass the filter (tune ``num_bits``/``num_hashes``);
+False positives pass the filter (tune ``num_bits``);
 false negatives cannot happen.  ``bloom_semi_filter(..., exact=True)``
 appends a real semi join on the *pruned* fact to strip the false
 positives, so its result is exactly the semi join at a fraction of the
@@ -44,6 +44,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+NUM_HASHES = 5  # hash probes per key: ~1% false positives at 10 bits/key
+
 
 @dataclass(frozen=True)
 class BloomFilter:
@@ -51,12 +53,11 @@ class BloomFilter:
     ``64*i .. 64*i+63``."""
 
     num_bits: int
-    num_hashes: int
     words: list[int] = field(repr=False)
     n_items: int = 0
 
     def might_contain(self, key: Column | str) -> Column:
-        """JVM membership test: AND of ``num_hashes`` bit probes against
+        """JVM membership test: AND of ``NUM_HASHES`` bit probes against
         the bitmap literal.  NULL keys test false — semi-join semantics
         (NULL never matches); the explicit IsNotNull seed matters because
         ``xxhash64`` IGNORES null children and would otherwise probe a
@@ -64,7 +65,7 @@ class BloomFilter:
 
         The bitmap literal is built as ONE parsed SQL expression, not
         ``F.lit(words)``: the element-wise form issues a py4j round trip
-        per word per probe (num_hashes × num_bits/64 calls — measured
+        per word per probe (NUM_HASHES × num_bits/64 calls — measured
         ~2 s of pure driver time per q78 bench iteration at the 2^16
         default), while a single ``array(...L)`` string parses in the
         JVM in one call.  Runtime is identical — ConstantFolding
@@ -75,7 +76,7 @@ class BloomFilter:
             "array(" + ",".join(f"{w}L" for w in self.words) + ")"
         )
         cond = key.isNotNull()
-        for i in range(self.num_hashes):
+        for i in range(NUM_HASHES):
             pos = F.pmod(F.xxhash64(key, F.lit(i)), F.lit(self.num_bits))
             word = F.element_at(bitmap, (pos / 64).cast("int") + 1)
             bit = F.call_function("shiftleft", F.lit(1).cast("long"), (pos % 64).cast("int"))
@@ -83,13 +84,7 @@ class BloomFilter:
         return cond
 
 
-def build_bloom(
-    dim: DataFrame,
-    key_col: str,
-    *,
-    num_bits: int = 1 << 20,
-    num_hashes: int = 5,
-) -> BloomFilter:
+def build_bloom(dim: DataFrame, key_col: str, *, num_bits: int = 1 << 20) -> BloomFilter:
     """Aggregate ``dim[key_col]``'s key set into a :class:`BloomFilter`.
 
     One job: map-side position expansion, partial ``bit_or`` combine,
@@ -97,11 +92,9 @@ def build_bloom(
     """
     if num_bits < 64 or num_bits & (num_bits - 1):
         raise ValueError(f"num_bits must be a power of two >= 64, got {num_bits}")
-    if not 1 <= num_hashes <= 16:
-        raise ValueError(f"num_hashes must be in 1..16, got {num_hashes}")
     key = F.col(key_col)
     positions = F.array(
-        *[F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits)) for i in range(num_hashes)]
+        *[F.pmod(F.xxhash64(key, F.lit(i)), F.lit(num_bits)) for i in range(NUM_HASHES)]
     )
     agg = (
         dim.filter(key.isNotNull())
@@ -114,7 +107,7 @@ def build_bloom(
         )
         .groupBy("word")
         # per-word position count rides the same aggregation: the exploded
-        # row count is exactly n_items·num_hashes, so n_items needs no
+        # row count is exactly n_items·NUM_HASHES, so n_items needs no
         # second scan of dim
         .agg(F.bit_or("bit").alias("bits"), F.count(F.lit(1)).alias("n_pos"))
         .collect()
@@ -122,8 +115,8 @@ def build_bloom(
     words = [0] * (num_bits // 64)
     for row in agg:
         words[row["word"]] = row["bits"]
-    n_items = sum(row["n_pos"] for row in agg) // num_hashes
-    return BloomFilter(num_bits=num_bits, num_hashes=num_hashes, words=words, n_items=n_items)
+    n_items = sum(row["n_pos"] for row in agg) // NUM_HASHES
+    return BloomFilter(num_bits=num_bits, words=words, n_items=n_items)
 
 
 def bloom_semi_filter(
@@ -133,7 +126,6 @@ def bloom_semi_filter(
     dim_key: str,
     *,
     num_bits: int = 1 << 20,
-    num_hashes: int = 5,
     exact: bool = True,
 ) -> DataFrame:
     """``fact`` rows whose ``fact_key`` appears in ``dim[dim_key]``.
@@ -167,7 +159,7 @@ def bloom_semi_filter(
                 f"{dim_key} is {d_dt.simpleString()} — cast one side first "
                 f"(xxhash64 would never match)"
             )
-    bf = build_bloom(dim, dim_key, num_bits=num_bits, num_hashes=num_hashes)
+    bf = build_bloom(dim, dim_key, num_bits=num_bits)
     pruned = fact.filter(bf.might_contain(probe_key))
     if not exact:
         return pruned

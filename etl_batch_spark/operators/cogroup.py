@@ -39,19 +39,18 @@ def cogroup_interpolate(
     key_col: str,
     ts_col: str,
     value_col: str,
-    out_col: str = "interp_value",
 ) -> DataFrame:
     """For every target row, linearly interpolate ``samples[value_col]``
     at the target's ``ts_col``, per ``key_col`` group.
 
     ``samples`` must be unique per (key, ts) — pre-aggregate duplicates
     (e.g. ``groupBy(key, ts).agg(avg(value))``) or the neighbor choice
-    is undefined.  Output is ``targets``'s schema plus ``out_col``
+    is undefined.  Output is ``targets``'s schema plus ``interp_value``
     (nullable double; NULL outside the sample hull or for keys with no
     samples).
     """
-    if out_col in targets.columns:
-        raise ValueError(f"targets already has a column named {out_col!r}")
+    if "interp_value" in targets.columns:
+        raise ValueError("targets already has a column named 'interp_value'")
     for c in (key_col, ts_col):
         if c not in targets.columns or c not in samples.columns:
             raise ValueError(f"column {c!r} must exist on both sides")
@@ -59,7 +58,7 @@ def cogroup_interpolate(
         raise ValueError(f"samples is missing value column {value_col!r}")
 
     out_schema = StructType(
-        targets.schema.fields + [StructField(out_col, DoubleType(), True)]
+        targets.schema.fields + [StructField("interp_value", DoubleType(), True)]
     )
 
     # When both sides derive from the same scan (self-cogroup lineage),
@@ -78,12 +77,12 @@ def cogroup_interpolate(
         result = tdf
         if tdf.empty:
             result = tdf.copy()
-            result[out_col] = pd.array([], dtype="Float64")
+            result["interp_value"] = pd.array([], dtype="Float64")
             return result
         n = len(tdf)
         if sdf.empty:
             result = tdf.copy()
-            result[out_col] = pd.array([None] * n, dtype="Float64")
+            result["interp_value"] = pd.array([None] * n, dtype="Float64")
             return result
         sdf = sdf.sort_values(s_ts, kind="mergesort")
         # int64 microseconds: compares and differences are exact, so the
@@ -101,7 +100,7 @@ def cogroup_interpolate(
             frac = (x - xp).astype(float) / (xn - xp).astype(float)
             vals = np.where(exact, vp, vp + (vn - vp) * frac)
         result = tdf.copy()
-        result[out_col] = pd.array(
+        result["interp_value"] = pd.array(
             [float(v) if k else None for v, k in zip(vals, ok)], dtype="Float64"
         )
         return result

@@ -81,14 +81,7 @@ def lttb_downsample(
     return sub.groupBy(key_col).applyInPandas(_one_series, schema=schema)
 
 
-def ewma(
-    df: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    alpha: float = 0.3,
-) -> DataFrame:
+def ewma(df: DataFrame, *, alpha: float = 0.3) -> DataFrame:
     """Per-series exponentially-weighted moving average:
     ``s_0 = x_0; s_t = alpha*x_t + (1-alpha)*s_{t-1}`` (adjust=False
     recursion) appended as an ``ewma`` column.
@@ -100,16 +93,16 @@ def ewma(
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    sub = df.select(key_col, ts_col, value_col)
+    sub = df.select("user_id", "ts", "value")
     out_schema = T.StructType(
         list(sub.schema.fields) + [T.StructField("ewma", T.DoubleType())]
     )
 
     def _one_series(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts_col, value_col], kind="mergesort").reset_index(
+        pdf = pdf.sort_values(["ts", "value"], kind="mergesort").reset_index(
             drop=True
         )
-        x = pdf[value_col].to_numpy(dtype=np.float64)
+        x = pdf["value"].to_numpy(dtype=np.float64)
         s = np.empty_like(x)
         acc = x[0]
         for i, v in enumerate(x):
@@ -118,4 +111,4 @@ def ewma(
         pdf["ewma"] = s
         return pdf
 
-    return sub.groupBy(key_col).applyInPandas(_one_series, schema=out_schema)
+    return sub.groupBy("user_id").applyInPandas(_one_series, schema=out_schema)

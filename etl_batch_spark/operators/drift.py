@@ -28,13 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def psi(
-    ref: DataFrame,
-    cur: DataFrame,
-    *,
-    bucket_col: str,
-    round_to: int = 4,
-) -> DataFrame:
+def psi(ref: DataFrame, cur: DataFrame, *, bucket_col: str) -> DataFrame:
     """1-row ``(psi, n_ref, n_cur, n_buckets)`` between two slices.
 
     ``bucket_col`` is any categorical column (pre-bin numeric columns
@@ -74,7 +68,7 @@ def psi(
         F.sum((F.col("q") - F.col("p")) * F.log(F.col("q") / F.col("p"))).alias("s")
     )
     return tot.crossJoin(F.broadcast(contrib)).select(
-        F.round(F.col("s"), round_to).alias("psi"),
+        F.round(F.col("s"), 4).alias("psi"),
         F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
         F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
         F.col("k").alias("n_buckets"),

@@ -12,8 +12,7 @@ Recall is bounded by the blocking function — a corruption that changes
 the first token moves the record to another block and the pair is
 missed.  Production pipelines run several blocking passes (first token,
 last token, character n-gram) and union the candidates; this operator
-takes the block-key builder as a parameter so those passes compose as
-``union`` of calls, each one still a hash join.
+is the first-token pass.
 
 Reference analogue: none (the reference compares strings only with
 exact ``UPPER(...)`` equality, body.sql:136); part of the engine's
@@ -22,18 +21,16 @@ exact ``UPPER(...)`` equality, body.sql:136); part of the engine's
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _BLOCK = "__block"
 
 
-def default_block_key(text_col: str, *, length_band: int = 8) -> Column:
+def _block_key(text_col: str) -> Column:
     """First lowercase token + length band — cheap, order-independent."""
     first_tok = F.split(F.lower(F.trim(F.col(text_col))), "\\s+").getItem(0)
-    band = F.floor(F.length(F.col(text_col)) / length_band)
+    band = F.floor(F.length(F.col(text_col)) / 8)
     return F.concat_ws("|", first_tok, band.cast("string"))
 
 
@@ -44,20 +41,19 @@ def blocked_fuzzy_join(
     left_text: str,
     right_text: str,
     max_distance: int = 2,
-    block_key: Callable[[str], Column] = default_block_key,
 ) -> DataFrame:
     """(left row, right row, distance) for candidate pairs with
     ``levenshtein <= max_distance`` that share a block key.
 
-    ``left`` and ``right`` must not share column names.  The length
-    band in the default block key must be coarser than ``max_distance``
-    or true matches straddle band edges (8 vs 2 by default).
+    ``left`` and ``right`` must not share column names.  The block
+    key's length band must be coarser than ``max_distance`` or true
+    matches straddle band edges (8 vs 2 by default).
     """
     dup = set(left.columns) & set(right.columns)
     if dup:
         raise ValueError(f"overlapping columns: {sorted(dup)}; rename before joining")
-    lb = left.withColumn(_BLOCK, block_key(left_text))
-    rb = right.withColumn(_BLOCK, block_key(right_text))
+    lb = left.withColumn(_BLOCK, _block_key(left_text))
+    rb = right.withColumn(_BLOCK, _block_key(right_text))
     dist = F.levenshtein(F.col(left_text), F.col(right_text))
     return (
         lb.join(rb, _BLOCK)

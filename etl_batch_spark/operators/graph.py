@@ -16,19 +16,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pagerank(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    max_iterations: int = 10,
-    round_to: int = 6,
-) -> DataFrame:
+def pagerank(edges: DataFrame, *, max_iterations: int = 10) -> DataFrame:
     """(node, rank) for every node in the directed edge list; ranks sum
-    to ~1.  Deterministic given the edge set (modulo FP associativity).
+    to ~1, with the standard 0.85 damping.  Deterministic given the
+    edge set (modulo FP associativity).
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
+    damping = 0.85
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).distinct()
     nodes = (
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
@@ -77,12 +71,10 @@ def pagerank(
             )
             .localCheckpoint()
         )
-    return ranks.select("node", F.round("rank", round_to).alias("rank"))
+    return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-def triangle_count(
-    edges: DataFrame, *, a: str = "a", b: str = "b", checkpoint: bool = True
-) -> DataFrame:
+def triangle_count(edges: DataFrame, *, a: str = "a", b: str = "b") -> DataFrame:
     """One-row (n_nodes, n_edges, n_triangles) for an undirected edge
     list (any orientation, duplicates/self-loops tolerated).
 
@@ -92,12 +84,6 @@ def triangle_count(
     no /6 division) and bounds the wedge fan-out by the SMALLER endpoint
     degree — the standard mitigation for power-law hubs at scale.  Two
     shuffle joins on single key columns; AQE handles residual skew.
-
-    ``checkpoint=False`` skips the edge-list materialization for callers
-    that only want the plan, or that run on preemptible executors where
-    non-replicated checkpoint blocks would make a lost executor fatal
-    instead of a lineage recompute — at the cost of re-deriving the
-    edge list once per consumer.
     """
     # the canonical edge list feeds six consumers (both wedge sides,
     # the closing join, edge/node stats) — materialize it ONCE, or each
@@ -114,8 +100,7 @@ def triangle_count(
         .filter(F.col("u") < F.col("v"))
         .distinct()
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=False)
+    e = e.localCheckpoint(eager=False)
     e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
     e3 = e.select(F.col("u").alias("x"), F.col("v").alias("z"))

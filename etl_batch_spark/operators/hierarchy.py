@@ -19,28 +19,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def bfs_levels(
-    edges: DataFrame,
-    roots: DataFrame,
-    *,
-    child_col: str = "child",
-    parent_col: str = "parent",
-    node_col: str = "node",
-    max_depth: int = 64,
-) -> DataFrame:
+def bfs_levels(edges: DataFrame, roots: DataFrame) -> DataFrame:
     """(node, depth) for every node reachable from ``roots`` (depth 0).
 
     ``edges`` holds (child, parent); ``roots`` holds root node ids in
-    ``node_col``.  Nodes reached via several parents keep the minimum
+    ``node``.  Nodes reached via several parents keep the minimum
     depth (breadth-first order guarantees first touch is minimal).
     """
     e = edges.select(
-        F.col(child_col).alias("c"), F.col(parent_col).alias("p")
+        F.col("child").alias("c"), F.col("parent").alias("p")
     ).localCheckpoint()
-    frontier = roots.select(F.col(node_col).alias("n")).distinct().localCheckpoint()
+    frontier = roots.select(F.col("node").alias("n")).distinct().localCheckpoint()
     levels = frontier.withColumn("depth", F.lit(0))
     seen = frontier
-    for depth in range(1, max_depth + 1):
+    for depth in range(1, 65):  # a 64-level depth cap
         nxt = (
             e.join(frontier, e.p == frontier.n)
             .select(F.col("c").alias("n"))
@@ -53,4 +45,4 @@ def bfs_levels(
         levels = levels.unionByName(nxt.withColumn("depth", F.lit(depth)))
         seen = seen.unionByName(nxt).localCheckpoint()
         frontier = nxt
-    return levels.select(F.col("n").alias(node_col), "depth")
+    return levels.select(F.col("n").alias("node"), "depth")

@@ -22,7 +22,6 @@ def salted_join(
     on: list[str] | str,
     *,
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join where ``big`` has pathological key skew and ``small``
     is too large to broadcast.  Each big-side row gets a deterministic
@@ -33,11 +32,8 @@ def salted_join(
 
     Cost model: small side shuffles n_salts× its size — choose
     ``n_salts`` ≈ (hot-key rows / rows-per-task target), not larger.
-    Supported ``how``: inner / left (the replicated side must be the
-    lookup side, so right/full would double-count unmatched rows).
+    The join is inner.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     keys = [on] if isinstance(on, str) else list(on)
     spark = big.sparkSession
     # deterministic per-row salt from the whole row of key values plus a
@@ -48,7 +44,7 @@ def salted_join(
     )
     salts = spark.range(n_salts).select(F.col("id").cast("int").alias("__salt"))
     salted_small = small.crossJoin(F.broadcast(salts))
-    out = salted_big.join(salted_small, keys + ["__salt"], how)
+    out = salted_big.join(salted_small, keys + ["__salt"], "inner")
     return out.drop("__salt")
 
 

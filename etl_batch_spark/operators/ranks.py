@@ -10,7 +10,7 @@ row count of the slices before it:
 
     global_rank(row) = local_rank(row within slice) + rows_in_earlier_slices
 
-The per-slice counts are a ``num_partitions``-row aggregate — the only
+The per-slice counts are a ``SLICES``-row aggregate — the only
 serial step, and it is O(#partitions), not O(#rows).
 """
 
@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+SLICES = 32  # range slices; their per-slice totals are the one serial step
 
 _PID = "__gr_pid"
 _LOCAL = "__gr_local"
@@ -32,7 +34,6 @@ def global_prefix_agg(
     *,
     agg: str = "sum",
     inclusive: bool = True,
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Append a running ``sum``/``max`` of ``value_col`` over the global
     ordering ``sort_cols`` — the scale-safe form of
@@ -41,7 +42,7 @@ def global_prefix_agg(
     Same slice mechanics as :func:`global_row_number`: range-partition on
     the ordering, run the prefix aggregate per slice in parallel, then
     re-base each slice with the aggregate of all earlier slices (computed
-    by a window over the ``num_partitions``-row slice-totals table — the
+    by a window over the ``SLICES``-row slice-totals table — the
     only serial step, O(#slices) not O(#rows)).
 
     ``inclusive=False`` aggregates strictly preceding rows only (frame
@@ -52,7 +53,7 @@ def global_prefix_agg(
     if agg not in ("sum", "max"):
         raise ValueError(f"agg must be 'sum' or 'max', got {agg!r}")
     fn = F.sum if agg == "sum" else F.max
-    sliced = df.repartitionByRange(num_partitions, *sort_cols).withColumn(
+    sliced = df.repartitionByRange(SLICES, *sort_cols).withColumn(
         _PID, F.spark_partition_id()
     )
     end = 0 if inclusive else -1
@@ -97,7 +98,6 @@ def global_row_number(
     out_name: str,
     *,
     partition_cols: "list[str] | None" = None,
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Append a 1-based row number ordered by ``sort_cols``.
 
@@ -118,7 +118,7 @@ def global_row_number(
     # Partition values lead the range ordering so each (group, slice) pair
     # is contiguous in slice order and offsets re-base correctly.
     range_cols = [F.col(p).asc_nulls_first() for p in parts] + list(sort_cols)
-    sliced = df.repartitionByRange(num_partitions, *range_cols).withColumn(
+    sliced = df.repartitionByRange(SLICES, *range_cols).withColumn(
         _PID, F.spark_partition_id()
     )
     w_local = Window.partitionBy(_PID, *parts).orderBy(*sort_cols)

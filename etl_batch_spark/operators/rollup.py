@@ -73,20 +73,20 @@ def rollup_cascade(
     return out
 
 
-def read_level(partials: DataFrame, *, round_sum: int = 2, round_avg: int = 4) -> DataFrame:
+def read_level(partials: DataFrame) -> DataFrame:
     """Materialize the user-facing view of a partial table: derived avg,
     rounded floats, stable column set."""
     return partials.select(
         "bucket",
         *[c for c in partials.columns if c not in {"bucket", "n", "sum_v", "min_v", "max_v"}],
         F.col("n"),
-        F.round("sum_v", round_sum).alias("sum_value"),
-        F.round("min_v", round_avg).alias("min_value"),
-        F.round("max_v", round_avg).alias("max_value"),
+        F.round("sum_v", 2).alias("sum_value"),
+        F.round("min_v", 4).alias("min_value"),
+        F.round("max_v", 4).alias("max_value"),
         # +1e-9 nudge: derived averages of 2-decimal values land exactly
         # on .xxxx5 half-boundaries (e.g. 352.13/8), where engines round
         # doubles in opposite directions
-        F.round(F.col("sum_v") / F.col("n") + F.lit(1e-9), round_avg).alias("avg_value"),
+        F.round(F.col("sum_v") / F.col("n") + F.lit(1e-9), 4).alias("avg_value"),
     )
 
 

@@ -34,15 +34,16 @@ from pyspark.sql import functions as F
 
 from etl_batch_spark.llmops.dedup import H60
 
-P_BITS = 8  # 256 registers at the default precision
+P_BITS = 8  # 256 registers
+CMS_DEPTH, CMS_WIDTH = 4, 256  # count-min hash rows x counters per row
 
 
-def hll_register_cols_from_hash(h: str, p_bits: int = P_BITS) -> "tuple[Column, Column]":
+def hll_register_cols_from_hash(h: str) -> "tuple[Column, Column]":
     """(idx, rho) derived from an ALREADY-HASHED 60-bit expression or
     column name ``h`` — the single-hash form (hash once into a named
     column, then derive both coordinates from it)."""
-    m = 1 << p_bits
-    base = 61 - p_bits
+    m = 1 << P_BITS
+    base = 61 - P_BITS
     idx = F.expr(f"pmod({h}, {m})").cast("int")
     w = f"(({h}) div {m})"
     rho = F.expr(
@@ -51,9 +52,7 @@ def hll_register_cols_from_hash(h: str, p_bits: int = P_BITS) -> "tuple[Column, 
     return idx, rho
 
 
-def hll_partials(
-    df: DataFrame, *, key_col: str, bucket: Column, bucket_name: str = "bucket"
-) -> DataFrame:
+def hll_partials(df: DataFrame, *, key_col: str, bucket: Column) -> DataFrame:
     """(bucket, idx, max_rho): the mergeable register table.  NULL keys
     are ignored (COUNT DISTINCT semantics) — md5(NULL) is NULL, and a
     phantom idx=NULL register would inflate n_present in the estimator
@@ -66,18 +65,18 @@ def hll_partials(
     idx, rho = hll_register_cols_from_hash("h60")
     return (
         df.filter(F.col(key_col).isNotNull())
-        .select(bucket.alias(bucket_name), F.expr(h).alias("h60"))
-        .select(bucket_name, idx.alias("idx"), rho.alias("rho"))
-        .groupBy(bucket_name, "idx")
+        .select(bucket.alias("bucket"), F.expr(h).alias("h60"))
+        .select("bucket", idx.alias("idx"), rho.alias("rho"))
+        .groupBy("bucket", "idx")
         .agg(F.max("rho").alias("max_rho"))
     )
 
 
-def hll_merge(partials: DataFrame, bucket: Column, bucket_name: str = "bucket") -> DataFrame:
+def hll_merge(partials: DataFrame, bucket: Column) -> DataFrame:
     """Merge finer partials upward (e.g. day → month): MAX per register."""
     return (
-        partials.select(bucket.alias(bucket_name), "idx", "max_rho")
-        .groupBy(bucket_name, "idx")
+        partials.select(bucket.alias("bucket"), "idx", "max_rho")
+        .groupBy("bucket", "idx")
         .agg(F.max("max_rho").alias("max_rho"))
     )
 
@@ -95,21 +94,16 @@ def _hll_alpha(m: int) -> str:
     return f"0.7213 / (1.0 + 1.079 / {m}.0)"
 
 
-def hll_estimate(
-    partials: DataFrame, bucket_name: str = "bucket", p_bits: int = P_BITS
-) -> DataFrame:
+def hll_estimate(partials: DataFrame) -> DataFrame:
     """(bucket, est_distinct, est_branch) from a register table.
 
-    ``p_bits`` MUST match the precision the partials were built with
-    (:func:`hll_register_cols_from_hash`) —
-    the register count m = 2^p_bits enters the bias constant, the
-    linear-counting threshold, and the absent-register term, so a
-    mismatch skews every estimate silently.  Partials cannot carry m
-    themselves (they are plain (bucket, idx, max_rho) rows), hence the
-    explicit parameter."""
-    m = 1 << p_bits
+    The register count m = 2^P_BITS enters the bias constant, the
+    linear-counting threshold and the absent-register term, so it is the
+    one module constant that :func:`hll_register_cols_from_hash` also
+    builds the partials with."""
+    m = 1 << P_BITS
     alpha = _hll_alpha(m)
-    agg = partials.groupBy(bucket_name).agg(
+    agg = partials.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_present"),
         F.sum(F.expr("pow(2.0, -max_rho)")).alias("s_present"),
     )
@@ -121,7 +115,7 @@ def hll_estimate(
         e_raw
     )
     return agg.select(
-        bucket_name,
+        "bucket",
         F.round(est, 2).alias("est_distinct"),
         F.when(linear, F.lit("linear")).otherwise(F.lit("raw")).alias("est_branch"),
     )
@@ -141,14 +135,7 @@ def hll_estimate(
 # ---------------------------------------------------------------------------
 
 
-def hist_partials(
-    df: DataFrame,
-    *,
-    value_col: str,
-    bucket: Column,
-    width: float,
-    bucket_name: str = "bucket",
-) -> DataFrame:
+def hist_partials(df: DataFrame, *, value_col: str, bucket: Column, width: float) -> DataFrame:
     """(bucket, bin, cnt): mergeable fixed-width histogram partials.
     NULL values are ignored (aggregate semantics) — a bin=NULL row
     would sort first in the quantile cumulative sum and corrupt every
@@ -156,93 +143,78 @@ def hist_partials(
     b = F.floor(F.col(value_col) / F.lit(width)).cast("bigint")
     return (
         df.filter(F.col(value_col).isNotNull())
-        .select(bucket.alias(bucket_name), b.alias("bin"))
-        .groupBy(bucket_name, "bin")
+        .select(bucket.alias("bucket"), b.alias("bin"))
+        .groupBy("bucket", "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def hist_merge(partials: DataFrame, bucket: Column, bucket_name: str = "bucket") -> DataFrame:
+def hist_merge(partials: DataFrame, bucket: Column) -> DataFrame:
     """Merge finer partials upward: SUM per bin."""
     return (
-        partials.select(bucket.alias(bucket_name), "bin", "cnt")
-        .groupBy(bucket_name, "bin")
+        partials.select(bucket.alias("bucket"), "bin", "cnt")
+        .groupBy("bucket", "bin")
         .agg(F.sum("cnt").alias("cnt"))
     )
 
 
-def cms_partials(
-    df: DataFrame,
-    *,
-    key_col: str,
-    bucket: Column,
-    bucket_name: str = "bucket",
-    d: int = 4,
-    w: int = 256,
-) -> DataFrame:
+def cms_partials(df: DataFrame, *, key_col: str, bucket: Column) -> DataFrame:
     """(bucket, r, c, cnt): mergeable count-min-sketch counters.
 
     The frequency member of the mergeable-partials family (Cormode &
-    Muthukrishnan 2005): ``d`` md5-derived hash rows × ``w`` counters.
+    Muthukrishnan 2005): ``CMS_DEPTH`` md5-derived hash rows ×
+    ``CMS_WIDTH`` counters.
     Counters SUM-merge upward like the histogram bins; a point estimate
-    is the MIN over the key's ``d`` counters (:func:`cms_estimate`) —
+    is the MIN over the key's ``CMS_DEPTH`` counters (:func:`cms_estimate`) —
     an upper bound on the true count with error ≤ 2N/w at confidence
     1 − 2^-d.  At 100 TB the sketch is (buckets × d × w) rows no matter
     the event count, partial-aggregated map-side in one shuffle.
     """
-    rows = F.explode(F.expr(f"sequence(0, {d - 1})")).alias("r")
+    rows = F.explode(F.expr(f"sequence(0, {CMS_DEPTH - 1})")).alias("r")
     # NULL keys are excluded like hll_partials/hist_partials do: they
     # would hash to NULL and emit d phantom (r, c=NULL) counter rows per
     # bucket, inflating sum(cnt)-derived N and merging upward forever
     keyed = df.filter(F.col(key_col).isNotNull()).select(
-        bucket.alias(bucket_name), F.col(key_col).alias("k"), rows
+        bucket.alias("bucket"), F.col(key_col).alias("k"), rows
     )
     h = H60.format(expr="concat(cast(r as string), '|', cast(k as string))")
     return (
-        keyed.withColumn("c", F.expr(f"pmod({h}, {w})").cast("int"))
-        .groupBy(bucket_name, "r", "c")
+        keyed.withColumn("c", F.expr(f"pmod({h}, {CMS_WIDTH})").cast("int"))
+        .groupBy("bucket", "r", "c")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def cms_merge(partials: DataFrame, bucket: Column, bucket_name: str = "bucket") -> DataFrame:
+def cms_merge(partials: DataFrame, bucket: Column) -> DataFrame:
     """Merge finer partials upward (e.g. day → month): SUM per counter."""
     return (
-        partials.select(bucket.alias(bucket_name), "r", "c", "cnt")
-        .groupBy(bucket_name, "r", "c")
+        partials.select(bucket.alias("bucket"), "r", "c", "cnt")
+        .groupBy("bucket", "r", "c")
         .agg(F.sum("cnt").alias("cnt"))
     )
 
 
-def cms_estimate(
-    partials: DataFrame,
-    probes: DataFrame,
-    *,
-    key_col: str,
-    bucket_name: str = "bucket",
-    d: int = 4,
-    w: int = 256,
-) -> DataFrame:
+def cms_estimate(partials: DataFrame, probes: DataFrame, *, key_col: str) -> DataFrame:
     """(bucket, key, est_count) point queries against a counter table.
 
     ``probes`` is the (small) key list to interrogate; its (key, r, c)
     coordinates broadcast against the counter table per bucket — absent
     counters read 0.  MIN over the d counters gives the estimate.
     """
-    rows = F.explode(F.expr(f"sequence(0, {d - 1})")).alias("r")
+    rows = F.explode(F.expr(f"sequence(0, {CMS_DEPTH - 1})")).alias("r")
     h = H60.format(expr="concat(cast(r as string), '|', cast(k as string))")
     coords = (
         probes.select(F.col(key_col).alias("k"), rows)
-        .withColumn("c", F.expr(f"pmod({h}, {w})").cast("int"))
+        .withColumn("c", F.expr(f"pmod({h}, {CMS_WIDTH})").cast("int"))
     )
     spine = (
-        partials.select(bucket_name).distinct()
+        partials.select("bucket").distinct()
         .crossJoin(F.broadcast(coords))
     )
     return (
-        spine.join(partials, [bucket_name, "r", "c"], "left")
+        spine.join(partials, ["bucket", "r", "c"], "left")
         .withColumn("cnt0", F.coalesce(F.col("cnt"), F.lit(0)))
-        .groupBy(bucket_name, "k")
+        .groupBy("bucket", "k")
         .agg(F.min("cnt0").alias("est_count"))
         .withColumnRenamed("k", key_col)
     )
@@ -253,7 +225,6 @@ def hist_quantiles(
     *,
     width: float,
     qs: "tuple[float, ...]" = (0.5, 0.9, 0.99),
-    bucket_name: str = "bucket",
 ) -> DataFrame:
     """(bucket, q, est): per-bucket quantile estimates from a histogram.
 
@@ -276,8 +247,8 @@ def hist_quantiles(
     # cumulative sum — one exchange serves both, where a groupBy(total)
     # + broadcast join back cost an extra aggregate exchange and a join
     # per call (this operator runs inside et24/pipe03/q97's plans)
-    w_cum = Window.partitionBy(bucket_name).orderBy("bin")
-    w_all = Window.partitionBy(bucket_name)
+    w_cum = Window.partitionBy("bucket").orderBy("bin")
+    w_all = Window.partitionBy("bucket")
     cum = (
         partials.withColumn("cum", F.sum("cnt").over(w_cum))
         .withColumn("cum_before", F.col("cum") - F.col("cnt"))
@@ -289,12 +260,12 @@ def hist_quantiles(
         .withColumn("target", F.col("q") * F.col("total"))
         .filter(F.col("cum") >= F.col("target"))
     )
-    w_pick = Window.partitionBy(bucket_name, "q").orderBy("bin")
+    w_pick = Window.partitionBy("bucket", "q").orderBy("bin")
     return (
         cand.withColumn("rn", F.row_number().over(w_pick))
         .filter(F.col("rn") == 1)
         .select(
-            bucket_name,
+            "bucket",
             "q",
             F.round(
                 F.col("bin") * F.lit(width)

@@ -88,7 +88,6 @@ class DagRunner:
         modules: dict[str, ModuleFn],
         deps: "dict[str, list[str]]",
         *,
-        run_level: int = 1,
         exclusive_run_yn: str = "N",
     ) -> "dict[str, str]":
         """Execute ``modules`` respecting ``deps``; returns
@@ -121,7 +120,7 @@ class DagRunner:
         def run_one(m: str) -> str:
             try:
                 ctx = self.runner.startup(
-                    m.upper(), run_level, exclusive_run_yn=exclusive_run_yn
+                    m.upper(), 1, exclusive_run_yn=exclusive_run_yn
                 )
             except (BatchError, TimeoutError):
                 # admission failure (disabled / duplicate, plus the

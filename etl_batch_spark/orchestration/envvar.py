@@ -29,21 +29,15 @@ class EnvVarService:
                 value = row["value"]
         return value
 
-    def update(
-        self,
-        name: str,
-        value: str,
-        scope: str = "GLOBAL",
-        scope_value: str = "GLOBAL",
-    ) -> None:
+    def update(self, name: str, value: str) -> None:
         # append-only; get() takes the latest write
         self.store.append(
             "envvar",
             {
                 "variable_name": name,
                 "value": value,
-                "scope": scope,
-                "scope_value": scope_value,
+                "scope": "GLOBAL",
+                "scope_value": "GLOBAL",
             },
         )
 

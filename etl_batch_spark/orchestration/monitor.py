@@ -3,11 +3,9 @@
 Implements the reference's internal monitor operators (SURVEY.md §2.C
 internal table):
 
-- I2 proc_get_transaction_info (body.sql:155-166) — latest RUNNING run.
-  NB the reference's ``ROWNUM < 2 … ORDER BY run_date DESC`` applies the
-  limit *before* the sort and so returns an arbitrary RUNNING row; we
-  implement the evident intent (true latest), a documented divergence
-  (SURVEY.md §2.A11).
+- I2 proc_get_transaction_info (body.sql:155-166), the latest RUNNING
+  run of a module, has no counterpart: no runner, query or CLI asks for
+  it.  Resume looks its run up by run_id (``find_running``).
 - I3 func_get_run_id (body.sql:170-182) — NVL(MAX(run_id),0)+1 per
   (module, calendar day).
 - I4 proc_insert_batch_monitor (body.sql:185-215) — append a run event.
@@ -153,17 +151,6 @@ class RunMonitor:
             return 1 if any(_day(r["run_date"]) == latest_day for r in running) else 0
         except Exception:  # noqa: BLE001 — reference returns 1 on any error
             return 1
-
-    # -- I2: latest RUNNING run for a module --------------------------------
-    def latest_running(self, module_id: int) -> dict[str, Any] | None:
-        candidates = [
-            r
-            for r in self.store.module_latest_events(module_id)
-            if r["run_status"] == "RUNNING"
-        ]
-        if not candidates:
-            return None
-        return max(candidates, key=lambda r: (r["run_date"], r["event_seq"]))
 
     def find_running(self, module_id: int, run_id: int) -> dict[str, Any] | None:
         """Resume lookup (proc_batch_continue, body.sql:632-645): the

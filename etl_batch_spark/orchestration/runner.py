@@ -85,20 +85,6 @@ class RunContext:
     session: SessionVars
     timer: Timer = field(repr=False, default=None)  # type: ignore[assignment]
 
-    def stamp(self, df):
-        """Audit-stamp a data-plane DataFrame with this run's identity
-        (run_id / module / snapshotted run_date) — see
-        sources.io.with_audit_columns."""
-        from etl_batch_spark.sources.io import with_audit_columns
-
-        return with_audit_columns(
-            df,
-            run_id=self.run_id,
-            module_name=self.module["module_name"],
-            load_ts=self.run_date,
-            control_date=self.session.control_date,
-        )
-
     def progress(self, op_name: str, sofar: int | None = None) -> None:
         """proc_write_session_longops (body.sql:1253-1266) ≙ job-description
         + log-based progress."""

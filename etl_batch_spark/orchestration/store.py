@@ -4,8 +4,7 @@ Architecture (SURVEY.md §7): instead of Oracle's UPDATE-in-place monitor
 rows (body.sql:422-467) the engine appends immutable events; "current
 state" is the latest event per run.  The control plane is driver-side
 (it is tiny data — one row per run attempt); the same rows are exposed
-as Spark DataFrames for analytics/reporting and can be persisted to
-parquet for durability.
+as Spark DataFrames for analytics/reporting.
 
 Each batch_monitor event carries:
 - ``run_uid``   — engine-internal surrogate identifying one run attempt
@@ -28,7 +27,6 @@ batch_monitor rebuilds it from the surviving events.
 from __future__ import annotations
 
 import itertools
-import os
 import threading
 from typing import Any
 
@@ -40,9 +38,8 @@ from etl_batch_spark.catalog import CONTROL_TABLES
 class ControlStore:
     """In-memory append-only rows per control table, with Spark views."""
 
-    def __init__(self, spark: SparkSession | None = None, persist_root: str | None = None):
+    def __init__(self, spark: SparkSession | None = None):
         self.spark = spark
-        self.persist_root = persist_root
         self._rows: dict[str, list[dict[str, Any]]] = {name: [] for name in CONTROL_TABLES}
         self._seq = itertools.count(1)
         self._lock = threading.Lock()
@@ -83,10 +80,6 @@ class ControlStore:
         for uid, row in self._latest.items():
             self._by_module.setdefault(row["module_id"], {})[uid] = row
 
-    def next_seq(self) -> int:
-        with self._lock:
-            return next(self._seq)
-
     # -- read path (driver-side; control data is bounded) -------------------
     def rows(self, table: str) -> list[dict[str, Any]]:
         return list(self._rows[table])
@@ -122,41 +115,11 @@ class ControlStore:
             return before - len(self._rows[table])
 
     # -- Spark views --------------------------------------------------------
-    def df(self, table: str, spark: SparkSession | None = None) -> DataFrame:
-        spark = spark or self.spark
-        if spark is None:
+    def df(self, table: str) -> DataFrame:
+        if self.spark is None:
             raise ValueError("no SparkSession attached to ControlStore")
         schema = CONTROL_TABLES[table]
         rows = [
             tuple(r.get(f.name) for f in schema.fields) for r in self._rows[table]
         ]
-        return spark.createDataFrame(rows, schema=schema)
-
-    def monitor_latest_df(self, spark: SparkSession | None = None) -> DataFrame:
-        """Latest-state view of batch_monitor: last event per run_uid wins
-        (the engine's replacement for Oracle's in-place UPDATE), built
-        from the latest-state index."""
-        from pyspark.sql import types as T
-
-        spark = spark or self.spark
-        schema = CONTROL_TABLES["batch_monitor"]
-        rows = [
-            tuple(r.get(f.name) for f in schema.fields) + (r.get("run_uid"),)
-            for r in self.latest_events()
-        ]
-        # note: StructType.add mutates in place — build a fresh StructType
-        full_schema = T.StructType([*schema.fields, T.StructField("run_uid", T.StringType())])
-        return spark.createDataFrame(rows, schema=full_schema)
-
-    # -- durability ---------------------------------------------------------
-    def persist(self, spark: SparkSession | None = None) -> None:
-        """Snapshot every non-empty table to parquet under persist_root."""
-        if not self.persist_root:
-            raise ValueError("ControlStore created without persist_root")
-        spark = spark or self.spark
-        os.makedirs(self.persist_root, exist_ok=True)
-        for table, rows in self._rows.items():
-            if rows:
-                self.df(table, spark).write.mode("overwrite").parquet(
-                    os.path.join(self.persist_root, f"{table}.parquet")
-                )
+        return self.spark.createDataFrame(rows, schema=schema)

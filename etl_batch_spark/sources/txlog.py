@@ -406,42 +406,11 @@ class TxTable:
             # and push the caller into a duplicating retry
             pass
 
-    def schema_at(
-        self,
-        version: "int | None" = None,
-        versions: "list[Version] | None" = None,
-    ) -> "T.StructType | None":
+    def schema_at(self, version: "int | None" = None) -> "T.StructType | None":
         """Table schema of the snapshot at ``version`` (newest when
         None), resolved from the log alone — never a parquet footer.
         None for tables whose log predates schema tracking."""
-        if versions is None:
-            return self._snapshot(version)[1]
-        out = None
-        for v in versions:
-            if version is not None and v.version > version:
-                break
-            if v.schema is not None:
-                out = v.schema
-        return T.StructType.fromJson(out) if out is not None else None
-
-    def _active_files(
-        self,
-        version: "int | None" = None,
-        versions: "list[Version] | None" = None,
-    ) -> "list[str]":
-        """File set of the snapshot at ``version`` (newest when None).
-        Pass ``versions`` to reuse an already-read log instead of
-        re-listing it (object-store log reads are the metadata cost);
-        otherwise resolution is checkpoint-accelerated."""
-        if versions is None:
-            return self._snapshot(version)[0]
-        live: "set[str]" = set()
-        for v in versions:
-            if version is not None and v.version > version:
-                break
-            live -= set(v.removed)
-            live |= set(v.added)
-        return sorted(live)
+        return self._snapshot(version)[1]
 
     def _commit(self, action: str, added: "list[str]", removed: "list[str]",
                 n_rows: int, meta: "dict | None" = None,
@@ -719,7 +688,7 @@ class TxTable:
         # too (Delta's overwriteSchema shape) — the new snapshot's
         # schema IS df's schema
         return self._rewrite(
-            "overwrite", df, self._active_files(read_version), read_version,
+            "overwrite", df, self._snapshot(read_version)[0], read_version,
             meta, _norm_schema(df.schema),
         )
 
@@ -729,7 +698,6 @@ class TxTable:
         keys: "list[str]",
         *,
         delete_col: "str | None" = None,
-        meta: "dict | None" = None,
         max_retries: int = 3,
     ) -> int:
         """MERGE with automatic optimistic-concurrency retry — the
@@ -766,7 +734,6 @@ class TxTable:
 
         from etl_batch_spark.operators.merge import merge_dataframes
 
-        self._check_meta(meta)
         types = {f.name: f.dataType for f in updates.schema.fields}
         prunable = [
             k for k in keys
@@ -803,7 +770,7 @@ class TxTable:
             merged = merge_dataframes(target, updates, keys,
                                       delete_col=delete_col)
             try:
-                return self._rewrite("merge", merged, touched, rv, meta,
+                return self._rewrite("merge", merged, touched, rv, None,
                                      _norm_schema(merged.schema))
             except ConcurrentWriteConflict as exc:
                 last = exc
@@ -822,7 +789,6 @@ class TxTable:
         *,
         target_files: int = 4,
         zorder_cols: "list[str] | None" = None,
-        equal_frequency: bool = False,
     ) -> int:
         """Rewrite the current snapshot into ``target_files`` files —
         logically a no-op (same rows), physically the small-file fix.
@@ -851,11 +817,8 @@ class TxTable:
         if zorder_cols:
             from etl_batch_spark.sources.io import zorder_key
 
-            z = zorder_key(
-                current, zorder_cols, equal_frequency=equal_frequency
-            )
             clustered = (
-                current.withColumn("__z", z)
+                current.withColumn("__z", zorder_key(current, zorder_cols))
                 .repartitionByRange(target_files, "__z")
                 .sortWithinPartitions("__z")
                 .drop("__z")
@@ -969,16 +932,15 @@ class TxTable:
             self._require_present(files, f"snapshot at version {version}")
         return self._scan(files, schema, version)
 
-    def read_where(
-        self, version: "int | None" = None, **ranges
-    ) -> DataFrame:
+    def read_where(self, **ranges) -> DataFrame:
         """Stats-pruned snapshot read — Delta's data skipping from log
         statistics.  ``ranges`` maps column → ``(lo, hi)`` closed
         bounds (either side None = unbounded); files whose logged
         [min, max] envelope is DISJOINT from every bound are dropped
         from the scan using METADATA ALONE, and the residual row
         filter is applied to the files that remain, so the result is
-        exactly ``read(version).filter(col BETWEEN lo AND hi ...)``.
+        exactly ``read().filter(col BETWEEN lo AND hi ...)`` of the current
+        snapshot.
 
         At 100 TB this is the difference between scanning the table
         and scanning the handful of files a narrow predicate can
@@ -997,15 +959,10 @@ class TxTable:
         from pyspark.sql import functions as F
 
         if not ranges:
-            return self.read(version)
-        files, schema, stats = self._snapshot(version)
+            return self.read()
+        files, schema, stats = self._snapshot()
         if not files:
-            return self.read(version)  # typed-empty / no-schema refusal
-        if version is not None:
-            # same retention-horizon contract as read(version=): the
-            # result must be exactly read(version).filter(...), clean
-            # refusal included
-            self._require_present(files, f"snapshot at version {version}")
+            return self.read()  # typed-empty / no-schema refusal
         norm = {
             col: (
                 _stat_value(lo) if lo is not None else None,
@@ -1025,23 +982,17 @@ class TxTable:
             return self._scan(files[:1], schema).limit(0).filter(residual)
         return self._scan(keep, schema).filter(residual)
 
-    def changes(
-        self,
-        v_from: int,
-        v_to: "int | None" = None,
-        *,
-        schema=None,
-    ) -> DataFrame:
+    def changes(self, v_from: int, v_to: "int | None" = None) -> DataFrame:
         """Change feed between two versions (Delta CDF semantics for a
         table without per-row lineage): rows with ``_change_type`` in
         {'insert', 'delete'}; an update appears as delete + insert.
 
-        ``schema`` (StructType or DDL string) types the empty bootstrap
-        feed of a still-empty table so downstream consumers that select
-        row columns (e.g. ``ivm.apply_feed``) see a no-op instead of an
-        AnalysisException.  Without it, the bootstrap feed is typed from
-        any file the log ever referenced; only a never-written table
-        falls back to the bare ``_change_type`` column.
+        The empty bootstrap feed of a still-empty table is typed from
+        the log schema, else from any file the log ever referenced, so
+        downstream consumers that select row columns (e.g.
+        ``ivm.apply_feed``) see a no-op instead of an AnalysisException;
+        only a never-written table falls back to the bare
+        ``_change_type`` column.
 
         Scale path: when every commit in ``(v_from, v_to]`` is an
         ``append``, the feed is exactly the rows of the files those
@@ -1097,8 +1048,8 @@ class TxTable:
 
         if not before_files and not after_files:
             # bootstrap cursor over a still-empty table: an empty feed,
-            # typed (in priority order) from the caller-supplied schema,
-            # then from any file the log ever referenced (appended then
+            # typed (in priority order) from the log schema, then from
+            # any file the log ever referenced (appended then
             # deleted rows still pin the row schema), else only the
             # column the feed itself guarantees.  (Full log walk — fine:
             # only reachable while the table has no data at all.)
@@ -1109,9 +1060,7 @@ class TxTable:
                 f for v in self.versions() for f in v.added
                 if os.path.exists(os.path.join(self.path, f))
             ]
-            if schema is not None:
-                empty = self.spark.createDataFrame([], schema)
-            elif feed_schema is not None:
+            if feed_schema is not None:
                 # schema-tracked log: no file probe needed at all
                 empty = self.spark.createDataFrame([], feed_schema)
             elif ever:

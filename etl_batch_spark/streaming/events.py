@@ -193,10 +193,10 @@ _FUNNEL_OUT = T.StructType(
     ]
 )
 
+_FUNNEL_STEPS = ("view", "click", "purchase")
 
-def funnel_stateful(
-    stream: DataFrame, *, steps: tuple[str, ...] = ("view", "click", "purchase")
-) -> DataFrame:
+
+def funnel_stateful(stream: DataFrame) -> DataFrame:
     """Streaming conversion funnel: per-user furthest step reached, with
     chain-of-first-occurrence semantics matching the batch ``ev01``
     query — step k+1 counts only strictly after the event that completed
@@ -224,7 +224,7 @@ def funnel_stateful(
         for pdf in batches:
             rows.extend(zip((int(v) for v in pdf["ts_us"]), pdf["event_type"]))
         for ts_us, etype in sorted(rows):
-            if step < len(steps) and etype == steps[step] and ts_us > step_ts:
+            if step < len(_FUNNEL_STEPS) and etype == _FUNNEL_STEPS[step] and ts_us > step_ts:
                 step += 1
                 step_ts = ts_us
         state.update((step, step_ts))

@@ -16,7 +16,7 @@ from fuzz_codecs import _bases, soak  # noqa: E402
 
 def test_every_codec_soaks_without_leaks():
     assert sorted(name for name, *_ in _bases()) == [
-        "avi", "bmp", "flac", "gif", "jpeg", "mp3", "mp4", "oggv", "png",
+        "bmp", "flac", "gif", "jpeg", "mp3", "mp4", "oggv", "png",
         "pnm", "wav", "webp",
     ]
     assert soak(200, 9) == []

@@ -63,12 +63,12 @@ class TestOwnFormats:
         assert r["codec"] == "pcm16"
 
     def test_avi_dims_and_duration(self):
-        from etl_batch_spark.llmops.avi import encode_avi_mjpeg
-        from etl_batch_spark.llmops.jpeg import encode_jpeg
-
-        frames = [encode_jpeg(16, 12, 3, _img(16, 12, seed=i).tobytes())
-                  for i in range(10)]
-        r = probe_media(encode_avi_mjpeg(16, 12, 5.0, frames))
+        # RIFF/AVI with its avih main header: 200000 us per frame (5 fps),
+        # 10 frames, 16x12
+        avih = struct.pack("<10I4I", 200_000, 0, 0, 0, 10, 0, 1, 0, 16, 12, 0, 0, 0, 0)
+        hdrl = b"hdrl" + b"avih" + struct.pack("<I", len(avih)) + avih
+        body = b"AVI " + b"LIST" + struct.pack("<I", len(hdrl)) + hdrl
+        r = probe_media(b"RIFF" + struct.pack("<I", len(body)) + body)
         assert r["container"] == "avi" and r["modality"] == "video"
         assert (r["width"], r["height"]) == (16, 12)
         assert r["duration_s"] == pytest.approx(2.0)  # 10 frames at 5 fps
@@ -266,19 +266,19 @@ class TestSparkTransform:
 
         png = bytearray(encode_png(5, 4, 3, _img(5, 4).tobytes()))
         rows = [("u://a", "web", png), ("u://b", "books", bytearray(b"nope"))]
-        df = spark.createDataFrame(rows, "url string, source string, payload binary")
-        probed = probe_media_df(df, id_col="url", keep_cols=("source", "payload"))
-        assert [f.name for f in probed.schema.fields[:3]] == ["url", "source", "payload"]
-        assert probed.schema["url"].dataType.simpleString() == "string"
-        got = {r["url"]: r for r in probed.collect()}
+        df = spark.createDataFrame(rows, "doc_id string, source string, payload binary")
+        probed = probe_media_df(df, keep_cols=("source", "payload"))
+        assert [f.name for f in probed.schema.fields[:3]] == ["doc_id", "source", "payload"]
+        assert probed.schema["doc_id"].dataType.simpleString() == "string"
+        got = {r["doc_id"]: r for r in probed.collect()}
         assert got["u://a"]["container"] == "png" and got["u://a"]["source"] == "web"
         assert bytes(got["u://b"]["payload"]) == b"nope"
         # the routed subset decodes without a re-join
         from etl_batch_spark.llmops.multimodal import decode_image
 
         routed = probed.filter(probed.container == "png")
-        out = decode_image(routed, id_col="url").collect()
-        assert len(out) == 1 and out[0]["url"] == "u://a" and out[0]["width"] == 5
+        out = decode_image(routed).collect()
+        assert len(out) == 1 and out[0]["doc_id"] == "u://a" and out[0]["width"] == 5
 
     def test_probe_media_df_rejects_colliding_keep_cols(self, spark):
         df = spark.createDataFrame(
@@ -287,7 +287,7 @@ class TestSparkTransform:
         )
         with pytest.raises(ValueError, match="collide"):
             probe_media_df(df, keep_cols=("container",))
-        # id_col repeated in keep_cols (or any duplicate) would emit a
+        # doc_id repeated in keep_cols (or any duplicate) would emit a
         # duplicate output field and die later as an opaque Arrow
         # schema error — must fail loudly up front instead
         with pytest.raises(ValueError, match="unique"):

@@ -36,20 +36,6 @@ class TestSaltedJoin:
             want.select("k", "payload", "name")
         )
 
-    def test_left_keeps_unmatched(self, skewed):
-        big, dim = skewed
-        dim_missing_hot = dim.filter(F.col("k") != 7)
-        got = salted_join(big, dim_missing_hot, "k", n_salts=8, how="left")
-        want = big.join(dim_missing_hot, "k", "left")
-        assert _multiset(got.select("k", "payload", "name")) == _multiset(
-            want.select("k", "payload", "name")
-        )
-
-    def test_rejects_right_join(self, skewed):
-        big, dim = skewed
-        with pytest.raises(ValueError):
-            salted_join(big, dim, "k", how="right")
-
 
 class TestScd2Merge:
     def test_all_branches(self, spark):
@@ -160,7 +146,7 @@ class TestAsofJoin:
         rpd = pd.DataFrame(rrows, columns=["k", "ts", "price"]).sort_values("ts")
         return ldf, rdf, lpd, rpd
 
-    def _check(self, spark, direction, tolerance_s=None, allow_exact=True):
+    def _check(self, spark, direction, tolerance_s=None):
         import pandas as pd
 
         from etl_batch_spark.operators.asof import asof_join
@@ -170,13 +156,12 @@ class TestAsofJoin:
             r["lid"]: r["price_right"]
             for r in asof_join(
                 ldf, rdf, on="ts", by=["k"], direction=direction,
-                tolerance_s=tolerance_s, allow_exact_matches=allow_exact,
+                tolerance_s=tolerance_s,
             ).collect()
         }
         want_df = pd.merge_asof(
             lpd, rpd, on="ts", by="k", direction=direction,
             tolerance=None if tolerance_s is None else pd.Timedelta(seconds=tolerance_s),
-            allow_exact_matches=allow_exact,
         )
         want = {
             int(r.lid): (None if pd.isna(r.price) else float(r.price))
@@ -193,8 +178,8 @@ class TestAsofJoin:
     def test_nearest_matches_pandas(self, spark):
         self._check(spark, "nearest")
 
-    def test_tolerance_and_strict(self, spark):
-        self._check(spark, "backward", tolerance_s=300.0, allow_exact=False)
+    def test_tolerance_matches_pandas(self, spark):
+        self._check(spark, "backward", tolerance_s=300.0)
 
     def test_null_value_on_matched_row_is_returned_not_skipped(self, spark):
         # merge_asof returns the nearest ROW's values as-is — a NULL value
@@ -554,8 +539,6 @@ class TestBloomFilter:
         dim = spark.range(1).withColumnRenamed("id", "k")
         with pytest.raises(ValueError):
             build_bloom(dim, "k", num_bits=100)  # not a power of two
-        with pytest.raises(ValueError):
-            build_bloom(dim, "k", num_hashes=0)
 
     def test_null_fact_keys_dropped_even_inexact(self, spark):
         """xxhash64 ignores NULL children, so without the IsNotNull seed a
@@ -906,32 +889,6 @@ class TestPortableHll:
         assert m1 == m2
         e_all = hll_estimate(merged).collect()[0]["est_distinct"]
         assert abs(e_all - 2000) / 2000 < 0.2
-
-    def test_estimate_p_bits_matches_register_precision(self, spark):
-        """hll_estimate must take the SAME p_bits the registers were
-        built with: m enters the bias constant, the linear-counting
-        threshold, and the absent-register term.  At p=12 over 2000
-        distinct keys the std error is ~1.6% — a mismatched m=256
-        estimator over p=12 registers lands nowhere near that."""
-        from pyspark.sql import functions as F
-
-        from etl_batch_spark.llmops.dedup import H60
-        from etl_batch_spark.operators.sketch import (
-            hll_estimate,
-            hll_register_cols_from_hash,
-        )
-
-        h = H60.format(expr="cast(id as string)")
-        idx, rho = hll_register_cols_from_hash("h60", p_bits=12)
-        parts = (
-            spark.range(2000)
-            .select(F.lit(0).alias("bucket"), F.expr(h).alias("h60"))
-            .select("bucket", idx.alias("idx"), rho.alias("rho"))
-            .groupBy("bucket", "idx")
-            .agg(F.max("rho").alias("max_rho"))
-        )
-        est = hll_estimate(parts, p_bits=12).collect()[0]["est_distinct"]
-        assert abs(est - 2000) / 2000 < 0.05, est
 
     def test_null_keys_ignored(self, spark):
         """COUNT DISTINCT semantics: NULL keys contribute no register —
@@ -1431,13 +1388,11 @@ class TestOperatorNullAndEdgeHardening:
         assert got[0]["violations"] == 1
 
     def test_cms_partials_excludes_null_keys(self, spark):
-        from etl_batch_spark.operators.sketch import cms_partials
+        from etl_batch_spark.operators.sketch import CMS_DEPTH, cms_partials
 
         df = spark.createDataFrame(
             [("a",), ("a",), (None,)], "k string"
         ).withColumn("ts", F.lit("2024-01-01").cast("timestamp"))
-        got = cms_partials(
-            df, bucket=F.date_trunc("day", "ts"), key_col="k", d=3, w=16
-        ).collect()
+        got = cms_partials(df, bucket=F.date_trunc("day", "ts"), key_col="k").collect()
         assert all(r["c"] is not None for r in got)
-        assert sum(r["cnt"] for r in got) == 2 * 3  # 2 non-null rows x d
+        assert sum(r["cnt"] for r in got) == 2 * CMS_DEPTH  # 2 non-null rows x depth

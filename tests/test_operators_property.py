@@ -22,9 +22,8 @@ class TestGlobalRowNumberProperty:
             min_size=1,
             max_size=60,
         ),
-        st.integers(min_value=2, max_value=8),
     )
-    def test_matches_window_semantics(self, spark, rows, nparts):
+    def test_matches_window_semantics(self, spark, rows):
         from etl_batch_spark.operators.ranks import global_row_number
 
         df = spark.createDataFrame(
@@ -36,7 +35,6 @@ class TestGlobalRowNumberProperty:
             [F.col("k").asc_nulls_last(), F.col("id").asc()],
             "rk",
             partition_cols=["g"],
-            num_partitions=nparts,
         )
         want = df.withColumn(
             "rk",
@@ -366,11 +364,10 @@ class TestGlobalPrefixAggProperty:
     @settings(max_examples=8, deadline=None)
     @given(
         st.lists(st.integers(-5, 5), min_size=1, max_size=60),
-        st.integers(min_value=2, max_value=8),
         st.sampled_from(["sum", "max"]),
         st.booleans(),
     )
-    def test_matches_window_semantics(self, spark, vals, nparts, agg, inclusive):
+    def test_matches_window_semantics(self, spark, vals, agg, inclusive):
         from etl_batch_spark.operators.ranks import global_prefix_agg
 
         df = spark.createDataFrame(
@@ -383,7 +380,6 @@ class TestGlobalPrefixAggProperty:
             "run",
             agg=agg,
             inclusive=inclusive,
-            num_partitions=nparts,
         )
         fn = F.sum if agg == "sum" else F.max
         end = 0 if inclusive else -1

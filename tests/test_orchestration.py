@@ -475,36 +475,6 @@ class TestDaily000:
         assert 120 in r.clock.sleeps  # extra flag*60 seconds
 
 
-class TestSparkViews:
-    def test_monitor_latest_df(self, spark):
-        r = make_runner()
-        r.store.spark = spark
-        register(r.store, 1, "B1")
-        ctx = r.startup("B1", 1, exclusive_run_yn="N")
-        ctx.finish("SUCCESS", 3, 0)
-        df = r.store.monitor_latest_df(spark)
-        rows = df.collect()
-        assert len(rows) == 1
-        assert rows[0]["run_status"] == "SUCCESS"
-        assert rows[0]["records_processed"] == 3
-
-
-class TestAuditStamp:
-    def test_stamp_carries_run_identity(self, spark):
-        runner = make_runner()
-        register(runner.store, 7, "STAMPME")
-        ctx = runner.startup("STAMPME", exclusive_run_yn="N")
-        df = spark.createDataFrame([(1,), (2,)], "x long")
-        stamped = ctx.stamp(df)
-        rows = stamped.collect()
-        assert {r["x"] for r in rows} == {1, 2}
-        for r in rows:
-            assert r["_run_id"] == ctx.run_id
-            assert r["_module"] == "STAMPME"
-            assert r["_load_ts"] == ctx.run_date  # snapshotted, not now()
-        ctx.success()
-
-
 class TestDagRunner:
     def _mk(self, names):
         r = make_runner()
@@ -641,9 +611,9 @@ def _fold(store: ControlStore) -> list:
     return list(latest.values())
 
 
-def _running(states, module_id, run_id=None):
+def _running(states, module_id, run_id):
     rows = [r for r in states if r["module_id"] == module_id and r["run_status"] == "RUNNING"
-            and (run_id is None or r["run_id"] == run_id)]
+            and r["run_id"] == run_id]
     return max(rows, key=lambda r: (r["run_date"], r["event_seq"])) if rows else None
 
 
@@ -674,7 +644,6 @@ def assert_index_matches_fold(runner: BatchRunner, module_ids=(0, 1, 2, 3, 4)) -
             dup = any(r["module_id"] == mid and r["run_status"] == "RUNNING"
                       and (r["parameters"] or " ") == (params or " ") for r in states)
             assert mon.duplicate_run_check(mid, params) == int(dup)
-        assert mon.latest_running(mid) == _running(states, mid)
         for run_id in range(4):
             assert mon.find_running(mid, run_id) == _running(states, mid, run_id)
         for dep_type in ("MANDATORY", "OPTIONAL", "WAIT", "BOGUS"):

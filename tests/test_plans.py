@@ -279,7 +279,7 @@ def test_q85_data_windows_are_partitioned(spark, sf_dir):
     # plan a `WindowExec: No Partition Defined` over data (single-task at
     # scale).  The only unpartitioned windows allowed are the two slice-
     # offset cumsums inside global_row_number, which run over the bounded
-    # num_partitions-row count aggregates (the q92/et18-style exemption).
+    # SLICES-row count aggregates (the q92/et18-style exemption).
     df = QUERIES["q85_null_ordering"].build(spark, sf_dir)
     assert unpartitioned_windows(df) <= 2
 
@@ -370,7 +370,7 @@ def test_no_query_windows_over_unpartitioned_data(registry_plans):
     """Global invariant: no query plans a `WindowExec: No Partition
     Defined` over data that grows with scale (single task at 100 TB).
     The allowlist is exactly the bounded-aggregate exemptions: q85's two
-    slice-offset cumsums and sm11's one run over num_partitions-row count
+    slice-offset cumsums and sm11's one run over SLICES-row count
     aggregates (operators/ranks.py), q92's window ranks a months
     aggregate, et18's closes gaps over per-bucket extrema — all O(small),
     never O(rows)."""
@@ -440,7 +440,7 @@ def test_dd12_semantic_dedup_pairs_only_within_cluster(spark, sf_dir):
 def test_sm11_shuffle_rank_has_no_global_window(spark, sf_dir):
     """The training-shuffle rank must use range-sliced parallel ranking:
     the only unpartitioned window allowed is the offsets re-base over
-    the num_partitions-row count aggregate, never over the data."""
+    the SLICES-row count aggregate, never over the data."""
     df = QUERIES["sm11_shuffle_order"].build(spark, sf_dir)
     s = plans.formatted_plan(df)
     # ranks.py's offset window runs over the tiny per-slice count table;
@@ -519,14 +519,13 @@ def test_q97_skyline_never_goes_quadratic(spark, sf_dir):
 
 
 def test_decode_image_both_modes_are_narrow_maps(spark):
-    """The multimodal decode (raise AND quarantine modes) must stay a
-    shuffle-free narrow map — payloads never cross an exchange and the
-    quarantine column adds no plan cost."""
+    """The multimodal decode (stub AND real codec modes) must stay a
+    shuffle-free narrow map — payloads never cross an exchange."""
     from etl_batch_spark import plans
     from etl_batch_spark.llmops.multimodal import decode_image
 
     df = spark.createDataFrame([(1, bytearray(b"x"))], "doc_id long, payload binary")
-    for kw in ({"fake": True}, {"fake": False, "errors": "quarantine"}):
+    for kw in ({"fake": True}, {"fake": False}):
         plan = plans.formatted_plan(decode_image(df, **kw))
         assert "MapInPandas" in plan
         for node in ("Exchange", "Join", "Sort"):

@@ -229,33 +229,6 @@ def test_zlib_bomb_rejected_without_inflating(monkeypatch):
         decode_png(data)
 
 
-def test_decode_image_quarantine_mode(spark):
-    """errors='quarantine': bad payloads survive as NULL-dim rows with
-    the error message; good rows decode exactly as in raise mode."""
-    from etl_batch_spark.llmops.multimodal import decode_image
-
-    good_px = _gradient(4, 3, 3, seed=1)
-    rows = [
-        (1, bytearray(encode_png(4, 3, 3, good_px))),
-        (2, bytearray(b"RIFF\x00\x00\x00\x00WEBPVP8 ")),    # unsupported format
-        (3, bytearray(encode_png(4, 3, 3, good_px)[:-7])),  # truncated
-        (4, bytearray(b"\xff\xd8\xff\xe0 jpeg-ish")),       # corrupt JPEG
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in
-           decode_image(df, fake=False, errors="quarantine").collect()}
-    assert got[1]["error"] is None and (got[1]["width"], got[1]["height"]) == (4, 3)
-    assert got[2]["width"] is None and "NotImplementedError" in got[2]["error"]
-    assert got[3]["width"] is None and "PngError" in got[3]["error"]
-    assert got[4]["width"] is None and "JpegError" in got[4]["error"]
-    # clean/quarantine split is one filter each
-    out = decode_image(df, fake=False, errors="quarantine")
-    assert out.filter("error IS NULL").count() == 1
-    assert out.filter("error IS NOT NULL").count() == 3
-    with pytest.raises(ValueError, match="errors must be"):
-        decode_image(df, errors="bogus")
-
-
 def test_hostile_ihdr_dimensions_rejected_before_allocation():
     """The inflate bound derives from the payload's own IHDR, so a
     crafted header claiming huge dims must be rejected BEFORE any

@@ -7,26 +7,19 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from etl_batch_spark.catalog import DATA_TABLES, table_path
 from etl_batch_spark.queries import QUERIES
-from tools.parity import compare
+from tools.parity import compare, duck_connect
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for name in DATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(SF, name)}')"
-        )
-    return con
+    return duck_connect(SF)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

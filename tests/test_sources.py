@@ -10,28 +10,42 @@ from pyspark.sql import functions as F
 from etl_batch_spark.catalog import load_table
 
 
-def _zordered_files(spark, df, path, cols, *, n_files, equal_frequency=False):
+def _zordered_files(spark, df, path, cols, *, n_files):
     """Live parquet files of a TxTable holding ``df`` after a z-order
     compaction on ``cols`` (the engine's one z-order write path)."""
     from etl_batch_spark.sources.txlog import TxTable
 
     t = TxTable(spark, path)
     t.append(df)
-    t.compact(target_files=n_files, zorder_cols=cols, equal_frequency=equal_frequency)
-    return [os.path.join(t.path, f) for f in t._active_files()]  # noqa: SLF001
+    t.compact(target_files=n_files, zorder_cols=cols)
+    return [os.path.join(t.path, f) for f in t._snapshot()[0]]  # noqa: SLF001
+
+
+def _fold_log(versions, upto):
+    """(live files, schema) at version ``upto`` by folding every log
+    entry from v0: what checkpoint-accelerated resolution must equal."""
+    from pyspark.sql import types as T
+
+    live, schema = set(), None
+    for v in versions:
+        if upto is not None and v.version > upto:
+            break
+        live = (live - set(v.removed)) | set(v.added)
+        schema = v.schema if v.schema is not None else schema
+    return sorted(live), T.StructType.fromJson(schema) if schema else None
 
 
 class TestZorder:
     def test_key_interleaves_bits(self, spark):
-        from etl_batch_spark.sources.io import zorder_key
+        from etl_batch_spark.sources.io import ZORDER_BITS, zorder_key
 
         # corners of a 2-col grid: (min,min) -> 0, (max,max) -> all bits set
         df = spark.createDataFrame([(0.0, 0.0), (3.0, 3.0), (3.0, 0.0)], "x double, y double")
-        z = zorder_key(df, ["x", "y"], bits=2)
+        z = zorder_key(df, ["x", "y"])
         got = [r["z"] for r in df.select(z.alias("z")).collect()]
-        assert got[0] == 0 and got[1] == 0b1111
-        # x contributes the even bit positions: x=max,y=min -> 0b0101
-        assert got[2] == 0b0101
+        assert got[0] == 0 and got[1] == (1 << 2 * ZORDER_BITS) - 1
+        # x contributes the even bit positions: x=max,y=min -> 0b0101...01
+        assert got[2] == int("01" * ZORDER_BITS, 2)
 
     def test_key_rejects_bad_args(self, spark):
         import pytest as _pytest
@@ -42,7 +56,7 @@ class TestZorder:
         with _pytest.raises(ValueError):
             zorder_key(df, [])
         with _pytest.raises(ValueError):
-            zorder_key(df, ["x"], bits=63)
+            zorder_key(df, ["x"] * 7)  # 70 key bits do not fit a long
 
     @staticmethod
     def _file_envelopes(files, cols):
@@ -97,64 +111,6 @@ class TestZorder:
         assert got.agg(F.sum("l_quantity")).first()[0] == li.agg(F.sum("l_quantity")).first()[0]
 
 
-class TestZorderEqualFrequency:
-    def _envelopes(self, files, col):
-        import pyarrow.parquet as pq
-
-        spans = []
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            names = md.schema.to_arrow_schema().names
-            ci = names.index(col)
-            lo = min(md.row_group(rg).column(ci).statistics.min for rg in range(md.num_row_groups))
-            hi = max(md.row_group(rg).column(ci).statistics.max for rg in range(md.num_row_groups))
-            spans.append((lo, hi))
-        return spans
-
-    def test_outlier_does_not_starve_bucketing(self, spark, tmp_path):
-        # mass in [0, 10000), one outlier at 1e9: linear min/max scaling
-        # collapses the whole mass into bucket 0 (no k1 clustering at
-        # all); quantile buckets ignore the outlier's leverage
-        df = spark.range(20_000).select(
-            F.when(F.col("id") == 0, F.lit(1_000_000_000))
-            .otherwise(F.col("id") * 37 % 10_000)
-            .alias("k1"),
-            (F.col("id") * 91 % 10_000).alias("k2"),
-        )
-        lin = _zordered_files(spark, df, str(tmp_path / "lin"), ["k1", "k2"], n_files=16)
-        eqf = _zordered_files(
-            spark, df, str(tmp_path / "eqf"), ["k1", "k2"], n_files=16,
-            equal_frequency=True,
-        )
-
-        def median_width(spans):
-            ws = sorted(hi - lo for lo, hi in spans if hi < 1_000_000)  # mass files
-            return ws[len(ws) // 2]
-
-        lin_w = median_width(self._envelopes(lin, "k1"))
-        eqf_w = median_width(self._envelopes(eqf, "k1"))
-        assert eqf_w < lin_w / 2, f"eqf {eqf_w} vs linear {lin_w}"
-        assert eqf_w < 6_000  # real clustering of the mass region
-        # data round-trips intact
-        assert spark.read.parquet(*eqf).count() == 20_000
-
-    def test_equal_frequency_still_prunes_both_columns(self, spark, tmp_path):
-        df = spark.range(20_000).select(
-            (F.col("id") * 37 % 10_000).alias("k1"),
-            (F.col("id") * 91 % 10_000).alias("k2"),
-        )
-        files = _zordered_files(
-            spark, df, str(tmp_path / "z"), ["k1", "k2"], n_files=16,
-            equal_frequency=True,
-        )
-
-        for col in ("k1", "k2"):
-            spans = self._envelopes(files, col)
-            mean_w = sum(hi - lo for lo, hi in spans) / len(spans)
-            # 16 files over a 2-d curve ≈ 4 splits per dimension
-            assert mean_w < 0.6 * 10_000, f"{col}: envelope {mean_w}"
-
-
 class TestTxTable:
     def _table(self, spark, tmp_path):
         from etl_batch_spark.sources.txlog import TxTable
@@ -183,7 +139,7 @@ class TestTxTable:
         feed = t.changes(0, 1)
         assert sorted(r["id"] for r in feed.collect()) == list(range(10, 15))
         assert {r["_change_type"] for r in feed.collect()} == {"insert"}
-        v0_files = set(t._active_files(0))  # noqa: SLF001
+        v0_files = set(t._snapshot(0)[0])  # noqa: SLF001
         assert not any(
             f.rsplit("/", 2)[-2] + "/" + f.rsplit("/", 2)[-1] in v0_files
             for f in feed.inputFiles()
@@ -226,7 +182,7 @@ class TestTxTable:
 
         files = [
             _os.path.join(t.path, f)
-            for f in t._active_files()  # noqa: SLF001
+            for f in t._snapshot()[0]  # noqa: SLF001
         ]
         assert len(files) == 8
         for col in ("k1", "k2"):
@@ -341,13 +297,6 @@ class TestTxTable:
         t = self._table(spark, tmp_path)
         # still-empty table: empty feed, not a ValueError
         assert t.changes(-1).count() == 0
-        # a caller-supplied schema types the bootstrap feed so consumers
-        # selecting row columns (e.g. ivm.apply_feed) see a no-op, not
-        # an AnalysisException
-        typed = t.changes(-1, schema="id long, name string")
-        assert typed.count() == 0
-        assert set(typed.columns) == {"id", "name", "_change_type"}
-        typed.select("id", "name").count()  # row columns resolvable
         # first commit is an overwrite (how the streaming sinks commit):
         # bootstrap feed reports every row as an insert via the diff path
         t.overwrite(spark.range(7))
@@ -988,8 +937,7 @@ class TestTxTable:
         raw = t.versions()  # authoritative full log
         for v in (0, 3, 4, 5, 8, 10, None):
             fast_files, fast_schema, _ = t._snapshot(v)  # noqa: SLF001
-            assert fast_files == t._active_files(v, versions=raw)  # noqa: SLF001
-            assert fast_schema == t.schema_at(v, versions=raw)
+            assert (fast_files, fast_schema) == _fold_log(raw, v)
         assert t.read().count() == 110
         assert t.read(version=4).count() == 50  # time travel via ckpt
         # deleting a checkpoint only removes the acceleration
@@ -1162,9 +1110,6 @@ class TestTxTable:
         pruned = t.read_where(k=(30, 45))
         assert sorted(r["k"] for r in pruned.collect()) == list(range(30, 46))
         assert len(pruned.inputFiles()) < 4
-        # time travel prunes with the HISTORICAL snapshot's stats
-        old = t.read_where(version=2, k=(0, 9))
-        assert old.count() == 10
 
     def test_read_where_null_rows_consistent(self, spark, tmp_path):
         """Rows with NULL in the range column never satisfy the
@@ -1236,22 +1181,6 @@ class TestTxTable:
         )
         assert got2.count() == 10 and len(got2.inputFiles()) < 4
 
-    def test_read_where_past_vacuum_horizon_refuses_cleanly(
-        self, spark, tmp_path
-    ):
-        """read_where(version=) must honor the same retention-horizon
-        contract as read(version=): clean refusal, not a scan-time
-        path-not-found."""
-        import pytest as _pytest
-
-        t = self._clustered_table(spark, tmp_path)
-        t.compact(target_files=2)
-        t.vacuum(retain_versions=1)
-        with _pytest.raises(ValueError, match="vacuum"):
-            t.read_where(version=1, k=(0, 50)).collect()
-        # the current snapshot still prunes fine
-        assert t.read_where(k=(0, 9)).count() == 10
-
     # -- whole-file review findings (round 9, second pass) -------------
 
     def test_nonexistent_version_raises(self, spark, tmp_path):
@@ -1268,8 +1197,6 @@ class TestTxTable:
                 t.schema_at(version=bad)
         with _pytest.raises(ValueError, match="does not exist"):
             t.changes(0, 5)
-        with _pytest.raises(ValueError, match="does not exist"):
-            t.read_where(version=7, id=(0, 1))
         with _pytest.raises(ValueError, match="does not exist"):
             t.read(version=-2)
         assert t.read(version=0).count() == 3  # valid version still fine

@@ -159,27 +159,6 @@ class TestDecodeAudioReal:
             want = [round(float(v), 6) for v in (want + [0.0] * 8)[:8]]
             assert [round(float(v), 6) for v in r["feature"]] == want
 
-    def test_quarantine_keeps_bad_rows(self, spark):
-        from etl_batch_spark.llmops.multimodal import decode_audio
-
-        good = encode_wav(8000, _rand_samples(64, 1, 16, seed=7))
-        rows = [
-            (1, bytearray(good)),
-            (2, bytearray(b"ID3\x03" + b"\x00" * 64)),  # an MP3, not a WAV
-            (3, bytearray(good[:20])),                   # truncated WAV
-            (4, None),                                   # NULL payload
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, payload binary")
-        got = {
-            r["doc_id"]: r
-            for r in decode_audio(df, fake=False, errors="quarantine").collect()
-        }
-        assert got[1]["error"] is None and got[1]["n_frames"] == 64
-        assert "NotImplementedError" in got[2]["error"]
-        assert "WavError" in got[3]["error"]
-        assert "NullPayload" in got[4]["error"]
-        assert got[2]["sample_rate"] is None
-
     def test_fake_mode_is_deterministic(self, spark):
         from etl_batch_spark.llmops.multimodal import decode_audio
 

@@ -28,7 +28,7 @@ import numpy as np
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from etl_batch_spark.llmops import avi, bmp, flac, gif, jpeg, mp3, mp4, oggv, png, pnm, wav, webp  # noqa: E402
+from etl_batch_spark.llmops import bmp, flac, gif, jpeg, mp3, mp4, oggv, png, pnm, wav, webp  # noqa: E402
 from etl_batch_spark.llmops.mediainfo import probe_media  # noqa: E402
 
 
@@ -37,7 +37,6 @@ def _img(w, h, c, s):
 
 
 def _bases():
-    jf = [jpeg.encode_jpeg(16, 12, 3, _img(16, 12, 3, i).tobytes()) for i in range(3)]
     pal = _img(8, 1, 3, 4).reshape(8, 3)
     return [
         ("jpeg", jpeg.decode_jpeg, jpeg.JpegError, [
@@ -59,8 +58,6 @@ def _bases():
                 bits=24, extensible=True,
             ),
         ]),
-        ("avi", avi.decode_avi_mjpeg, avi.AviError,
-         [avi.encode_avi_mjpeg(16, 12, 24.0, jf)]),
         ("bmp", bmp.decode_bmp, bmp.BmpError,
          [bmp.encode_bmp(13, 7, 4, _img(13, 7, 4, 7).tobytes())]),
         ("pnm", pnm.decode_pnm, pnm.PnmError,
