@@ -82,6 +82,59 @@ def infer_sf(sf_dir: str) -> float:
         return -1.0
 
 
+def warm_up(spark, builds) -> None:
+    """Steady-state warm-up: run every plan once at the tiny SF (see
+    the module docstring).  Failures here surface at timing time."""
+    for build in builds:
+        try:
+            build(spark, WARMUP_SF_DIR).write.format("noop").mode("overwrite").save()
+        except Exception:
+            pass
+
+
+def measure(spark, build, sf_dir: str, n_runs: int) -> dict:
+    """Time ``build(spark, sf_dir)`` plus a noop-sink write: one
+    unrecorded priming run, ``n_runs`` timed runs, then one instrumented
+    run.  Returns the sorted run seconds as ``runs`` and the instrumented
+    run's ``build_sec``/``exec_sec``/``jobs_build``/``jobs_exec``.
+
+    Priming at the target SF: the sf0.001 warm-up covers JIT/codegen but
+    not the target data's OS page cache or the plan's first AQE
+    re-optimization at real row counts, so the first run used to carry
+    a cold-read outlier that dominated max-min spread (round 7:
+    spread_total 9.96 s on a 28.5 s headline).
+
+    The build/exec split comes from the extra run so the timed region
+    stays untouched: the job-id reads are py4j calls that must not land
+    inside it.  A phase's jobs are the DAGScheduler job ids it spans,
+    not a job group's: a foreachBatch micro-batch runs its jobs under
+    the stream's own group, and measuring is single-threaded, so the id
+    window holds exactly the phase's jobs."""
+    build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    runs = []
+    for _ in range(n_runs):
+        t0 = time.perf_counter()
+        df = build(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        runs.append(time.perf_counter() - t0)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    t0 = time.perf_counter()
+    df = build(spark, sf_dir)
+    t1 = time.perf_counter()
+    j1 = dag.nextJobId()
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    j2 = dag.nextJobId()
+    return {
+        "runs": sorted(runs),
+        "build_sec": round(t1 - t0, 3),
+        "exec_sec": round(t2 - t1, 3),
+        "jobs_build": j1 - j0,
+        "jobs_exec": j2 - j1,
+    }
+
+
 def main() -> None:
     spark = get_spark("bench")
     # the driver tail-captures the last 2,000 chars of output; JVM WARN
@@ -89,76 +142,31 @@ def main() -> None:
     # must never be what fills that tail after the JSON line
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).collect()
-    bench_queries = {name: q for name, q in QUERIES.items() if q.bench}
+    builds = {name: q.bench_build or q.build for name, q in QUERIES.items() if q.bench}
+    warm_up(spark, builds.values())
 
-    # steady-state warm-up: run every benched plan once at the tiny SF
-    # (see module docstring); failures here surface at timing time
-    for q in bench_queries.values():
-        try:
-            build = q.bench_build or q.build
-            build(spark, WARMUP_SF_DIR).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
-
-    # min over N timed runs at the target SF, after ONE unrecorded
-    # priming run per query AT THAT SF: the sf0.001 warm-up covers JIT/
-    # codegen but not the target data's OS page cache or the plan's
-    # first AQE re-optimization at real row counts, so the first sf0.1
-    # run used to carry a cold-read outlier that dominated max-min
-    # spread (round 7: spread_total 9.96 s on a 28.5 s headline — the
-    # noise floor became the binding constraint on reading
-    # round-over-round movement).  Priming moves that cost out of the
-    # timed window; 5 timed runs (was 3) then sample the steady state.
-    # min is the headline (continuity with rounds 1–7); median rides
-    # along as the robust location estimate.
+    # min over N timed runs: 5 (was 3) sample the steady state.  min is
+    # the headline (continuity with rounds 1–7); median rides along as
+    # the robust location estimate.  Each query's job count and
+    # build/exec split (round 11) land in BENCH_DETAIL.json only, so
+    # round-over-round comparisons can separate dispatch drift (jobs ×
+    # host per-job latency) from data work mechanically.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     spread: dict[str, float] = {}
     min_gap: dict[str, float] = {}
-    # per-query job count + build/exec split (round 11): measured on ONE
-    # extra INSTRUMENTED run per query AFTER its timed runs — the timed
-    # region and the stdout JSON line are untouched (the job-id reads
-    # are py4j calls that must not land inside the timed window).
-    # Lands in BENCH_DETAIL.json only, so round-over-round comparisons
-    # can separate dispatch drift (jobs × host per-job latency) from
-    # data work mechanically.  A phase's jobs are the DAGScheduler job
-    # ids it spans, not a job group's: a foreachBatch micro-batch runs
-    # its jobs under the stream's own group, and this loop is
-    # single-threaded, so the id window holds exactly the phase's jobs.
     jobs_split: dict[str, dict] = {}
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    for name, q in bench_queries.items():
-        build = q.bench_build or q.build
-        build(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df = build(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
+    for name, build in builds.items():
+        split = measure(spark, build, SF_DIR, n_runs)
+        runs = split.pop("runs")
         timings[name] = round(runs[0], 3)
         medians[name] = round(runs[len(runs) // 2], 3)
         spread[name] = round(runs[-1] - runs[0], 3)
         # jackknife bound needs a second sample; degenerate n_runs=1
         # (smoke runs) reports 0 rather than crashing
         min_gap[name] = round(runs[1] - runs[0], 3) if len(runs) > 1 else 0.0
-        j0 = dag.nextJobId()
-        t0 = time.perf_counter()
-        df = build(spark, SF_DIR)
-        t1 = time.perf_counter()
-        j1 = dag.nextJobId()
-        df.write.format("noop").mode("overwrite").save()
-        t2 = time.perf_counter()
-        j2 = dag.nextJobId()
-        jobs_split[name] = {
-            "build_sec": round(t1 - t0, 3),
-            "exec_sec": round(t2 - t1, 3),
-            "jobs": j2 - j0,
-            "jobs_build": j1 - j0,
-            "jobs_exec": j2 - j1,
-        }
+        jobs_split[name] = {**split, "jobs": split["jobs_build"] + split["jobs_exec"]}
 
     # The external driver captures only the LAST 2,000 chars of stdout;
     # round 3's line grew to ~3.2k (per-query spread dict) and the

@@ -99,7 +99,9 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     if args.cmd == "explain":
-        QUERIES[args.query].build(spark, args.sf_dir).explain("formatted")
+        from etl_batch_spark.plans import formatted_plan
+
+        print(formatted_plan(QUERIES[args.query].build(spark, args.sf_dir)))
         return 0
 
     from etl_batch_spark.orchestration.runner import BatchRunner

@@ -96,8 +96,7 @@ class Version:
     # the FULL table schema as of this commit (StructType.jsonValue()).
     # Stored in the log so readers never scan parquet footers to learn
     # the schema — at 100 TB a mergeSchema footer sweep is a full
-    # metadata pass; the log entry is O(columns).  Entries written
-    # before round 8 lack it; read() falls back to footer inference.
+    # metadata pass; the log entry is O(columns).
     schema: "dict | None" = None
     # per-ADDED-file column envelopes {relpath: {col: [min, max]}},
     # harvested from the parquet footers of the files THIS commit wrote
@@ -105,9 +104,9 @@ class Version:
     # read_where() prunes files whose envelope is disjoint from the
     # query range: Delta's data-skipping-from-log-statistics, the read
     # optimization that makes a 100 TB table answer a narrow query by
-    # scanning the handful of files that can contain it.  Entries
-    # written before round 9 lack it; their files are simply never
-    # pruned (correct, just unskipped).
+    # scanning the handful of files that can contain it.  A column
+    # without an envelope (unstatable values, nested types) is simply
+    # never pruned on (correct, just unskipped).
     stats: "dict | None" = None
 
 
@@ -369,8 +368,7 @@ class TxTable:
                 stats.pop(f, None)
             if e.stats:
                 stats.update(e.stats)
-            if e.schema is not None:
-                schema_json = e.schema
+            schema_json = e.schema
         schema = (T.StructType.fromJson(schema_json)
                   if schema_json is not None else None)
         return sorted(live), schema, {
@@ -388,7 +386,7 @@ class TxTable:
             payload = {
                 "version": version,
                 "live": live,
-                "schema": schema.jsonValue() if schema is not None else None,
+                "schema": schema.jsonValue(),
                 "meta": entry.meta,
                 "stats": stats,
             }
@@ -409,13 +407,12 @@ class TxTable:
     def schema_at(self, version: "int | None" = None) -> "T.StructType | None":
         """Table schema of the snapshot at ``version`` (newest when
         None), resolved from the log alone — never a parquet footer.
-        None for tables whose log predates schema tracking."""
+        None for a never-written table (version -1)."""
         return self._snapshot(version)[1]
 
     def _commit(self, action: str, added: "list[str]", removed: "list[str]",
-                n_rows: int, meta: "dict | None" = None,
-                expected_version: "int | None" = None,
-                schema: "T.StructType | None" = None,
+                n_rows: int, meta: "dict | None" = None, *,
+                expected_version: int, schema: T.StructType,
                 stats: "dict | None" = None) -> int:
         """Write one log entry at exactly one version slot, atomically
         and WITHOUT clobbering: the visibility point is ``os.link`` of a
@@ -426,18 +423,16 @@ class TxTable:
         overwrite a racing writer's commit — the lost-update anomaly
         optimistic concurrency exists to prevent.
 
-        ``expected_version`` pins the slot for snapshot-conditioned
-        writes (overwrite/merge/compact read version N and must land at
-        exactly N+1 — landing later would base the rewrite on a stale
-        snapshot); when None the slot is head+1 at commit time.  Raises
-        :class:`ConcurrentWriteConflict` when the slot is taken.
+        ``expected_version`` pins the slot: every write read version N
+        (the snapshot, or the head its schema was resolved against) and
+        must land at exactly N+1 — landing later would base it on a
+        stale snapshot.  Raises :class:`ConcurrentWriteConflict` when
+        the slot is taken.
         """
-        version = (self.latest_version() + 1
-                   if expected_version is None else expected_version)
+        version = expected_version
         entry = Version(version=version, action=action, added=added,
                         removed=removed, n_rows=n_rows, meta=meta,
-                        schema=schema.jsonValue() if schema is not None else None,
-                        stats=stats or None)
+                        schema=schema.jsonValue(), stats=stats or None)
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}")
         try:
             with open(tmp, "w") as f:
@@ -530,7 +525,7 @@ class TxTable:
 
     def _rewrite(self, action: str, df: DataFrame, removed: "list[str]",
                  read_version: int, meta: "dict | None",
-                 schema: "T.StructType | None") -> int:
+                 schema: T.StructType) -> int:
         """Stage ``df`` and commit it in place of ``removed`` at exactly
         ``read_version + 1`` — the snapshot-conditioned write overwrite,
         merge and compact share.  A lost slot raises
@@ -553,21 +548,20 @@ class TxTable:
 
     def _scan(self, files: "list[str]", schema: "T.StructType | None",
               version: "int | None" = None) -> DataFrame:
-        """Read exactly ``files`` under the log schema (footer inference
-        only for logs that predate schema tracking).  No files reads as
-        an empty frame typed from the log schema — an EMPTIED table
-        (e.g. a merge that deleted every row) is a valid snapshot."""
+        """Read exactly ``files`` under the log schema.  No files reads
+        as an empty frame typed from the log schema — an EMPTIED table
+        (e.g. a merge that deleted every row) is a valid snapshot; a
+        never-written table has no schema and refuses."""
+        if schema is None:
+            raise ValueError(
+                f"table {self.path} has no data at version {version} "
+                "and no log-recorded schema to type an empty snapshot"
+            )
         if not files:
-            if schema is None:
-                raise ValueError(
-                    f"table {self.path} has no data at version {version} "
-                    "and no log-recorded schema to type an empty snapshot"
-                )
             return self.spark.createDataFrame([], schema)
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(*[os.path.join(self.path, f) for f in files])
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, f) for f in files]
+        )
 
     def _cleanup_staged(self, files: "list[str] | None") -> None:
         """Best-effort delete of parquet staged for a commit that will
@@ -921,8 +915,7 @@ class TxTable:
         version, so files written before a schema evolution NULL-fill
         the later columns and time travel sees the historical column
         set, never footers (at 100 TB a mergeSchema footer sweep is a
-        full metadata pass; the log entry is O(columns)).  Logs written
-        before schema tracking fall back to footer inference.
+        full metadata pass; the log entry is O(columns)).
 
         Resolution is checkpoint-accelerated: one checkpoint read plus
         at most ``checkpoint_interval`` tail entries, however old the
@@ -947,8 +940,8 @@ class TxTable:
         touch: the envelopes were harvested once at write time (one
         footer read per new file) and travel in the commit log /
         checkpoints, so pruning costs zero data-file IO.  Files
-        without logged stats (pre-round-9 commits, unstatable column
-        types, all-NULL envelopes) are conservatively read.  NULL rows
+        without logged stats (unstatable column types, all-NULL
+        envelopes) are conservatively read.  NULL rows
         never satisfy a range predicate, so skipping a file on its
         non-NULL envelope agrees with the residual filter.
 
@@ -988,11 +981,10 @@ class TxTable:
         {'insert', 'delete'}; an update appears as delete + insert.
 
         The empty bootstrap feed of a still-empty table is typed from
-        the log schema, else from any file the log ever referenced, so
-        downstream consumers that select row columns (e.g.
-        ``ivm.apply_feed``) see a no-op instead of an AnalysisException;
-        only a never-written table falls back to the bare
-        ``_change_type`` column.
+        the log schema, so downstream consumers that select row columns
+        (e.g. ``ivm.apply_feed``) see a no-op instead of an
+        AnalysisException; only a never-written table falls back to the
+        bare ``_change_type`` column.
 
         Scale path: when every commit in ``(v_from, v_to]`` is an
         ``append``, the feed is exactly the rows of the files those
@@ -1030,8 +1022,7 @@ class TxTable:
         for e in between:
             after_live -= set(e.removed)
             after_live |= set(e.added)
-            if e.schema is not None:
-                feed_schema_json = e.schema
+            feed_schema_json = e.schema
         after_files = sorted(after_live)
 
         # both endpoints read with the schema AS OF v_to (Delta CDF's
@@ -1047,29 +1038,14 @@ class TxTable:
             return self._scan(files, feed_schema)
 
         if not before_files and not after_files:
-            # bootstrap cursor over a still-empty table: an empty feed,
-            # typed (in priority order) from the log schema, then from
-            # any file the log ever referenced (appended then
-            # deleted rows still pin the row schema), else only the
-            # column the feed itself guarantees.  (Full log walk — fine:
-            # only reachable while the table has no data at all.)
-            # Only files that still EXIST can type the probe — a
-            # vacuumed ever-file would crash the limit(0) read with a
-            # scan-time path-not-found.
-            ever = [
-                f for v in self.versions() for f in v.added
-                if os.path.exists(os.path.join(self.path, f))
-            ]
-            if feed_schema is not None:
-                # schema-tracked log: no file probe needed at all
-                empty = self.spark.createDataFrame([], feed_schema)
-            elif ever:
-                empty = snap(ever[-1:]).limit(0)
-            else:
+            # bootstrap cursor over a still-empty table: an empty feed
+            # typed from the log schema, else (never written) only the
+            # column the feed itself guarantees
+            if feed_schema is None:
                 return self.spark.range(0).select(
                     F.lit("insert").alias("_change_type")
                 )
-            return empty.withColumn("_change_type", F.lit("insert")).limit(0)
+            return snap([]).withColumn("_change_type", F.lit("insert"))
         if all(v.action == "append" for v in between):
             added = [f for v in between for f in v.added]
             if not added:

@@ -23,8 +23,12 @@ The rules are name-based and purely syntactic (no Spark session):
   unreached defs is unreached too;
 - an optional parameter (one with a default) is set when a non-test call
   to the def's name passes it, by keyword or by position.  A call with
-  ``*args`` or ``**kwargs``, and a def used as a value (passed, stored,
-  decorated), set every option.  An option no caller sets is a constant
+  ``*args`` or ``**kwargs``, and a function used as a value (passed,
+  stored, decorated), set every option.  A class used as a value sets
+  none: it is read for attributes (``_wrap_attr(BatchRunner, ...)``),
+  subclassed, or called with no arguments (``default_factory=``).  A
+  call to a subclass that inherits ``__init__`` passes its arguments to
+  the base's.  An option no caller sets is a constant
   and is written as one, unless ``KEEP_OPTIONS`` names it with a reason.
   The byte codecs are out of scope: their encoder and parser options
   generate the inputs the decoder tests and ``tools/fuzz_codecs.py``
@@ -61,6 +65,10 @@ KEEP_OPTIONS = {
     "TxTable.vacuum": (("orphan_age_seconds",), _SEAM),
     "TxTable.merge": (("max_retries",), _SEAM),
     "get_spark": (("master",), "deployment address"),
+    "SmtplibTransport.__init__": (("host", "port"), "deployment address"),
+    "BatchRunner.__init__": (
+        ("poll_interval", "max_polls", "user"), f"{_SEAM}: the poll bound and login id"
+    ),
     "RunContext.finish": (("metrics",), f"{_REFERENCE}, body.sql:671-722"),
     "daily000": (("*",), f"{_REFERENCE}, body.sql:877-992"),
 }
@@ -208,12 +216,14 @@ def _locals(fn) -> set[int]:
 
 def _calls(files) -> tuple[dict[str, set], set[str]]:
     """What the call sites in ``files`` pass, by callee name: positional
-    counts and keyword names (``"*"`` for an unpacked call).  Also the
+    counts and keyword names (``"*"`` for an unpacked call); a call to a
+    class that inherits ``__init__`` counts for its bases too.  Also the
     names used as values: neither called, nor the base of an attribute
     access, nor a local, nor a type in an annotation, ``isinstance`` or
     ``except``."""
     passed: dict[str, set] = {}
     values: set[str] = set()
+    inherits: dict[str, list[str]] = {}  # class without __init__ -> bases
     for path in files:
         tree = ast.parse(path.read_text(), filename=str(path))
         not_values: set[int] = set()  # ids of Name/Attribute nodes
@@ -246,6 +256,10 @@ def _calls(files) -> tuple[dict[str, set], set[str]]:
                     values.add(n.name)
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
                 not_values.update(_locals(n))
+            if isinstance(n, ast.ClassDef) and not any(
+                getattr(s, "name", None) == "__init__" for s in n.body
+            ):
+                inherits[n.name] = [getattr(b, "id", getattr(b, "attr", "")) for b in n.bases]
         for n in ast.walk(tree):
             if id(n) in not_values or not isinstance(getattr(n, "ctx", None), ast.Load):
                 continue
@@ -253,6 +267,10 @@ def _calls(files) -> tuple[dict[str, set], set[str]]:
                 values.add(n.id)
             elif isinstance(n, ast.Attribute):
                 values.add(n.attr)
+    for _ in inherits:  # one pass per link of the longest chain
+        for sub, bases in inherits.items():
+            for base in bases:
+                passed.setdefault(base, set()).update(passed.get(sub, ()))
     return passed, values
 
 
@@ -292,7 +310,7 @@ def unset_options(repo: Path = REPO, keep=KEEP_OPTIONS, files=None) -> list[tupl
     passed, values = _calls(_sources(repo) if files is None else files)
     out = []
     for d, name in _callables(repo):
-        if name in values:
+        if name in values and d.name != "__init__":
             continue
         got = passed.get(name, set())
         if "*" in got:

@@ -363,7 +363,7 @@ class TestTxTable:
             before = _json.load(f)
         with _pytest.raises(ConcurrentWriteConflict):
             b._commit("append", ["data-x/f.parquet"], [], 1,  # noqa: SLF001
-                      expected_version=0)
+                      expected_version=0, schema=a.schema_at())
         with open(entry_path) as f:
             assert _json.load(f) == before
         # no orphaned tmp files from the failed attempt
@@ -645,7 +645,7 @@ class TestTxTable:
         assert entry.action == "merge"
         assert sorted(entry.removed) == sorted(added[1] + added[2])
         assert sorted(map(tuple, t.read().collect())) == expected
-        assert entry.n_rows == t._scan(entry.added, None).count()  # noqa: SLF001
+        assert entry.n_rows == t._scan(entry.added, t.schema_at(v)).count()  # noqa: SLF001
 
     def test_merge_bounds_aggregate_runs_only_where_it_could_prune(
         self, spark, tmp_path

@@ -1,8 +1,11 @@
 """Three-point scale curve (sf0.1 → sf1 → sf10) for named queries.
 
-The per-round SCALE.md table's generator: min-of-N noop-sink timing per
-point on a quiet machine, same methodology as bench.py (one unrecorded
-priming run per query per SF, then N timed runs).
+The per-round SCALE.md table's generator.  Each point is timed by
+``bench.measure`` after ``bench.warm_up``, so the method is bench.py's:
+one unrecorded priming run, N timed runs, min; then one instrumented
+run gives the point's build/exec seconds and job counts.  Points whose
+fixture directory is missing are skipped, so with only sf0.1 on disk
+this is a per-query build/exec/jobs breakdown.
 
 Usage:
     python tools/scale_curve.py st11_torn_crash_sink_replay et39_... [N=2]
@@ -10,13 +13,14 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+import bench  # noqa: E402
 from etl_batch_spark.queries import QUERIES  # noqa: E402
 from etl_batch_spark.session import get_spark  # noqa: E402
 
@@ -27,32 +31,31 @@ POINTS = [
 ]
 
 
+def _ratio(t: dict, hi: str, lo: str) -> str:
+    return f"{t[hi] / t[lo]:.1f}×" if hi in t and lo in t else "-"
+
+
 def main() -> None:
     names = [a for a in sys.argv[1:] if not a.isdigit()]
     n_runs = next((int(a) for a in sys.argv[1:] if a.isdigit()), 2)
+    points = [(label, d) for label, d in POINTS if os.path.isdir(d)]
     spark = get_spark("scale-curve")
     spark.sparkContext.setLogLevel("ERROR")
+    builds = {name: QUERIES[name].bench_build or QUERIES[name].build for name in names}
+    bench.warm_up(spark, builds.values())
     rows = []
-    for name in names:
-        q = QUERIES[name]
-        build = q.bench_build or q.build
+    for name, build in builds.items():
         timings = {}
-        for label, sf_dir in POINTS:
-            build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs = []
-            for _ in range(n_runs):
-                t0 = time.perf_counter()
-                build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            timings[label] = round(min(runs), 2)
-        r1 = round(timings["sf1"] / timings["sf0.1"], 1)
-        r10 = round(timings["sf10"] / timings["sf1"], 1)
-        rows.append((name, timings, r1, r10))
-        print(f"{name}: {timings}  0.1->1 {r1}x  1->10 {r10}x", flush=True)
+        for label, sf_dir in points:
+            split = bench.measure(spark, build, sf_dir, n_runs)
+            timings[label] = round(split.pop("runs")[0], 2)
+            print(f"{name} {label}: min {timings[label]}  {split}", flush=True)
+        rows.append((name, timings))
     print()
-    for name, t, r1, r10 in rows:
-        print(f"| {name} | {t['sf0.1']} | {t['sf1']} | {t['sf10']} "
-              f"| {r1}× | {r10}× |")
+    for name, t in rows:
+        cells = " | ".join(str(t.get(label, "-")) for label, _ in POINTS)
+        print(f"| {name} | {cells} | {_ratio(t, 'sf1', 'sf0.1')} "
+              f"| {_ratio(t, 'sf10', 'sf1')} |")
 
 
 if __name__ == "__main__":
