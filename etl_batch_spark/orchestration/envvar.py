@@ -19,15 +19,14 @@ _ORACLE_FMT = "%d-%b-%Y"
 class EnvVarService:
     def __init__(self, store: ControlStore):
         self.store = store
+        self._dates: dict[str, datetime | None] = {}  # raw BATCH_CONTROL_DATE -> parsed
 
     def get(self, name: str) -> str | None:
         """Uncached read; latest write wins (the reference clears its cache
-        before each read, body.sql:866-869)."""
-        value = None
-        for row in self.store.rows("envvar"):
-            if row["variable_name"] == name:
-                value = row["value"]
-        return value
+        before each read, body.sql:866-869).  It reads the store's envvar
+        lookup, which ``append`` keeps current, so it is never stale."""
+        rows = self.store.lookup("envvar", "variable_name", name)
+        return rows[-1]["value"] if rows else None
 
     def update(self, name: str, value: str) -> None:
         # append-only; get() takes the latest write
@@ -46,9 +45,12 @@ class EnvVarService:
         (body.sql:410-418: any error falls back to today)."""
         raw = self.get("BATCH_CONTROL_DATE")
         if raw:
-            try:
-                return datetime.strptime(raw.title(), _ORACLE_FMT)
-            except ValueError:
-                pass
+            if raw not in self._dates:  # parse each distinct value once
+                try:
+                    self._dates[raw] = datetime.strptime(raw.title(), _ORACLE_FMT)
+                except ValueError:
+                    self._dates[raw] = None
+            if self._dates[raw] is not None:
+                return self._dates[raw]
         now = clock.now()
         return now.replace(hour=0, minute=0, second=0, microsecond=0)

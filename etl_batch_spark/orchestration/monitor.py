@@ -190,11 +190,13 @@ class RunMonitor:
             idx = p.find("Run_level=<")
             return p[: max(idx - 1, 0)].upper() if idx >= 0 else ""
 
+        day = _day(control_date)
+        child_prefix = prefix(child_parameters) if same_module else None
         rows = [
             r
             for r in self.store.module_latest_events(parent_module_id)
-            if _day(r.get("control_date")) == _day(control_date)
-            and (not same_module or prefix(r.get("parameters")) == prefix(child_parameters))
+            if _day(r.get("control_date")) == day
+            and (not same_module or prefix(r.get("parameters")) == child_prefix)
         ]
         if not rows:
             return None

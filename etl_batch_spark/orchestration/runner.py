@@ -86,14 +86,13 @@ class RunContext:
     timer: Timer = field(repr=False, default=None)  # type: ignore[assignment]
 
     def progress(self, op_name: str, sofar: int | None = None) -> None:
-        """proc_write_session_longops (body.sql:1253-1266) ≙ job-description
-        + log-based progress."""
+        """proc_write_session_longops (body.sql:1253-1266): one batch_log
+        longops row, ``"{MODULE}: {op} sofar={n}"`` (no ``sofar`` when it is
+        None).  It sets no Spark job description: labelling a run's Spark
+        jobs belongs where its Spark work is launched, not in the lifecycle."""
         msg = f"{self.module['module_name']}: {op_name}" + (
             f" sofar={sofar}" if sofar is not None else ""
         )
-        spark = self.runner.store.spark
-        if spark is not None:
-            spark.sparkContext.setJobDescription(msg)
         self.runner._log(self.module["module_name"], "progress", msg)
 
     def success(self) -> None:
@@ -121,9 +120,6 @@ class RunContext:
         )
         if not ok:
             log.warning("endup matched no live run (uid=%s) — already finalized?", self.run_uid)
-        spark = self.runner.store.spark
-        if spark is not None:
-            spark.sparkContext.setJobDescription(None)
 
 
 class BatchRunner:
@@ -167,18 +163,15 @@ class BatchRunner:
                 setattr(sv, attr, 1 if self.env.get(var) == "Y" else 0)
             except Exception:  # noqa: BLE001 — reference defaults to 0 on any error
                 setattr(sv, attr, 0)
-        user = self._user or getpass.getuser()
-        sv.login_id = user.replace("OPS$", "").replace("WEB_OWNER", "WEB_USER")
+        if not self._user:  # the OS user, looked up on the first startup only
+            self._user = getpass.getuser()
+        sv.login_id = self._user.replace("OPS$", "").replace("WEB_OWNER", "WEB_USER")
         sv.control_date = self.env.control_date(self.clock)
         return sv
 
     # -- I1: module lookup (body.sql:127-151) -------------------------------
     def _get_module_info(self, batchname: str, run_level: int | None) -> dict[str, Any]:
-        masters = [
-            r
-            for r in self.store.rows("batch_master")
-            if r["module_name"].upper() == batchname.upper()
-        ]
+        masters = self.store.lookup("batch_master", "module_name", batchname)
         if run_level is None:
             # default run_level = MIN(run_level) among the name's rows (A2)
             levels = [r["run_level"] for r in masters if r["run_level"] is not None]
@@ -195,18 +188,11 @@ class BatchRunner:
                           control_date: datetime | None) -> int:
         try:
             status = 0
-            deps = [
-                d for d in self.store.rows("batch_dependency")
-                if d["child_id"] == module["module_id"]
-            ]
-            for dep in deps:
-                parent = next(
-                    (m for m in self.store.rows("batch_master")
-                     if m["module_id"] == dep["parent_module_id"]),
-                    None,
-                )
-                if parent is None:
+            for dep in self.store.lookup("batch_dependency", "child_id", module["module_id"]):
+                parents = self.store.lookup("batch_master", "module_id", dep["parent_module_id"])
+                if not parents:
                     continue  # parent absent from batch_master → skipped (body.sql:334-337)
+                parent = parents[0]
                 polls = 0
                 while True:
                     code = self.monitor.parent_status_code(

@@ -22,6 +22,17 @@ per-module maps — in order of the run_uid's first event.  ``append``
 maintains it under the store lock (``event_seq`` is drawn under the same
 lock, so the event appended last is the latest); ``delete_where`` on
 batch_monitor rebuilds it from the surviving events.
+
+Keyed lookups.  Admission reads its small tables by key, never by scan
+(``lookup``): ``batch_master`` by upper-cased ``module_name`` and by
+``module_id``, ``batch_dependency`` by ``child_id`` and ``envvar`` by
+``variable_name`` (the reference's keyed SELECTs, body.sql:127-151,
+251-346 and pkg_batch_util_body.sql:861-875).  Each maps a key to that
+table's rows with the key, in append order, so the latest envvar write
+is the last row.  A NULL value is not indexed: NULL equals nothing, as
+``UPPER(NULL) = x`` never matches in SQL.  ``append`` maintains the
+lookups under the store lock, and ``delete_where`` rebuilds the deleted
+table's lookups from its surviving rows, as for the latest-state index.
 """
 
 from __future__ import annotations
@@ -34,6 +45,21 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_batch_spark.catalog import CONTROL_TABLES
 
+_COLUMNS = {name: [f.name for f in schema.fields] for name, schema in CONTROL_TABLES.items()}
+_ALLOWED = {name: frozenset(cols) | {"run_uid"} for name, cols in _COLUMNS.items()}
+
+
+def _same(value: Any) -> Any:
+    return value
+
+
+# the keyed lookups: table -> {column: key of a non-NULL value}
+_KEYS = {
+    "batch_master": {"module_name": str.upper, "module_id": _same},
+    "batch_dependency": {"child_id": _same},
+    "envvar": {"variable_name": _same},
+}
+
 
 class ControlStore:
     """In-memory append-only rows per control table, with Spark views."""
@@ -45,6 +71,9 @@ class ControlStore:
         self._lock = threading.Lock()
         self._latest: dict[Any, dict[str, Any]] = {}
         self._by_module: dict[Any, dict[Any, dict[str, Any]]] = {}
+        self._lookups: dict[tuple[str, str], dict[Any, list[dict[str, Any]]]] = {
+            (table, column): {} for table, keys in _KEYS.items() for column in keys
+        }
 
     # -- write path ---------------------------------------------------------
     def append(self, table: str, row: dict[str, Any]) -> dict[str, Any]:
@@ -53,17 +82,23 @@ class ControlStore:
         with self._lock:
             if table == "batch_monitor":
                 row = {**row, "event_seq": next(self._seq)}
-            schema_cols = [f.name for f in CONTROL_TABLES[table].fields]
-            full = {c: row.get(c) for c in schema_cols}
-            extra = set(row) - set(schema_cols) - {"run_uid"}
+            full = {c: row.get(c) for c in _COLUMNS[table]}
+            extra = row.keys() - _ALLOWED[table]
             if extra:
                 raise KeyError(f"unknown columns for {table}: {sorted(extra)}")
             if "run_uid" in row:
                 full["run_uid"] = row["run_uid"]
+            self._key(table, full)
             self._rows[table].append(full)
             if table == "batch_monitor":
                 self._index(full)
         return full
+
+    def _key(self, table: str, row: dict[str, Any]) -> None:
+        """Add ``row`` to ``table``'s keyed lookups; caller holds the lock."""
+        for column, key in _KEYS.get(table, {}).items():
+            if row[column] is not None:
+                self._lookups[table, column].setdefault(key(row[column]), []).append(row)
 
     def _index(self, row: dict[str, Any]) -> None:
         """Make ``row`` its run's latest event; caller holds the lock."""
@@ -83,6 +118,17 @@ class ControlStore:
     # -- read path (driver-side; control data is bounded) -------------------
     def rows(self, table: str) -> list[dict[str, Any]]:
         return list(self._rows[table])
+
+    def lookup(self, table: str, column: str, value: Any) -> list[dict[str, Any]]:
+        """The rows of ``table`` whose ``column`` equals ``value``, in append
+        order; ``batch_master.module_name`` compares upper-cased, and NULL
+        matches nothing.  ``(table, column)`` must be one of the keyed
+        lookups."""
+        if value is None:
+            return []
+        key = _KEYS[table][column](value)
+        with self._lock:
+            return list(self._lookups[table, column].get(key, ()))
 
     def latest_event(self, run_uid: Any) -> dict[str, Any] | None:
         """The latest batch_monitor event of ``run_uid``, or None."""
@@ -112,6 +158,11 @@ class ControlStore:
                 for r in self._rows[table]:
                     self._latest[r.get("run_uid")] = r
                 self._group_by_module()
+            if table in _KEYS:
+                for column in _KEYS[table]:
+                    self._lookups[table, column] = {}
+                for r in self._rows[table]:
+                    self._key(table, r)
             return before - len(self._rows[table])
 
     # -- Spark views --------------------------------------------------------

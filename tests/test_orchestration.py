@@ -159,6 +159,21 @@ class TestLifecycle:
         assert "rows loaded:    5" in msgs
         assert "rows skipped:    1" in msgs
 
+    def test_progress_writes_one_longops_log_row(self):
+        r = make_runner()
+        register(r.store, 1, "B1")
+        ctx = r.startup("b1", 1)
+        before = len(r.store.rows("batch_log"))
+        ctx.progress("load", 0)
+        ctx.progress("load", 42)
+        ctx.progress("merge")
+        rows = r.store.rows("batch_log")[before:]
+        assert [(x["batch_name"], x["procedure_name"], x["message"]) for x in rows] == [
+            ("B1", "progress", "B1: load sofar=0"),
+            ("B1", "progress", "B1: load sofar=42"),
+            ("B1", "progress", "B1: merge"),
+        ]
+
     def test_resume_then_endup_matches_original_run(self):
         r = make_runner()
         register(r.store, 1, "B1")
@@ -654,16 +669,17 @@ def assert_index_matches_fold(runner: BatchRunner, module_ids=(0, 1, 2, 3, 4)) -
             ) == _parent_code(states, mid, dep_type, control_date)
 
 
-class NoLogScanStore(ControlStore):
-    """A store whose full batch_monitor read fails, to prove no admission,
-    dependency or finish path reads the whole log."""
+class NoScanStore(ControlStore):
+    """A store whose full read of the run log, or of a table admission reads
+    by key, fails, to prove no admission, dependency or finish path scans
+    them.  ``scanned`` records a scan that a WHEN OTHERS net swallowed."""
 
     scanned = False
 
     def rows(self, table):
-        if table == "batch_monitor":
+        if table in ("batch_monitor", "batch_master", "batch_dependency", "envvar"):
             self.scanned = True
-            raise AssertionError("full batch_monitor scan")
+            raise AssertionError(f"full {table} scan")
         return super().rows(table)
 
 
@@ -759,7 +775,7 @@ class TestMonitorIndex:
                   check=lambda: assert_index_matches_fold(r, module_ids=range(14)))
 
     def test_admission_and_finish_never_scan_the_log(self):
-        store = NoLogScanStore()
+        store = NoScanStore()
         r = BatchRunner(store, FakeClock(datetime(2026, 3, 2, 8, 0, 0)),
                         poll_interval=1.0, max_polls=5, user="OPS$BATCHUSR")
 
@@ -768,3 +784,147 @@ class TestMonitorIndex:
 
         _dag_days(r, days=3, max_workers=2, seed=6, check=check)
         assert {row["run_status"] for row in _fold(store)} <= {"SUCCESS", "FAILURE"}
+
+    def test_admission_failures_and_resume_read_by_key_only(self):
+        store = NoScanStore()
+        r = BatchRunner(store, FakeClock(datetime(2026, 3, 2, 8, 0, 0)),
+                        poll_interval=1.0, max_polls=5, user="OPS$BATCHUSR")
+        register(store, 1, "A")
+        register(store, 2, "DUP")
+        register(store, 3, "DUP")
+        register(store, 4, "OFF", disabled=datetime(2026, 1, 1))
+        ctx = r.startup("a", None, parameters="X")
+        ctx.progress("load", 1)
+        with pytest.raises(DuplicateRun):
+            r.startup("A", None, parameters="X")
+        r.resume("A", None, ctx.run_id).finish("SUCCESS", 1, 0)
+        for name, exc in (("NOPE", NoRecordBatchMaster), ("DUP", TooManyRecordBatchMaster),
+                          ("OFF", BatchDisabled)):
+            with pytest.raises(exc):
+                r.startup(name, 1)
+        assert not store.scanned
+        assert [row["run_status"] for row in _fold(store)] == [
+            "SUCCESS", "RE-RUN FAILURE", "NO_RECORD_BATCH_MASTER",
+            "TOO_MANY_RECORDS_BATCH_MASTER", "BATCH-DISABLED"]
+
+
+# -- the control plane runs driver-side, on keyed lookups ----------------------
+class TestControlPlaneIsolation:
+    def test_lifecycle_never_touches_spark(self):
+        touched: list = []
+
+        class NoSpark:
+            """A SparkSession stand-in that records and refuses any access."""
+
+            def __getattribute__(self, name):
+                touched.append(name)
+                raise AssertionError(f"control plane touched spark.{name}")
+
+        from etl_batch_spark.orchestration.dag import DagRunner
+
+        store = ControlStore(NoSpark())
+        r = BatchRunner(store, FakeClock(datetime(2026, 3, 2, 8, 0, 0)),
+                        poll_interval=1.0, max_polls=5, user="OPS$BATCHUSR")
+        register(store, 1, "P")
+        register(store, 2, "C")
+        register(store, 3, "OFF", disabled=datetime(2026, 1, 1))
+        store.append("batch_dependency",
+                     {"child_id": 2, "parent_module_id": 1, "dependency_type": "MANDATORY"})
+        parent = r.startup("p", 1)
+        parent.timer.capture("body")
+        parent.progress("load", 0)
+        parent.progress("load")
+        parent.timer.show_elapsed("P body ", "body")
+        parent.finish("SUCCESS", 3, 0)
+        child = r.startup("C", 1, exclusive_run_yn="Y")  # runs the dependency gate
+        r.resume("C", 1, child.run_id).success()
+        assert r.startup("OFF", 1, called_by_shell=True) is None
+        with pytest.raises(NoRecordBatchMaster):
+            r.startup("NOPE", 1)
+        r.clock.advance(86400)
+        out = DagRunner(r, max_workers=2).run(
+            {"p": lambda ctx: (1, 0), "c": lambda ctx: (2, 0)}, {"c": ["p"]},
+            exclusive_run_yn="Y")
+        assert out == {"p": "SUCCESS", "c": "SUCCESS"}
+        assert touched == []
+
+
+def _masters_named(store: ControlStore, name: str) -> list:
+    return [m for m in ControlStore.rows(store, "batch_master")
+            if m["module_name"] is not None and m["module_name"].upper() == name.upper()]
+
+
+def _module_info_by_scan(store: ControlStore, name: str, run_level):
+    """Test oracle: I1 (body.sql:127-151) over a full scan of batch_master."""
+    masters = _masters_named(store, name)
+    if run_level is None:
+        run_level = min((m["run_level"] for m in masters if m["run_level"] is not None),
+                        default=None)
+    matches = [m for m in masters if m["run_level"] == run_level]
+    if not matches:
+        return NoRecordBatchMaster
+    return TooManyRecordBatchMaster if len(matches) > 1 else matches[0]
+
+
+class TestKeyedLookups:
+    @pytest.mark.parametrize("seed", [1, 2, 3, 4])
+    def test_lookups_match_a_scan_after_deletes(self, seed):
+        rng = random.Random(seed)
+        r = make_runner()
+        store = r.store
+        names = ["alpha", "Alpha", "BETA", "gamma", None]
+        for _ in range(60):
+            step = rng.choice(["master"] * 3 + ["dep"] * 2
+                              + ["env", "delete_master", "delete_dep"])
+            if step == "master":
+                store.append("batch_master", {
+                    "module_id": rng.randint(1, 6), "module_name": rng.choice(names),
+                    "run_level": rng.choice([1, 2, 3, None]), "sub_system": "SYS",
+                    "disabled_date": None})
+            elif step == "dep":
+                store.append("batch_dependency", {
+                    "child_id": rng.randint(1, 6), "parent_module_id": rng.randint(1, 8),
+                    "dependency_type": "MANDATORY"})
+            elif step == "env":
+                r.env.update(rng.choice(["A", "B"]), str(rng.random()))
+            elif step == "delete_master":
+                k = rng.randint(1, 6)
+                store.delete_where("batch_master", lambda m, k=k: m["module_id"] == k)
+            else:
+                k = rng.randint(1, 8)
+                store.delete_where("batch_dependency",
+                                   lambda d, k=k: d["parent_module_id"] == k)
+            masters = ControlStore.rows(store, "batch_master")
+            deps = ControlStore.rows(store, "batch_dependency")
+            env = ControlStore.rows(store, "envvar")
+            for name in ("ALPHA", "alpha", "Beta", "GAMMA", "nope"):
+                assert store.lookup("batch_master", "module_name", name) == _masters_named(
+                    store, name)
+                for run_level in (None, 1, 2, 3):
+                    want = _module_info_by_scan(store, name, run_level)
+                    try:
+                        got = r._get_module_info(name, run_level)
+                    except (NoRecordBatchMaster, TooManyRecordBatchMaster) as exc:
+                        got = type(exc)
+                    assert got == want
+            for k in range(1, 9):
+                assert store.lookup("batch_master", "module_id", k) == [
+                    m for m in masters if m["module_id"] == k]
+                assert store.lookup("batch_dependency", "child_id", k) == [
+                    d for d in deps if d["child_id"] == k]
+            for var in ("A", "B", "C"):
+                assert r.env.get(var) == next(
+                    (e["value"] for e in reversed(env) if e["variable_name"] == var), None)
+            assert store.lookup("batch_master", "module_name", None) == []
+
+    def test_parent_deleted_from_master_is_skipped(self):
+        r = make_runner()
+        register(r.store, 1, "PARENT")
+        register(r.store, 2, "CHILD")
+        r.store.append("batch_dependency",
+                       {"child_id": 2, "parent_module_id": 1, "dependency_type": "MANDATORY"})
+        r.startup("PARENT", 1).finish("FAILURE", 0, 0)
+        with pytest.raises(DependencyFail):
+            r.startup("CHILD", 1, exclusive_run_yn="Y")
+        r.store.delete_where("batch_master", lambda m: m["module_id"] == 1)
+        assert r.startup("CHILD", 1, exclusive_run_yn="Y").run_id == 1  # body.sql:334-337
